@@ -4,10 +4,10 @@ UX on Spark (reference scr/etl_batch.py:174-199):
     python -m etl_python_sqlite_spark --data-in data/in \\
         --warehouse warehouse --data-rejected data/rejected
 
-Runs the full batch pipeline (per-file extract → motivo cascade →
-idempotent load → audit) and prints the per-file audit summary the
-reference logs. A user of the reference can point this at the same CSV
-directory and get the same end state (parquet instead of SQLite).
+Runs the full batch pipeline (extract → motivo cascade → idempotent
+load → audit, one pass over the batch) and prints the per-file audit
+summary the reference logs. A user of the reference can point this at the
+same CSV directory and get the same end state (parquet instead of SQLite).
 """
 
 from __future__ import annotations
@@ -42,18 +42,12 @@ def main(argv: list[str] | None = None) -> int:
     from pyspark.sql import SparkSession
 
     from etl_python_sqlite_spark.pipeline import PipelineConfig, run_batch
+    from etl_python_sqlite_spark.session import get_spark
 
-    # getOrCreate joins an already-active session (embedding callers,
+    # get_spark joins an already-active session (embedding callers,
     # tests); only stop what we actually created
     owns_session = SparkSession.getActiveSession() is None
-    spark = (
-        SparkSession.builder.appName("etl_python_sqlite_spark")
-        .master(args.master)
-        .config("spark.sql.shuffle.partitions", args.shuffle_partitions)
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark(master=args.master, shuffle_partitions=int(args.shuffle_partitions))
     try:
         cfg = PipelineConfig(
             data_in=args.data_in,

@@ -70,6 +70,11 @@ _ND_SRC, _ND_DST = _nd_translate_maps()
 _PY_WS = "[\\s\u001c\u001d\u001e\u001f\u0085\u00a0\u1680\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008\u2009\u200a\u2028\u2029\u202f\u205f\u3000]"
 
 
+#: ``int()``'s whitespace: ``str.strip()``'s set without the \x1c-\x1f
+#: separators, which ``int()`` rejects (``int('0\x1f')`` raises).
+_INT_WS = _PY_WS.replace("\u001c\u001d\u001e\u001f", "")
+
+
 def py_strip(col: Column | str) -> Column:
     """``s.strip()`` with Python's exact whitespace set."""
     c = F.col(col) if isinstance(col, str) else col
@@ -173,7 +178,7 @@ def py_title(col: Column | str) -> Column:
 
 
 def strict_int(col: Column | str, target: str = "int") -> Column:
-    """Python-``int()`` cast: strip (Python's whitespace set), transliterate
+    """Python-``int()`` cast: strip (``int()``'s whitespace set), transliterate
     Unicode decimal digits to ASCII (CPython's own decimal transform), then
     require the exact ``int()`` grammar — optional ASCII sign, digits,
     single ``_`` separators between digit groups.
@@ -184,7 +189,10 @@ def strict_int(col: Column | str, target: str = "int") -> Column:
     unlike the previous ASCII-only form it accepts what ``int()``
     accepts (``int('᥆') == 0`` — found by the hypothesis fuzz).
     """
-    c = F.translate(py_strip(col), _ND_SRC, _ND_DST)
+    c = F.col(col) if isinstance(col, str) else col
+    c = F.translate(
+        F.regexp_replace(c, f"^{_INT_WS}+|{_INT_WS}+$", ""), _ND_SRC, _ND_DST
+    )
     return F.when(
         c.rlike(_INT_RE), F.regexp_replace(c, "_", "").cast(target)
     )

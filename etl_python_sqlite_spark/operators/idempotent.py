@@ -21,11 +21,12 @@ Scale notes:
   bucketed by the key, so the anti-join consumes the bucket layout with
   NO exchange over the accumulated table (asserted in
   tests/test_idempotent.py); alternatively a small batch side broadcasts.
-* Contiguous id assignment needs a global order — a single-task window.
-  That is fine for dimensions (small by definition) and per-batch fact
-  appends (bounded), and is the reference's AUTOINCREMENT contract. For
-  scale-mode appends where contiguity is not required, pass
-  ``contiguous=False`` to use partition-local id blocks (fully parallel).
+* Contiguous id assignment needs a global order: a dimension's new keys
+  (small by definition) get theirs on the driver, a per-batch fact append
+  (bounded) in a single-task window. That is the reference's
+  AUTOINCREMENT contract. For scale-mode appends where contiguity is not
+  required, pass ``contiguous=False`` to use partition-local id blocks
+  (fully parallel).
 """
 
 from __future__ import annotations
@@ -80,12 +81,10 @@ class AppendResult:
     inserted_new: int
     ignored_duplicates: int
     target_path: str
-    #: tiny DataFrame (group_col, inserted_new, ignored_duplicates);
-    #: populated only when ``group_col`` was given. Kept DISTRIBUTED —
-    #: consumers join it into their audit frames instead of collecting
-    #: per-file counts through the driver (bounded O(#files) rows, but a
-    #: distributed→driver→distributed round trip is never the right shape)
-    per_group: DataFrame | None = None
+    #: (group, inserted_new, ignored_duplicates) rows, populated only when
+    #: ``group_col`` was given: one collect of O(#groups) rows, which also
+    #: yields the totals above, so the accounting costs one action
+    per_group: list[tuple] | None = None
 
 
 def idempotent_append(
@@ -117,7 +116,8 @@ def idempotent_append(
     duplicates then resolve to the lexicographically FIRST group, matching
     the reference's sorted per-file processing order (a key seen in file A
     then file B inserts from A, ignores in B); plain ``dropDuplicates``
-    would pick an arbitrary winner.
+    would pick an arbitrary winner. New ids follow the same order,
+    ``(group_col, *keys)``: the ids a loop over the groups would assign.
     """
     schema = target_schema or batch.drop(*([group_col] if group_col else [])).schema
     existing_keys = (
@@ -148,7 +148,6 @@ def _append_with_accounting(
 ) -> AppendResult:
     """Shared INSERT OR IGNORE core: in-batch dedup → anti-join vs target
     keys → per-group accounting → id assignment → schema-cast write."""
-    attempted = batch.count()
     if group_col is None:
         deduped = batch.dropDuplicates(keys)
     else:
@@ -164,41 +163,31 @@ def _append_with_accounting(
     else:
         new_rows = deduped
 
-    # One pass: persist the (small) new-rows frame so count + write don't
-    # recompute the anti-join twice.
+    # One pass: persist the (small) new-rows frame so the accounting and
+    # the write don't recompute the anti-join twice.
     new_rows = new_rows.persist()
     try:
-        inserted = new_rows.count()
-        per_group = None
-        if group_col is not None:
-            attempted_by = batch.groupBy(group_col).agg(
-                F.count("*").alias("_attempted")
-            )
-            inserted_by = new_rows.groupBy(group_col).agg(
-                F.count("*").alias("_inserted")
-            )
-            # localCheckpoint (tiny: one row per group) pins the counts
-            # while new_rows is still cached — the returned frame must not
-            # recompute the anti-join after the unpersist below; its blocks
-            # free with the frame (ContextCleaner), unlike a CacheManager
-            # persist
-            per_group = (
-                attempted_by.join(inserted_by, on=group_col, how="left")
-                .select(
-                    group_col,
-                    F.coalesce("_inserted", F.lit(0))
-                    .cast("long")
-                    .alias("inserted_new"),
-                    (F.col("_attempted") - F.coalesce("_inserted", F.lit(0)))
-                    .cast("long")
-                    .alias("ignored_duplicates"),
-                )
-                .localCheckpoint()
-            )
+        # one aggregation over the batch rows (attempted) and the new rows
+        # (inserted), taken before the write: afterwards the anti-join
+        # would find every new row already in the target
+        group = [group_col] if group_col else []
+        flagged = batch.select(*group, F.lit(False).alias("_new")).unionAll(
+            new_rows.select(*group, F.lit(True))
+        )
+        counts = (
+            flagged.groupBy(*group)
+            .agg(F.count_if(~F.col("_new")), F.count_if("_new"))
+            .collect()
+        )
+        attempted = sum(r[-2] for r in counts)
+        inserted = sum(r[-1] for r in counts)
+        per_group = [(g, n, a - n) for g, a, n in counts] if group_col else None
         if inserted:
-            out = new_rows.drop(group_col) if group_col else new_rows
+            out = new_rows
             if id_col is not None:
-                out = assign_ids(out, id_col, start=id_start or 1, order_by=keys)
+                out = assign_ids(
+                    out, id_col, start=id_start or 1, order_by=[*group, *keys]
+                )
             write_fn(
                 out.select([F.col(f.name).cast(f.dataType) for f in schema.fields])
             )
@@ -220,6 +209,7 @@ def upsert_dimension(
     dim_path: str,
     natural_key: str = "nombre",
     surrogate_key: str = "ciudad_id",
+    group_col: str | None = None,
 ) -> DataFrame:
     """Set-based get-or-create for a surrogate-key dimension.
 
@@ -230,6 +220,10 @@ def upsert_dimension(
 
     Existing rows keep their ids across runs (stability contract —
     SURVEY.md §4.2 item 2).
+
+    ``group_col`` (e.g. ``source_file``) orders the new ids by each key's
+    first group, then by key: the ids a loop over the groups in sorted
+    order would assign (mirrors ``idempotent_append``'s ``group_col``).
     """
     dim_schema = T.StructType(
         [
@@ -239,22 +233,28 @@ def upsert_dimension(
     )
     dim = read_or_empty(spark, dim_path, dim_schema)
 
-    batch_keys = values.select(F.col(natural_key)).where(
-        F.col(natural_key).isNotNull()
-    ).distinct()
-    new_keys = batch_keys.join(dim.select(natural_key), on=natural_key, how="left_anti")
-
-    new_keys = new_keys.persist()
-    try:
-        n_new = new_keys.count()
-        if n_new:
-            start = (dim.agg(F.max(surrogate_key)).first()[0] or 0) + 1
-            new_rows = assign_ids(
-                new_keys, surrogate_key, start=start, order_by=[natural_key]
-            ).select(surrogate_key, natural_key)
-            new_rows.write.mode("append").parquet(dim_path)
-    finally:
-        new_keys.unpersist()
+    keyed = values.where(F.col(natural_key).isNotNull())
+    if group_col is None:
+        batch_keys, order = keyed.select(natural_key).distinct(), [natural_key]
+    else:
+        batch_keys = keyed.groupBy(natural_key).agg(F.min(group_col).alias(group_col))
+        order = [group_col, natural_key]
+    # a dimension is small by definition: its new keys come to the driver
+    # in one action and get their ids there (Python's str order is Spark's
+    # binary string order)
+    new_keys = sorted(
+        tuple(r)
+        for r in batch_keys.join(dim.select(natural_key), on=natural_key, how="left_anti")
+        .select(*order)
+        .collect()
+    )
+    if new_keys:
+        start = 1
+        if _exists(dim_path):
+            start += dim.agg(F.max(surrogate_key)).first()[0] or 0
+        spark.createDataFrame(
+            [(start + i, key[-1]) for i, key in enumerate(new_keys)], dim_schema
+        ).coalesce(1).write.mode("append").parquet(dim_path)
 
     # read_or_empty, not a bare read: with an empty first batch nothing was
     # ever written and the path doesn't exist yet

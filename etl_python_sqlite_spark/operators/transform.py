@@ -130,13 +130,24 @@ def transform_with_rejections(
     valid:   ``nombre, edad, ciudad`` — normalized, typed (int edad).
     rejects: original raw string columns + ``motivo``.
     """
-    annotated = annotate_rejections(raw, edad_min=edad_min, message_style=message_style)
+    return split_rejections(
+        annotate_rejections(raw, edad_min=edad_min, message_style=message_style)
+    )
+
+
+def split_rejections(
+    annotated: DataFrame, keep: tuple[str, ...] = ()
+) -> tuple[DataFrame, DataFrame]:
+    """(valid, rejects) of an ``annotate_rejections`` frame; the ``keep``
+    columns (lineage such as ``source_file``) ride along on the valid side
+    and stay among the raw columns on the reject side."""
     valid = (
         annotated.filter(F.col("motivo").isNull())
         .select(
             F.col("nombre_norm").alias("nombre"),
             F.col("edad_int").alias("edad"),
             F.col("ciudad_norm").alias("ciudad"),
+            *keep,
         )
     )
     raw_cols = [c for c in annotated.columns if c not in ("motivo", "nombre_norm", "ciudad_norm", "edad_int")]

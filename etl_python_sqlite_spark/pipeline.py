@@ -18,12 +18,23 @@ Tables (warehouse_dir/):
     etl_runs/          run_id, started_at, source_file, valid_count,
                        rejected_count, inserted_new, ignored_duplicates
 
-The per-file driver loop is retained intentionally: the reference's audit
-contract is one row per (run, file) with its own run_id
-(scr/etl_batch.py:132,156-163). Each file's DAG is still fully
-distributed; at scale you raise throughput by processing files into one
-combined read with ``read_csv_directory`` + groupBy(source_file) for
-metrics — provided as ``run_directory_combined``.
+A batch runs as one set-based pass, not a loop over its files. The
+driver lists the files and reads each header with ``csv.reader``; files
+that share a header are scanned together, validated together and their
+rejects written in one partitioned write. The valid rows of all files
+then meet one dimension upsert, one ``max(persona_id)``, one idempotent
+append and one audit write. ``source_file`` rides along on every row, so
+the reference's audit contract still holds: one row per (run, file) with
+its own run_id (scr/etl_batch.py:132,156-163), and new ``persona_id`` and
+``ciudad_id`` values come out exactly as the reference's sorted per-file
+loop assigns them. ``run_batch`` and ``run_directory_combined`` are two
+entry points into this one core.
+
+Two intended differences from a per-file loop:
+
+* one batch stamps one ``started_at`` (and run_id timestamp) on all of
+  its files; run_id stays unique per (run, file) through the file name;
+* dimension, fact and audit commit once per batch, not once per file.
 """
 
 from __future__ import annotations
@@ -31,6 +42,7 @@ from __future__ import annotations
 import shutil
 from dataclasses import dataclass, field
 from datetime import datetime, timezone
+from functools import reduce
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,12 +50,21 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_python_sqlite_spark.operators.idempotent import (
+    AppendResult,
     idempotent_append,
-    read_or_empty,
     upsert_dimension,
 )
-from etl_python_sqlite_spark.operators.transform import transform_with_rejections
-from etl_python_sqlite_spark.sources.csv import list_csv_files, read_csv_all_string
+from etl_python_sqlite_spark.operators.transform import (
+    annotate_rejections,
+    split_rejections,
+    transform_with_rejections,  # noqa: F401 - re-exported
+)
+from etl_python_sqlite_spark.sources.csv import (
+    list_csv_files,
+    read_csv_all_string,  # noqa: F401 - re-exported
+    read_csv_files,
+    read_header,
+)
 
 FACT_SCHEMA = T.StructType(
     [
@@ -119,13 +140,19 @@ class PipelineConfig:
         return str(Path(self.warehouse) / "etl_runs")
 
 
+def _fact_exists(spark: SparkSession, cfg: PipelineConfig) -> bool:
+    if cfg.fact_table is not None:
+        return spark.catalog.tableExists(cfg.fact_table)
+    return Path(cfg.fact_path).exists()
+
+
 def read_fact(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
     """The accumulated fact table under either warehouse layout."""
-    if cfg.fact_table is not None:
-        if spark.catalog.tableExists(cfg.fact_table):
-            return spark.table(cfg.fact_table)
+    if not _fact_exists(spark, cfg):
         return spark.createDataFrame([], FACT_SCHEMA)
-    return read_or_empty(spark, cfg.fact_path, FACT_SCHEMA)
+    if cfg.fact_table is not None:
+        return spark.table(cfg.fact_table)
+    return spark.read.schema(FACT_SCHEMA).parquet(cfg.fact_path)
 
 
 def _append_fact(
@@ -210,17 +237,14 @@ def write_rejects_csv(rejects: DataFrame, out_path: str | Path) -> int:
 
 def write_rejects_csv_by_file(
     rejects: DataFrame, out_dir: str | Path, file_col: str = "source_file"
-) -> dict[str, int]:
-    """Reject sink for combined multi-file runs: ONE partitioned write
-    produces every per-file ``rejected_<name>.csv`` (vs a driver loop of
-    N jobs). ``partitionBy`` routes each source file's rows to its own
-    directory; ``repartition(file_col)`` guarantees exactly one part file
-    (hence exactly one CSV header) per source file. Returns per-file
-    reject counts.
+) -> None:
+    """Reject sink for multi-file runs: ONE partitioned write produces
+    every per-file ``rejected_<name>.csv`` (vs a driver loop of N jobs).
+    ``partitionBy`` routes each source file's rows to its own directory;
+    ``repartition(file_col)`` guarantees exactly one part file (hence
+    exactly one CSV header) per source file. A file without rejects gets
+    no partition, hence no CSV.
     """
-    counts = {r[0]: r[1] for r in rejects.groupBy(file_col).count().collect()}
-    if not counts:
-        return {}
     out_dir = Path(out_dir)
     tmp = str(out_dir / "._spark_rejects_tmp")
     (
@@ -240,95 +264,124 @@ def write_rejects_csv_by_file(
         part = next(d.glob("part-*.csv"))
         shutil.move(str(part), str(out_dir / f"rejected_{fname}"))
     shutil.rmtree(tmp)
-    return counts
 
 
 def load_file(
     spark: SparkSession,
     cfg: PipelineConfig,
     valid: DataFrame,
-    source_file: str,
-    rejected_count: int,
-    now: datetime | None = None,
-) -> FileRunResult:
-    """Load one file's valid rows — reference ``load_batch``
-    (scr/etl_batch.py:123-168), set-based."""
-    run_id = make_run_id(source_file, now)
-    started_at = (now or datetime.now(timezone.utc)).isoformat()
-    processed_at = started_at
-
-    valid = valid.persist()
-    try:
-        valid_count = valid.count()
-
-        # dimension upsert (set-based J3) + broadcast key resolution
-        dim = upsert_dimension(
-            spark, valid.select(F.col("ciudad").alias("nombre")), cfg.dim_path
-        )
-        resolved = valid.join(
-            F.broadcast(dim), valid.ciudad == dim.nombre, "inner"
-        ).select(
-            valid.nombre, valid.edad.cast("int").alias("edad"), dim.ciudad_id
-        )
-
-        # surrogate persona_id start: AUTOINCREMENT parity — max existing + 1;
-        # ids are assigned inside idempotent_append AFTER the anti-join so
-        # IGNOREd duplicates don't consume ids (dense like SQLite)
-        existing = read_fact(spark, cfg)
-        start = (existing.agg(F.max("persona_id")).first()[0] or 0) + 1
-        batch = (
-            resolved.withColumn("processed_at", F.lit(processed_at))
-            .withColumn("run_id", F.lit(run_id))
-        )
-
-        res = _append_fact(spark, cfg, batch, id_start=start)
-
-        audit_row = spark.createDataFrame(
-            [
-                (
-                    run_id,
-                    started_at,
-                    source_file,
-                    valid_count,
-                    rejected_count,
-                    res.inserted_new,
-                    res.ignored_duplicates,
-                )
-            ],
-            AUDIT_SCHEMA,
-        )
-        audit_row.write.mode("append").parquet(cfg.audit_path)
-    finally:
-        valid.unpersist()
-
-    return FileRunResult(
-        source_file=source_file,
-        run_id=run_id,
-        valid_count=valid_count,
-        rejected_count=rejected_count,
-        inserted_new=res.inserted_new,
-        ignored_duplicates=res.ignored_duplicates,
+    run_ids: dict[str, str],
+    processed_at: str,
+) -> AppendResult:
+    """Load a batch's valid rows (``nombre, edad, ciudad, source_file``) —
+    reference ``load_batch`` (scr/etl_batch.py:123-168), set-based over
+    every file at once. Returns the fact append's ``AppendResult``, whose
+    ``per_group`` holds each file's inserted/ignored counts."""
+    # dimension upsert (set-based J3) + broadcast key resolution
+    dim = upsert_dimension(
+        spark,
+        valid.select(F.col("ciudad").alias("nombre"), "source_file"),
+        cfg.dim_path,
+        group_col="source_file",
     )
+    resolved = valid.join(
+        F.broadcast(dim.withColumnRenamed("nombre", "ciudad")), "ciudad"
+    ).select("nombre", "edad", "ciudad_id", "source_file")
+
+    # surrogate persona_id start: AUTOINCREMENT parity — max existing + 1;
+    # ids are assigned inside idempotent_append AFTER the anti-join so
+    # IGNOREd duplicates don't consume ids (dense like SQLite)
+    start = 1
+    if _fact_exists(spark, cfg):
+        start += read_fact(spark, cfg).agg(F.max("persona_id")).first()[0] or 0
+    run_id = F.create_map(*[F.lit(s) for kv in run_ids.items() for s in kv])
+    batch = resolved.withColumn("processed_at", F.lit(processed_at)).withColumn(
+        "run_id", run_id[F.col("source_file")]
+    )
+    return _append_fact(spark, cfg, batch, id_start=start, group_col="source_file")
+
+
+def _process_batch(
+    spark: SparkSession, cfg: PipelineConfig, now: datetime | None
+) -> list[tuple]:
+    """The batch core: scan, validate and route rejects once per header
+    group, load once for the batch, append one audit row per file.
+    Returns the audit rows (``AUDIT_SCHEMA`` order, sorted file order)."""
+    files = list_csv_files(cfg.data_in)
+    if not files:
+        return []
+    now = now or datetime.now(timezone.utc)
+    started_at = now.isoformat()
+    run_ids = {f.name: make_run_id(f.name, now) for f in files}
+
+    # header-driven columns per file (a file without a header has no rows)
+    groups: dict[tuple[str, ...], list[Path]] = {}
+    for f in files:
+        header = read_header(f)
+        if header is not None:
+            groups.setdefault(header, []).append(f)
+
+    # persist: rejects, counts and load all read each group's annotation
+    anns = [
+        annotate_rejections(
+            read_csv_files(spark, group, header),
+            edad_min=cfg.edad_min,
+            message_style=cfg.message_style,
+        ).persist()
+        for header, group in groups.items()
+    ]
+    counts: dict[str, tuple[int, int]] = {}
+    loaded: dict[str, tuple[int, int]] = {}
+    try:
+        valids = []
+        for ann in anns:
+            valid, rejects = split_rejections(ann, keep=("source_file",))
+            write_rejects_csv_by_file(rejects, cfg.data_rejected)
+            valids.append(valid)
+        if anns:
+            flags = reduce(
+                DataFrame.unionAll,
+                [a.select("source_file", F.col("motivo").isNull().alias("ok")) for a in anns],
+            )
+            counts = {
+                r[0]: (r[1], r[2])
+                for r in flags.groupBy("source_file")
+                .agg(F.count_if("ok"), F.count_if(~F.col("ok")))
+                .collect()
+            }
+        if any(v for v, _ in counts.values()):
+            res = load_file(
+                spark, cfg, reduce(DataFrame.unionAll, valids), run_ids, started_at
+            )
+            loaded = {g: (n, i) for g, n, i in res.per_group}
+    finally:
+        for ann in anns:
+            ann.unpersist()
+
+    rows = [
+        (run_ids[f.name], started_at, f.name,
+         *counts.get(f.name, (0, 0)), *loaded.get(f.name, (0, 0)))
+        for f in files
+    ]
+    spark.createDataFrame(rows, AUDIT_SCHEMA).write.mode("append").parquet(cfg.audit_path)
+    return rows
 
 
 def run_batch(
     spark: SparkSession, cfg: PipelineConfig, now: datetime | None = None
 ) -> BatchResult:
     """Process every CSV in ``cfg.data_in`` — reference ``etl_batch.main()``
-    (scr/etl_batch.py:174-199)."""
-    result = BatchResult()
-    for csv_file in list_csv_files(cfg.data_in):
-        raw = read_csv_all_string(spark, csv_file)
-        valid, rejects = transform_with_rejections(
-            raw, edad_min=cfg.edad_min, message_style=cfg.message_style
-        )
-        n_rejects = write_rejects_csv(
-            rejects, Path(cfg.data_rejected) / f"rejected_{csv_file.name}"
-        )
-        result.files.append(
-            load_file(spark, cfg, valid, csv_file.name, n_rejects, now=now)
-        )
-    return result
+    (scr/etl_batch.py:174-199) — as one batch; results in sorted file
+    order."""
+    rows = _process_batch(spark, cfg, now)
+    return BatchResult([FileRunResult(r[2], r[0], *r[3:]) for r in rows])
+
+
+def run_directory_combined(
+    spark: SparkSession, cfg: PipelineConfig, now: datetime | None = None
+) -> DataFrame:
+    """``run_batch`` returning the audit rows it appended as a DataFrame."""
+    return spark.createDataFrame(_process_batch(spark, cfg, now), AUDIT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------
@@ -369,109 +422,3 @@ def migrate_fact_if_needed(spark: SparkSession, fact_path: str) -> bool:
     shutil.move(tmp, fact_path)
     shutil.rmtree(bak)
     return True
-
-
-# ---------------------------------------------------------------------------
-# Scale path: whole-directory combined run (single read, per-file metrics)
-# ---------------------------------------------------------------------------
-
-def run_directory_combined(
-    spark: SparkSession, cfg: PipelineConfig, now: datetime | None = None
-) -> DataFrame:
-    """One multi-file scan with ``input_file_name()`` lineage: the scan,
-    cascade, dim upsert and fact append each run ONCE over all files —
-    per-file audit metrics come from a groupBy(source_file) instead of a
-    driver loop. This is the 1000-executor-shaped version of
-    ``run_batch``; run_id embeds the file name per the reference contract.
-
-    Returns the audit DataFrame that was appended.
-
-    Audit parity with the per-file loop: rejects are routed to one
-    ``rejected_<file>.csv`` per source file (single partitioned write),
-    and ``inserted_new`` / ``ignored_duplicates`` are computed PER FILE
-    from the anti-join survivors (``idempotent_append(group_col=...)``),
-    not stamped batch-global onto every row.
-    """
-    from etl_python_sqlite_spark.operators.transform import annotate_rejections
-    from etl_python_sqlite_spark.sources.csv import read_csv_directory
-
-    raw = read_csv_directory(spark, str(Path(cfg.data_in) / "*.csv"))
-    ts = (now or datetime.now(timezone.utc)).strftime("%Y%m%dT%H%M%S%fZ")
-    started_at = (now or datetime.now(timezone.utc)).isoformat()
-
-    # the cascade runs with source_file carried through row-wise, so one
-    # scan feeds the load, the reject sink and the per-file audit metrics;
-    # persist: three consumers, one materialization
-    ann = annotate_rejections(
-        raw, edad_min=cfg.edad_min, message_style=cfg.message_style
-    ).persist()
-    try:
-        raw_cols = [
-            c
-            for c in ann.columns
-            if c not in ("motivo", "nombre_norm", "ciudad_norm", "edad_int", "source_file")
-        ]
-        rejects = ann.filter(F.col("motivo").isNotNull()).select(
-            *[F.coalesce(F.col(c), F.lit("")).alias(c) for c in raw_cols],
-            "motivo",
-            "source_file",
-        )
-        write_rejects_csv_by_file(rejects, cfg.data_rejected)
-
-        valid = ann.filter(F.col("motivo").isNull())
-        dim = upsert_dimension(
-            spark, valid.select(F.col("ciudad_norm").alias("nombre")), cfg.dim_path
-        )
-        resolved = valid.join(F.broadcast(dim), valid.ciudad_norm == dim.nombre).select(
-            F.col("nombre_norm").alias("nombre"),
-            F.col("edad_int").cast("int").alias("edad"),
-            "ciudad_id",
-            "source_file",
-        )
-        existing = read_fact(spark, cfg)
-        start = (existing.agg(F.max("persona_id")).first()[0] or 0) + 1
-        batch = (
-            resolved.withColumn("processed_at", F.lit(started_at))
-            .withColumn(
-                "run_id",
-                F.concat(
-                    F.lit(ts + "_"),
-                    F.regexp_replace("source_file", r"[^\p{L}\p{N}]", "_"),
-                ),
-            )
-        )
-        res = _append_fact(spark, cfg, batch, id_start=start, group_col="source_file")
-
-        # per_group is already a tiny DISTRIBUTED frame — join it straight
-        # into the audit, no driver round trip
-        per_file = res.per_group
-        audit = (
-            ann.groupBy("source_file")
-            .agg(
-                F.sum(F.when(F.col("motivo").isNull(), 1).otherwise(0)).alias(
-                    "valid_count"
-                ),
-                F.sum(F.when(F.col("motivo").isNotNull(), 1).otherwise(0)).alias(
-                    "rejected_count"
-                ),
-            )
-            .join(F.broadcast(per_file), on="source_file", how="left")
-            .select(
-                F.concat(
-                    F.lit(ts + "_"),
-                    F.regexp_replace("source_file", r"[^\p{L}\p{N}]", "_"),
-                ).alias("run_id"),
-                F.lit(started_at).alias("started_at"),
-                "source_file",
-                F.col("valid_count").cast("long"),
-                F.col("rejected_count").cast("long"),
-                F.coalesce("inserted_new", F.lit(0)).cast("long").alias("inserted_new"),
-                F.coalesce("ignored_duplicates", F.lit(0))
-                .cast("long")
-                .alias("ignored_duplicates"),
-            )
-        )
-        audit.write.mode("append").parquet(cfg.audit_path)
-    finally:
-        ann.unpersist()
-    return spark.read.schema(AUDIT_SCHEMA).parquet(cfg.audit_path)

@@ -134,8 +134,10 @@ def process_microbatch(
             group_col="source_file",
         )
 
-        # per_group is already a tiny distributed frame keyed on source_file
-        per_file = res.per_group
+        per_file = spark.createDataFrame(
+            res.per_group,
+            "source_file string, inserted_new long, ignored_duplicates long",
+        )
         audit = (
             ann.groupBy("source_file")
             .agg(

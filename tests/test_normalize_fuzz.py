@@ -105,7 +105,7 @@ def test_fuzz_sanitize(spark, corpus):
 # low, each carrying a 40-string batch)
 # ---------------------------------------------------------------------------
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 # BMP chars; exclude surrogates (invalid in parquet/UTF-8 transport) and
@@ -145,6 +145,8 @@ def test_hypothesis_title(spark, strings):
 
 
 @given(strings=_batch)
+@example(strings=["0\x1f"])  # str.strip() removes \x1c-\x1f, int() rejects them
+@example(strings=["0\x1c"])
 @_hyp
 def test_hypothesis_strict_int(spark, strings):
     got = _batch_eval(spark, strings, strict_int("v", "long"))

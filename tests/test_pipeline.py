@@ -230,7 +230,9 @@ def test_bucketed_warehouse_run_batch_parity(spark, tmp_path):
 
 def test_edge_empty_and_all_reject_files(spark, tmp_path):
     """Header-only files and 100%-reject files must flow through without
-    errors, with correct audit metrics."""
+    errors, with correct audit metrics. A blank header name reads as
+    ``_c<i>`` and a repeated one (case-insensitively) as ``<name><i>``,
+    Spark's header naming, so both files miss a required column."""
     cfg = PipelineConfig(
         data_in=str(tmp_path / "in"),
         data_rejected=str(tmp_path / "rej"),
@@ -241,16 +243,29 @@ def test_edge_empty_and_all_reject_files(spark, tmp_path):
         Path(cfg.data_in) / "allbad.csv",
         [["nombre", "edad", "ciudad"], ["A", "error", "X"], ["B", "12", "Y"]],
     )
+    _write_csv(Path(cfg.data_in) / "blank_header.csv", [["nombre", "", "ciudad"], ["Ana", "30", "Lima"]])
+    _write_csv(
+        Path(cfg.data_in) / "dup_header.csv",
+        [["nombre", "edad", "ciudad", "Nombre"], ["Eva", "31", "Quito", "x"]],
+    )
     result = run_batch(spark, cfg, now=NOW)
     by_file = {r.source_file: r for r in result.files}
     assert (by_file["empty.csv"].valid_count, by_file["empty.csv"].rejected_count) == (0, 0)
     assert (by_file["allbad.csv"].valid_count, by_file["allbad.csv"].rejected_count) == (0, 2)
     assert by_file["allbad.csv"].inserted_new == 0
+    rej = Path(cfg.data_rejected)
+    assert (rej / "rejected_blank_header.csv").read_text() == (
+        'nombre,_c1,ciudad,edad,motivo\nAna,30,Lima,"",Faltan columnas requeridas\n'
+    )
+    assert (rej / "rejected_dup_header.csv").read_text() == (
+        "nombre0,edad,ciudad,Nombre3,nombre,motivo\n"
+        'Eva,31,Quito,x,"",Faltan columnas requeridas\n'
+    )
     # no fact table written at all (zero valid rows anywhere)
     import os
     assert not os.path.exists(cfg.fact_path)
-    # audit has both rows regardless
-    assert spark.read.parquet(cfg.audit_path).count() == 2
+    # audit has every row regardless
+    assert spark.read.parquet(cfg.audit_path).count() == 4
 
 
 def test_edge_extra_columns_pass_through_to_rejects(spark, tmp_path):
@@ -298,3 +313,138 @@ def test_cli_main_end_to_end(spark, tmp_path):
     assert rc == 0
     out = spark.read.parquet(str(tmp_path / "wh" / "personas_limpias"))
     assert out.count() == 1  # only ana survives (bob underage, carla bad int)
+
+
+def _outcome(spark, cfg, audit_rows):
+    """Everything a run leaves behind except its timestamps: audit values
+    (``AUDIT_SCHEMA`` tuples minus ``started_at``), reject CSV bytes, fact
+    rows (ids, natural keys, lineage), dim rows."""
+    rej = Path(cfg.data_rejected)
+    return (
+        sorted((r[0], *r[2:]) for r in audit_rows),
+        {p.name: p.read_text(encoding="utf-8") for p in rej.glob("*.csv")},
+        sorted(
+            (r["persona_id"], r["nombre"], r["edad"], r["ciudad_id"], r["run_id"])
+            for r in spark.read.parquet(cfg.fact_path).collect()
+        ),
+        sorted(tuple(r) for r in spark.read.parquet(cfg.dim_path).collect()),
+    )
+
+
+def test_batch_and_combined_runs_agree(spark, tmp_path):
+    """run_batch and run_directory_combined share one core: on a batch with
+    a reordered header, a file missing ``ciudad``, a header-only file and a
+    cross-file duplicate they leave identical warehouses and rejects, with
+    the ids the reference's sorted per-file loop assigns (the second file
+    with valid rows gets the ids after the first's, although 'Abel' and
+    'Bogotá' sort first)."""
+    files = {
+        "a_reordered.csv": [["edad", "ciudad", "nombre"], ["30", "lima", "ana"],
+                            ["41", "quito", "luis"], ["20", "lima", "kid"]],
+        "b_sin_ciudad.csv": [["nombre", "edad"], ["bruno", "33"]],
+        "c_vacio.csv": [["nombre", "edad", "ciudad"]],
+        "d_dup.csv": [["nombre", "edad", "ciudad"], ["ANA", "30", "LIMA"],
+                      ["abel", "50", "bogotá"], ["pepe", "x", "lima"]],
+    }
+    outcomes = []
+    for name, run in (("batch", run_batch), ("combined", run_directory_combined)):
+        cfg = PipelineConfig(
+            data_in=str(tmp_path / "in"),
+            data_rejected=str(tmp_path / name / "rej"),
+            warehouse=str(tmp_path / name / "wh"),
+        )
+        for fname, rows in files.items():
+            _write_csv(Path(cfg.data_in) / fname, rows)
+        out = run(spark, cfg, now=NOW)
+        audit = (
+            [(f.run_id, "", f.source_file, f.valid_count, f.rejected_count,
+              f.inserted_new, f.ignored_duplicates) for f in out.files]
+            if name == "batch"
+            else [tuple(r) for r in out.collect()]
+        )
+        outcomes.append(_outcome(spark, cfg, audit))
+    assert outcomes[0] == outcomes[1]
+
+    audit, rejects, fact, dim = outcomes[0]
+    rid = {f: make_run_id(f, NOW) for f in files}
+    assert audit == [
+        (rid["a_reordered.csv"], "a_reordered.csv", 2, 1, 2, 0),
+        (rid["b_sin_ciudad.csv"], "b_sin_ciudad.csv", 0, 1, 0, 0),
+        (rid["c_vacio.csv"], "c_vacio.csv", 0, 0, 0, 0),
+        (rid["d_dup.csv"], "d_dup.csv", 2, 1, 1, 1),
+    ]
+    assert rejects == {
+        "rejected_a_reordered.csv": "edad,ciudad,nombre,motivo\n20,lima,kid,Edad < 25\n",
+        "rejected_b_sin_ciudad.csv": (
+            'nombre,edad,ciudad,motivo\nbruno,33,"",Faltan columnas requeridas\n'
+        ),
+        "rejected_d_dup.csv": (
+            "nombre,edad,ciudad,motivo\npepe,x,lima,Edad no convertible a int\n"
+        ),
+    }
+    assert fact == [
+        (1, "Ana", 30, 1, rid["a_reordered.csv"]),
+        (2, "Luis", 41, 2, rid["a_reordered.csv"]),
+        (3, "Abel", 50, 3, rid["d_dup.csv"]),
+    ]
+    assert dim == [(1, "Lima"), (2, "Quito"), (3, "Bogotá")]
+
+
+@pytest.mark.parametrize("run", [run_batch, run_directory_combined])
+def test_source_file_is_the_on_disk_name(spark, tmp_path, run):
+    """The scan reports URL-encoded paths ('año%202024.csv'); audit rows,
+    run ids, fact lineage and reject files must carry the on-disk name."""
+    cfg = PipelineConfig(
+        data_in=str(tmp_path / "in"),
+        data_rejected=str(tmp_path / "rej"),
+        warehouse=str(tmp_path / "wh"),
+    )
+    names = ["año 2024.csv", "a+b.csv", "por%20ciento.csv"]
+    for i, name in enumerate(names):
+        _write_csv(
+            Path(cfg.data_in) / name,
+            [["nombre", "edad", "ciudad"], [f"p{i}", "30", "Lima"], [f"q{i}", "x", "Lima"]],
+        )
+    run(spark, cfg, now=NOW)
+    audit = spark.read.parquet(cfg.audit_path).collect()
+    assert sorted(r["source_file"] for r in audit) == sorted(names)
+    assert all(r["run_id"] == make_run_id(r["source_file"], NOW) for r in audit)
+    assert all((r["valid_count"], r["inserted_new"]) == (1, 1) for r in audit)
+    lineage = {r["run_id"] for r in spark.read.parquet(cfg.fact_path).collect()}
+    assert lineage == {make_run_id(n, NOW) for n in names}
+    assert sorted(p.name for p in Path(cfg.data_rejected).iterdir()) == sorted(
+        f"rejected_{n}" for n in names
+    )
+
+
+def _jobs_of(spark, fn, group: str) -> int:
+    """Spark jobs ``fn`` issues, counted under a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_batch_jobs_do_not_grow_with_file_count(spark, tmp_path):
+    """Files sharing a header are one scan and one load: a batch of 6
+    issues exactly as many Spark jobs as a batch of 2."""
+    jobs = []
+    for n in (2, 6):
+        cfg = PipelineConfig(
+            data_in=str(tmp_path / f"in{n}"),
+            data_rejected=str(tmp_path / f"rej{n}"),
+            warehouse=str(tmp_path / f"wh{n}"),
+        )
+        for i in range(n):
+            _write_csv(
+                Path(cfg.data_in) / f"f{i}.csv",
+                [["nombre", "edad", "ciudad"], [f"n{i}", "30", "Lima"],
+                 [f"m{i}", "40", f"C{i}"], [f"r{i}", "12", "Lima"]],
+            )
+        jobs.append(_jobs_of(spark, lambda: run_batch(spark, cfg, now=NOW), f"files{n}"))
+    assert jobs[0] == jobs[1], jobs
