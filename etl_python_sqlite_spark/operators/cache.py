@@ -34,16 +34,54 @@ build time, full Catalyst plan visible.
 Composition rule: an operator that derives a new frame from a tied
 result must keep the tied result alive as long as its own output —
 pass it via ``keepalive=`` so the chain of finalizers unwinds outward-in.
+
+Shared-stage memos. A stage that two or more queries read (a histogram,
+a pair set, a word-array frame) lives in a :class:`StageMemo` for the
+session. Every memo keeps the same contract:
+
+* the key is :func:`stage_key` — (applicationId, sf_dir,
+  ``data_fingerprint`` of the source table, *params), so a dataset
+  rewritten under an unchanged path is never served a stale stage;
+* one re-entrant lock per memo is held across the whole get-or-build,
+  so two concurrent consumers that miss together build the stage once
+  (per memo, not global: one lock would serialize the builds of
+  unrelated stages inside the concurrent bench);
+* a hit refreshes its entry and a full memo evicts the least recently
+  used entry;
+* the ``free`` policy, fixed where the memo is defined, says what an
+  eviction does. Cache-tier memos pass :func:`unpersist_entry`: an
+  unpersist under a live consumer only makes it recompute, and frames
+  that are not cached (a stage-table tier entry) are skipped.
+  Checkpoint- and stage-table-backed entries drop the reference only:
+  their ``tie`` / ``tie_stage_table`` finalizers free the blocks or the
+  table once the last consumer lets go, because freeing them earlier
+  would fail that consumer. Plain-Python entries own nothing;
+* :func:`release_all` (and ``StageMemo.clear``) frees every entry NOW —
+  the explicit release path for tests and session teardown.
 """
 
 from __future__ import annotations
 
+import threading
 import weakref
-from collections.abc import Iterable
+from collections import OrderedDict
+from collections.abc import Callable, Iterable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 
 _RELEASE_ATTR = "_spark_graft_release"
+_TABLE_RELEASE_ATTR = "_spark_graft_table_release"
+#: the stage-table name a ``tie_stage_table`` handle reads — consumers
+#: check it to pick their zero-exchange bucketed plan
+STAGE_TABLE_ATTR = "_spark_graft_stage_table"
+#: Stage tables this process created; the orphan sweep never drops them.
+_LIVE_STAGE_TABLES: set = set()
+#: (applicationId, prefix) pairs whose orphans were already swept
+_SWEPT_STAGE_PREFIXES: set = set()
+#: A stage table is built and consumed within one bench/probe run
+#: (minutes); an ORPHAN survives across rounds. 1 h is far above any
+#: live table's lifetime and far below an orphan's.
+_STAGE_ORPHAN_AGE_MS = 60 * 60 * 1000
 
 
 def _release_frame(f: DataFrame) -> None:
@@ -118,28 +156,109 @@ def tie_shared(
     return out
 
 
-def tie_stage_table(frame: DataFrame, drop_cb) -> DataFrame:
-    """Run ``drop_cb`` (the DROP of a bucketed stage table) when the
-    LAST consumer of a table-backed memo handle lets go. LRU eviction
-    of a stage-table entry must only drop the REFERENCE — an immediate
-    DROP TABLE under a still-live consumer frame fails that consumer's
-    next action with FileNotFound (the cache-tier eviction rule,
-    extended to tables). Explicit release paths may still drop
-    immediately; ``drop_cb`` must be idempotent (DROP TABLE IF
-    EXISTS). Uses a DIFFERENT attribute than :func:`tie` so
-    ``release(frame)`` on the handle stays a no-op — the immediate
-    drop belongs to the tier's own release function."""
+def tie_stage_table(frame: DataFrame, tbl: str) -> DataFrame:
+    """Stamp ``frame`` (a scan of the stage table ``tbl``) with the table
+    name under ``STAGE_TABLE_ATTR`` and DROP the table when the LAST
+    consumer of the frame lets go. LRU eviction of a stage-table entry
+    must only drop the REFERENCE — an immediate DROP TABLE under a
+    still-live consumer frame fails that consumer's next action with
+    FileNotFound (the cache-tier eviction rule, extended to tables).
+    :func:`_release_entry` runs the same finalizer early, on the explicit
+    release path. Uses a DIFFERENT attribute than :func:`tie` so
+    ``release(frame)`` on the handle stays a no-op."""
+    spark = frame.sparkSession
 
-    def _cb(_drop=drop_cb) -> None:
+    def _drop(_tbl=tbl) -> None:
+        _LIVE_STAGE_TABLES.discard(_tbl)
         try:
-            _drop()
+            spark.sql(f"DROP TABLE IF EXISTS {_tbl}")
         except Exception:
             pass  # session already stopped
 
-    fin = weakref.finalize(frame, _cb)
+    fin = weakref.finalize(frame, _drop)
     fin.atexit = False
-    setattr(frame, "_spark_graft_table_release", fin)
+    setattr(frame, STAGE_TABLE_ATTR, tbl)
+    setattr(frame, _TABLE_RELEASE_ATTR, fin)
+    _LIVE_STAGE_TABLES.add(tbl)
     return frame
+
+
+def bucketed_stage_table(
+    spark: SparkSession,
+    prefix: str,
+    key: tuple,
+    frame: DataFrame,
+    n_buckets: int,
+    cols: tuple,
+    where=None,
+) -> DataFrame:
+    """The at-scale tier of a shared stage: write ``frame`` once as a
+    catalog table bucketed by ``cols[0]`` and sorted by ``cols``, and
+    return its scan (filtered by ``where``) tied by
+    :func:`tie_stage_table`. The bucketed scan satisfies
+    HashPartitioning(cols[0]), so key-joined consumers read it with no
+    exchange. The table name is ``prefix`` + an md5 of the memo ``key``;
+    the first build per (application, prefix) sweeps orphans."""
+    import hashlib
+
+    sweep_stale_stage_tables(spark, prefix)
+    tbl = prefix + hashlib.md5(repr(key).encode()).hexdigest()[:12]
+    (
+        frame.write.mode("overwrite")
+        .bucketBy(n_buckets, cols[0])
+        .sortBy(*cols)
+        .saveAsTable(tbl)
+    )
+    scan = spark.table(tbl)
+    return tie_stage_table(scan if where is None else scan.filter(where), tbl)
+
+
+def sweep_stale_stage_tables(spark: SparkSession, prefix: str) -> None:
+    """Drop orphaned ``{prefix}*`` stage tables left by a crashed or
+    restarted session (their memo keys embed the old applicationId, so
+    no later session will ever name them — without this sweep the
+    warehouse files accumulate forever). Runs once per (application,
+    prefix), at first stage build, and only touches tables this session
+    did NOT create AND whose backing files predate this application's
+    start: a CONCURRENT Spark app sharing the warehouse (bench +
+    probe/pytest co-running from one checkout) has live stage tables
+    whose md5 names embed the other app's id — name-wise
+    indistinguishable from orphans. Guard: drop only tables whose
+    directory mtime BOTH predates this app's start AND is older than an
+    absolute age floor (covers the peer that started before us — stage
+    tables live for minutes, orphans for rounds), so a live peer table
+    is never swept while true orphans still age out (ADVICE r8)."""
+    import time as _time
+
+    app = spark.sparkContext.applicationId
+    if (app, prefix) in _SWEPT_STAGE_PREFIXES:
+        return
+    _SWEPT_STAGE_PREFIXES.add((app, prefix))
+    cutoff_ms = min(
+        spark.sparkContext.startTime,
+        int(_time.time() * 1000) - _STAGE_ORPHAN_AGE_MS,
+    )
+    try:
+        jvm = spark._jvm
+        hconf = spark._jsc.hadoopConfiguration()
+        warehouse = spark.conf.get("spark.sql.warehouse.dir")
+        for t in spark.catalog.listTables():
+            name = t.name
+            if not name.startswith(prefix) or name in _LIVE_STAGE_TABLES:
+                continue
+            try:
+                p = jvm.org.apache.hadoop.fs.Path(warehouse, name)
+                fs = p.getFileSystem(hconf)
+                if (
+                    fs.exists(p)
+                    and fs.getFileStatus(p).getModificationTime() >= cutoff_ms
+                ):
+                    continue  # plausibly a concurrent app's live table
+            except Exception:
+                continue  # can't date it — leave it rather than break a peer
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+    except Exception:
+        pass  # catalog unavailable (stopping session) — leave for next run
 
 
 def release(df: DataFrame) -> None:
@@ -148,3 +267,102 @@ def release(df: DataFrame) -> None:
     fin = getattr(df, _RELEASE_ATTR, None)
     if fin is not None:
         fin()
+
+
+def stage_key(
+    spark: SparkSession, sf_dir: str, table: str, *params
+) -> tuple:
+    """The memo key of a shared stage built from ``{sf_dir}/{table}``:
+    (applicationId, sf_dir, file-listing fingerprint, *params). The
+    fingerprint is taken before any memo lock."""
+    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
+
+    return (
+        spark.sparkContext.applicationId,
+        sf_dir,
+        data_fingerprint(spark, sf_dir, table),
+        *params,
+    )
+
+
+def _frames(entry) -> tuple:
+    """The frames a memo entry holds: the entry itself, or the frame
+    members of a tuple entry."""
+    items = entry if isinstance(entry, tuple) else (entry,)
+    return tuple(f for f in items if hasattr(f, "unpersist"))
+
+
+def unpersist_entry(entry) -> None:
+    """The cache-tier eviction policy: unpersist the entry's cached
+    frames. Checkpoint- and table-backed frames are not cached, so this
+    leaves them to their finalizers."""
+    for f in _frames(entry):
+        if getattr(f, "is_cached", False):
+            try:
+                f.unpersist()
+            except Exception:
+                pass  # session already stopped
+
+
+def _release_entry(entry) -> None:
+    """Free everything a memo entry holds, now: tied checkpoint blocks
+    and caches, stage tables, cached frames."""
+    for f in _frames(entry):
+        release(f)
+        fin = getattr(f, _TABLE_RELEASE_ATTR, None)
+        if fin is not None:
+            fin()
+    unpersist_entry(entry)
+
+
+_MEMOS: weakref.WeakSet = weakref.WeakSet()
+
+
+class StageMemo:
+    """Session memo of one shared stage (see the module docstring for
+    the contract). ``free`` runs on each evicted entry; ``None`` drops
+    the reference only."""
+
+    def __init__(
+        self,
+        max_entries: int = 2,
+        free: Callable[[object], None] | None = None,
+    ) -> None:
+        self.max_entries = max_entries
+        self.free = free
+        self._entries: OrderedDict = OrderedDict()
+        self._lock = threading.RLock()
+        _MEMOS.add(self)
+
+    def __len__(self) -> int:
+        return len(self._entries)
+
+    def __contains__(self, key) -> bool:
+        return key in self._entries
+
+    def get_or_build(self, key, build: Callable[[], object]):
+        """The entry for ``key``, built by ``build()`` on a miss."""
+        with self._lock:
+            if key in self._entries:
+                self._entries.move_to_end(key)
+                return self._entries[key]
+            entry = build()
+            while len(self._entries) >= self.max_entries:
+                _, old = self._entries.popitem(last=False)
+                if self.free is not None:
+                    self.free(old)
+            self._entries[key] = entry
+            return entry
+
+    def clear(self) -> None:
+        """Forget every entry and free its storage now."""
+        with self._lock:
+            while self._entries:
+                _, old = self._entries.popitem(last=False)
+                _release_entry(old)
+
+
+def release_all() -> None:
+    """Free every entry of every live :class:`StageMemo`."""
+    for memo in list(_MEMOS):
+        memo.clear()

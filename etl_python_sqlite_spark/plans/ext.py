@@ -23,7 +23,14 @@ from pyspark.sql import functions as F
 from etl_python_sqlite_spark.functions import text as X
 from etl_python_sqlite_spark.operators import dedup as D
 from etl_python_sqlite_spark.operators import similarity as S
-from etl_python_sqlite_spark.operators.cache import tie
+from etl_python_sqlite_spark.operators.cache import (
+    StageMemo,
+    bucketed_stage_table,
+    release,
+    stage_key,
+    tie,
+    unpersist_entry,
+)
 from etl_python_sqlite_spark.sources.parquet import load_table
 
 
@@ -141,21 +148,11 @@ def ext_normalized_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: the <150 query is precisely the stage filtered to id_b < 150, and
 #: the clusters query is the stage filtered to jaccard ≥ 0.25 (the
 #: identical double compare the operator would have run).
-_SAMPLE_JACC_MEMO: dict = {}
-_SAMPLE_JACC_LOCK = threading.RLock()
+_SAMPLE_JACC = StageMemo()
 
 
 def _sample_jaccard_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_python_sqlite_spark.operators.cache import release
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
-
-    fp = data_fingerprint(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    with _SAMPLE_JACC_LOCK:
-        hit = _SAMPLE_JACC_MEMO.pop(key, None)
-        if hit is not None:
-            _SAMPLE_JACC_MEMO[key] = hit  # LRU refresh
-            return hit
+    def build() -> DataFrame:
         sample = _docs(spark, sf_dir).filter(F.col("doc_id") < 500)
         lazy = D.ngram_jaccard_pairs(sample, threshold=0.05, k=3)
         # eager cut at the scored pair set: the two consumers run as
@@ -167,19 +164,11 @@ def _sample_jaccard_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
         release(lazy)
         pairs = tie(ckpt.select("id_a", "id_b", "jaccard"), ckpt)
         setattr(pairs, _PAIRS_NEDGES_ATTR, n_pairs)
-        while len(_SAMPLE_JACC_MEMO) >= 2:
-            _SAMPLE_JACC_MEMO.pop(next(iter(_SAMPLE_JACC_MEMO)))
-        _SAMPLE_JACC_MEMO[key] = pairs
         return pairs
 
-
-def release_shared_sample_jaccard() -> None:
-    """Release every memoized sample-Jaccard stage (checkpoint blocks)."""
-    from etl_python_sqlite_spark.operators.cache import release
-
-    while _SAMPLE_JACC_MEMO:
-        _, old = _SAMPLE_JACC_MEMO.popitem()
-        release(old)
+    return _SAMPLE_JACC.get_or_build(
+        stage_key(spark, sf_dir, "documents"), build
+    )
 
 
 def ext_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,24 +187,8 @@ def ext_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: frame shared by ext_minhash_near_dups and ext_minhash_dedup_clusters
 #: (r8): both queries ran the IDENTICAL signature → band → candidate →
 #: verify pipeline (~4-5 s each at sf0.1, concurrently in the bench) —
-#: one memoized stage feeds both, same policy as the cents histograms /
-#: co-occurrence edges / mined spans. The returned frame is lazy over
-#: its internally-checkpointed candidate set (the expensive half), so
-#: each consumer re-runs only the cheap verify join. LRU cap 2;
-#: eviction drops the reference WITHOUT an explicit release (a live
-#: result may still keepalive the frame — tie()'s finalizer frees the
-#: blocks when the last consumer lets go); release_shared_minhash() for
-#: the lifecycle fixture. The lock serializes concurrent get-or-build
-#: (the bench runs both consumers simultaneously — an unlocked double
-#: miss would double-build and leak one stage).
-_MINHASH_MEMO: dict = {}
-#: One lock PER memo (not one global): the lock exists to stop a
-#: same-stage double-build; a shared lock would also SERIALIZE builds
-#: of unrelated stages (spans + minhash + kmeans all build inside the
-#: concurrent bench — several seconds of avoidable wall).
-_MINHASH_LOCK = threading.RLock()
-_SPANS_LOCK = threading.RLock()
-_KMEANS_LOCK = threading.RLock()
+#: one memoized stage feeds both.
+_MINHASH = StageMemo()
 
 
 #: Corpus document count above which the shared minhash-pairs stage
@@ -242,8 +215,6 @@ _KMEANS_LOCK = threading.RLock()
 #: Tier equality is pinned in tests/test_bucketed_stage.py.
 MINHASH_BUCKETED_STAGE_MIN_DOCS = 50_000
 MINHASH_STAGE_BUCKETS = 32
-_MINHASH_TABLE_ATTR = "_spark_graft_minhash_table"
-_MINHASH_LIVE_TABLES: set = set()
 
 #: verified-pair count stamped on every pair-stage memo handle at build
 #: (the _COOCC_NEDGES_ATTR pattern): downstream connected-components
@@ -293,78 +264,27 @@ def _cluster_summary(
     return tie(out, edges, keepalive=[assign, pairs])  # edges: ckpt blocks
 
 
-def _release_minhash_entry(old: DataFrame) -> None:
-    """Free one memo entry: DROP a bucketed stage table (files +
-    catalog entry); cache-tier entries just drop the reference (tie()'s
-    finalizer frees the checkpoint blocks when the last consumer lets
-    go)."""
-    tbl = getattr(old, _MINHASH_TABLE_ATTR, None)
-    if tbl is None:
-        return
-    try:
-        _MINHASH_LIVE_TABLES.discard(tbl)
-        old.sparkSession.sql(f"DROP TABLE IF EXISTS {tbl}")
-    except Exception:
-        pass  # session already stopped
-
-
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_python_sqlite_spark.sources.parquet import (
-        data_fingerprint,
         table_row_count_from_metadata,
     )
 
-    fp = data_fingerprint(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    with _MINHASH_LOCK:
-        hit = _MINHASH_MEMO.pop(key, None)
-        if hit is not None:
-            _MINHASH_MEMO[key] = hit  # LRU refresh
-            return hit
+    key = stage_key(spark, sf_dir, "documents")
+
+    def build() -> DataFrame:
         lazy = D.minhash_near_dups_portable(
             _docs(spark, sf_dir), threshold_micro=300_000
         )
         n_docs = table_row_count_from_metadata(sf_dir, "documents")
-        from etl_python_sqlite_spark.operators.cache import release
-
         if n_docs >= MINHASH_BUCKETED_STAGE_MIN_DOCS:
-            import hashlib
-
-            from etl_python_sqlite_spark.plans.relational import (
-                sweep_stale_stage_tables,
-            )
-
-            sweep_stale_stage_tables(
-                spark, "minhash_pairs_", _MINHASH_LIVE_TABLES
-            )
-            tbl = (
-                "minhash_pairs_"
-                + hashlib.md5(repr(key).encode()).hexdigest()[:12]
-            )
-            (
-                lazy.write.mode("overwrite")
-                .bucketBy(MINHASH_STAGE_BUCKETS, "id_a")
-                .sortBy("id_a", "id_b")
-                .saveAsTable(tbl)
+            pairs = bucketed_stage_table(
+                spark, "minhash_pairs_", key, lazy,
+                MINHASH_STAGE_BUCKETS, ("id_a", "id_b"),
             )
             release(lazy)  # the bucketed files are the materialization
-            from etl_python_sqlite_spark.operators.cache import (
-                tie_stage_table,
-            )
-
-            pairs = spark.table(tbl)
             # parquet-count over the freshly written table — footer
             # statistics, bounded job at BUILD time only
             n_pairs = pairs.count()
-            setattr(pairs, _MINHASH_TABLE_ATTR, tbl)
-            _MINHASH_LIVE_TABLES.add(tbl)
-            pairs = tie_stage_table(
-                pairs,
-                lambda s=spark, t=tbl: (
-                    _MINHASH_LIVE_TABLES.discard(t),
-                    s.sql(f"DROP TABLE IF EXISTS {t}"),
-                ),
-            )
         else:
             # eager lineage cut at the VERIFIED pair set (the
             # _video_pairs policy, extended here r12): consumers scan
@@ -378,25 +298,9 @@ def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             release(lazy)
             pairs = tie(ckpt.select("id_a", "id_b", "jaccard_micro"), ckpt)
         setattr(pairs, _PAIRS_NEDGES_ATTR, n_pairs)
-        while len(_MINHASH_MEMO) >= 2:
-            # reference drop only: a table-tier entry's DROP fires via
-            # its tie_stage_table finalizer once the LAST consumer lets
-            # go (code-review r11: an immediate DROP here would fail a
-            # still-live consumer's next action)
-            _MINHASH_MEMO.pop(next(iter(_MINHASH_MEMO)))
-        _MINHASH_MEMO[key] = pairs
         return pairs
 
-
-def release_shared_minhash() -> None:
-    """Release every memoized minhash-pairs stage (checkpoint blocks /
-    bucketed stage tables included)."""
-    from etl_python_sqlite_spark.operators.cache import release
-
-    while _MINHASH_MEMO:
-        _, old = _MINHASH_MEMO.popitem()
-        _release_minhash_entry(old)
-        release(old)
+    return _MINHASH.get_or_build(key, build)
 
 
 def ext_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2587,57 +2491,27 @@ def ext_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: (applicationId, sf_dir, fingerprint) → the tie()'d span frame shared
-#: by ext_repeated_substring_mine and ext_repeated_span_cut — the same
-#: shared-stage policy as the cents histograms and co-occurrence edges
-#: (mining is the expensive half of both queries; the fingerprint keys
-#: out stale data after a rewrite). LRU cap 2; released via
-#: release_shared_spans() (the cache-lifecycle fixture calls it before
-#: its blanket sweep — the memoized frame is checkpoint-backed, so
-#: sweeping its blocks under a live entry would truncate lineage).
-_SPANS_MEMO: dict = {}
-_SPANS_MEMO_MAX = 2
+#: by ext_repeated_substring_mine and ext_repeated_span_cut (mining is
+#: the expensive half of both queries; the two run as concurrent bench
+#: actions).
+_SPANS = StageMemo()
 
 
 def _mined_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_python_sqlite_spark.operators.cache import release
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
+    key = stage_key(spark, sf_dir, "documents")
+    fp = key[2]  # (path, size, mtime) per file
 
-    fp = data_fingerprint(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    # same per-memo lock discipline as _minhash_pairs: the two span
-    # queries run as concurrent bench actions — an unlocked double miss would
-    # double-build the mining pass and leak one stage (r8)
-    with _SPANS_LOCK:
-        hit = _SPANS_MEMO.pop(key, None)
-        if hit is not None:
-            _SPANS_MEMO[key] = hit  # LRU refresh
-            return hit
+    def build() -> DataFrame:
         docs = load_table(spark, sf_dir, "documents").select(
             "doc_id", "text"
         )
         corpus_bytes = sum(e[1] for e in fp if e[1] is not None)
-        spans = D.repeated_span_mine(
+        return D.repeated_span_mine(
             docs, min_len=40, anchor_k=16,
             broadcast_texts=corpus_bytes < 64 * 1024 * 1024,
         )
-        while len(_SPANS_MEMO) >= _SPANS_MEMO_MAX:
-            # drop the reference WITHOUT an explicit release: a live
-            # query result may still keepalive the evicted frame, and
-            # its checkpoint blocks cannot be recomputed — tie()'s
-            # finalizer frees them the moment the last consumer lets go
-            oldest = next(iter(_SPANS_MEMO))
-            _SPANS_MEMO.pop(oldest)
-        _SPANS_MEMO[key] = spans
-        return spans
 
-
-def release_shared_spans() -> None:
-    """Release every memoized span frame (checkpoint blocks included)."""
-    from etl_python_sqlite_spark.operators.cache import release
-
-    while _SPANS_MEMO:
-        _, old = _SPANS_MEMO.popitem()
-        release(old)
+    return _SPANS.get_or_build(key, build)
 
 
 def ext_repeated_substring_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2699,22 +2573,13 @@ def ext_repeated_span_cut(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: The per-vector assignment is checkpointed once (O(n) rows — the
 #: chain's narrowest complete product); the centroid-L1 checksums are
 #: k bounded rows collected at build time (literal re-entry class).
-#: Same lock/LRU/release policy as the other ext-side stages.
-_KMEANS_MEMO: dict = {}
+_KMEANS = StageMemo()
 
 
 def _kmeans_stage(spark: SparkSession, sf_dir: str):
     from etl_python_sqlite_spark.operators import clustering as C
-    from etl_python_sqlite_spark.operators.cache import tie
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
 
-    fp = data_fingerprint(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    with _KMEANS_LOCK:
-        hit = _KMEANS_MEMO.pop(key, None)
-        if hit is not None:
-            _KMEANS_MEMO[key] = hit  # LRU refresh
-            return hit
+    def build():
         flat, cents, final = C._lloyd_chain(
             _embs(spark, sf_dir), 8, 2, "embedding", "vec_id", 8
         )
@@ -2734,21 +2599,9 @@ def _kmeans_stage(spark: SparkSession, sf_dir: str):
         # the view carries the finalizer that frees the checkpoint
         # blocks once the memo entry AND every consumer let go
         assign = tie(ck.select("vid", "cid", "dist"), ck)
-        entry = (assign, l1_rows)
-        while len(_KMEANS_MEMO) >= 2:
-            oldest = next(iter(_KMEANS_MEMO))
-            _KMEANS_MEMO.pop(oldest)  # finalizer-released, like spans
-        _KMEANS_MEMO[key] = entry
-        return entry
+        return assign, l1_rows
 
-
-def release_shared_kmeans() -> None:
-    """Release every memoized k-means stage (checkpoint blocks)."""
-    from etl_python_sqlite_spark.operators.cache import release
-
-    while _KMEANS_MEMO:
-        _, (assign, _) = _KMEANS_MEMO.popitem()
-        release(assign)
+    return _KMEANS.get_or_build(stage_key(spark, sf_dir, "embeddings"), build)
 
 
 def ext_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2892,35 +2745,22 @@ def ext_kmeans_par_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: refine collect ≈ 1-1.5 s) per invocation. ``tag`` separates the two
 #: distinct inputs (the raw embeddings vs the contamination-tagged
 #: union — the union is itself a deterministic function of the same
-#: table, so the fingerprint key stays valid). Plain-python memo, no
-#: Spark resources (the word-histogram policy).
-_SEMCENTS_MEMO: dict = {}
-_SEMCENTS_LOCK = threading.Lock()
+#: table, so the fingerprint key stays valid).
+_SEMCENTS = StageMemo(max_entries=4)
 
 
 def _semantic_centroids_stage(
     spark: SparkSession, sf_dir: str, tag: str, df: DataFrame, **kw
 ) -> list:
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
-
-    fp = data_fingerprint(spark, sf_dir, "embeddings")
     # the codebook parameters (n_clusters, refine_iters, vec_col, …)
     # are part of the identity — a tag reuse with different params must
     # never alias to a cached codebook (ADVICE r11)
-    key = (
-        spark.sparkContext.applicationId, sf_dir, fp, tag,
-        tuple(sorted(kw.items())),
+    key = stage_key(
+        spark, sf_dir, "embeddings", tag, tuple(sorted(kw.items()))
     )
-    with _SEMCENTS_LOCK:
-        hit = _SEMCENTS_MEMO.pop(key, None)
-        if hit is not None:
-            _SEMCENTS_MEMO[key] = hit  # LRU refresh
-            return hit
-        hit = S.semantic_centroids(df, **kw)
-        while len(_SEMCENTS_MEMO) >= 4:
-            _SEMCENTS_MEMO.pop(next(iter(_SEMCENTS_MEMO)))
-        _SEMCENTS_MEMO[key] = hit
-        return hit
+    return _SEMCENTS.get_or_build(
+        key, lambda: S.semantic_centroids(df, **kw)
+    )
 
 
 #: applicationId → a cloned SparkSession with AQE DISABLED, for the
@@ -2965,30 +2805,19 @@ def _aqe_off_session(spark: SparkSession) -> SparkSession:
 #: output: k (cid, vid, qvec) tuples of plain Python ints — the
 #: deterministic k-means‖ seeding is a pure function of the table, and
 #: every ext_kmeans_par_seeded invocation was re-running its two
-#: bounded corpus passes (~2.2 s warm at sf0.1). Same plain-python memo
-#: policy as the word histogram (no Spark resources, no finalizer).
-_KMSEEDS_MEMO: dict = {}
-_KMSEEDS_LOCK = threading.Lock()
+#: bounded corpus passes (~2.2 s warm at sf0.1).
+_KMSEEDS = StageMemo()
 
 
 def _kmeans_par_seeds_stage(spark: SparkSession, sf_dir: str, k: int) -> list:
     from etl_python_sqlite_spark.operators.clustering import (
         kmeans_parallel_seeds,
     )
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
 
-    fp = data_fingerprint(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, fp, k)
-    with _KMSEEDS_LOCK:
-        hit = _KMSEEDS_MEMO.pop(key, None)
-        if hit is not None:
-            _KMSEEDS_MEMO[key] = hit  # LRU refresh
-            return hit
-        hit = kmeans_parallel_seeds(_embs(spark, sf_dir), k)
-        while len(_KMSEEDS_MEMO) >= 2:
-            _KMSEEDS_MEMO.pop(next(iter(_KMSEEDS_MEMO)))
-        _KMSEEDS_MEMO[key] = hit
-        return hit
+    return _KMSEEDS.get_or_build(
+        stage_key(spark, sf_dir, "embeddings", k),
+        lambda: kmeans_parallel_seeds(_embs(spark, sf_dir), k),
+    )
 
 
 #: (applicationId, sf_dir, fingerprint, max_vocab) → collected (word,
@@ -2996,30 +2825,19 @@ def _kmeans_par_seeds_stage(spark: SparkSession, sf_dir: str, k: int) -> list:
 #: (BPE and unigram-LM) start from — the bench runs both queries
 #: concurrently, and without the memo each would re-run the same
 #: explode→groupBy corpus shuffle. Plain Python tuples (≤ max_vocab
-#: rows) — no Spark resources, so no finalizer; lock held end-to-end
-#: across the get-or-build (the CLAUDE.md double-miss rule).
-_WORDHIST_MEMO: dict = {}
-_WORDHIST_LOCK = threading.Lock()
+#: rows).
+_WORDHIST = StageMemo()
 
 
 def _word_histogram_stage(
     spark: SparkSession, sf_dir: str, max_vocab: int = 8192
 ) -> list[tuple[str, int]]:
     from etl_python_sqlite_spark.operators.bpe import word_histogram
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
 
-    fp = data_fingerprint(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, fp, max_vocab)
-    with _WORDHIST_LOCK:
-        hit = _WORDHIST_MEMO.pop(key, None)
-        if hit is not None:
-            _WORDHIST_MEMO[key] = hit  # LRU refresh (dict = insert order)
-            return hit
-        hit = word_histogram(_docs(spark, sf_dir), max_vocab=max_vocab)
-        while len(_WORDHIST_MEMO) >= 2:
-            _WORDHIST_MEMO.pop(next(iter(_WORDHIST_MEMO)))
-        _WORDHIST_MEMO[key] = hit
-        return hit
+    return _WORDHIST.get_or_build(
+        stage_key(spark, sf_dir, "documents", max_vocab),
+        lambda: word_histogram(_docs(spark, sf_dir), max_vocab=max_vocab),
+    )
 
 
 def ext_unigram_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3191,48 +3009,29 @@ def ext_kmv_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (doc_id, bucket, cnt) hashed-bigram roll-up — the stage
 #: ext_dsir_importance and ext_quality_classifier share (identical
 #: hash, identical buckets; each joins its own class/target flag onto
-#: the materialized rows per consumer). Same lock/LRU/finalizer policy
-#: as the other ext-side stages.
-_BIGRAM_MEMO: dict = {}
-_BIGRAM_LOCK = threading.Lock()
+#: the materialized rows per consumer).
+_BIGRAM = StageMemo()
 
 
 def _bigram_bucket_stage(
     spark: SparkSession, sf_dir: str, n_buckets: int = 1024
 ) -> DataFrame:
-    from etl_python_sqlite_spark.operators.cache import tie
     from etl_python_sqlite_spark.operators.curation import (
         bucketed_bigram_counts,
     )
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
 
-    fp = data_fingerprint(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, fp, n_buckets)
-    with _BIGRAM_LOCK:
-        hit = _BIGRAM_MEMO.pop(key, None)
-        if hit is not None:
-            _BIGRAM_MEMO[key] = hit  # LRU refresh
-            return hit
+    def build() -> DataFrame:
         # r12-opt: ride the shared (doc, w1, w2) instance stage — the
         # hash roll-up no longer re-runs the tokenize+explode pass
         ck = bucketed_bigram_counts(
             _docs(spark, sf_dir), n_buckets,
             grams=_ngram_instances_stage(spark, sf_dir, 2),
         ).localCheckpoint(eager=True)
-        stage = tie(ck.select("doc_id", "bucket", "cnt"), ck)
-        while len(_BIGRAM_MEMO) >= 2:
-            _BIGRAM_MEMO.pop(next(iter(_BIGRAM_MEMO)))
-        _BIGRAM_MEMO[key] = stage
-        return stage
+        return tie(ck.select("doc_id", "bucket", "cnt"), ck)
 
-
-def release_shared_bigrams() -> None:
-    """Release every memoized bigram-bucket stage (checkpoint blocks)."""
-    from etl_python_sqlite_spark.operators.cache import release
-
-    while _BIGRAM_MEMO:
-        _, old = _BIGRAM_MEMO.popitem()
-        release(old)
+    return _BIGRAM.get_or_build(
+        stage_key(spark, sf_dir, "documents", n_buckets), build
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -3267,12 +3066,10 @@ def _img_payload(doc_id: int) -> bytes:
 
 #: (applicationId, sf_dir, fingerprint) → the tie()'d verified image
 #: pair frame shared by ext_image_near_dups and
-#: ext_image_dedup_clusters — the same policy as `_minhash_pairs`: the
-#: expensive half (Arrow decode + dHash) is checkpointed INSIDE
-#: dhash_near_dups, so each consumer re-runs only the cheap JVM
-#: banding/verify; one lock per memo (build-race rule), LRU cap 2.
-_IMGPAIRS_MEMO: dict = {}
-_IMGPAIRS_LOCK = threading.RLock()
+#: ext_image_dedup_clusters: the expensive half (Arrow decode + dHash)
+#: is checkpointed INSIDE dhash_near_dups, so each consumer re-runs only
+#: the cheap JVM banding/verify.
+_IMGPAIRS = StageMemo()
 
 #: Media count above which the shared image-pairs stage materializes as
 #: a BUCKETED CATALOG TABLE (bucketBy id_a — the CC clustering's first
@@ -3299,22 +3096,6 @@ _IMGPAIRS_LOCK = threading.RLock()
 #: Tier equality is pinned in tests/test_bucketed_stage.py.
 IMAGE_BUCKETED_STAGE_MIN_MEDIA = 90_000
 IMAGE_STAGE_BUCKETS = 32
-_IMGPAIRS_TABLE_ATTR = "_spark_graft_image_pairs_table"
-_IMGPAIRS_LIVE_TABLES: set = set()
-
-
-def _release_imgpairs_entry(old: DataFrame) -> None:
-    """Free one memo entry: DROP a bucketed stage table; cache-tier
-    entries just drop the reference (tie()'s finalizer frees the
-    checkpoint blocks when the last consumer lets go)."""
-    tbl = getattr(old, _IMGPAIRS_TABLE_ATTR, None)
-    if tbl is None:
-        return
-    try:
-        _IMGPAIRS_LIVE_TABLES.discard(tbl)
-        old.sparkSession.sql(f"DROP TABLE IF EXISTS {tbl}")
-    except Exception:
-        pass  # session already stopped
 
 
 def _image_media(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3366,64 +3147,28 @@ def _image_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         image_dhash,
     )
     from etl_python_sqlite_spark.sources.parquet import (
-        data_fingerprint,
         table_row_count_from_metadata,
     )
 
-    fp = data_fingerprint(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    with _IMGPAIRS_LOCK:
-        hit = _IMGPAIRS_MEMO.pop(key, None)
-        if hit is not None:
-            _IMGPAIRS_MEMO[key] = hit  # LRU refresh
-            return hit
+    key = stage_key(spark, sf_dir, "documents")
+
+    def build() -> DataFrame:
         lazy = dhash_near_dups(
             image_dhash(_image_media(spark, sf_dir)),
             max_hamming=6,
             n_bands=4,
         )
-        from etl_python_sqlite_spark.operators.cache import release
-
         n_docs = table_row_count_from_metadata(sf_dir, "documents")
         n_media = n_docs * 8 // 7  # one image/doc + a twin per %7==0
         if n_media >= IMAGE_BUCKETED_STAGE_MIN_MEDIA:
-            import hashlib
-
-            from etl_python_sqlite_spark.plans.relational import (
-                sweep_stale_stage_tables,
-            )
-
-            sweep_stale_stage_tables(
-                spark, "image_pairs_", _IMGPAIRS_LIVE_TABLES
-            )
-            tbl = (
-                "image_pairs_"
-                + hashlib.md5(repr(key).encode()).hexdigest()[:12]
-            )
-            (
-                lazy.write.mode("overwrite")
-                .bucketBy(IMAGE_STAGE_BUCKETS, "id_a")
-                .sortBy("id_a", "id_b")
-                .saveAsTable(tbl)
+            pairs = bucketed_stage_table(
+                spark, "image_pairs_", key, lazy,
+                IMAGE_STAGE_BUCKETS, ("id_a", "id_b"),
             )
             release(lazy)  # the bucketed files are the materialization
-            from etl_python_sqlite_spark.operators.cache import (
-                tie_stage_table,
-            )
-
-            pairs = spark.table(tbl)
             # footer-statistics count over the written table — bounded
             # job at BUILD time only, rides the handle for the CC gate
             n_pairs = pairs.count()
-            setattr(pairs, _IMGPAIRS_TABLE_ATTR, tbl)
-            _IMGPAIRS_LIVE_TABLES.add(tbl)
-            pairs = tie_stage_table(
-                pairs,
-                lambda s=spark, t=tbl: (
-                    _IMGPAIRS_LIVE_TABLES.discard(t),
-                    s.sql(f"DROP TABLE IF EXISTS {t}"),
-                ),
-            )
         else:
             # eager lineage cut at the verified pair set (the
             # _video_pairs policy, extended here r12): both consumers
@@ -3437,22 +3182,9 @@ def _image_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             release(lazy)
             pairs = tie(ckpt.select("id_a", "id_b", "hamming"), ckpt)
         setattr(pairs, _PAIRS_NEDGES_ATTR, n_pairs)
-        while len(_IMGPAIRS_MEMO) >= 2:
-            # reference drop only (see the minhash eviction comment)
-            _IMGPAIRS_MEMO.pop(next(iter(_IMGPAIRS_MEMO)))
-        _IMGPAIRS_MEMO[key] = pairs
         return pairs
 
-
-def release_shared_image_pairs() -> None:
-    """Release every memoized image-pair stage (checkpoint blocks /
-    bucketed stage tables included)."""
-    from etl_python_sqlite_spark.operators.cache import release
-
-    while _IMGPAIRS_MEMO:
-        _, old = _IMGPAIRS_MEMO.popitem()
-        _release_imgpairs_entry(old)
-        release(old)
+    return _IMGPAIRS.get_or_build(key, build)
 
 
 def ext_image_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3819,10 +3551,8 @@ def _audio_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: pair frame shared by ext_audio_near_dups and
 #: ext_audio_dedup_clusters — the `_image_pairs` policy (the expensive
 #: Arrow decode+hash half is checkpointed INSIDE dhash_near_dups, so
-#: each consumer re-runs only the cheap JVM banding/verify); one lock
-#: per memo (build-race rule), LRU cap 2.
-_AUDPAIRS_MEMO: dict = {}
-_AUDPAIRS_LOCK = threading.RLock()
+#: each consumer re-runs only the cheap JVM banding/verify).
+_AUDPAIRS = StageMemo()
 
 
 def _audio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3830,15 +3560,8 @@ def _audio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_energy_hash,
         audio_near_dups,
     )
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
 
-    fp = data_fingerprint(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    with _AUDPAIRS_LOCK:
-        hit = _AUDPAIRS_MEMO.pop(key, None)
-        if hit is not None:
-            _AUDPAIRS_MEMO[key] = hit  # LRU refresh
-            return hit
+    def build() -> DataFrame:
         lazy = audio_near_dups(
             audio_energy_hash(_audio_media(spark, sf_dir)),
             max_hamming=6,
@@ -3848,26 +3571,14 @@ def _audio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # policy, extended here r12) + measured count for the CC gate;
         # the decode-half checkpoint inside the banding machinery is
         # released immediately (the pair checkpoint supersedes it).
-        from etl_python_sqlite_spark.operators.cache import release
-
         ckpt = lazy.localCheckpoint(eager=True)
         n_pairs = ckpt.count()  # materialized blocks — bounded job
         release(lazy)
         pairs = tie(ckpt.select("id_a", "id_b", "hamming"), ckpt)
         setattr(pairs, _PAIRS_NEDGES_ATTR, n_pairs)
-        while len(_AUDPAIRS_MEMO) >= 2:
-            _AUDPAIRS_MEMO.pop(next(iter(_AUDPAIRS_MEMO)))
-        _AUDPAIRS_MEMO[key] = pairs
         return pairs
 
-
-def release_shared_audio_pairs() -> None:
-    """Release every memoized audio-pair stage (checkpoint blocks)."""
-    from etl_python_sqlite_spark.operators.cache import release
-
-    while _AUDPAIRS_MEMO:
-        _, old = _AUDPAIRS_MEMO.popitem()
-        release(old)
+    return _AUDPAIRS.get_or_build(stage_key(spark, sf_dir, "documents"), build)
 
 
 def ext_audio_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3950,26 +3661,17 @@ def _video_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: CC rounds scan the materialized RDD). Cache tier only: the pair
 #: frame is O(n_twins) rows; at a corpus where it outgrows a session
 #: checkpoint the image-pairs bucketed tier (IMAGE_BUCKETED_STAGE_*) is
-#: the ready-made upgrade. One lock per memo (build-race rule), LRU 2.
-_VIDPAIRS_MEMO: dict = {}
-_VIDPAIRS_LOCK = threading.RLock()
+#: the ready-made upgrade.
+_VIDPAIRS = StageMemo()
 
 
 def _video_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_python_sqlite_spark.operators.cache import release
     from etl_python_sqlite_spark.operators.videohash import (
         video_frame_hashes,
         video_near_dups,
     )
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
 
-    fp = data_fingerprint(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    with _VIDPAIRS_LOCK:
-        hit = _VIDPAIRS_MEMO.pop(key, None)
-        if hit is not None:
-            _VIDPAIRS_MEMO[key] = hit  # LRU refresh
-            return hit
+    def build() -> DataFrame:
         lazy = video_near_dups(
             video_frame_hashes(_video_media(spark, sf_dir), every_n=1),
             min_shared=2,
@@ -3980,19 +3682,9 @@ def _video_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # measured count for the CC tier gate (bounded job over the
         # materialized blocks, build time only — r12)
         setattr(pairs, _PAIRS_NEDGES_ATTR, ckpt.count())
-        while len(_VIDPAIRS_MEMO) >= 2:
-            _VIDPAIRS_MEMO.pop(next(iter(_VIDPAIRS_MEMO)))
-        _VIDPAIRS_MEMO[key] = pairs
         return pairs
 
-
-def release_shared_video_pairs() -> None:
-    """Release every memoized video-pair stage (checkpoint blocks)."""
-    from etl_python_sqlite_spark.operators.cache import release
-
-    while _VIDPAIRS_MEMO:
-        _, old = _VIDPAIRS_MEMO.popitem()
-        release(old)
+    return _VIDPAIRS.get_or_build(stage_key(spark, sf_dir, "documents"), build)
 
 
 def ext_video_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4545,47 +4237,25 @@ def ext_corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: ext_ccnet_quality_buckets — the order-5 explode + count joins are
 #: the expensive half of BOTH queries and are identical; each consumer
 #: re-runs only its own cheap tail (a sort / a per-language rank).
-#: Same lock/LRU/finalizer policy as the other ext-side stages; the
-#: bench runs both consumers CONCURRENTLY, so the get-or-build holds
-#: the lock end-to-end and the checkpoint is eager (CLAUDE.md memo
-#: rules).
-_FIVEGRAM_MEMO: dict = {}
-_FIVEGRAM_LOCK = threading.Lock()
+#: The bench runs both consumers CONCURRENTLY, so the checkpoint is
+#: eager.
+_FIVEGRAM = StageMemo()
 
 
 def _fivegram_score_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_python_sqlite_spark.operators.cache import tie
     from etl_python_sqlite_spark.operators.curation import ngram_lm_score
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
 
-    fp = data_fingerprint(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    with _FIVEGRAM_LOCK:
-        hit = _FIVEGRAM_MEMO.pop(key, None)
-        if hit is not None:
-            _FIVEGRAM_MEMO[key] = hit  # LRU refresh
-            return hit
+    def build() -> DataFrame:
         # r12-opt: the order-5 explode reads the shared word-array stage
         # instead of re-tokenizing (guide §2.4)
         ck = ngram_lm_score(
             _doc_words_stage(spark, sf_dir), n=5, words_col="ws"
         ).localCheckpoint(eager=True)
-        stage = tie(
+        return tie(
             ck.select("doc_id", "n_ngrams", "sum_p_micro", "mean_p"), ck
         )
-        while len(_FIVEGRAM_MEMO) >= 2:
-            _FIVEGRAM_MEMO.pop(next(iter(_FIVEGRAM_MEMO)))
-        _FIVEGRAM_MEMO[key] = stage
-        return stage
 
-
-def release_shared_fivegram() -> None:
-    """Release every memoized 5-gram score stage (checkpoint blocks)."""
-    from etl_python_sqlite_spark.operators.cache import release
-
-    while _FIVEGRAM_MEMO:
-        _, old = _FIVEGRAM_MEMO.popitem()
-        release(old)
+    return _FIVEGRAM.get_or_build(stage_key(spark, sf_dir, "documents"), build)
 
 
 #: (applicationId, sf_dir, fingerprint) → persisted (doc_id, ws)
@@ -4594,83 +4264,46 @@ def release_shared_fivegram() -> None:
 #: r12-opt (VERDICT r11 next #2): each scorer re-ran the identical
 #: split per invocation; now every order's instance build scans this
 #: one cached stage (guide §2.4 — cross-QUERY stage sharing, the
-#: `_ordpart_distinct` pattern). Same lock/LRU/eager policy as the
-#: other stages (bench consumers are concurrent).
-_WORDS_STAGE_MEMO: dict = {}
-_WORDS_STAGE_LOCK = threading.Lock()
+#: `_ordpart_distinct` pattern). Eager count: bench consumers are
+#: concurrent.
+_WORDS_STAGE = StageMemo(free=unpersist_entry)
 
 #: (applicationId, sf_dir, fingerprint, n) → persisted (doc_id,
 #: w1..wn) n-gram INSTANCE frame derived from the word-array stage.
 #: Order 2 feeds ext_bigram_lm_score AND the hashed-bigram bucket
 #: stage (dsir / quality-classifier family); order 3 feeds
-#: ext_trigram_lm_score. Plain persisted frames — eviction unpersists,
-#: consumers recompute through the words stage (never fail).
-_NGRAM_INST_MEMO: dict = {}
-_NGRAM_INST_LOCK = threading.Lock()
+#: ext_trigram_lm_score.
+_NGRAM_INST = StageMemo(max_entries=4, free=unpersist_entry)
 
 
 def _doc_words_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_python_sqlite_spark.operators.curation import doc_words
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
 
-    fp = data_fingerprint(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    with _WORDS_STAGE_LOCK:
-        hit = _WORDS_STAGE_MEMO.pop(key, None)
-        if hit is not None:
-            _WORDS_STAGE_MEMO[key] = hit  # LRU refresh
-            return hit
+    def build() -> DataFrame:
         ws = doc_words(_docs(spark, sf_dir)).persist()
         ws.count()  # concurrent LM-family consumers (bench pass 2)
-        while len(_WORDS_STAGE_MEMO) >= 2:
-            oldest = next(iter(_WORDS_STAGE_MEMO))
-            old = _WORDS_STAGE_MEMO.pop(oldest)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _WORDS_STAGE_MEMO[key] = ws
         return ws
+
+    return _WORDS_STAGE.get_or_build(
+        stage_key(spark, sf_dir, "documents"), build
+    )
 
 
 def _ngram_instances_stage(
     spark: SparkSession, sf_dir: str, n: int
 ) -> DataFrame:
     from etl_python_sqlite_spark.operators.curation import doc_ngrams
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
 
-    fp = data_fingerprint(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, fp, n)
-    with _NGRAM_INST_LOCK:
-        hit = _NGRAM_INST_MEMO.pop(key, None)
-        if hit is not None:
-            _NGRAM_INST_MEMO[key] = hit  # LRU refresh
-            return hit
+    def build() -> DataFrame:
         tg = doc_ngrams(
             _doc_words_stage(spark, sf_dir), n, words_col="ws"
         ).persist()
         tg.count()  # concurrent consumers: count tables + scoring join
-        while len(_NGRAM_INST_MEMO) >= 4:
-            oldest = next(iter(_NGRAM_INST_MEMO))
-            old = _NGRAM_INST_MEMO.pop(oldest)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _NGRAM_INST_MEMO[key] = tg
         return tg
 
-
-def release_shared_ngrams() -> None:
-    """Unpersist and forget the shared word-array and n-gram instance
-    stages."""
-    for memo in (_NGRAM_INST_MEMO, _WORDS_STAGE_MEMO):
-        while memo:
-            _, old = memo.popitem()
-            try:
-                old.unpersist()
-            except Exception:
-                pass
+    return _NGRAM_INST.get_or_build(
+        stage_key(spark, sf_dir, "documents", n), build
+    )
 
 
 #: (applicationId, sf_dir, fingerprint) → persisted (doc_id, ws)
@@ -4681,46 +4314,24 @@ def release_shared_ngrams() -> None:
 #: merge without changing results). Measured: a tokenize+posexplode
 #: pass is ~0.30 s at sf0.1, exploding the cached array ~0.13 s.
 #: Eager count: repetition + winnowing run as concurrent bench actions.
-_RAW_WORDS_MEMO: dict = {}
-_RAW_WORDS_LOCK = threading.Lock()
+_RAW_WORDS = StageMemo(free=unpersist_entry)
 
 
 def _raw_words_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_python_sqlite_spark.functions.text import words
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
 
-    fp = data_fingerprint(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    with _RAW_WORDS_LOCK:
-        hit = _RAW_WORDS_MEMO.pop(key, None)
-        if hit is not None:
-            _RAW_WORDS_MEMO[key] = hit  # LRU refresh
-            return hit
+    def build() -> DataFrame:
         ws = (
             _docs(spark, sf_dir)
             .select("doc_id", words(F.col("text")).alias("ws"))
             .persist()
         )
         ws.count()  # concurrent consumers (see above)
-        while len(_RAW_WORDS_MEMO) >= 2:
-            oldest = next(iter(_RAW_WORDS_MEMO))
-            old = _RAW_WORDS_MEMO.pop(oldest)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _RAW_WORDS_MEMO[key] = ws
         return ws
 
-
-def release_shared_raw_words() -> None:
-    """Unpersist and forget the shared raw word-array stage."""
-    while _RAW_WORDS_MEMO:
-        _, old = _RAW_WORDS_MEMO.popitem()
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+    return _RAW_WORDS.get_or_build(
+        stage_key(spark, sf_dir, "documents"), build
+    )
 
 
 #: (applicationId, sf_dir, fingerprint) → persisted (doc_id, simhash)
@@ -4731,47 +4342,23 @@ def release_shared_raw_words() -> None:
 #: sharing; the r11 within-query rewrites of this pass are measured
 #: losers and stand). NOT the lowercased LM words stage: simhash
 #: tokenizes the raw text, so the stages cannot merge without changing
-#: results. Plain persisted frame — eviction unpersists, consumers
-#: recompute (never fail). Eager count: the two consumer queries run as
-#: CONCURRENT bench actions (the multi-consumer invariant).
-_SIMHASH_STAGE_MEMO: dict = {}
-_SIMHASH_STAGE_LOCK = threading.Lock()
+#: results. Eager count: the two consumer queries run as CONCURRENT
+#: bench actions (the multi-consumer invariant).
+_SIMHASH_STAGE = StageMemo(free=unpersist_entry)
 
 
 def _simhash_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
-
-    fp = data_fingerprint(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    with _SIMHASH_STAGE_LOCK:
-        hit = _SIMHASH_STAGE_MEMO.pop(key, None)
-        if hit is not None:
-            _SIMHASH_STAGE_MEMO[key] = hit  # LRU refresh
-            return hit
+    def build() -> DataFrame:
         sh = D.simhash_portable(
             _docs(spark, sf_dir),
             words_arr=_raw_words_stage(spark, sf_dir),
         ).persist()
         sh.count()  # concurrent consumers: fingerprints + near-dups
-        while len(_SIMHASH_STAGE_MEMO) >= 2:
-            oldest = next(iter(_SIMHASH_STAGE_MEMO))
-            old = _SIMHASH_STAGE_MEMO.pop(oldest)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _SIMHASH_STAGE_MEMO[key] = sh
         return sh
 
-
-def release_shared_simhash() -> None:
-    """Unpersist and forget the shared simhash fingerprint stage."""
-    while _SIMHASH_STAGE_MEMO:
-        _, old = _SIMHASH_STAGE_MEMO.popitem()
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+    return _SIMHASH_STAGE.get_or_build(
+        stage_key(spark, sf_dir, "documents"), build
+    )
 
 
 #: (applicationId, sf_dir, fingerprint) → (q, exact) where q is the
@@ -4782,22 +4369,13 @@ def release_shared_simhash() -> None:
 #: their own full-corpus exact ground-truth scan per invocation
 #: (r12-opt, guide §2.4). Eager count: the four consumers run as
 #: concurrent bench actions.
-_ANN_QUERY_MEMO: dict = {}
-_ANN_QUERY_LOCK = threading.Lock()
+_ANN_QUERY = StageMemo(free=unpersist_entry)
 
 
 def _ann_query_stage(
     spark: SparkSession, sf_dir: str
 ) -> tuple[list, DataFrame]:
-    from etl_python_sqlite_spark.sources.parquet import data_fingerprint
-
-    fp = data_fingerprint(spark, sf_dir, "embeddings")
-    key = (spark.sparkContext.applicationId, sf_dir, fp)
-    with _ANN_QUERY_LOCK:
-        hit = _ANN_QUERY_MEMO.pop(key, None)
-        if hit is not None:
-            _ANN_QUERY_MEMO[key] = hit  # LRU refresh
-            return hit
+    def build() -> tuple[list, DataFrame]:
         embs = _embs(spark, sf_dir)
         qrow = embs.filter(F.col("vec_id") == 0).select("embedding").first()
         q = [float(x) for x in qrow["embedding"]]
@@ -4805,25 +4383,11 @@ def _ann_query_stage(
             embs.filter(F.col("vec_id") != 0), q, k=20
         ).persist()
         exact.count()  # concurrent consumers: the four ANN audits
-        while len(_ANN_QUERY_MEMO) >= 2:
-            oldest = next(iter(_ANN_QUERY_MEMO))
-            _, old = _ANN_QUERY_MEMO.pop(oldest)
-            try:
-                old.unpersist()
-            except Exception:
-                pass
-        _ANN_QUERY_MEMO[key] = (q, exact)
         return q, exact
 
-
-def release_shared_ann_query() -> None:
-    """Unpersist and forget the shared ANN query/ground-truth stage."""
-    while _ANN_QUERY_MEMO:
-        _, (_, old) = _ANN_QUERY_MEMO.popitem()
-        try:
-            old.unpersist()
-        except Exception:
-            pass
+    return _ANN_QUERY.get_or_build(
+        stage_key(spark, sf_dir, "embeddings"), build
+    )
 
 
 def ext_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -14,6 +14,12 @@ import gc
 import pytest
 from pyspark.sql import functions as F
 
+from etl_python_sqlite_spark.operators import cache as C
+from etl_python_sqlite_spark.operators.cache import (
+    STAGE_TABLE_ATTR,
+    release_all,
+    stage_key,
+)
 from tests.conftest import SF_SMOKE
 
 
@@ -21,16 +27,16 @@ from tests.conftest import SF_SMOKE
 def bucketed_gate(monkeypatch):
     from etl_python_sqlite_spark.plans import relational as R
 
-    R.release_shared_histograms()
+    release_all()
     monkeypatch.setattr(R, "COOCC_BUCKETED_STAGE_MIN_EDGES", 0)
     yield R
-    R.release_shared_histograms()
+    release_all()
 
 
 def test_stage_materializes_as_bucketed_table(spark, bucketed_gate):
     R = bucketed_gate
     e = R._cooccurrence_edges(spark, SF_SMOKE)
-    tbl = getattr(e, R._COOCC_TABLE_ATTR, None)
+    tbl = getattr(e, STAGE_TABLE_ATTR, None)
     assert tbl is not None and spark.catalog.tableExists(tbl)
     # canonical view = u<v filter over the directed table
     n_canon = e.count()
@@ -85,7 +91,7 @@ def test_tier_equality_pagerank_and_triangles(spark, bucketed_gate):
     got_pr = [tuple(r) for r in R.part_cooccurrence_pagerank(spark, SF_SMOKE).collect()]
     got_tri = [tuple(r) for r in R.part_triangle_stats(spark, SF_SMOKE).collect()]
     # cache tier
-    R.release_shared_histograms()
+    release_all()
     R.COOCC_BUCKETED_STAGE_MIN_EDGES = 10**18
     exp_pr = [tuple(r) for r in R.part_cooccurrence_pagerank(spark, SF_SMOKE).collect()]
     exp_tri = [tuple(r) for r in R.part_triangle_stats(spark, SF_SMOKE).collect()]
@@ -96,9 +102,9 @@ def test_tier_equality_pagerank_and_triangles(spark, bucketed_gate):
 def test_eviction_drops_stage_table(spark, bucketed_gate):
     R = bucketed_gate
     e = R._cooccurrence_edges(spark, SF_SMOKE)
-    tbl = getattr(e, R._COOCC_TABLE_ATTR)
+    tbl = getattr(e, STAGE_TABLE_ATTR)
     assert spark.catalog.tableExists(tbl)
-    R.release_shared_histograms()
+    release_all()
     assert not spark.catalog.tableExists(tbl)
     del e
     gc.collect()
@@ -129,12 +135,12 @@ def test_stage_build_sweeps_orphaned_tables(spark, bucketed_gate):
     # the peer table keeps its just-written mtime
     warehouse = spark.conf.get("spark.sql.warehouse.dir")
     odir = os.path.join(warehouse.removeprefix("file:"), orphan)
-    old = time.time() - (R._COOCC_ORPHAN_AGE_MS / 1000 + 3600)
+    old = time.time() - (C._STAGE_ORPHAN_AGE_MS / 1000 + 3600)
     os.utime(odir, (old, old))
     # force the once-per-app sweep to run again for this build
-    R._COOCC_SWEPT_APPS.clear()
+    C._SWEPT_STAGE_PREFIXES.clear()
     e = R._cooccurrence_edges(spark, SF_SMOKE)
-    live = getattr(e, R._COOCC_TABLE_ATTR)
+    live = getattr(e, STAGE_TABLE_ATTR)
     assert not spark.catalog.tableExists(orphan)
     assert spark.catalog.tableExists(fresh_peer)  # concurrent peer kept
     assert spark.catalog.tableExists(live)
@@ -142,11 +148,14 @@ def test_stage_build_sweeps_orphaned_tables(spark, bucketed_gate):
     # the sweep is once-per-application: a second build must not drop
     # the (now-live) stage table of a concurrent builder, and the
     # re-armed sweep must still respect the live-table registry
-    R._COOCC_SWEPT_APPS.clear()
-    R._COOCC_MEMO.clear()  # force a rebuild path through the sweep
+    C._SWEPT_STAGE_PREFIXES.clear()
+    # force a rebuild path through the sweep: evict the entry (a
+    # reference drop for a table-tier entry) while ``e`` stays live
+    for i in range(R._COOCC.max_entries):
+        R._COOCC.get_or_build(("filler", i), object)
     e2 = R._cooccurrence_edges(spark, SF_SMOKE)
-    assert spark.catalog.tableExists(getattr(e2, R._COOCC_TABLE_ATTR))
-    R._COOCC_LIVE_TABLES.discard(live)
+    assert spark.catalog.tableExists(getattr(e2, STAGE_TABLE_ATTR))
+    C._LIVE_STAGE_TABLES.discard(live)
     spark.sql(f"DROP TABLE IF EXISTS {live}")
 
 
@@ -156,13 +165,13 @@ def test_cache_tier_carries_measured_edge_count(spark):
     tier."""
     from etl_python_sqlite_spark.plans import relational as R
 
-    R.release_shared_histograms()
+    release_all()
     try:
         e = R._cooccurrence_edges(spark, SF_SMOKE)
-        assert getattr(e, R._COOCC_TABLE_ATTR, None) is None
+        assert getattr(e, STAGE_TABLE_ATTR, None) is None
         assert getattr(e, R._COOCC_NEDGES_ATTR) == e.count()
     finally:
-        R.release_shared_histograms()
+        release_all()
 
 
 def test_concurrent_memo_miss_builds_once(spark, bucketed_gate):
@@ -193,16 +202,16 @@ def test_concurrent_memo_miss_builds_once(spark, bucketed_gate):
 def minhash_gate(monkeypatch):
     from etl_python_sqlite_spark.plans import ext as E
 
-    E.release_shared_minhash()
+    E._MINHASH.clear()
     monkeypatch.setattr(E, "MINHASH_BUCKETED_STAGE_MIN_DOCS", 0)
     yield E
-    E.release_shared_minhash()
+    E._MINHASH.clear()
 
 
 def test_minhash_stage_materializes_as_bucketed_table(spark, minhash_gate):
     E = minhash_gate
     pairs = E._minhash_pairs(spark, SF_SMOKE)
-    tbl = getattr(pairs, E._MINHASH_TABLE_ATTR, None)
+    tbl = getattr(pairs, STAGE_TABLE_ATTR, None)
     assert tbl is not None and spark.catalog.tableExists(tbl)
     # memo hit returns the same table-backed frame, no rebuild
     assert E._minhash_pairs(spark, SF_SMOKE) is pairs
@@ -218,7 +227,7 @@ def test_minhash_tiers_produce_identical_results(spark, minhash_gate):
     bucketed = sorted(
         map(tuple, E._minhash_pairs(spark, SF_SMOKE).collect())
     )
-    E.release_shared_minhash()
+    E._MINHASH.clear()
     E.MINHASH_BUCKETED_STAGE_MIN_DOCS = 10**12  # force the cache tier
     cached = sorted(map(tuple, E._minhash_pairs(spark, SF_SMOKE).collect()))
     assert bucketed == cached
@@ -228,8 +237,8 @@ def test_minhash_tiers_produce_identical_results(spark, minhash_gate):
 def test_minhash_release_drops_stage_table(spark, minhash_gate):
     E = minhash_gate
     pairs = E._minhash_pairs(spark, SF_SMOKE)
-    tbl = getattr(pairs, E._MINHASH_TABLE_ATTR)
-    E.release_shared_minhash()
+    tbl = getattr(pairs, STAGE_TABLE_ATTR)
+    E._MINHASH.clear()
     assert not spark.catalog.tableExists(tbl)
 
 
@@ -241,16 +250,16 @@ def test_minhash_release_drops_stage_table(spark, minhash_gate):
 def imgpairs_gate(monkeypatch):
     from etl_python_sqlite_spark.plans import ext as E
 
-    E.release_shared_image_pairs()
+    E._IMGPAIRS.clear()
     monkeypatch.setattr(E, "IMAGE_BUCKETED_STAGE_MIN_MEDIA", 0)
     yield E
-    E.release_shared_image_pairs()
+    E._IMGPAIRS.clear()
 
 
 def test_image_stage_materializes_as_bucketed_table(spark, imgpairs_gate):
     E = imgpairs_gate
     pairs = E._image_pairs(spark, SF_SMOKE)
-    tbl = getattr(pairs, E._IMGPAIRS_TABLE_ATTR, None)
+    tbl = getattr(pairs, STAGE_TABLE_ATTR, None)
     assert tbl is not None and spark.catalog.tableExists(tbl)
     # memo hit returns the same table-backed frame, no rebuild
     assert E._image_pairs(spark, SF_SMOKE) is pairs
@@ -266,7 +275,7 @@ def test_image_tiers_produce_identical_results(spark, imgpairs_gate):
     bucketed = sorted(
         map(tuple, E._image_pairs(spark, SF_SMOKE).collect())
     )
-    E.release_shared_image_pairs()
+    E._IMGPAIRS.clear()
     E.IMAGE_BUCKETED_STAGE_MIN_MEDIA = 10**12  # force the cache tier
     cached = sorted(map(tuple, E._image_pairs(spark, SF_SMOKE).collect()))
     assert bucketed == cached
@@ -276,8 +285,8 @@ def test_image_tiers_produce_identical_results(spark, imgpairs_gate):
 def test_image_release_drops_stage_table(spark, imgpairs_gate):
     E = imgpairs_gate
     pairs = E._image_pairs(spark, SF_SMOKE)
-    tbl = getattr(pairs, E._IMGPAIRS_TABLE_ATTR)
-    E.release_shared_image_pairs()
+    tbl = getattr(pairs, STAGE_TABLE_ATTR)
+    E._IMGPAIRS.clear()
     assert not spark.catalog.tableExists(tbl)
 
 
@@ -287,14 +296,15 @@ def test_lru_eviction_defers_table_drop_to_last_consumer(spark, minhash_gate):
     fires via the tie_stage_table finalizer on last release."""
     E = minhash_gate
     pairs = E._minhash_pairs(spark, SF_SMOKE)
-    tbl = getattr(pairs, E._MINHASH_TABLE_ATTR)
+    tbl = getattr(pairs, STAGE_TABLE_ATTR)
     assert spark.catalog.tableExists(tbl)
-    # simulate the LRU eviction path: reference drop from the memo only
-    key = next(iter(E._MINHASH_MEMO))
-    evicted = E._MINHASH_MEMO.pop(key)
-    assert evicted is pairs
+    # the LRU eviction path: fill the memo with other keys until the
+    # stage's entry is the oldest and leaves — a reference drop only
+    for i in range(E._MINHASH.max_entries):
+        E._MINHASH.get_or_build(("filler", i), object)
+    assert stage_key(spark, SF_SMOKE, "documents") not in E._MINHASH
     assert spark.catalog.tableExists(tbl)  # consumer still holds it
     assert pairs.count() >= 0  # and can still execute
-    del pairs, evicted
+    del pairs
     gc.collect()
     assert not spark.catalog.tableExists(tbl)  # finalizer dropped it

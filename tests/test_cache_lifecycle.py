@@ -17,6 +17,7 @@ import gc
 import pytest
 from pyspark.sql import functions as F
 
+from etl_python_sqlite_spark.operators.cache import release_all
 from tests.conftest import SF_SMOKE
 
 
@@ -58,23 +59,7 @@ def _baseline_clean(spark):
     # still registered is residue: module-scoped fixtures from earlier
     # modules are already torn down (pytest finalizes them at module
     # end), and operators tie caches to result lifetimes.
-    from etl_python_sqlite_spark.plans import ext as X
-    from etl_python_sqlite_spark.plans import relational as R
-
-    R.release_shared_histograms()
-    X.release_shared_spans()
-    X.release_shared_minhash()
-    X.release_shared_kmeans()
-    X.release_shared_bigrams()
-    X.release_shared_image_pairs()
-    X.release_shared_audio_pairs()
-    X.release_shared_video_pairs()
-    X.release_shared_fivegram()
-    X.release_shared_ngrams()
-    X.release_shared_simhash()
-    X.release_shared_ann_query()
-    X.release_shared_raw_words()
-    X.release_shared_sample_jaccard()
+    release_all()
     # py4j exposes the java.util.Map as a dict-like view
     jrdds = list(spark.sparkContext._jsc.getPersistentRDDs().values())
     for jrdd in jrdds:
@@ -137,13 +122,13 @@ def test_dedup_cluster_queries_release_cache(spark):
     # the sample score frame is a session-memoized shared stage (r12,
     # shared with ext_ngram_jaccard_pairs) — its blocks legitimately
     # survive the result; release through the API
-    E.release_shared_sample_jaccard()
+    E._SAMPLE_JACC.clear()
     gc.collect()
     assert _n_persistent(spark) == before
     assert _run_and_drop(E.ext_minhash_dedup_clusters(spark, SF_SMOKE)) >= 0
     # the pair pipeline is a session-memoized shared stage (r8) — its
     # blocks legitimately survive the result; release through the API
-    E.release_shared_minhash()
+    E._MINHASH.clear()
     gc.collect()
     assert _n_persistent(spark) == before
 
@@ -154,17 +139,17 @@ def test_shared_minhash_memo_bounded_and_releasable(spark):
     explicit release drops the stage's storage."""
     from etl_python_sqlite_spark.plans import ext as E
 
-    E.release_shared_minhash()
+    E._MINHASH.clear()
     gc.collect()
     before = _n_persistent(spark)
     p1 = E._minhash_pairs(spark, SF_SMOKE)
     p1.count()
     assert _n_persistent(spark) > before  # stage blocks live
     assert E._minhash_pairs(spark, SF_SMOKE) is p1  # memo hit
-    E.release_shared_minhash()
+    E._MINHASH.clear()
     del p1
     gc.collect()
-    assert len(E._MINHASH_MEMO) == 0
+    assert len(E._MINHASH) == 0
     assert _n_persistent(spark) == before
 
 
@@ -175,7 +160,7 @@ def test_contamination_scan_releases_cache(spark):
     assert _run_and_drop(E.ext_contamination_scan(spark, SF_SMOKE)) >= 0
     # the raw word-array frame is a session-memoized shared stage (the
     # shingle window rides it since r12) — release through the API
-    E.release_shared_raw_words()
+    E._RAW_WORDS.clear()
     gc.collect()
     assert _n_persistent(spark) == before
 
@@ -239,7 +224,7 @@ def test_shared_flag_histogram_memo_bounded_and_releasable(spark):
     memo itself must stay bounded (LRU cap) and explicitly releasable."""
     from etl_python_sqlite_spark.plans import relational as R
 
-    R.release_shared_histograms()
+    release_all()
     before = _n_persistent(spark)
     h1 = R._flag_cents_hist(spark, SF_SMOKE)
     h1.count()
@@ -250,10 +235,29 @@ def test_shared_flag_histogram_memo_bounded_and_releasable(spark):
     # LRU cap: further distinct keys evict (and unpersist) the oldest
     R._flag_cents_hist(spark, "/root/testdata/sf0.01").count()
     R._flag_cents_hist(spark, "/root/testdata/sf0.1").count()
-    assert len(R._FLAG_HIST_MEMO) == R._FLAG_HIST_MAX
+    assert len(R._FLAG_HIST) == R._FLAG_HIST.max_entries
     # explicit release drops every entry and its storage
-    R.release_shared_histograms()
-    assert len(R._FLAG_HIST_MEMO) == 0
+    release_all()
+    assert len(R._FLAG_HIST) == 0
+    assert _n_persistent(spark) == before
+
+
+def test_cooccurrence_eviction_unpersists_cache_tier(spark, tmp_path):
+    """Evicting a cache-tier co-occurrence entry unpersists it, like
+    every other cache-tier memo: three datasets through the two-entry
+    memo leave two persisted edge frames, not three."""
+    from etl_python_sqlite_spark.plans import relational as R
+    from tests.test_memo_fingerprint import _write_lineitem
+
+    before = _n_persistent(spark)
+    for i in range(3):
+        d = str(tmp_path / f"li{i}")
+        _write_lineitem(spark, d, [1.0] * (4 + 2 * i))
+        assert R._cooccurrence_edges(spark, d).count() > 0
+    assert len(R._COOCC) == R._COOCC.max_entries == 2
+    R._ORDPART.clear()  # the edge builds' shared first stage
+    assert _n_persistent(spark) == before + 2
+    release_all()
     assert _n_persistent(spark) == before
 
 

@@ -769,7 +769,7 @@ def test_ccnet_buckets_tie_dense_cross_engine(spark, tmp_path):
     )
     from etl_python_sqlite_spark.plans import ext as X
 
-    X.release_shared_fivegram()
+    X._FIVEGRAM.clear()
     sdf = SE.queries()["ext_ccnet_quality_buckets"](spark, d)
     con = duckdb.connect()
     con.execute(
@@ -786,4 +786,4 @@ def test_ccnet_buckets_tie_dense_cross_engine(spark, tmp_path):
         ("en", "head"): 4, ("en", "middle"): 4, ("en", "tail"): 3,
         ("fr", "head"): 2, ("fr", "middle"): 2, ("fr", "tail"): 1,
     }
-    X.release_shared_fivegram()
+    X._FIVEGRAM.clear()

@@ -14,6 +14,8 @@ import pytest
 
 from pyspark.sql import Row
 
+from etl_python_sqlite_spark.operators.cache import release_all
+
 
 def _write_lineitem(spark, sf_dir: str, prices: list[float]) -> None:
     rows = [
@@ -52,7 +54,7 @@ def test_load_table_rebuilds_on_rewrite(spark, tmp_path):
 def test_flag_cents_hist_rebuilds_on_rewrite(spark, tmp_path):
     from etl_python_sqlite_spark.plans import relational as R
 
-    R.release_shared_histograms()
+    release_all()
     d = str(tmp_path)
     _write_lineitem(spark, d, [1.00, 2.00, 2.00])
     h1 = R._flag_cents_hist(spark, d)
@@ -67,13 +69,13 @@ def test_flag_cents_hist_rebuilds_on_rewrite(spark, tmp_path):
     assert h2 is not h1
     got2 = {(r["l_returnflag"], r["c"]): r["cnt"] for r in h2.collect()}
     assert got2 == {("A", 500): 2, ("A", 750): 2}
-    R.release_shared_histograms()
+    release_all()
 
 
 def test_cooccurrence_edges_rebuild_on_rewrite(spark, tmp_path):
     from etl_python_sqlite_spark.plans import relational as R
 
-    R.release_shared_histograms()
+    release_all()
     d = str(tmp_path)
     _write_lineitem(spark, d, [1.0] * 4)  # orders {0,1} x parts {0..3}
     e1 = R._cooccurrence_edges(spark, d)
@@ -83,7 +85,7 @@ def test_cooccurrence_edges_rebuild_on_rewrite(spark, tmp_path):
     e2 = R._cooccurrence_edges(spark, d)
     assert e2 is not e1
     assert e2.count() == 3
-    R.release_shared_histograms()
+    release_all()
 
 
 def _write_documents(spark, sf_dir: str, texts: list[str]) -> None:
@@ -106,7 +108,7 @@ def test_minhash_stage_rebuilds_on_rewrite(spark, tmp_path):
     histogram memo)."""
     from etl_python_sqlite_spark.plans import ext as X
 
-    X.release_shared_minhash()
+    X._MINHASH.clear()
     d = str(tmp_path)
     dup = "alpha beta gamma delta epsilon zeta eta theta"
     _write_documents(spark, d, [dup, dup, "totally different words here now"])
@@ -122,7 +124,7 @@ def test_minhash_stage_rebuilds_on_rewrite(spark, tmp_path):
     p2 = X._minhash_pairs(spark, d)
     assert p2 is not p1
     assert p2.count() == 0
-    X.release_shared_minhash()
+    X._MINHASH.clear()
 
 
 def test_kmeans_stage_rebuilds_on_rewrite(spark, tmp_path):
@@ -132,7 +134,7 @@ def test_kmeans_stage_rebuilds_on_rewrite(spark, tmp_path):
 
     from etl_python_sqlite_spark.plans import ext as X
 
-    X.release_shared_kmeans()
+    X._KMEANS.clear()
     d = str(tmp_path)
 
     def write(vals):
@@ -158,7 +160,7 @@ def test_kmeans_stage_rebuilds_on_rewrite(spark, tmp_path):
     assert a2 is not a1
     assert a2.count() == 30
     assert l2 != l1  # different data -> different centroid checksums
-    X.release_shared_kmeans()
+    X._KMEANS.clear()
 
 
 def _write_documents(spark, sf_dir: str, texts: list[str]) -> None:
@@ -177,7 +179,7 @@ def _write_documents(spark, sf_dir: str, texts: list[str]) -> None:
 def test_word_histogram_stage_rebuilds_on_rewrite(spark, tmp_path):
     from etl_python_sqlite_spark.plans import ext as X
 
-    X._WORDHIST_MEMO.clear()
+    X._WORDHIST.clear()
     d = str(tmp_path)
     _write_documents(spark, d, ["alpha beta", "alpha"])
     h1 = X._word_histogram_stage(spark, d, max_vocab=16)
@@ -188,13 +190,13 @@ def test_word_histogram_stage_rebuilds_on_rewrite(spark, tmp_path):
     h2 = X._word_histogram_stage(spark, d, max_vocab=16)
     assert h2 is not h1
     assert dict(h2) == {"gamma": 3}
-    X._WORDHIST_MEMO.clear()
+    X._WORDHIST.clear()
 
 
 def test_bigram_bucket_stage_rebuilds_on_rewrite(spark, tmp_path):
     from etl_python_sqlite_spark.plans import ext as X
 
-    X.release_shared_bigrams()
+    X._BIGRAM.clear()
     d = str(tmp_path)
     _write_documents(spark, d, ["a b c", "a b"])
     s1 = X._bigram_bucket_stage(spark, d)
@@ -207,7 +209,7 @@ def test_bigram_bucket_stage_rebuilds_on_rewrite(spark, tmp_path):
     assert s2 is not s1
     assert s2.agg({"cnt": "sum"}).first()[0] == 3  # (x,y)(y,z)(z,w)
     assert s2.select("doc_id").distinct().count() == 1
-    X.release_shared_bigrams()
+    X._BIGRAM.clear()
 
 
 def test_image_pairs_stage_rebuilds_on_rewrite(spark, tmp_path):
@@ -216,7 +218,7 @@ def test_image_pairs_stage_rebuilds_on_rewrite(spark, tmp_path):
     rebuild the pair frame (twin counts follow the new doc_ids)."""
     from etl_python_sqlite_spark.plans import ext as X
 
-    X.release_shared_image_pairs()
+    X._IMGPAIRS.clear()
     d = str(tmp_path)
     # doc_ids 0..2: twin planted only for doc_id 0 (0 % 7 == 0)
     _write_documents(spark, d, ["a", "b", "c"])
@@ -231,7 +233,7 @@ def test_image_pairs_stage_rebuilds_on_rewrite(spark, tmp_path):
     # doc_ids 0..7: twins for 0 and 7 (noisy, hamming <= 4)
     got2 = {(r["id_a"], r["id_b"]) for r in p2.collect()}
     assert got2 == {(0, 1_000_000_000), (7, 1_000_000_007)}
-    X.release_shared_image_pairs()
+    X._IMGPAIRS.clear()
 
 
 def test_fivegram_score_stage_rebuilds_on_rewrite(spark, tmp_path):
@@ -240,7 +242,7 @@ def test_fivegram_score_stage_rebuilds_on_rewrite(spark, tmp_path):
     must rebuild the per-doc score frame."""
     from etl_python_sqlite_spark.plans import ext as X
 
-    X.release_shared_fivegram()
+    X._FIVEGRAM.clear()
     d = str(tmp_path)
     _write_documents(spark, d, ["a b c d e f g", "h i j k l"])
     s1 = X._fivegram_score_stage(spark, d)
@@ -253,7 +255,7 @@ def test_fivegram_score_stage_rebuilds_on_rewrite(spark, tmp_path):
     s2 = X._fivegram_score_stage(spark, d)
     assert s2 is not s1
     assert {r["doc_id"]: r["n_ngrams"] for r in s2.collect()} == {0: 2}
-    X.release_shared_fivegram()
+    X._FIVEGRAM.clear()
 
 
 def test_ngram_stage_rebuilds_on_rewrite_and_matches_selfbuilt(spark, tmp_path):
@@ -266,7 +268,7 @@ def test_ngram_stage_rebuilds_on_rewrite_and_matches_selfbuilt(spark, tmp_path):
     )
     from etl_python_sqlite_spark.plans import ext as X
 
-    X.release_shared_ngrams()
+    release_all()
     d = str(tmp_path)
     _write_documents(
         spark, d,
@@ -288,7 +290,7 @@ def test_ngram_stage_rebuilds_on_rewrite_and_matches_selfbuilt(spark, tmp_path):
     g2b = X._ngram_instances_stage(spark, d, 2)
     assert g2b is not g2  # rewrite -> rebuild
     assert g2b.count() == 6  # 3 docs x 2 adjacent pairs
-    X.release_shared_ngrams()
+    release_all()
 
 
 def test_simhash_stage_rebuilds_on_rewrite_and_matches_selfbuilt(
@@ -303,7 +305,7 @@ def test_simhash_stage_rebuilds_on_rewrite_and_matches_selfbuilt(
     )
     from etl_python_sqlite_spark.plans import ext as X
 
-    X.release_shared_simhash()
+    X._SIMHASH_STAGE.clear()
     d = str(tmp_path)
     _write_documents(
         spark, d,
@@ -328,7 +330,7 @@ def test_simhash_stage_rebuilds_on_rewrite_and_matches_selfbuilt(
     s2 = X._simhash_stage(spark, d)
     assert s2 is not s1  # rewrite -> rebuild
     assert s2.count() == 3
-    X.release_shared_simhash()
+    X._SIMHASH_STAGE.clear()
 
 
 def test_raw_words_stage_rebuilds_on_rewrite_and_matches_selfbuilt(
@@ -344,7 +346,7 @@ def test_raw_words_stage_rebuilds_on_rewrite_and_matches_selfbuilt(
     )
     from etl_python_sqlite_spark.plans import ext as X
 
-    X.release_shared_raw_words()
+    X._RAW_WORDS.clear()
     d = str(tmp_path)
     _write_documents(
         spark, d,
@@ -382,7 +384,7 @@ def test_raw_words_stage_rebuilds_on_rewrite_and_matches_selfbuilt(
     w2 = X._raw_words_stage(spark, d)
     assert w2 is not w1  # rewrite -> rebuild
     assert w2.count() == 2
-    X.release_shared_raw_words()
+    X._RAW_WORDS.clear()
 
 
 def test_ann_query_stage_rebuilds_on_rewrite_and_matches_selfbuilt(
@@ -394,7 +396,7 @@ def test_ann_query_stage_rebuilds_on_rewrite_and_matches_selfbuilt(
     from etl_python_sqlite_spark.operators.similarity import cosine_topk
     from etl_python_sqlite_spark.plans import ext as X
 
-    X.release_shared_ann_query()
+    X._ANN_QUERY.clear()
     d = str(tmp_path)
 
     def write(shift):
@@ -420,4 +422,4 @@ def test_ann_query_stage_rebuilds_on_rewrite_and_matches_selfbuilt(
     q2, e2 = X._ann_query_stage(spark, d)
     assert e2 is not e1  # rewrite -> rebuild
     assert q2 != q1  # the query vector itself moved with the data
-    X.release_shared_ann_query()
+    X._ANN_QUERY.clear()
