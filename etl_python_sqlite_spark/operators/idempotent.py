@@ -10,9 +10,9 @@ engine's genuinely custom machinery (SURVEY.md §4.2):
   inserted/ignored counters, computed from the anti-join itself (not
   before/after table counts, which double-count under concurrent runs).
 * ``upsert_dimension`` — set-based replacement for the reference's
-  N+1 per-row "get or create" (scr/etl_relational.py:130-135): distinct
-  natural keys → left-anti vs existing dim → assign contiguous surrogate
-  ids → append.
+  N+1 per-row "get or create" (scr/etl_relational.py:130-135): existing
+  dim ∪ distinct batch keys in one collect → contiguous surrogate ids for
+  the new keys on the driver → append.
 
 Scale notes:
 
@@ -38,14 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-def read_or_empty(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """Read a parquet 'table' directory, or an empty frame if absent."""
-    if _exists(path):
-        return spark.read.schema(schema).parquet(path)
-    return spark.createDataFrame([], schema)
+from etl_python_sqlite_spark.session import local_frame
 
 
 def _exists(path: str) -> bool:
@@ -104,6 +97,8 @@ def idempotent_append(
     3. surrogate ids assigned AFTER dedup when ``id_col`` is given —
        SQLite does not consume rowids for IGNOREd inserts, so ids stay
        dense across re-runs only if assigned to genuinely-new rows;
+       they start at ``id_start``, or with ``id_start=None`` at the
+       target's max id + 1, read by the accounting action;
     4. append only genuinely new rows;
     5. metrics from the anti-join count — the reference derives
        inserted/ignored from before/after COUNT(*) (scr/etl_batch.py:150-154)
@@ -120,17 +115,15 @@ def idempotent_append(
     ``(group_col, *keys)``: the ids a loop over the groups would assign.
     """
     schema = target_schema or batch.drop(*([group_col] if group_col else [])).schema
-    existing_keys = (
-        spark.read.schema(schema).parquet(target_path).select(*keys)
-        if _exists(target_path)
-        else None
+    existing = (
+        spark.read.schema(schema).parquet(target_path) if _exists(target_path) else None
     )
 
     def _write(out: DataFrame) -> None:
         out.write.mode("append").parquet(target_path)
 
     return _append_with_accounting(
-        batch, keys, existing_keys, schema, id_col, id_start, group_col,
+        batch, keys, existing, schema, id_col, id_start, group_col,
         _write, target_path,
     )
 
@@ -138,7 +131,7 @@ def idempotent_append(
 def _append_with_accounting(
     batch: DataFrame,
     keys: list[str],
-    existing_keys: DataFrame | None,
+    existing: DataFrame | None,
     schema: T.StructType,
     id_col: str | None,
     id_start: int | None,
@@ -158,8 +151,8 @@ def _append_with_accounting(
             .drop("_rn")
         )
 
-    if existing_keys is not None:
-        new_rows = deduped.join(existing_keys, on=keys, how="left_anti")
+    if existing is not None:
+        new_rows = deduped.join(existing.select(*keys), on=keys, how="left_anti")
     else:
         new_rows = deduped
 
@@ -167,27 +160,35 @@ def _append_with_accounting(
     # the write don't recompute the anti-join twice.
     new_rows = new_rows.persist()
     try:
-        # one aggregation over the batch rows (attempted) and the new rows
-        # (inserted), taken before the write: afterwards the anti-join
-        # would find every new row already in the target
+        # one aggregation over the batch rows (attempted), the new rows
+        # (inserted) and, for the id start, the target's ids, taken before
+        # the write: afterwards the anti-join would find every new row
+        # already in the target
         group = [group_col] if group_col else []
-        flagged = batch.select(*group, F.lit(False).alias("_new")).unionAll(
-            new_rows.select(*group, F.lit(True))
-        )
+        no_id = F.lit(None).cast("long")
+        flagged = batch.select(*group, F.lit(False).alias("_new"), no_id.alias("_id"))
+        flagged = flagged.unionAll(new_rows.select(*group, F.lit(True), no_id))
+        if id_col is not None and id_start is None and existing is not None:
+            no_group = [F.lit(None).cast(batch.schema[group_col].dataType)] if group_col else []
+            flagged = flagged.unionAll(
+                existing.select(*no_group, F.lit(None).cast("boolean"), F.col(id_col).cast("long"))
+            )
         counts = (
             flagged.groupBy(*group)
-            .agg(F.count_if(~F.col("_new")), F.count_if("_new"))
+            .agg(F.count_if(~F.col("_new")), F.count_if("_new"), F.max("_id"))
             .collect()
         )
+        if id_start is None:
+            id_start = 1 + max((r[-1] for r in counts if r[-1] is not None), default=0)
+        # a group of target rows only (its value null) attempted nothing
+        counts = [r[:-1] for r in counts if r[-3]]
         attempted = sum(r[-2] for r in counts)
         inserted = sum(r[-1] for r in counts)
         per_group = [(g, n, a - n) for g, a, n in counts] if group_col else None
         if inserted:
             out = new_rows
             if id_col is not None:
-                out = assign_ids(
-                    out, id_col, start=id_start or 1, order_by=[*group, *keys]
-                )
+                out = assign_ids(out, id_col, start=id_start, order_by=[*group, *keys])
             write_fn(
                 out.select([F.col(f.name).cast(f.dataType) for f in schema.fields])
             )
@@ -214,9 +215,11 @@ def upsert_dimension(
     """Set-based get-or-create for a surrogate-key dimension.
 
     Replaces the reference's 2-statements-per-row loop
-    (scr/etl_relational.py:130-135) with:
-    distinct(batch keys) → left-anti vs dim → contiguous ids from
-    max(existing)+1 → append. Returns the up-to-date dimension.
+    (scr/etl_relational.py:130-135) with one action: the existing
+    dimension and the batch's distinct keys come to the driver together
+    (a dimension is small by definition), the new keys get contiguous ids
+    from max(existing)+1 there and are appended. Returns the up-to-date
+    dimension as a driver-built frame, so joining it needs no re-read.
 
     Existing rows keep their ids across runs (stability contract —
     SURVEY.md §4.2 item 2).
@@ -231,34 +234,31 @@ def upsert_dimension(
             T.StructField(natural_key, T.StringType(), False),
         ]
     )
-    dim = read_or_empty(spark, dim_path, dim_schema)
-
-    keyed = values.where(F.col(natural_key).isNotNull())
-    if group_col is None:
-        batch_keys, order = keyed.select(natural_key).distinct(), [natural_key]
-    else:
-        batch_keys = keyed.groupBy(natural_key).agg(F.min(group_col).alias(group_col))
-        order = [group_col, natural_key]
-    # a dimension is small by definition: its new keys come to the driver
-    # in one action and get their ids there (Python's str order is Spark's
-    # binary string order)
-    new_keys = sorted(
-        tuple(r)
-        for r in batch_keys.join(dim.select(natural_key), on=natural_key, how="left_anti")
-        .select(*order)
-        .collect()
+    first = F.min(group_col) if group_col else F.lit(None)
+    rows = (
+        values.where(F.col(natural_key).isNotNull())
+        .groupBy(natural_key)
+        .agg(F.lit(None).cast("long").alias(surrogate_key), first.alias("_first"))
     )
-    if new_keys:
-        start = 1
-        if _exists(dim_path):
-            start += dim.agg(F.max(surrogate_key)).first()[0] or 0
-        spark.createDataFrame(
-            [(start + i, key[-1]) for i, key in enumerate(new_keys)], dim_schema
-        ).coalesce(1).write.mode("append").parquet(dim_path)
-
-    # read_or_empty, not a bare read: with an empty first batch nothing was
-    # ever written and the path doesn't exist yet
-    return read_or_empty(spark, dim_path, dim_schema)
+    if _exists(dim_path):
+        no_group = F.lit(None).cast(rows.schema["_first"].dataType)
+        dim = spark.read.schema(dim_schema).parquet(dim_path)
+        rows = dim.select(natural_key, surrogate_key, no_group).unionAll(rows)
+    ids, new_keys = {}, []
+    for key, sid, first_group in rows.collect():
+        if sid is not None:
+            ids[key] = sid
+        else:
+            new_keys.append((first_group, key))
+    # Python's str order is Spark's binary string order
+    new_keys = sorted(k for k in new_keys if k[1] not in ids)
+    start = 1 + max(ids.values(), default=0)
+    new_rows = [(start + i, key) for i, (_, key) in enumerate(new_keys)]
+    if new_rows:
+        local_frame(spark, new_rows, dim_schema).coalesce(1).write.mode("append").parquet(
+            dim_path
+        )
+    return local_frame(spark, [(i, k) for k, i in ids.items()] + new_rows, dim_schema)
 
 
 def idempotent_append_bucketed(
@@ -285,11 +285,7 @@ def idempotent_append_bucketed(
     re-shuffling the target per batch would dominate.
     """
     schema = target_schema or batch.drop(*([group_col] if group_col else [])).schema
-    existing_keys = (
-        spark.table(table_name).select(*keys)
-        if spark.catalog.tableExists(table_name)
-        else None
-    )
+    existing = spark.table(table_name) if spark.catalog.tableExists(table_name) else None
 
     def _write(out: DataFrame) -> None:
         (
@@ -300,6 +296,6 @@ def idempotent_append_bucketed(
         )
 
     return _append_with_accounting(
-        batch, keys, existing_keys, schema, id_col, id_start, group_col,
+        batch, keys, existing, schema, id_col, id_start, group_col,
         _write, table_name,
     )

@@ -135,19 +135,14 @@ def transform_with_rejections(
     )
 
 
-def split_rejections(
-    annotated: DataFrame, keep: tuple[str, ...] = ()
-) -> tuple[DataFrame, DataFrame]:
-    """(valid, rejects) of an ``annotate_rejections`` frame; the ``keep``
-    columns (lineage such as ``source_file``) ride along on the valid side
-    and stay among the raw columns on the reject side."""
+def split_rejections(annotated: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(valid, rejects) of an ``annotate_rejections`` frame."""
     valid = (
         annotated.filter(F.col("motivo").isNull())
         .select(
             F.col("nombre_norm").alias("nombre"),
             F.col("edad_int").alias("edad"),
             F.col("ciudad_norm").alias("ciudad"),
-            *keep,
         )
     )
     raw_cols = [c for c in annotated.columns if c not in ("motivo", "nombre_norm", "ciudad_norm", "edad_int")]

@@ -20,15 +20,22 @@ Tables (warehouse_dir/):
 
 A batch runs as one set-based pass, not a loop over its files. The
 driver lists the files and reads each header with ``csv.reader``; files
-that share a header are scanned together, validated together and their
-rejects written in one partitioned write. The valid rows of all files
-then meet one dimension upsert, one ``max(persona_id)``, one idempotent
-append and one audit write. ``source_file`` rides along on every row, so
-the reference's audit contract still holds: one row per (run, file) with
-its own run_id (scr/etl_batch.py:132,156-163), and new ``persona_id`` and
-``ciudad_id`` values come out exactly as the reference's sorted per-file
-loop assigns them. ``run_batch`` and ``run_directory_combined`` are two
-entry points into this one core.
+that share a header are scanned and validated together. Each header
+group is projected to one shared schema (``source_file, motivo,
+nombre_norm, ciudad_norm, edad_int, _line``, where ``_line`` is a
+reject's CSV record over its file's own columns), and the groups are
+unioned into ONE persisted frame. That frame feeds one per-file count,
+one partitioned reject write, one load (dimension upsert, then the
+idempotent fact append, whose accounting action also reads the
+``persona_id`` start) and one audit write, so the batch's Spark jobs do
+not grow with its file or header count. Rows built on the driver (new
+dimension keys, audit rows) enter Spark as Arrow ``LocalRelation``s
+(``session.local_frame``), which start no Python worker. ``source_file``
+rides along on every row, so the reference's audit contract still holds:
+one row per (run, file) with its own run_id (scr/etl_batch.py:132,156-163),
+and new ``persona_id`` and ``ciudad_id`` values come out exactly as the
+reference's sorted per-file loop assigns them. ``run_batch`` and
+``run_directory_combined`` are two entry points into this one core.
 
 Two intended differences from a per-file loop:
 
@@ -44,8 +51,9 @@ from dataclasses import dataclass, field
 from datetime import datetime, timezone
 from functools import reduce
 from pathlib import Path
+from urllib.parse import unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -56,10 +64,11 @@ from etl_python_sqlite_spark.operators.idempotent import (
 )
 from etl_python_sqlite_spark.operators.transform import (
     annotate_rejections,
-    split_rejections,
     transform_with_rejections,  # noqa: F401 - re-exported
 )
+from etl_python_sqlite_spark.session import local_frame
 from etl_python_sqlite_spark.sources.csv import (
+    header_col,
     list_csv_files,
     read_csv_all_string,  # noqa: F401 - re-exported
     read_csv_files,
@@ -140,26 +149,11 @@ class PipelineConfig:
         return str(Path(self.warehouse) / "etl_runs")
 
 
-def _fact_exists(spark: SparkSession, cfg: PipelineConfig) -> bool:
-    if cfg.fact_table is not None:
-        return spark.catalog.tableExists(cfg.fact_table)
-    return Path(cfg.fact_path).exists()
-
-
-def read_fact(spark: SparkSession, cfg: PipelineConfig) -> DataFrame:
-    """The accumulated fact table under either warehouse layout."""
-    if not _fact_exists(spark, cfg):
-        return spark.createDataFrame([], FACT_SCHEMA)
-    if cfg.fact_table is not None:
-        return spark.table(cfg.fact_table)
-    return spark.read.schema(FACT_SCHEMA).parquet(cfg.fact_path)
-
-
 def _append_fact(
     spark: SparkSession,
     cfg: PipelineConfig,
     batch: DataFrame,
-    id_start: int,
+    id_start: int | None,
     group_col: str | None = None,
 ):
     """Route a fact batch to the configured warehouse layout."""
@@ -235,34 +229,68 @@ def write_rejects_csv(rejects: DataFrame, out_path: str | Path) -> int:
     return n
 
 
+#: Spark's CSV writer options for a reject line: raw values verbatim
+#: (reference scr/etl_relational.py:97-102), not whitespace-stripped
+CSV_LINE_OPTIONS = {"ignoreLeadingWhiteSpace": "false", "ignoreTrailingWhiteSpace": "false"}
+
+
+def csv_line(names: list[str]) -> Column:
+    """The columns ``names`` as one CSV record, nulls written as '': the
+    line ``DataFrameWriter.csv`` writes for them."""
+    values = [F.coalesce(header_col(c), F.lit("")) for c in names]
+    return F.to_csv(F.struct(*values), CSV_LINE_OPTIONS)
+
+
+def part_number(part: Path) -> int:
+    """Task number of a Spark output file ``part-<n>-<uuid>...``; ``n``
+    has five digits or more, so names alone do not sort by it."""
+    return int(part.name.split("-")[1])
+
+
 def write_rejects_csv_by_file(
-    rejects: DataFrame, out_dir: str | Path, file_col: str = "source_file"
+    lines: DataFrame,
+    out_dir: str | Path,
+    headers: dict[str, list[str]],
+    file_col: str = "source_file",
 ) -> None:
     """Reject sink for multi-file runs: ONE partitioned write produces
     every per-file ``rejected_<name>.csv`` (vs a driver loop of N jobs).
-    ``partitionBy`` routes each source file's rows to its own directory;
-    ``repartition(file_col)`` guarantees exactly one part file (hence
-    exactly one CSV header) per source file. A file without rejects gets
-    no partition, hence no CSV.
+
+    ``lines`` holds ``file_col`` and ``_line``, a ``csv_line`` rendered
+    record; ``headers`` maps each file with rejects to its column names.
+    The header rows go first in the union, so each file's directory holds
+    its header part, then its rows' parts in scan order; the driver joins
+    them in task order. A file whose directory holds the header alone has
+    no rejects and gets no CSV.
     """
+    spark = lines.sparkSession
+    by_header: dict[tuple[str, ...], list[str]] = {}
+    for name, header in headers.items():
+        by_header.setdefault(tuple(header), []).append(name)
+    heads = []
+    for header, names in by_header.items():
+        cols = [f"_{i}" for i in range(len(header))]
+        schema = T.StructType([T.StructField(c, T.StringType()) for c in (file_col, *cols)])
+        heads.append(
+            local_frame(spark, [(n, *header) for n in names], schema).select(
+                file_col, csv_line(cols).alias("_line")
+            )
+        )
     out_dir = Path(out_dir)
-    tmp = str(out_dir / "._spark_rejects_tmp")
-    (
-        rejects.repartition(F.col(file_col))
-        .write.mode("overwrite")
-        .option("header", True)
-        .option("ignoreLeadingWhiteSpace", False)
-        .option("ignoreTrailingWhiteSpace", False)
-        .partitionBy(file_col)
-        .csv(tmp)
-    )
-    from urllib.parse import unquote
+    tmp = out_dir / "._spark_rejects_tmp"
+    reduce(DataFrame.unionAll, [*heads, lines.select(file_col, "_line")]).write.mode(
+        "overwrite"
+    ).partitionBy(file_col).text(str(tmp))
 
     out_dir.mkdir(parents=True, exist_ok=True)
-    for d in Path(tmp).glob(f"{file_col}=*"):
-        fname = unquote(d.name.split("=", 1)[1])
-        part = next(d.glob("part-*.csv"))
-        shutil.move(str(part), str(out_dir / f"rejected_{fname}"))
+    for d in tmp.glob(f"{file_col}=*"):
+        parts = sorted(d.glob("part-*"), key=part_number)
+        if len(parts) < 2:
+            continue
+        with open(out_dir / f"rejected_{unquote(d.name.split('=', 1)[1])}", "wb") as out:
+            for part in parts:
+                with open(part, "rb") as src:
+                    shutil.copyfileobj(src, out)
     shutil.rmtree(tmp)
 
 
@@ -277,7 +305,8 @@ def load_file(
     reference ``load_batch`` (scr/etl_batch.py:123-168), set-based over
     every file at once. Returns the fact append's ``AppendResult``, whose
     ``per_group`` holds each file's inserted/ignored counts."""
-    # dimension upsert (set-based J3) + broadcast key resolution
+    # dimension upsert (set-based J3): the whole dimension comes back as a
+    # driver-built frame, so the broadcast join needs no re-read
     dim = upsert_dimension(
         spark,
         valid.select(F.col("ciudad").alias("nombre"), "source_file"),
@@ -288,25 +317,29 @@ def load_file(
         F.broadcast(dim.withColumnRenamed("nombre", "ciudad")), "ciudad"
     ).select("nombre", "edad", "ciudad_id", "source_file")
 
-    # surrogate persona_id start: AUTOINCREMENT parity — max existing + 1;
-    # ids are assigned inside idempotent_append AFTER the anti-join so
-    # IGNOREd duplicates don't consume ids (dense like SQLite)
-    start = 1
-    if _fact_exists(spark, cfg):
-        start += read_fact(spark, cfg).agg(F.max("persona_id")).first()[0] or 0
     run_id = F.create_map(*[F.lit(s) for kv in run_ids.items() for s in kv])
     batch = resolved.withColumn("processed_at", F.lit(processed_at)).withColumn(
         "run_id", run_id[F.col("source_file")]
     )
-    return _append_fact(spark, cfg, batch, id_start=start, group_col="source_file")
+    # persona_id continues from max existing + 1 (AUTOINCREMENT parity),
+    # read by the append's accounting action; ids go to new rows only,
+    # after the anti-join, so IGNOREd duplicates consume none
+    return _append_fact(spark, cfg, batch, id_start=None, group_col="source_file")
+
+
+#: columns of the one frame a batch persists, next to ``_line`` (a
+#: reject's CSV line): lineage, the cascade's verdict and the normalized
+#: values a load needs
+_BATCH_COLUMNS = ("source_file", "motivo", "nombre_norm", "ciudad_norm", "edad_int")
 
 
 def _process_batch(
     spark: SparkSession, cfg: PipelineConfig, now: datetime | None
 ) -> list[tuple]:
-    """The batch core: scan, validate and route rejects once per header
-    group, load once for the batch, append one audit row per file.
-    Returns the audit rows (``AUDIT_SCHEMA`` order, sorted file order)."""
+    """The batch core: scan and validate once per header group, then, for
+    the one persisted frame of the whole batch, one count, one reject
+    write, one load and one audit write. Returns the audit rows
+    (``AUDIT_SCHEMA`` order, sorted file order)."""
     files = list_csv_files(cfg.data_in)
     if not files:
         return []
@@ -321,49 +354,51 @@ def _process_batch(
         if header is not None:
             groups.setdefault(header, []).append(f)
 
-    # persist: rejects, counts and load all read each group's annotation
-    anns = [
-        annotate_rejections(
+    ok = F.col("motivo").isNull()
+    parts, reject_headers = [], {}
+    for header, group in groups.items():
+        ann = annotate_rejections(
             read_csv_files(spark, group, header),
             edad_min=cfg.edad_min,
             message_style=cfg.message_style,
-        ).persist()
-        for header, group in groups.items()
-    ]
+        )
+        reject_cols = [c for c in ann.columns if c not in _BATCH_COLUMNS] + ["motivo"]
+        reject_headers.update((f.name, reject_cols) for f in group)
+        parts.append(
+            ann.select(*_BATCH_COLUMNS, F.when(~ok, csv_line(reject_cols)).alias("_line"))
+        )
     counts: dict[str, tuple[int, int]] = {}
     loaded: dict[str, tuple[int, int]] = {}
-    try:
-        valids = []
-        for ann in anns:
-            valid, rejects = split_rejections(ann, keep=("source_file",))
-            write_rejects_csv_by_file(rejects, cfg.data_rejected)
-            valids.append(valid)
-        if anns:
-            flags = reduce(
-                DataFrame.unionAll,
-                [a.select("source_file", F.col("motivo").isNull().alias("ok")) for a in anns],
-            )
+    if parts:
+        batch = reduce(DataFrame.unionAll, parts).persist()
+        try:
             counts = {
                 r[0]: (r[1], r[2])
-                for r in flags.groupBy("source_file")
-                .agg(F.count_if("ok"), F.count_if(~F.col("ok")))
+                for r in batch.groupBy("source_file")
+                .agg(F.count_if(ok), F.count_if(~ok))
                 .collect()
             }
-        if any(v for v, _ in counts.values()):
-            res = load_file(
-                spark, cfg, reduce(DataFrame.unionAll, valids), run_ids, started_at
-            )
-            loaded = {g: (n, i) for g, n, i in res.per_group}
-    finally:
-        for ann in anns:
-            ann.unpersist()
+            headers = {f: reject_headers[f] for f, (_, n) in counts.items() if n}
+            if headers:
+                write_rejects_csv_by_file(batch.where(~ok), cfg.data_rejected, headers)
+            if any(v for v, _ in counts.values()):
+                valid = batch.where(ok).select(
+                    F.col("nombre_norm").alias("nombre"),
+                    F.col("edad_int").alias("edad"),
+                    F.col("ciudad_norm").alias("ciudad"),
+                    "source_file",
+                )
+                res = load_file(spark, cfg, valid, run_ids, started_at)
+                loaded = {g: (n, i) for g, n, i in res.per_group}
+        finally:
+            batch.unpersist()
 
     rows = [
         (run_ids[f.name], started_at, f.name,
          *counts.get(f.name, (0, 0)), *loaded.get(f.name, (0, 0)))
         for f in files
     ]
-    spark.createDataFrame(rows, AUDIT_SCHEMA).write.mode("append").parquet(cfg.audit_path)
+    local_frame(spark, rows, AUDIT_SCHEMA).write.mode("append").parquet(cfg.audit_path)
     return rows
 
 
@@ -381,7 +416,7 @@ def run_directory_combined(
     spark: SparkSession, cfg: PipelineConfig, now: datetime | None = None
 ) -> DataFrame:
     """``run_batch`` returning the audit rows it appended as a DataFrame."""
-    return spark.createDataFrame(_process_batch(spark, cfg, now), AUDIT_SCHEMA)
+    return local_frame(spark, _process_batch(spark, cfg, now), AUDIT_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -19,26 +19,25 @@ from collections.abc import Sequence
 from glob import glob as _glob
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 #: DictReader yields '' for an empty field and None only for fields missing
-#: from a short row. Spark's default nullValue="" would turn empty fields
-#: into null and misroute them to the None-validation reject branch, so we
-#: point nullValue at a sentinel that never occurs in real data; short rows
-#: still yield genuine nulls.
+#: from a short row. Spark's default nullValue="" would turn quoted empty
+#: fields into null too, so we point nullValue at a sentinel that never
+#: occurs in real data. An unquoted empty field still reads as null (the
+#: parser maps it to nullValue); ``read_csv_files`` maps it back to ''.
 _NULL_SENTINEL = "\x00\x00"
+
+#: scan-only column Spark fills with the raw line of a row whose field
+#: count differs from the header's
+_CORRUPT = "_csv_corrupt_record"
 
 
 def read_csv_all_string(spark: SparkSession, path: str | Path) -> DataFrame:
     """One CSV file → all-string DataFrame (DictReader semantics)."""
-    return (
-        spark.read.option("header", True)
-        .option("inferSchema", False)
-        .option("nullValue", _NULL_SENTINEL)
-        .csv(str(path))
-    )
+    return read_csv_files(spark, [Path(path)], read_header(path) or ()).drop("source_file")
 
 
 def read_header(path: str | Path) -> tuple[str, ...] | None:
@@ -68,30 +67,49 @@ def spark_column_names(header: Sequence[str], case_sensitive: bool = False) -> l
     ]
 
 
+def header_col(name: str) -> Column:
+    """The column named ``name`` verbatim (a header name may hold dots or
+    backticks, which ``F.col`` would parse)."""
+    return F.col("`" + name.replace("`", "``") + "`")
+
+
 def read_csv_files(
     spark: SparkSession, files: Sequence[Path], header: Sequence[str]
 ) -> DataFrame:
     """One scan of CSV ``files`` that share ``header``: all-string columns
     named as Spark names them, plus ``source_file``, each row's on-disk
-    file name taken from ``files``."""
+    file name taken from ``files``.
+
+    Values follow ``csv.DictReader``: an empty field reads as '', and
+    only a row with too few fields has nulls (in every column it leaves
+    empty, a superset of the ones it lacks). Spark flags such rows only
+    when the scan parses every column, so keep all columns in the plan:
+    a projection that prunes some of them reads a short row's missing
+    fields as ''.
+    """
     case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
-    schema = T.StructType(
-        [T.StructField(c, T.StringType()) for c in spark_column_names(header, case_sensitive)]
-    )
+    names = spark_column_names(header, case_sensitive)
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in [*names, _CORRUPT]])
     raw = (
         spark.read.schema(schema)
         .option("header", True)
         .option("nullValue", _NULL_SENTINEL)
+        .option("columnNameOfCorruptRecord", _CORRUPT)
         .csv([str(f) for f in files])
     )
+    whole = F.col(_CORRUPT).isNull()
+    values = [
+        F.when(whole, F.coalesce(header_col(c), F.lit(""))).otherwise(header_col(c)).alias(c)
+        for c in names
+    ]
     # the scan reports Hadoop's URL-encoded name; map it back to the
     # driver's name with Hadoop's own encoder
     jpath = spark._jvm.org.apache.hadoop.fs.Path
     encoded = {
         jpath("/" + Path(f).name).toUri().getRawPath()[1:]: Path(f).name for f in files
     }
-    names = F.create_map(*[F.lit(s) for kv in encoded.items() for s in kv])
-    return raw.withColumn("source_file", names[F.col("_metadata.file_name")])
+    on_disk = F.create_map(*[F.lit(s) for kv in encoded.items() for s in kv])
+    return raw.select(*values, on_disk[F.col("_metadata.file_name")].alias("source_file"))
 
 
 def read_csv_directory(spark: SparkSession, glob: str | Path) -> DataFrame:

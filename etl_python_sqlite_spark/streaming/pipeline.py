@@ -44,6 +44,14 @@ RAW_CSV_SCHEMA = T.StructType(
     ]
 )
 
+AUDIT_COUNTS_SCHEMA = T.StructType(
+    [T.StructField("source_file", T.StringType())]
+    + [
+        T.StructField(c, T.LongType())
+        for c in ("valid_count", "rejected_count", "inserted_new", "ignored_duplicates")
+    ]
+)
+
 
 def stream_raw_csv(spark: SparkSession, data_in: str) -> DataFrame:
     """File-source stream over the input directory (schema must be
@@ -72,10 +80,10 @@ def process_microbatch(
     replay: a re-delivered file inserts 0 new fact rows."""
     from etl_python_sqlite_spark.operators.idempotent import (
         idempotent_append,
-        read_or_empty,
         upsert_dimension,
     )
-    from etl_python_sqlite_spark.pipeline import write_rejects_csv_by_file
+    from etl_python_sqlite_spark.pipeline import csv_line, write_rejects_csv_by_file
+    from etl_python_sqlite_spark.session import local_frame
 
     batch_df = batch_df.persist()
     ann = None
@@ -90,17 +98,22 @@ def process_microbatch(
             batch_df, edad_min=cfg.edad_min, message_style=cfg.message_style
         ).persist()
 
-        # reject sink: one CSV per source file, single partitioned write
-        rejects = ann.filter(F.col("motivo").isNotNull()).select(
-            F.coalesce("nombre", F.lit("")).alias("nombre"),
-            F.coalesce("edad", F.lit("")).alias("edad"),
-            F.coalesce("ciudad", F.lit("")).alias("ciudad"),
-            "motivo",
-            "source_file",
+        ok = F.col("motivo").isNull()
+        counts = (
+            ann.groupBy("source_file").agg(F.count_if(ok), F.count_if(~ok)).collect()
         )
-        write_rejects_csv_by_file(rejects, cfg.data_rejected)
 
-        valid = ann.filter(F.col("motivo").isNull())
+        # reject sink: one CSV per source file, single partitioned write
+        reject_cols = ["nombre", "edad", "ciudad", "motivo"]
+        headers = {f: reject_cols for f, _, n in counts if n}
+        if headers:
+            write_rejects_csv_by_file(
+                ann.where(~ok).select("source_file", csv_line(reject_cols).alias("_line")),
+                cfg.data_rejected,
+                headers,
+            )
+
+        valid = ann.filter(ok)
         dim = upsert_dimension(
             spark, valid.select(F.col("ciudad_norm").alias("nombre")), cfg.dim_path
         )
@@ -112,8 +125,6 @@ def process_microbatch(
             "ciudad_id",
             "source_file",
         )
-        existing = read_or_empty(spark, cfg.fact_path, FACT_SCHEMA)
-        start = (existing.agg(F.max("persona_id")).first()[0] or 0) + 1
         run_id_col = F.concat(
             F.lit(ts + "_"), F.regexp_replace("source_file", r"[^\p{L}\p{N}]", "_")
         )
@@ -122,7 +133,8 @@ def process_microbatch(
         )
         # group_col threads source_file through the anti-join so each
         # (run, file) audit row carries ITS OWN inserted/ignored counts,
-        # not microbatch-global ones (the per-(run,file) audit contract)
+        # not microbatch-global ones (the per-(run,file) audit contract);
+        # id_start=None continues persona_id from the fact's max
         res = idempotent_append(
             spark,
             batch,
@@ -130,39 +142,23 @@ def process_microbatch(
             FACT_NATURAL_KEY,
             target_schema=FACT_SCHEMA,
             id_col="persona_id",
-            id_start=start,
+            id_start=None,
             group_col="source_file",
         )
 
-        per_file = spark.createDataFrame(
-            res.per_group,
-            "source_file string, inserted_new long, ignored_duplicates long",
-        )
-        audit = (
-            ann.groupBy("source_file")
-            .agg(
-                F.sum(F.when(F.col("motivo").isNull(), 1).otherwise(0))
-                .cast("long")
-                .alias("valid_count"),
-                F.sum(F.when(F.col("motivo").isNotNull(), 1).otherwise(0))
-                .cast("long")
-                .alias("rejected_count"),
-            )
-            .join(F.broadcast(per_file), on="source_file", how="left")
-            .select(
-                F.concat(
-                    F.lit(ts + "_"),
-                    F.regexp_replace("source_file", r"[^\p{L}\p{N}]", "_"),
-                ).alias("run_id"),
-                F.lit(started_at).alias("started_at"),
-                "source_file",
-                "valid_count",
-                "rejected_count",
-                F.coalesce("inserted_new", F.lit(0)).cast("long").alias("inserted_new"),
-                F.coalesce("ignored_duplicates", F.lit(0))
-                .cast("long")
-                .alias("ignored_duplicates"),
-            )
+        loaded = {g: (n, i) for g, n, i in res.per_group}
+        audit = local_frame(
+            spark,
+            [(f, v, r, *loaded.get(f, (0, 0))) for f, v, r in counts],
+            AUDIT_COUNTS_SCHEMA,
+        ).select(
+            run_id_col.alias("run_id"),
+            F.lit(started_at).alias("started_at"),
+            "source_file",
+            "valid_count",
+            "rejected_count",
+            "inserted_new",
+            "ignored_duplicates",
         )
         audit.write.mode("append").parquet(cfg.audit_path)
     finally:

@@ -8,16 +8,22 @@ from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from etl_python_sqlite_spark.pipeline import (
     AUDIT_SCHEMA,
     FACT_SCHEMA,
     PipelineConfig,
+    csv_line,
     make_run_id,
     migrate_fact_if_needed,
+    part_number,
     run_batch,
     run_directory_combined,
+    write_rejects_csv_by_file,
 )
+from etl_python_sqlite_spark.session import local_frame
+from etl_python_sqlite_spark.sources.csv import read_csv_files
 
 DIRTY = [
     ["nombre", "edad", "ciudad"],
@@ -432,19 +438,137 @@ def _jobs_of(spark, fn, group: str) -> int:
 
 def test_batch_jobs_do_not_grow_with_file_count(spark, tmp_path):
     """Files sharing a header are one scan and one load: a batch of 6
-    issues exactly as many Spark jobs as a batch of 2."""
-    jobs = []
-    for n in (2, 6):
+    issues exactly as many Spark jobs as a batch of 2. Header groups share
+    the batch's one frame: 3 headers (one reordered, one missing
+    ``ciudad``) issue as many jobs as 1."""
+    header = ["nombre", "edad", "ciudad"]
+    batches = {
+        "files2": [header] * 2,
+        "files6": [header] * 6,
+        "headers1": [header] * 3,
+        "headers3": [header, ["edad", "ciudad", "nombre"], ["nombre", "edad"]],
+    }
+    jobs = {}
+    for name, headers in batches.items():
         cfg = PipelineConfig(
-            data_in=str(tmp_path / f"in{n}"),
-            data_rejected=str(tmp_path / f"rej{n}"),
-            warehouse=str(tmp_path / f"wh{n}"),
+            data_in=str(tmp_path / name / "in"),
+            data_rejected=str(tmp_path / name / "rej"),
+            warehouse=str(tmp_path / name / "wh"),
         )
-        for i in range(n):
-            _write_csv(
-                Path(cfg.data_in) / f"f{i}.csv",
-                [["nombre", "edad", "ciudad"], [f"n{i}", "30", "Lima"],
-                 [f"m{i}", "40", f"C{i}"], [f"r{i}", "12", "Lima"]],
-            )
-        jobs.append(_jobs_of(spark, lambda: run_batch(spark, cfg, now=NOW), f"files{n}"))
-    assert jobs[0] == jobs[1], jobs
+        for i, cols in enumerate(headers):
+            rows = [
+                {"nombre": f"n{i}", "edad": "30", "ciudad": "Lima"},
+                {"nombre": f"m{i}", "edad": "40", "ciudad": f"C{i}"},
+                {"nombre": f"r{i}", "edad": "12", "ciudad": "Lima"},
+            ]
+            _write_csv(Path(cfg.data_in) / f"f{i}.csv", [cols] + [[r[c] for c in cols] for r in rows])
+        jobs[name] = _jobs_of(spark, lambda: run_batch(spark, cfg, now=NOW), name)
+    assert jobs["files2"] == jobs["files6"], jobs
+    assert jobs["headers1"] == jobs["headers3"], jobs
+
+
+def test_local_frame_is_a_local_relation(spark):
+    """Driver rows reach the JVM as one Arrow table: the plan is a
+    LocalRelation, so no action over it starts a Python worker."""
+    for rows in ([("a.csv", 1, 2, 3, 4), ("b.csv", 5, 6, 7, 8)], []):
+        rows = [(f"r{i}", "t", *r) for i, r in enumerate(rows)]
+        df = local_frame(spark, rows, AUDIT_SCHEMA)
+        plan = df._jdf.queryExecution().optimizedPlan()
+        assert plan.getClass().getSimpleName() == "LocalRelation"
+        assert [tuple(r) for r in df.collect()] == rows
+        assert df.schema == AUDIT_SCHEMA
+
+
+def test_part_files_join_in_task_order():
+    names = ["part-100000-u.c000.txt", "part-99999-u.c000.txt", "part-00002-u.c000.txt"]
+    assert sorted(names) == [names[2], names[0], names[1]]  # name order is wrong
+    assert [p.name for p in sorted(map(Path, names), key=part_number)] == [
+        names[2], names[1], names[0]
+    ]
+
+
+#: values the reject sink must write exactly as Spark's CSV writer does
+TRICKY = ["a,b", 'say "hi"', "  lead", "trail  ", "", "Querétaro", "ñandú, ü", " , "]
+
+
+def _csv_writer_bytes(spark, tmp_path, rows, cols) -> str:
+    """``rows`` written by ``DataFrameWriter.csv`` as one file with a header
+    (the sink's former writer)."""
+    out = tmp_path / f"expected_{len(list(tmp_path.iterdir()))}"
+    schema = T.StructType([T.StructField(c, T.StringType()) for c in cols])
+    (
+        local_frame(spark, rows, schema).coalesce(1).write.option("header", True)
+        .option("ignoreLeadingWhiteSpace", False)
+        .option("ignoreTrailingWhiteSpace", False)
+        .csv(str(out))
+    )
+    return next(out.glob("part-*")).read_text(encoding="utf-8")
+
+
+def test_reject_sink_bytes_match_the_csv_writer(spark, tmp_path):
+    """Two header groups, values with commas, quotes, embedded CR/LF,
+    blanks, empty strings, nulls and accents, spread over several tasks:
+    each file gets one header and its rows in order, byte for byte what
+    ``DataFrameWriter.csv`` writes; a file without rejects gets no CSV."""
+    cols_a, cols_b = ["nombre", "edad", "motivo"], ["edad", "nota, x", "nombre", "motivo"]
+    extra = ["x\ny", "r\rz", "a\r\nb", None]
+    rows_a = [(v, w, "Edad < 25") for v, w in zip(TRICKY + extra, reversed(TRICKY + extra))]
+    rows_b = [(str(i), v, "Ana", "Edad no convertible a int") for i, v in enumerate(TRICKY + extra)]
+    lines = [("a.csv", *r, None) for r in rows_a] + [("b.csv", *r) for r in rows_b]
+    schema = T.StructType(
+        [T.StructField(c, T.StringType()) for c in ["source_file", "c0", "c1", "c2", "c3"]]
+    )
+    frame = local_frame(spark, lines, schema)
+    assert frame.rdd.getNumPartitions() >= 3
+    a = frame.where("source_file = 'a.csv'").select("source_file", csv_line(["c0", "c1", "c2"]).alias("_line"))
+    b = frame.where("source_file = 'b.csv'").select("source_file", csv_line(["c0", "c1", "c2", "c3"]).alias("_line"))
+    out = tmp_path / "rej"
+    write_rejects_csv_by_file(
+        a.unionAll(b), out, {"a.csv": cols_a, "b.csv": cols_b, "none.csv": cols_a}
+    )
+    assert sorted(p.name for p in out.iterdir()) == ["rejected_a.csv", "rejected_b.csv"]
+    # nulls reach the writer as '', as the batch's rejects always did
+    for name, rows, cols in (("a", rows_a, cols_a), ("b", rows_b, cols_b)):
+        blank = [tuple("" if v is None else v for v in r) for r in rows]
+        assert (out / f"rejected_{name}.csv").read_text(encoding="utf-8") == (
+            _csv_writer_bytes(spark, tmp_path, blank, cols)
+        )
+
+
+def test_reject_file_split_over_scan_tasks(spark, tmp_path):
+    """A file read by several scan tasks still gets one reject CSV with one
+    header and its rows in file order, next to a second header group.
+    (No quote characters in the input: Spark's reader takes a doubled
+    quote literally, where ``csv.reader`` unescapes it.)"""
+    cfg = PipelineConfig(
+        data_in=str(tmp_path / "in"),
+        data_rejected=str(tmp_path / "rej"),
+        warehouse=str(tmp_path / "wh"),
+    )
+    values = [v for v in TRICKY if '"' not in v]
+    big = [["nombre", "edad", "ciudad"]] + [
+        [f"p{i:04d} {values[i % len(values)]}", "12" if i % 3 else "30", values[i % 5]]
+        for i in range(400)
+    ]
+    _write_csv(Path(cfg.data_in) / "big.csv", big)
+    other = [["ciudad", "nombre", "edad"]] + [[v, v, "x"] for v in values]
+    _write_csv(Path(cfg.data_in) / "other.csv", other)
+
+    key = "spark.sql.files.maxPartitionBytes"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        assert read_csv_files(spark, [Path(cfg.data_in) / "big.csv"], big[0]).rdd.getNumPartitions() >= 3
+        run_batch(spark, cfg, now=NOW)
+    finally:
+        spark.conf.set(key, before)
+
+    rej = Path(cfg.data_rejected)
+    want_big = [(*r, "Edad < 25") for i, r in enumerate(big[1:]) if i % 3]
+    want_other = [(*r, "Edad no convertible a int") for r in other[1:]]
+    assert (rej / "rejected_big.csv").read_text(encoding="utf-8") == _csv_writer_bytes(
+        spark, tmp_path, want_big, [*big[0], "motivo"]
+    )
+    assert (rej / "rejected_other.csv").read_text(encoding="utf-8") == _csv_writer_bytes(
+        spark, tmp_path, want_other, [*other[0], "motivo"]
+    )

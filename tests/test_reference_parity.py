@@ -165,3 +165,59 @@ def test_message_style_unknown_raises(spark):
     df = spark.createDataFrame([("a", "1", "x")], ["nombre", "edad", "ciudad"])
     with pytest.raises(KeyError):
         annotate_rejections(df, message_style="nope")
+
+
+def _reference_motivo(row: dict) -> str | None:
+    """The reference's relational cascade (scr/etl_relational.py:30-92) on
+    one ``csv.DictReader`` row; None = valid."""
+    if not {"nombre", "edad", "ciudad"} <= row.keys():
+        return "Faltan columnas requeridas"
+    if any(row[k] is None for k in ("nombre", "edad", "ciudad")):
+        return "Valor None en campo requerido"
+    try:
+        edad = int(row["edad"])
+    except ValueError:
+        return "Edad no convertible a int"
+    return "Edad < 25" if edad < 25 else None
+
+
+def test_empty_fields_match_dictreader(spark, tmp_path):
+    """An unquoted empty field is '' (DictReader), not None: ``ana,,rosario``
+    fails the int cast, a trailing ``x,26,`` loads with an empty city, and
+    only the short row ``pedro,30`` has a None value."""
+    from etl_python_sqlite_spark.sources.csv import read_csv_files
+
+    cfg = PipelineConfig(
+        data_in=str(tmp_path / "in"),
+        data_rejected=str(tmp_path / "rejected"),
+        warehouse=str(tmp_path / "wh"),
+    )
+    path = Path(cfg.data_in) / "vacios.csv"
+    path.parent.mkdir(parents=True)
+    path.write_text(
+        'nombre,edad,ciudad\nana,,rosario\npedro,30\nx,26,\nluz,"",lima\n,31,lima\n',
+        encoding="utf-8",
+    )
+    with path.open(newline="", encoding="utf-8") as f:
+        replay = list(csv.DictReader(f))
+
+    scanned = read_csv_files(spark, [path], ("nombre", "edad", "ciudad")).drop("source_file")
+    assert [r.asDict() for r in scanned.collect()] == replay
+
+    result = run_batch(spark, cfg, now=NOW).files[0]
+    want = [(r["nombre"], _reference_motivo(r)) for r in replay]
+    assert (result.valid_count, result.rejected_count) == (
+        sum(m is None for _, m in want),
+        sum(m is not None for _, m in want),
+    )
+    with (Path(cfg.data_rejected) / "rejected_vacios.csv").open(newline="") as f:
+        got = [(r["nombre"], r["motivo"]) for r in csv.DictReader(f)]
+    assert got == [(n, m) for n, m in want if m is not None]
+    fact = spark.read.parquet(cfg.fact_path)
+    dim = spark.read.parquet(cfg.dim_path)
+    loaded = fact.join(dim, "ciudad_id").select(fact.nombre, "edad", dim.nombre)
+    assert sorted(tuple(r) for r in loaded.collect()) == sorted(
+        (r["nombre"].strip().capitalize(), int(r["edad"]), r["ciudad"].strip().title())
+        for r in replay
+        if _reference_motivo(r) is None
+    )

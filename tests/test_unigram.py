@@ -201,16 +201,16 @@ def test_degenerate_words(word):
     assert seg == ((() if word == "" else ("a",)))
 
 
-def test_trainer_fuzz_vs_transcription():
-    """Property pin: on random small histograms (short words so the
-    transcription's exponential brute-force segmentation stays cheap)
-    the trainer and the independent transcription agree exactly."""
+def _trainer_fuzz(**overrides):
+    """On random small histograms (short words so the transcription's
+    exponential brute-force segmentation stays cheap) the trainer and the
+    independent transcription agree exactly."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
     word = st.text(alphabet="abc", min_size=1, max_size=7)
 
-    @settings(max_examples=25, deadline=None)
+    @settings(max_examples=25, deadline=None, **overrides)
     @given(
         st.dictionaries(word, st.integers(1, 50), min_size=1, max_size=6),
         st.integers(4, 12),
@@ -221,6 +221,17 @@ def test_trainer_fuzz_vs_transcription():
         assert got == _replay(hist, vocab_size=vocab_size)
 
     _case()
+
+
+def test_trainer_fuzz_vs_transcription():
+    """Property pin, derandomized: the same draws on every run."""
+    _trainer_fuzz(derandomize=True, database=None)
+
+
+@pytest.mark.slow
+def test_trainer_fuzz_vs_transcription_randomized():
+    """The same property on fresh random draws every run."""
+    _trainer_fuzz()
 
 
 def test_vocab_save_load_round_trip(spark, tmp_path):
