@@ -87,7 +87,6 @@ def idempotent_append(
     keys: list[str],
     target_schema: T.StructType | None = None,
     id_col: str | None = None,
-    id_start: int | None = None,
     group_col: str | None = None,
 ) -> AppendResult:
     """INSERT OR IGNORE semantics onto a parquet table.
@@ -97,8 +96,8 @@ def idempotent_append(
     3. surrogate ids assigned AFTER dedup when ``id_col`` is given —
        SQLite does not consume rowids for IGNOREd inserts, so ids stay
        dense across re-runs only if assigned to genuinely-new rows;
-       they start at ``id_start``, or with ``id_start=None`` at the
-       target's max id + 1, read by the accounting action;
+       they start at the target's max id + 1, read by the accounting
+       action;
     4. append only genuinely new rows;
     5. metrics from the anti-join count — the reference derives
        inserted/ignored from before/after COUNT(*) (scr/etl_batch.py:150-154)
@@ -123,8 +122,7 @@ def idempotent_append(
         out.write.mode("append").parquet(target_path)
 
     return _append_with_accounting(
-        batch, keys, existing, schema, id_col, id_start, group_col,
-        _write, target_path,
+        batch, keys, existing, schema, id_col, group_col, _write, target_path
     )
 
 
@@ -134,7 +132,6 @@ def _append_with_accounting(
     existing: DataFrame | None,
     schema: T.StructType,
     id_col: str | None,
-    id_start: int | None,
     group_col: str | None,
     write_fn,
     target_label: str,
@@ -168,7 +165,7 @@ def _append_with_accounting(
         no_id = F.lit(None).cast("long")
         flagged = batch.select(*group, F.lit(False).alias("_new"), no_id.alias("_id"))
         flagged = flagged.unionAll(new_rows.select(*group, F.lit(True), no_id))
-        if id_col is not None and id_start is None and existing is not None:
+        if id_col is not None and existing is not None:
             no_group = [F.lit(None).cast(batch.schema[group_col].dataType)] if group_col else []
             flagged = flagged.unionAll(
                 existing.select(*no_group, F.lit(None).cast("boolean"), F.col(id_col).cast("long"))
@@ -178,8 +175,7 @@ def _append_with_accounting(
             .agg(F.count_if(~F.col("_new")), F.count_if("_new"), F.max("_id"))
             .collect()
         )
-        if id_start is None:
-            id_start = 1 + max((r[-1] for r in counts if r[-1] is not None), default=0)
+        id_start = 1 + max((r[-1] for r in counts if r[-1] is not None), default=0)
         # a group of target rows only (its value null) attempted nothing
         counts = [r[:-1] for r in counts if r[-3]]
         attempted = sum(r[-2] for r in counts)
@@ -269,7 +265,6 @@ def idempotent_append_bucketed(
     buckets: int = 16,
     target_schema: T.StructType | None = None,
     id_col: str | None = None,
-    id_start: int | None = None,
     group_col: str | None = None,
 ) -> AppendResult:
     """Scale-path INSERT OR IGNORE onto a catalog table bucketed by the
@@ -296,6 +291,5 @@ def idempotent_append_bucketed(
         )
 
     return _append_with_accounting(
-        batch, keys, existing, schema, id_col, id_start, group_col,
-        _write, table_name,
+        batch, keys, existing, schema, id_col, group_col, _write, table_name
     )

@@ -153,7 +153,6 @@ def _append_fact(
     spark: SparkSession,
     cfg: PipelineConfig,
     batch: DataFrame,
-    id_start: int | None,
     group_col: str | None = None,
 ):
     """Route a fact batch to the configured warehouse layout."""
@@ -170,7 +169,6 @@ def _append_fact(
             buckets=cfg.fact_buckets,
             target_schema=FACT_SCHEMA,
             id_col="persona_id",
-            id_start=id_start,
             group_col=group_col,
         )
     return idempotent_append(
@@ -180,7 +178,6 @@ def _append_fact(
         FACT_NATURAL_KEY,
         target_schema=FACT_SCHEMA,
         id_col="persona_id",
-        id_start=id_start,
         group_col=group_col,
     )
 
@@ -257,11 +254,10 @@ def write_rejects_csv_by_file(
     every per-file ``rejected_<name>.csv`` (vs a driver loop of N jobs).
 
     ``lines`` holds ``file_col`` and ``_line``, a ``csv_line`` rendered
-    record; ``headers`` maps each file with rejects to its column names.
-    The header rows go first in the union, so each file's directory holds
-    its header part, then its rows' parts in scan order; the driver joins
-    them in task order. A file whose directory holds the header alone has
-    no rejects and gets no CSV.
+    record; ``headers`` maps each file with rejects to its column names
+    (every file it names gets a CSV). The header rows go first in the
+    union, so each file's directory holds its header part, then its rows'
+    parts in scan order; the driver joins them in task order.
     """
     spark = lines.sparkSession
     by_header: dict[tuple[str, ...], list[str]] = {}
@@ -285,8 +281,6 @@ def write_rejects_csv_by_file(
     out_dir.mkdir(parents=True, exist_ok=True)
     for d in tmp.glob(f"{file_col}=*"):
         parts = sorted(d.glob("part-*"), key=part_number)
-        if len(parts) < 2:
-            continue
         with open(out_dir / f"rejected_{unquote(d.name.split('=', 1)[1])}", "wb") as out:
             for part in parts:
                 with open(part, "rb") as src:
@@ -324,7 +318,7 @@ def load_file(
     # persona_id continues from max existing + 1 (AUTOINCREMENT parity),
     # read by the append's accounting action; ids go to new rows only,
     # after the anti-join, so IGNOREd duplicates consume none
-    return _append_fact(spark, cfg, batch, id_start=None, group_col="source_file")
+    return _append_fact(spark, cfg, batch, group_col="source_file")
 
 
 #: columns of the one frame a batch persists, next to ``_line`` (a

@@ -73,35 +73,40 @@ def header_col(name: str) -> Column:
     return F.col("`" + name.replace("`", "``") + "`")
 
 
-def read_csv_files(
-    spark: SparkSession, files: Sequence[Path], header: Sequence[str]
-) -> DataFrame:
-    """One scan of CSV ``files`` that share ``header``: all-string columns
-    named as Spark names them, plus ``source_file``, each row's on-disk
-    file name taken from ``files``.
+def scan_csv(reader, names: Sequence[str], paths, *extra: Column) -> DataFrame:
+    """A CSV scan with ``csv.DictReader`` values: ``reader`` (``spark.read``
+    or ``spark.readStream``) over ``paths`` with a header line, all-string
+    columns ``names`` in file order, then the ``extra`` columns.
 
-    Values follow ``csv.DictReader``: an empty field reads as '', and
-    only a row with too few fields has nulls (in every column it leaves
-    empty, a superset of the ones it lacks). Spark flags such rows only
-    when the scan parses every column, so keep all columns in the plan:
-    a projection that prunes some of them reads a short row's missing
-    fields as ''.
+    An empty field reads as '', and only a row with too few fields has
+    nulls (in every column it leaves empty, a superset of the ones it
+    lacks). Spark flags such rows only when the scan parses every column,
+    so keep all columns in the plan: a projection that prunes some of
+    them reads a short row's missing fields as ''.
     """
-    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
-    names = spark_column_names(header, case_sensitive)
     schema = T.StructType([T.StructField(c, T.StringType()) for c in [*names, _CORRUPT]])
     raw = (
-        spark.read.schema(schema)
+        reader.schema(schema)
         .option("header", True)
         .option("nullValue", _NULL_SENTINEL)
         .option("columnNameOfCorruptRecord", _CORRUPT)
-        .csv([str(f) for f in files])
+        .csv(paths)
     )
     whole = F.col(_CORRUPT).isNull()
     values = [
         F.when(whole, F.coalesce(header_col(c), F.lit(""))).otherwise(header_col(c)).alias(c)
         for c in names
     ]
+    return raw.select(*values, *extra)
+
+
+def read_csv_files(
+    spark: SparkSession, files: Sequence[Path], header: Sequence[str]
+) -> DataFrame:
+    """One scan of CSV ``files`` that share ``header`` (``scan_csv``):
+    all-string columns named as Spark names them, plus ``source_file``,
+    each row's on-disk file name taken from ``files``."""
+    case_sensitive = spark.conf.get("spark.sql.caseSensitive") == "true"
     # the scan reports Hadoop's URL-encoded name; map it back to the
     # driver's name with Hadoop's own encoder
     jpath = spark._jvm.org.apache.hadoop.fs.Path
@@ -109,7 +114,12 @@ def read_csv_files(
         jpath("/" + Path(f).name).toUri().getRawPath()[1:]: Path(f).name for f in files
     }
     on_disk = F.create_map(*[F.lit(s) for kv in encoded.items() for s in kv])
-    return raw.select(*values, on_disk[F.col("_metadata.file_name")].alias("source_file"))
+    return scan_csv(
+        spark.read,
+        spark_column_names(header, case_sensitive),
+        [str(f) for f in files],
+        on_disk[F.col("_metadata.file_name")].alias("source_file"),
+    )
 
 
 def read_csv_directory(spark: SparkSession, glob: str | Path) -> DataFrame:

@@ -35,14 +35,11 @@ from etl_python_sqlite_spark.pipeline import (
     FACT_SCHEMA,
     PipelineConfig,
 )
+from etl_python_sqlite_spark.sources.csv import scan_csv
 
-RAW_CSV_SCHEMA = T.StructType(
-    [
-        T.StructField("nombre", T.StringType(), True),
-        T.StructField("edad", T.StringType(), True),
-        T.StructField("ciudad", T.StringType(), True),
-    ]
-)
+#: the stream's columns, by position: a stream's schema is fixed up
+#: front, where the batch reader takes each file's header
+RAW_CSV_COLUMNS = ("nombre", "edad", "ciudad")
 
 AUDIT_COUNTS_SCHEMA = T.StructType(
     [T.StructField("source_file", T.StringType())]
@@ -54,17 +51,14 @@ AUDIT_COUNTS_SCHEMA = T.StructType(
 
 
 def stream_raw_csv(spark: SparkSession, data_in: str) -> DataFrame:
-    """File-source stream over the input directory (schema must be
-    explicit for streams; all-string like the batch reader) with per-file
-    lineage."""
-    return (
-        spark.readStream.schema(RAW_CSV_SCHEMA)
-        .option("header", True)
-        .option("maxFilesPerTrigger", 16)
-        .csv(data_in)
-        .withColumn(
-            "source_file", F.element_at(F.split(F.input_file_name(), "/"), -1)
-        )
+    """File-source stream over the input directory, all-string with
+    ``csv.DictReader`` values like the batch reader (``scan_csv``), with
+    per-file lineage."""
+    return scan_csv(
+        spark.readStream.option("maxFilesPerTrigger", 16),
+        RAW_CSV_COLUMNS,
+        data_in,
+        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("source_file"),
     )
 
 
@@ -76,8 +70,9 @@ def process_microbatch(
     now: datetime | None = None,
 ) -> None:
     """foreachBatch body — same load semantics as pipeline.run_batch but
-    driven by whatever files arrived in this micro-batch. Idempotent under
-    replay: a re-delivered file inserts 0 new fact rows."""
+    driven by whatever files arrived in this micro-batch, whose columns
+    are ``RAW_CSV_COLUMNS`` by position. Idempotent under replay: a
+    re-delivered file inserts 0 new fact rows."""
     from etl_python_sqlite_spark.operators.idempotent import (
         idempotent_append,
         upsert_dimension,
@@ -134,7 +129,7 @@ def process_microbatch(
         # group_col threads source_file through the anti-join so each
         # (run, file) audit row carries ITS OWN inserted/ignored counts,
         # not microbatch-global ones (the per-(run,file) audit contract);
-        # id_start=None continues persona_id from the fact's max
+        # persona_id continues from the fact's max
         res = idempotent_append(
             spark,
             batch,
@@ -142,7 +137,6 @@ def process_microbatch(
             FACT_NATURAL_KEY,
             target_schema=FACT_SCHEMA,
             id_col="persona_id",
-            id_start=None,
             group_col="source_file",
         )
 

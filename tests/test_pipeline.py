@@ -509,7 +509,7 @@ def test_reject_sink_bytes_match_the_csv_writer(spark, tmp_path):
     """Two header groups, values with commas, quotes, embedded CR/LF,
     blanks, empty strings, nulls and accents, spread over several tasks:
     each file gets one header and its rows in order, byte for byte what
-    ``DataFrameWriter.csv`` writes; a file without rejects gets no CSV."""
+    ``DataFrameWriter.csv`` writes."""
     cols_a, cols_b = ["nombre", "edad", "motivo"], ["edad", "nota, x", "nombre", "motivo"]
     extra = ["x\ny", "r\rz", "a\r\nb", None]
     rows_a = [(v, w, "Edad < 25") for v, w in zip(TRICKY + extra, reversed(TRICKY + extra))]
@@ -523,9 +523,7 @@ def test_reject_sink_bytes_match_the_csv_writer(spark, tmp_path):
     a = frame.where("source_file = 'a.csv'").select("source_file", csv_line(["c0", "c1", "c2"]).alias("_line"))
     b = frame.where("source_file = 'b.csv'").select("source_file", csv_line(["c0", "c1", "c2", "c3"]).alias("_line"))
     out = tmp_path / "rej"
-    write_rejects_csv_by_file(
-        a.unionAll(b), out, {"a.csv": cols_a, "b.csv": cols_b, "none.csv": cols_a}
-    )
+    write_rejects_csv_by_file(a.unionAll(b), out, {"a.csv": cols_a, "b.csv": cols_b})
     assert sorted(p.name for p in out.iterdir()) == ["rejected_a.csv", "rejected_b.csv"]
     # nulls reach the writer as '', as the batch's rejects always did
     for name, rows, cols in (("a", rows_a, cols_a), ("b", rows_b, cols_b)):

@@ -221,3 +221,24 @@ def test_empty_fields_match_dictreader(spark, tmp_path):
         for r in replay
         if _reference_motivo(r) is None
     )
+
+
+def test_short_row_nulls_need_every_column(spark, tmp_path):
+    """With an extra column, a scan of every column still gives the short
+    row ``pedro,30`` DictReader's None values. A projection that prunes
+    columns cannot flag the row: its missing city reads as '' (the
+    documented limit of ``sources.csv.scan_csv``; ROADMAP item 7)."""
+    from etl_python_sqlite_spark.sources.csv import read_csv_all_string
+
+    path = tmp_path / "extra.csv"
+    path.write_text(
+        "nombre,edad,ciudad,nota\nana,,rosario,a\npedro,30\nluz,40,lima,b\n",
+        encoding="utf-8",
+    )
+    with path.open(newline="", encoding="utf-8") as f:
+        replay = list(csv.DictReader(f))
+
+    scanned = read_csv_all_string(spark, path)
+    assert [r.asDict() for r in scanned.collect()] == replay
+    narrow = scanned.select("nombre", "ciudad").collect()
+    assert [tuple(r) for r in narrow] == [("ana", "rosario"), ("pedro", ""), ("luz", "lima")]

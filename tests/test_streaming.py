@@ -101,6 +101,39 @@ def test_stream_per_file_audit_counts_in_one_microbatch(spark, tmp_path):
     assert spark.read.parquet(cfg.fact_path).count() == 3
 
 
+def test_stream_empty_fields_match_batch(spark, tmp_path):
+    """The stream reads CSV fields as the batch does: ``ana,,rosario`` is
+    rejected for its empty age, the short row ``pedro,30`` for its missing
+    city, and both runs write the same reject bytes and fact rows."""
+    from etl_python_sqlite_spark.pipeline import run_batch
+
+    text = "nombre,edad,ciudad\nana,,rosario\npedro,30\nx,26,\nluz,40,lima\n"
+    out = {}
+    for mode in ("batch", "stream"):
+        cfg = PipelineConfig(
+            data_in=str(tmp_path / mode / "in"),
+            data_rejected=str(tmp_path / mode / "rej"),
+            warehouse=str(tmp_path / mode / "wh"),
+        )
+        Path(cfg.data_in).mkdir(parents=True)
+        (Path(cfg.data_in) / "f1.csv").write_text(text, encoding="utf-8")
+        if mode == "batch":
+            run_batch(spark, cfg, now=NOW)
+        else:
+            start_stream(spark, cfg, str(tmp_path / "ckpt"), now=NOW).awaitTermination(120)
+        fact = spark.read.parquet(cfg.fact_path).select("persona_id", "nombre", "edad")
+        out[mode] = (
+            (Path(cfg.data_rejected) / "rejected_f1.csv").read_text(encoding="utf-8"),
+            sorted(tuple(r) for r in fact.collect()),
+        )
+    assert out["stream"] == out["batch"]
+    assert out["batch"][0] == (
+        "nombre,edad,ciudad,motivo\n"
+        'ana,"",rosario,Edad no convertible a int\n'
+        'pedro,30,"",Valor None en campo requerido\n'
+    )
+
+
 def _events_rows():
     base = datetime(2024, 1, 1, 0, 0, 0)
     rows = []
