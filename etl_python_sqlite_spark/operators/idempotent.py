@@ -24,9 +24,7 @@ Scale notes:
 * Contiguous id assignment needs a global order: a dimension's new keys
   (small by definition) get theirs on the driver, a per-batch fact append
   (bounded) in a single-task window. That is the reference's
-  AUTOINCREMENT contract. For scale-mode appends where contiguity is not
-  required, pass ``contiguous=False`` to use partition-local id blocks
-  (fully parallel).
+  AUTOINCREMENT contract.
 """
 
 from __future__ import annotations
@@ -48,24 +46,13 @@ def _exists(path: str) -> bool:
 
 
 def assign_ids(
-    df: DataFrame,
-    id_col: str,
-    start: int = 1,
-    order_by: list[str] | None = None,
-    contiguous: bool = True,
+    df: DataFrame, id_col: str, start: int = 1, order_by: list[str] | None = None
 ) -> DataFrame:
-    """Attach surrogate ids ``start, start+1, …`` to ``df``.
-
-    contiguous=True  → deterministic dense ids via a global-order window
-                       (single task — use for dims / bounded batches; this
-                       is AUTOINCREMENT parity).
-    contiguous=False → ``monotonically_increasing_id()`` offset by
-                       ``start`` — parallel, unique, NOT dense (scale mode).
-    """
-    if contiguous:
-        w = Window.orderBy(*(order_by or df.columns))
-        return df.withColumn(id_col, (F.row_number().over(w) + start - 1).cast("long"))
-    return df.withColumn(id_col, (F.monotonically_increasing_id() + start).cast("long"))
+    """Attach dense surrogate ids ``start, start+1, …`` to ``df`` in
+    ``order_by`` order, via a global-order window (single task — use for
+    dims / bounded batches; this is AUTOINCREMENT parity)."""
+    w = Window.orderBy(*(order_by or df.columns))
+    return df.withColumn(id_col, (F.row_number().over(w) + start - 1).cast("long"))
 
 
 @dataclass

@@ -34,8 +34,15 @@ dimension keys, audit rows) enter Spark as Arrow ``LocalRelation``s
 rides along on every row, so the reference's audit contract still holds:
 one row per (run, file) with its own run_id (scr/etl_batch.py:132,156-163),
 and new ``persona_id`` and ``ciudad_id`` values come out exactly as the
-reference's sorted per-file loop assigns them. ``run_batch`` and
-``run_directory_combined`` are two entry points into this one core.
+reference's sorted per-file loop assigns them.
+
+The work splits into an extract and a load core. The batch's extract
+(``_process_batch``) lists the files, reads their headers and projects
+each header group; the stream's (``streaming.pipeline.process_microbatch``)
+projects whatever files a micro-batch holds. Both hand their frames to
+``load_frames``, which counts, writes rejects, loads and audits. So
+``run_batch``, ``run_directory_combined`` and the stream's
+``process_microbatch`` are three entry points into one core.
 
 Two intended differences from a per-file loop:
 
@@ -327,20 +334,77 @@ def load_file(
 _BATCH_COLUMNS = ("source_file", "motivo", "nombre_norm", "ciudad_norm", "edad_int")
 
 
+def project_annotated(ann: DataFrame, reject_cols: list[str]) -> DataFrame:
+    """An ``annotate_rejections`` frame in the core's schema:
+    ``_BATCH_COLUMNS`` plus ``_line``, a reject's ``reject_cols`` record."""
+    ok = F.col("motivo").isNull()
+    return ann.select(*_BATCH_COLUMNS, F.when(~ok, csv_line(reject_cols)).alias("_line"))
+
+
+def load_frames(
+    spark: SparkSession,
+    cfg: PipelineConfig,
+    parts: list[DataFrame],
+    reject_header,
+    listed: list[str],
+    now: datetime | None,
+) -> list[tuple]:
+    """The load core shared by the batch and the stream: the union of
+    ``parts`` (``project_annotated`` frames) persisted once, then one
+    per-file count, one reject write (``reject_header(file)`` names a
+    file's reject columns), one load and one audit write. The audit
+    covers the ``listed`` files and every file the count found, each
+    with its own run_id from one clock read. Returns the audit rows
+    (``AUDIT_SCHEMA`` order, sorted file order); no files and no rows
+    write nothing."""
+    now = now or datetime.now(timezone.utc)
+    started_at = now.isoformat()
+    ok = F.col("motivo").isNull()
+    batch = reduce(DataFrame.unionAll, parts).persist() if parts else None
+    try:
+        counts: dict[str, tuple[int, int]] = {}
+        if batch is not None:
+            counts = {
+                r[0]: (r[1], r[2])
+                for r in batch.groupBy("source_file")
+                .agg(F.count_if(ok), F.count_if(~ok))
+                .collect()
+            }
+        run_ids = {f: make_run_id(f, now) for f in sorted({*listed, *counts})}
+        if not run_ids:
+            return []
+        headers = {f: reject_header(f) for f, (_, n) in counts.items() if n}
+        if headers:
+            write_rejects_csv_by_file(batch.where(~ok), cfg.data_rejected, headers)
+        loaded: dict[str, tuple[int, int]] = {}
+        if any(v for v, _ in counts.values()):
+            valid = batch.where(ok).select(
+                F.col("nombre_norm").alias("nombre"),
+                F.col("edad_int").alias("edad"),
+                F.col("ciudad_norm").alias("ciudad"),
+                "source_file",
+            )
+            res = load_file(spark, cfg, valid, run_ids, started_at)
+            loaded = {g: (n, i) for g, n, i in res.per_group}
+    finally:
+        if batch is not None:
+            batch.unpersist()
+
+    rows = [
+        (run_id, started_at, f, *counts.get(f, (0, 0)), *loaded.get(f, (0, 0)))
+        for f, run_id in run_ids.items()
+    ]
+    local_frame(spark, rows, AUDIT_SCHEMA).write.mode("append").parquet(cfg.audit_path)
+    return rows
+
+
 def _process_batch(
     spark: SparkSession, cfg: PipelineConfig, now: datetime | None
 ) -> list[tuple]:
-    """The batch core: scan and validate once per header group, then, for
-    the one persisted frame of the whole batch, one count, one reject
-    write, one load and one audit write. Returns the audit rows
-    (``AUDIT_SCHEMA`` order, sorted file order)."""
+    """The batch's extract: list the files, read their headers, then scan,
+    annotate and project each header group once; ``load_frames`` does
+    the rest."""
     files = list_csv_files(cfg.data_in)
-    if not files:
-        return []
-    now = now or datetime.now(timezone.utc)
-    started_at = now.isoformat()
-    run_ids = {f.name: make_run_id(f.name, now) for f in files}
-
     # header-driven columns per file (a file without a header has no rows)
     groups: dict[tuple[str, ...], list[Path]] = {}
     for f in files:
@@ -348,7 +412,6 @@ def _process_batch(
         if header is not None:
             groups.setdefault(header, []).append(f)
 
-    ok = F.col("motivo").isNull()
     parts, reject_headers = [], {}
     for header, group in groups.items():
         ann = annotate_rejections(
@@ -358,42 +421,8 @@ def _process_batch(
         )
         reject_cols = [c for c in ann.columns if c not in _BATCH_COLUMNS] + ["motivo"]
         reject_headers.update((f.name, reject_cols) for f in group)
-        parts.append(
-            ann.select(*_BATCH_COLUMNS, F.when(~ok, csv_line(reject_cols)).alias("_line"))
-        )
-    counts: dict[str, tuple[int, int]] = {}
-    loaded: dict[str, tuple[int, int]] = {}
-    if parts:
-        batch = reduce(DataFrame.unionAll, parts).persist()
-        try:
-            counts = {
-                r[0]: (r[1], r[2])
-                for r in batch.groupBy("source_file")
-                .agg(F.count_if(ok), F.count_if(~ok))
-                .collect()
-            }
-            headers = {f: reject_headers[f] for f, (_, n) in counts.items() if n}
-            if headers:
-                write_rejects_csv_by_file(batch.where(~ok), cfg.data_rejected, headers)
-            if any(v for v, _ in counts.values()):
-                valid = batch.where(ok).select(
-                    F.col("nombre_norm").alias("nombre"),
-                    F.col("edad_int").alias("edad"),
-                    F.col("ciudad_norm").alias("ciudad"),
-                    "source_file",
-                )
-                res = load_file(spark, cfg, valid, run_ids, started_at)
-                loaded = {g: (n, i) for g, n, i in res.per_group}
-        finally:
-            batch.unpersist()
-
-    rows = [
-        (run_ids[f.name], started_at, f.name,
-         *counts.get(f.name, (0, 0)), *loaded.get(f.name, (0, 0)))
-        for f in files
-    ]
-    local_frame(spark, rows, AUDIT_SCHEMA).write.mode("append").parquet(cfg.audit_path)
-    return rows
+        parts.append(project_annotated(ann, reject_cols))
+    return load_frames(spark, cfg, parts, reject_headers.get, [f.name for f in files], now)
 
 
 def run_batch(
@@ -414,16 +443,8 @@ def run_directory_combined(
 
 
 # ---------------------------------------------------------------------------
-# Schema introspection + migration (S7/S8)
+# Schema migration (S7)
 # ---------------------------------------------------------------------------
-
-def table_has_column(spark: SparkSession, path: str, col: str) -> bool:
-    """PRAGMA table_info parity — reference scr/etl_incremental_audit.py:106-109."""
-    try:
-        return col in spark.read.parquet(path).columns
-    except Exception:
-        return False
-
 
 def migrate_fact_if_needed(spark: SparkSession, fact_path: str) -> bool:
     """Add lineage columns to a legacy fact table, backfilling

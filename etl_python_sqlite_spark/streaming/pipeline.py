@@ -6,24 +6,32 @@ The natural Spark upgrade is a file-arrival-driven Structured Streaming
 job with identical per-batch semantics:
 
     readStream(csv dir) ─► motivo cascade ─► foreachBatch:
-        rejects  → per-file reject CSVs
-        valid    → dim upsert + fact idempotent append + audit rows
+        pipeline.load_frames (the batch's load core):
+            rejects  → per-file reject CSVs
+            valid    → dim upsert + fact idempotent append + audit rows
 
-``foreachBatch`` reuses the SAME library code as the batch path — the
+A micro-batch runs the batch's own load core: ``process_microbatch``
+annotates and projects its rows, and ``pipeline.load_frames`` counts,
+writes rejects, loads and audits them exactly as ``run_batch`` does. The
 idempotent-append contract makes micro-batch replays safe (at-least-once
 delivery + first-writer-wins dedup ⇒ effectively-exactly-once on the
 natural key), which is precisely why the reference's INSERT OR IGNORE
-semantic translates so well to streaming.
+semantic translates so well to streaming. Because the core is shared, a
+micro-batch also matches the batch in these three respects:
+
+* new ``ciudad_id`` values are ordered by (first file, key);
+* ``run_id`` comes from ``pipeline.make_run_id``;
+* ``run_id`` and ``started_at`` come from one clock read.
 
 Also here: a watermarked tumbling-window aggregation over the ``events``
 stream shape (late-data tolerant), the streaming analog of
-``plans.relational.hourly_event_rollup``.
+``plans.relational.hourly_event_rollup``, and the batch_id-versioned
+state maintainers (``_versioned_state_writer``).
 """
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
-from pathlib import Path
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -31,9 +39,9 @@ from pyspark.sql import types as T
 
 from etl_python_sqlite_spark.operators.transform import annotate_rejections
 from etl_python_sqlite_spark.pipeline import (
-    FACT_NATURAL_KEY,
-    FACT_SCHEMA,
     PipelineConfig,
+    load_frames,
+    project_annotated,
 )
 from etl_python_sqlite_spark.sources.csv import scan_csv
 
@@ -41,24 +49,18 @@ from etl_python_sqlite_spark.sources.csv import scan_csv
 #: front, where the batch reader takes each file's header
 RAW_CSV_COLUMNS = ("nombre", "edad", "ciudad")
 
-AUDIT_COUNTS_SCHEMA = T.StructType(
-    [T.StructField("source_file", T.StringType())]
-    + [
-        T.StructField(c, T.LongType())
-        for c in ("valid_count", "rejected_count", "inserted_new", "ignored_duplicates")
-    ]
-)
-
 
 def stream_raw_csv(spark: SparkSession, data_in: str) -> DataFrame:
     """File-source stream over the input directory, all-string with
     ``csv.DictReader`` values like the batch reader (``scan_csv``), with
-    per-file lineage."""
+    per-file lineage. ``input_file_name()`` is URL-encoded, so the name
+    is decoded back to the one on disk (a literal ``+`` kept as ``+``)."""
+    name = F.element_at(F.split(F.input_file_name(), "/"), -1)
     return scan_csv(
         spark.readStream.option("maxFilesPerTrigger", 16),
         RAW_CSV_COLUMNS,
         data_in,
-        F.element_at(F.split(F.input_file_name(), "/"), -1).alias("source_file"),
+        F.url_decode(F.regexp_replace(name, r"\+", "%2B")).alias("source_file"),
     )
 
 
@@ -69,98 +71,19 @@ def process_microbatch(
     batch_id: int,
     now: datetime | None = None,
 ) -> None:
-    """foreachBatch body — same load semantics as pipeline.run_batch but
-    driven by whatever files arrived in this micro-batch, whose columns
-    are ``RAW_CSV_COLUMNS`` by position. Idempotent under replay: a
-    re-delivered file inserts 0 new fact rows."""
-    from etl_python_sqlite_spark.operators.idempotent import (
-        idempotent_append,
-        upsert_dimension,
+    """foreachBatch body: the batch's load core (``pipeline.load_frames``)
+    over whatever files arrived in this micro-batch, whose columns are
+    ``RAW_CSV_COLUMNS`` by position. Idempotent under replay: a
+    re-delivered file inserts 0 new fact rows; an empty micro-batch
+    writes nothing."""
+    reject_cols = [*RAW_CSV_COLUMNS, "motivo"]
+    # extra columns (source_file) pass through the cascade untouched
+    ann = annotate_rejections(
+        batch_df, edad_min=cfg.edad_min, message_style=cfg.message_style
     )
-    from etl_python_sqlite_spark.pipeline import csv_line, write_rejects_csv_by_file
-    from etl_python_sqlite_spark.session import local_frame
-
-    batch_df = batch_df.persist()
-    ann = None
-    try:
-        if batch_df.isEmpty():
-            return
-        ts = (now or datetime.now(timezone.utc)).strftime("%Y%m%dT%H%M%S%fZ")
-        started_at = (now or datetime.now(timezone.utc)).isoformat()
-
-        # extra columns (source_file) pass through the cascade untouched
-        ann = annotate_rejections(
-            batch_df, edad_min=cfg.edad_min, message_style=cfg.message_style
-        ).persist()
-
-        ok = F.col("motivo").isNull()
-        counts = (
-            ann.groupBy("source_file").agg(F.count_if(ok), F.count_if(~ok)).collect()
-        )
-
-        # reject sink: one CSV per source file, single partitioned write
-        reject_cols = ["nombre", "edad", "ciudad", "motivo"]
-        headers = {f: reject_cols for f, _, n in counts if n}
-        if headers:
-            write_rejects_csv_by_file(
-                ann.where(~ok).select("source_file", csv_line(reject_cols).alias("_line")),
-                cfg.data_rejected,
-                headers,
-            )
-
-        valid = ann.filter(ok)
-        dim = upsert_dimension(
-            spark, valid.select(F.col("ciudad_norm").alias("nombre")), cfg.dim_path
-        )
-        resolved = valid.join(
-            F.broadcast(dim), valid.ciudad_norm == dim.nombre
-        ).select(
-            F.col("nombre_norm").alias("nombre"),
-            F.col("edad_int").cast("int").alias("edad"),
-            "ciudad_id",
-            "source_file",
-        )
-        run_id_col = F.concat(
-            F.lit(ts + "_"), F.regexp_replace("source_file", r"[^\p{L}\p{N}]", "_")
-        )
-        batch = resolved.withColumn("processed_at", F.lit(started_at)).withColumn(
-            "run_id", run_id_col
-        )
-        # group_col threads source_file through the anti-join so each
-        # (run, file) audit row carries ITS OWN inserted/ignored counts,
-        # not microbatch-global ones (the per-(run,file) audit contract);
-        # persona_id continues from the fact's max
-        res = idempotent_append(
-            spark,
-            batch,
-            cfg.fact_path,
-            FACT_NATURAL_KEY,
-            target_schema=FACT_SCHEMA,
-            id_col="persona_id",
-            group_col="source_file",
-        )
-
-        loaded = {g: (n, i) for g, n, i in res.per_group}
-        audit = local_frame(
-            spark,
-            [(f, v, r, *loaded.get(f, (0, 0))) for f, v, r in counts],
-            AUDIT_COUNTS_SCHEMA,
-        ).select(
-            run_id_col.alias("run_id"),
-            F.lit(started_at).alias("started_at"),
-            "source_file",
-            "valid_count",
-            "rejected_count",
-            "inserted_new",
-            "ignored_duplicates",
-        )
-        audit.write.mode("append").parquet(cfg.audit_path)
-    finally:
-        # release BOTH per-batch caches — a streaming job runs this body
-        # once per micro-batch, so a leaked cache grows without bound
-        if ann is not None:
-            ann.unpersist()
-        batch_df.unpersist()
+    load_frames(
+        spark, cfg, [project_annotated(ann, reject_cols)], lambda _: reject_cols, [], now
+    )
 
 
 def start_stream(
@@ -547,11 +470,9 @@ def inject_outer_join_heartbeats(
 
 def _vstore_versions(spark: SparkSession, state_path: str):
     """(fs, sorted [(version, hadoop Path)]) of a batch_id-versioned
-    state store — THE shared primitive of every versioned-state
-    maintainer/reader in this module (rollup, k-means, NB; they carried
-    three verbatim copies until code-review r9). Scheme-aware listing
-    via the FileSystem API (never Path.glob — the compact_files
-    lesson); a missing root is ([], not an error) but any OTHER store
+    state store, under ``_versioned_state_writer`` and ``read_state``.
+    Scheme-aware listing via the FileSystem API (never Path.glob — the
+    compact_files lesson); a missing root is ([], not an error) but any OTHER store
     failure PROPAGATES — "no state yet" must stay distinguishable from
     "state read failed" (the r4/r5 hazard class)."""
     jvm = spark._jvm
@@ -585,20 +506,10 @@ def _vstore_prune(spark: SparkSession, state_path: str, retain: int) -> None:
         fs.delete(p, True)
 
 
-def _vstore_read_latest(
-    spark: SparkSession, state_path: str
-) -> DataFrame | None:
-    """Newest version's rows, or None before the first commit; read
-    errors past the existence probe PROPAGATE."""
-    best = _vstore_latest(spark, state_path)
-    if best is None:
-        return None
-    return spark.read.parquet(f"{state_path}/v={best}")
-
-
-def read_rollup_state(spark: SparkSession, state_path: str) -> DataFrame | None:
-    """Current state of a ``maintain_rollup_stream`` materialized view:
-    the highest-version partition. Returns None before the first commit.
+def read_state(spark: SparkSession, state_path: str) -> DataFrame | None:
+    """Current state of a batch_id-versioned maintainer (rollup, k-means,
+    NB, KMV): the highest ``v=`` partition. Returns None before the first
+    commit.
 
     "No state yet" is probed via the FileSystem API, exactly like
     ``_vstore_latest`` inside the maintenance loop — a transient store
@@ -613,6 +524,61 @@ def read_rollup_state(spark: SparkSession, state_path: str) -> DataFrame | None:
     return spark.read.parquet(f"{state_path}/v={best}")
 
 
+def _versioned_state_writer(
+    stream: DataFrame, state_path: str, retain_versions: int, update
+):
+    """The ``foreachBatch`` writer every batch_id-versioned maintainer
+    shares: ``update(batch, prev)`` returns the new state from the
+    micro-batch and the predecessor version's rows (None before the first
+    commit).
+
+    Exactly-once state updates on a non-transactional (parquet) sink:
+    batch N reads the newest version ``< N``, and dynamically overwrites
+    partition ``v=N`` only. A replayed batch recomputes from the same
+    predecessor version (still intact) and rewrites ``v=N`` with the
+    identical deterministic result, so at-least-once foreachBatch
+    delivery yields an exactly-once state — the same batch_id-keyed
+    idempotence pattern as ``run_trending_stream_once``, applied to
+    accumulating state instead of append rows. The micro-batch stays
+    persisted through ``update`` and the write. ``retain_versions`` old
+    versions are kept for replay safety, older ones pruned (the lineage
+    a replay can reach is bounded by the checkpoint's committed offset,
+    which is always ≥ the latest version minus one run).
+    """
+    # replay ALWAYS needs the predecessor version intact: with
+    # retain_versions=1, after batch N prunes only v=N survives, so a
+    # replayed batch N finds no version < N, takes the first-batch path
+    # and silently resets all accumulated state (ADVICE r8)
+    if retain_versions < 2:
+        raise ValueError(
+            "retain_versions must be >= 2: exactly-once replay reads the "
+            f"predecessor version, which {retain_versions} would prune"
+        )
+
+    def _handle(batch: DataFrame, batch_id: int) -> None:
+        if batch.isEmpty():
+            return
+        spark = batch.sparkSession
+        batch = batch.persist()
+        try:
+            prev_v = _vstore_latest(spark, state_path, below=batch_id)
+            # read errors here are REAL failures — let them propagate
+            prev = None if prev_v is None else spark.read.parquet(f"{state_path}/v={prev_v}")
+            (
+                update(batch, prev)
+                .withColumn("v", F.lit(batch_id))
+                .write.mode("overwrite")
+                .option("partitionOverwriteMode", "dynamic")
+                .partitionBy("v")
+                .parquet(state_path)
+            )
+            _vstore_prune(spark, state_path, retain_versions)
+        finally:
+            batch.unpersist()
+
+    return stream.writeStream.foreachBatch(_handle)
+
+
 def maintain_rollup_stream(
     stream: DataFrame,
     keys: list[str],
@@ -625,68 +591,23 @@ def maintain_rollup_stream(
     continuously up to date as micro-batches arrive, without ever
     rescanning history — ``operators/incremental.merge_agg_states``
     applied to the stream. Returns a ready-to-start ``foreachBatch``
-    writer; read the live view with :func:`read_rollup_state`.
-
-    Exactly-once state updates on a non-transactional (parquet) sink:
-    state is **versioned by batch_id** — batch N reads the newest
-    version `< N`, merges its own delta, and dynamically overwrites
-    partition ``v=N`` only. A replayed batch recomputes from the same
-    predecessor versions (still intact) and rewrites ``v=N`` with the
-    identical deterministic result, so at-least-once foreachBatch
-    delivery yields an exactly-once view — the same batch_id-keyed
-    idempotence pattern as ``run_trending_stream_once``, applied to
-    accumulating state instead of append rows.
+    writer (``_versioned_state_writer``: exactly-once on plain parquet);
+    read the live view with :func:`read_state`.
 
     Scale: each version is O(groups) rows (the whole point of mergeable
     state); the delta aggregation is map-side combined on the uniform
-    group key; history fact rows are never touched. ``retain_versions``
-    old versions are kept for replay safety, older ones pruned (the
-    lineage a replay can reach is bounded by the checkpoint's committed
-    offset, which is always ≥ the latest version minus one run).
+    group key; history fact rows are never touched.
     """
-    # replay ALWAYS needs the predecessor version intact: with
-    # retain_versions=1, after batch N prunes only v=N survives, so a
-    # replayed batch N finds no version < N, takes the first-batch path
-    # and silently resets all accumulated state (ADVICE r8)
-    if retain_versions < 2:
-        raise ValueError(
-            "retain_versions must be >= 2: exactly-once replay reads the "
-            f"predecessor version, which {retain_versions} would prune"
-        )
     from etl_python_sqlite_spark.operators.incremental import (
         build_agg_state,
         merge_agg_states,
     )
 
-    # version-store primitives shared with the k-means/NB maintainers:
-    # _vstore_latest distinguishes "no state yet" from "state read
-    # failed" (ADVICE r4), _vstore_prune lists/deletes via the Hadoop
-    # FileSystem API (the compact_files lesson, ADVICE r3)
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
+    def update(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         delta = build_agg_state(batch, keys, value_col)
-        prev_v = _vstore_latest(spark, state_path, below=batch_id)
-        if prev_v is not None:
-            # read errors here are REAL failures — let them propagate
-            prev = spark.read.parquet(f"{state_path}/v={prev_v}")
-            new_state = merge_agg_states(prev, delta)
-        else:
-            new_state = delta
-        (
-            new_state.withColumn("v", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("v")
-            .parquet(state_path)
-        )
-        # prune versions older than the retained window (replay of the
-        # CURRENT run can only need the immediate predecessor; keep a
-        # margin for a previous run's trailing replays)
-        _vstore_prune(spark, state_path, retain_versions)
+        return delta if prev is None else merge_agg_states(prev, delta)
 
-    return stream.writeStream.foreachBatch(_handle)
+    return _versioned_state_writer(stream, state_path, retain_versions, update)
 
 
 def trending_terms(
@@ -891,14 +812,6 @@ def span_contamination_stream_against_corpus(
     return writer
 
 
-def read_kmeans_state(spark: SparkSession, state_path: str) -> DataFrame | None:
-    """Current state of a ``maintain_kmeans_stream`` run: the highest
-    ``v=`` partition, rows (cid, d, sum_q DECIMAL(38,0), n BIGINT).
-    Returns None before the first commit; read errors PROPAGATE (the
-    read_rollup_state contract — "no state" ≠ "state read failed")."""
-    return _vstore_read_latest(spark, state_path)
-
-
 def kmeans_state_centroids(state: DataFrame) -> DataFrame:
     """(cid, d, c) centroid frame from accumulated (sum_q, n) state —
     the same portable floor division as the batch operator (all
@@ -929,13 +842,10 @@ def maintain_kmeans_stream(
     itself (k smallest phash60 ids in the batch — deterministic under
     replay, because a replayed batch has identical content).
 
-    Exactly-once on plain parquet by the ``maintain_rollup_stream``
-    pattern: batch N reads the newest version < N and dynamically
-    overwrites only ``v=N``; a replayed batch recomputes from the intact
-    predecessor and rewrites an identical result. State is O(k·dim)
-    rows per version — constant in stream length, the whole point of
-    the (sum, count) sufficient statistic. Missing-state reads propagate
-    (never treated as "no state yet" — the r4-ADVICE hazard class).
+    Exactly-once on plain parquet through ``_versioned_state_writer``
+    (read the state with :func:`read_state`). State is O(k·dim) rows
+    per version — constant in stream length, the whole point of the
+    (sum, count) sufficient statistic.
 
     Dead-centroid POLICY (differs from the batch twin, deliberately):
     in batch Lloyd an empty cluster receives no update row and drops
@@ -951,74 +861,43 @@ def maintain_kmeans_stream(
     should window the input, not mutate the state rule. Pinned by
     ``tests/test_streaming_kmeans.py::test_starved_centroid_state_persists``.
     """
-    # same replay contract as maintain_rollup_stream: retain_versions=1
-    # would prune the predecessor a replayed batch must read, silently
-    # RESEEDING from batch content and discarding all state (ADVICE r8)
-    if retain_versions < 2:
-        raise ValueError(
-            "retain_versions must be >= 2: exactly-once replay reads the "
-            f"predecessor version, which {retain_versions} would prune"
-        )
     from etl_python_sqlite_spark.operators.clustering import (
         _assign,
         flatten_quantized,
         seed_rank_frame,
     )
 
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        flat = flatten_quantized(batch, vec_col, id_col).persist()
-        try:
-            prev_v = _vstore_latest(spark, state_path, below=batch_id)
-            prev = None
-            if prev_v is not None:
-                # read errors are REAL failures — propagate, retry
-                prev = spark.read.parquet(f"{state_path}/v={prev_v}")
-                cents = kmeans_state_centroids(prev)
-            else:
-                sr = seed_rank_frame(batch, k, id_col)
-                cents = flat.join(F.broadcast(sr), "vid").select(
-                    "cid", "d", F.col("q").alias("c")
-                )
-            a = _assign(flat, cents, k).select("vid", "cid")
-            delta = (
-                flat.join(a, "vid")
-                .groupBy("cid", "d")
-                .agg(
-                    F.sum(F.expr("CAST(q AS DECIMAL(38,0))")).alias(
-                        "sum_q"
-                    ),
-                    F.count("*").alias("n"),
-                )
+    def update(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
+        flat = flatten_quantized(batch, vec_col, id_col)
+        if prev is not None:
+            cents = kmeans_state_centroids(prev)
+        else:
+            sr = seed_rank_frame(batch, k, id_col)
+            cents = flat.join(F.broadcast(sr), "vid").select(
+                "cid", "d", F.col("q").alias("c")
             )
-            if prev is not None:
-                merged = (
-                    prev.select("cid", "d", "sum_q", "n")
-                    .unionByName(delta)
-                    .groupBy("cid", "d")
-                    .agg(
-                        F.sum("sum_q")
-                        .cast("decimal(38,0)")
-                        .alias("sum_q"),
-                        F.sum("n").alias("n"),
-                    )
-                )
-            else:
-                merged = delta
-            (
-                merged.withColumn("v", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("v")
-                .parquet(state_path)
+        a = _assign(flat, cents, k).select("vid", "cid")
+        delta = (
+            flat.join(a, "vid")
+            .groupBy("cid", "d")
+            .agg(
+                F.sum(F.expr("CAST(q AS DECIMAL(38,0))")).alias("sum_q"),
+                F.count("*").alias("n"),
             )
-            _vstore_prune(spark, state_path, retain_versions)
-        finally:
-            flat.unpersist()
+        )
+        if prev is None:
+            return delta
+        return (
+            prev.select("cid", "d", "sum_q", "n")
+            .unionByName(delta)
+            .groupBy("cid", "d")
+            .agg(
+                F.sum("sum_q").cast("decimal(38,0)").alias("sum_q"),
+                F.sum("n").alias("n"),
+            )
+        )
 
-    return stream.writeStream.foreachBatch(_handle)
+    return _versioned_state_writer(stream, state_path, retain_versions, update)
 
 
 def maintain_nb_stream(
@@ -1047,27 +926,16 @@ def maintain_nb_stream(
     construction). A NULL label excludes the row's features from BOTH
     classes (deliberate: unlabeled ≠ negative in a stream, unlike the
     batch trainer whose ``pos`` frame makes everything else negative
-    by construction). Exactly-once on plain parquet by the batch_id-
-    versioned pattern: batch N merges the newest version < N and
-    dynamically overwrites only ``v=N``; replays recompute the same
-    deterministic result from the intact predecessor. Missing-state
-    reads propagate (never treated as "no state yet").
+    by construction). Exactly-once on plain parquet through
+    ``_versioned_state_writer``.
 
-    Derive live classifier weights with :func:`nb_state_weights`.
+    Derive live classifier weights from :func:`read_state` with
+    :func:`nb_state_weights`.
     """
     from etl_python_sqlite_spark.functions.portable import phash60
     from etl_python_sqlite_spark.operators.curation import doc_bigrams
 
-    if retain_versions < 2:
-        raise ValueError(
-            "retain_versions must be >= 2: exactly-once replay reads the "
-            f"predecessor version, which {retain_versions} would prune"
-        )
-
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
+    def update(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         feats = doc_bigrams(batch, text_col, id_col).select(
             F.col(id_col),
             F.pmod(
@@ -1090,39 +958,19 @@ def maintain_nb_stream(
                 .alias("cn"),
             )
         )
-        prev_v = _vstore_latest(spark, state_path, below=batch_id)
-        if prev_v is not None:
-            # read errors here are REAL failures — let them propagate
-            prev = spark.read.parquet(f"{state_path}/v={prev_v}").select(
-                "bucket", "cp", "cn"
+        if prev is None:
+            return delta
+        return (
+            prev.select("bucket", "cp", "cn")
+            .unionByName(delta)
+            .groupBy("bucket")
+            .agg(
+                F.sum("cp").cast("long").alias("cp"),
+                F.sum("cn").cast("long").alias("cn"),
             )
-            new_state = (
-                prev.unionByName(delta)
-                .groupBy("bucket")
-                .agg(
-                    F.sum("cp").cast("long").alias("cp"),
-                    F.sum("cn").cast("long").alias("cn"),
-                )
-            )
-        else:
-            new_state = delta
-        (
-            new_state.withColumn("v", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("v")
-            .parquet(state_path)
         )
-        _vstore_prune(spark, state_path, retain_versions)
 
-    return stream.writeStream.foreachBatch(_handle)
-
-
-def read_nb_state(spark: SparkSession, state_path: str) -> DataFrame | None:
-    """Current (bucket, cp, cn) table of a ``maintain_nb_stream`` run:
-    the highest ``v=`` partition. None before the first commit; read
-    errors PROPAGATE (the read_rollup_state contract)."""
-    return _vstore_read_latest(spark, state_path)
+    return _versioned_state_writer(stream, state_path, retain_versions, update)
 
 
 def nb_state_weights(state: DataFrame, n_buckets: int = 1024) -> DataFrame:
@@ -1192,10 +1040,8 @@ def maintain_kmv_stream(
     ``operators/sketch.kmv_pair_overlap`` runs on it unchanged for live
     cross-group overlap estimates, no rescan of history.
 
-    Exactly-once on plain parquet by the batch_id-versioned pattern:
-    batch N merges the newest version < N and dynamically overwrites
-    only ``v=N``; replay recomputes the same deterministic result from
-    the intact predecessor. Missing-state reads propagate.
+    Exactly-once on plain parquet through ``_versioned_state_writer``;
+    read the sketches with :func:`read_state`.
 
     Scale: the per-batch distinct compresses map-side; the per-group
     re-rank is a window over ≤ k + |batch distinct| hashes per group —
@@ -1204,52 +1050,22 @@ def maintain_kmv_stream(
 
     from etl_python_sqlite_spark.functions.portable import phash60
 
-    if retain_versions < 2:
-        raise ValueError(
-            "retain_versions must be >= 2: exactly-once replay reads the "
-            f"predecessor version, which {retain_versions} would prune"
-        )
-
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
+    def update(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
         delta = batch.select(
             F.col(group_col),
             phash60(F.col(value_col).cast("string")).alias("h"),
         ).distinct()
-        prev_v = _vstore_latest(spark, state_path, below=batch_id)
-        if prev_v is not None:
-            # read errors here are REAL failures — let them propagate
-            prev = spark.read.parquet(f"{state_path}/v={prev_v}").select(
-                group_col, "h"
-            )
-            merged = prev.unionByName(delta).distinct()
-        else:
-            merged = delta
+        if prev is not None:
+            delta = prev.select(group_col, "h").unionByName(delta).distinct()
         w = Window.partitionBy(group_col).orderBy("h")
-        new_state = (
-            merged.withColumn("rn", F.row_number().over(w))
+        return (
+            delta.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= k)
             .select(group_col, "h", "rn")
         )
-        (
-            new_state.withColumn("v", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("v")
-            .parquet(state_path)
-        )
-        _vstore_prune(spark, state_path, retain_versions)
 
-    return stream.writeStream.foreachBatch(_handle)
+    return _versioned_state_writer(stream, state_path, retain_versions, update)
 
-
-def read_kmv_state(spark: SparkSession, state_path: str) -> DataFrame | None:
-    """Current (group, h, rn) sketch table of a ``maintain_kmv_stream``
-    run: the highest ``v=`` partition. None before the first commit;
-    read errors PROPAGATE (the read_rollup_state contract)."""
-    return _vstore_read_latest(spark, state_path)
 
 def image_dedup_stream_against_corpus(
     stream_media: DataFrame,

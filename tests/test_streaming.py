@@ -134,6 +134,46 @@ def test_stream_empty_fields_match_batch(spark, tmp_path):
     )
 
 
+def test_stream_and_batch_write_the_same_warehouse(spark, tmp_path):
+    """One micro-batch of two files writes what ``run_batch`` writes over
+    the same directory: the same dimension ids (ordered by first file,
+    then key), fact rows, audit rows with their run_ids, and reject files
+    under the on-disk names (``a b.csv``, not ``a%20b.csv``)."""
+    from etl_python_sqlite_spark.pipeline import run_batch
+
+    files = {
+        "a b.csv": "nombre,edad,ciudad\nana,30,zarate\nbad,x,lima\n",
+        "x+y.csv": "nombre,edad,ciudad\nluis,41,avellaneda\nana,30,Zarate\n",
+    }
+    out = {}
+    for mode in ("batch", "stream"):
+        cfg = PipelineConfig(
+            data_in=str(tmp_path / mode / "in"),
+            data_rejected=str(tmp_path / mode / "rej"),
+            warehouse=str(tmp_path / mode / "wh"),
+        )
+        Path(cfg.data_in).mkdir(parents=True)
+        for name, text in files.items():
+            (Path(cfg.data_in) / name).write_text(text, encoding="utf-8")
+        if mode == "batch":
+            run_batch(spark, cfg, now=NOW)
+        else:
+            start_stream(spark, cfg, str(tmp_path / "ckpt"), now=NOW).awaitTermination(120)
+        out[mode] = {
+            table: sorted(tuple(r) for r in spark.read.parquet(path).collect())
+            for table, path in (
+                ("dim", cfg.dim_path), ("fact", cfg.fact_path), ("audit", cfg.audit_path)
+            )
+        }
+        out[mode]["rejects"] = {
+            p.name: p.read_bytes() for p in sorted(Path(cfg.data_rejected).iterdir())
+        }
+    assert out["stream"] == out["batch"]
+    assert out["batch"]["dim"] == [(1, "Zarate"), (2, "Avellaneda")]
+    assert list(out["batch"]["rejects"]) == ["rejected_a b.csv"]
+    assert [r[2] for r in out["batch"]["audit"]] == ["a b.csv", "x+y.csv"]
+
+
 def _events_rows():
     base = datetime(2024, 1, 1, 0, 0, 0)
     rows = []
@@ -536,7 +576,7 @@ def test_streaming_rollup_maintenance(spark, tmp_path):
     from etl_python_sqlite_spark.operators.incremental import build_agg_state
     from etl_python_sqlite_spark.streaming.pipeline import (
         maintain_rollup_stream,
-        read_rollup_state,
+        read_state,
     )
 
     schema = "k string, v long"
@@ -565,7 +605,7 @@ def test_streaming_rollup_maintenance(spark, tmp_path):
     def snap():
         return {
             r["k"]: (r["n"], r["sum"], r["min"], r["max"])
-            for r in read_rollup_state(spark, state).collect()
+            for r in read_state(spark, state).collect()
         }
 
     def expected(rows):
@@ -683,7 +723,7 @@ def test_streaming_rollup_read_failure_propagates(spark, tmp_path):
 
     from etl_python_sqlite_spark.streaming.pipeline import (
         maintain_rollup_stream,
-        read_rollup_state,
+        read_state,
     )
 
     schema = "k string, v long"
@@ -708,7 +748,7 @@ def test_streaming_rollup_read_failure_propagates(spark, tmp_path):
         q.awaitTermination(120)
 
     run("rf_ck1")
-    assert read_rollup_state(spark, state).count() == 1
+    assert read_state(spark, state).count() == 1
 
     # corrupt every parquet footer in the newest version dir
     vdirs = sorted(
@@ -743,17 +783,17 @@ def test_read_rollup_state_corrupt_raises_not_empty(spark, tmp_path):
 
     import pytest
 
-    from etl_python_sqlite_spark.streaming.pipeline import read_rollup_state
+    from etl_python_sqlite_spark.streaming.pipeline import read_state
 
     state = str(tmp_path / "rr_state")
     # 1) no state yet → None (not an error)
-    assert read_rollup_state(spark, state) is None
+    assert read_state(spark, state) is None
 
     # 2) a committed version reads back
     spark.createDataFrame([("a", 1, 5, 5, 5)], "k string, cnt long, s long, mn long, mx long").coalesce(
         1
     ).write.parquet(state + "/v=3")
-    assert read_rollup_state(spark, state).count() == 1
+    assert read_state(spark, state).count() == 1
 
     # 3) corrupt the newest version's footers → the reader must raise
     vdir = state + "/v=3"
@@ -763,7 +803,7 @@ def test_read_rollup_state_corrupt_raises_not_empty(spark, tmp_path):
                 fh.seek(0)
                 fh.write(b"CORRUPT!" * 16)
     with pytest.raises(Exception):
-        read_rollup_state(spark, state).count()
+        read_state(spark, state).count()
 
 
 def test_span_contamination_stream_against_corpus(spark, tmp_path):
@@ -1181,7 +1221,7 @@ def test_kmv_stream_maintenance_matches_batch(spark, tmp_path):
     from etl_python_sqlite_spark.operators.sketch import kmv_sketches
     from etl_python_sqlite_spark.streaming.pipeline import (
         maintain_kmv_stream,
-        read_kmv_state,
+        read_state,
     )
 
     src = str(tmp_path / "kmv_src")
@@ -1217,7 +1257,7 @@ def test_kmv_stream_maintenance_matches_batch(spark, tmp_path):
     run_once("kmv_ckpt")
     streamed = {
         (r["source"], r["h"], r["rn"])
-        for r in read_kmv_state(spark, state).collect()
+        for r in read_state(spark, state).collect()
     }
     union = spark.createDataFrame(rows1 + rows2, schema)
     batch = {
@@ -1232,6 +1272,6 @@ def test_kmv_stream_maintenance_matches_batch(spark, tmp_path):
     run_once("kmv_ckpt2")  # fresh-checkpoint replay: same final state
     again = {
         (r["source"], r["h"], r["rn"])
-        for r in read_kmv_state(spark, state).collect()
+        for r in read_state(spark, state).collect()
     }
     assert again == batch

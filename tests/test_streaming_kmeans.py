@@ -105,11 +105,11 @@ def _run(spark, tmp_path, src, ckpt, state):
 
 
 def _snap(spark, state):
-    from etl_python_sqlite_spark.streaming.pipeline import read_kmeans_state
+    from etl_python_sqlite_spark.streaming.pipeline import read_state
 
     return {
         (r["cid"], r["d"]): (int(r["sum_q"]), r["n"])
-        for r in read_kmeans_state(spark, state).collect()
+        for r in read_state(spark, state).collect()
     }
 
 
@@ -154,7 +154,7 @@ def test_streaming_kmeans_centroids_follow_state(spark, tmp_path):
     )
     from etl_python_sqlite_spark.streaming.pipeline import (
         kmeans_state_centroids,
-        read_kmeans_state,
+        read_state,
     )
 
     batches = _batches()
@@ -166,7 +166,7 @@ def test_streaming_kmeans_centroids_follow_state(spark, tmp_path):
     state = str(tmp_path / "kc_state")
     _run(spark, tmp_path, src, "kc_ck", state)
 
-    st = read_kmeans_state(spark, state)
+    st = read_state(spark, state)
     cents = kmeans_state_centroids(st)
     probe = spark.createDataFrame(batches[2], SCHEMA)
     assigned = _assign(flatten_quantized(probe), cents)
@@ -178,12 +178,15 @@ def test_streaming_kmeans_centroids_follow_state(spark, tmp_path):
 def test_retain_versions_guard(spark, tmp_path):
     """retain_versions=1 would prune the predecessor version a replayed
     batch must read — the maintainer then silently RESEEDS from batch
-    content, discarding all accumulated state. Both streaming
-    maintainers reject it up front (ADVICE r8)."""
+    content, discarding all accumulated state. The one guard in
+    ``_versioned_state_writer`` rejects it up front for all four
+    streaming maintainers (ADVICE r8)."""
     import pytest
 
     from etl_python_sqlite_spark.streaming.pipeline import (
         maintain_kmeans_stream,
+        maintain_kmv_stream,
+        maintain_nb_stream,
         maintain_rollup_stream,
     )
 
@@ -200,6 +203,10 @@ def test_retain_versions_guard(spark, tmp_path):
         maintain_rollup_stream(
             s, ["vec_id"], "vec_id", str(tmp_path / "st2"), retain_versions=0
         )
+    with pytest.raises(ValueError, match="retain_versions"):
+        maintain_nb_stream(s, str(tmp_path / "st4"), retain_versions=1)
+    with pytest.raises(ValueError, match="retain_versions"):
+        maintain_kmv_stream(s, str(tmp_path / "st5"), retain_versions=1)
     # the default (3) still constructs a writer without starting it
     assert maintain_kmeans_stream(s, str(tmp_path / "st3")) is not None
 

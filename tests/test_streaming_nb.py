@@ -74,11 +74,11 @@ def _run(spark, tmp_path, src, ckpt, state):
 
 
 def _snap(spark, state):
-    from etl_python_sqlite_spark.streaming.pipeline import read_nb_state
+    from etl_python_sqlite_spark.streaming.pipeline import read_state
 
     return {
         r["bucket"]: (int(r["cp"]), int(r["cn"]))
-        for r in read_nb_state(spark, state).collect()
+        for r in read_state(spark, state).collect()
     }
 
 
@@ -102,7 +102,7 @@ def test_streamed_counts_equal_batch_union_and_replay(spark, tmp_path):
 def test_state_weights_classify_like_the_batch_formula(spark, tmp_path):
     from etl_python_sqlite_spark.streaming.pipeline import (
         nb_state_weights,
-        read_nb_state,
+        read_state,
     )
 
     batches = _batches()
@@ -128,7 +128,7 @@ def test_state_weights_classify_like_the_batch_formula(spark, tmp_path):
     w = {
         r["bucket"]: int(r["w"])
         for r in nb_state_weights(
-            read_nb_state(spark, state), n_buckets=B
+            read_state(spark, state), n_buckets=B
         ).collect()
     }
     assert w == expect
