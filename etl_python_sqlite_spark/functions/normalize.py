@@ -18,13 +18,19 @@ Semantics worth being exact about:
   with a strict integer regex after trimming.
 
 Contract boundary (measured, not assumed): parity holds for every
-character ASSIGNED in both engines' Unicode tables — a 4000-string dense
-random-BMP sweep finds zero title/capitalize mismatches outside
-codepoints that are unassigned (category Cn) in CPython 3.11's Unicode
-14 but carry case mappings in the JVM's newer tables (e.g. U+A7DA).
-Such version-skew codepoints cannot appear in any text that was valid
-when written; no expression-level fix exists short of per-char overlay
-tables tracking both engines' Unicode versions.
+character assigned in CPython 3.11's Unicode 14 (every assigned code
+point ``c``, as ``c`` and as ``'a' + c``; the slow-tier sweep in
+tests/test_normalize_fuzz.py). The JVM's case mappings (ICU 77) are
+newer in two ways:
+
+* ``ƛ`` (U+019B) and ``ɤ`` (U+0264) are lowercase letters with no upper
+  or titlecase in Unicode 14, but ICU maps them to U+A7DC and U+A7CB,
+  which Unicode 14 leaves unassigned. ``_UNICODE_14_CASE`` maps those
+  two results back.
+* Code points unassigned (category Cn) in Unicode 14 but assigned in the
+  JVM's tables (e.g. U+A7DA) case-map differently by construction. They
+  cannot appear in any text that was valid when written, so they stay
+  outside the contract.
 """
 
 from __future__ import annotations
@@ -34,6 +40,10 @@ from pyspark.sql import functions as F
 
 # Maximum string length Spark's substring accepts; used for "rest of string".
 _MAX_LEN = 2147483647
+
+#: (ICU upper/titlecase, Unicode 14 identity) for the two letters Unicode
+#: 14 gives no uppercase but ICU maps to then-unassigned code points
+_UNICODE_14_CASE = ("\ua7dc\ua7cb", "\u019b\u0264")
 
 #: Strict Python-``int()`` literal AFTER decimal-digit transliteration:
 #: optional ASCII sign, digits, single ``_`` separators strictly between
@@ -115,9 +125,12 @@ def py_capitalize(col: Column | str) -> Column:
     """
     t = F.lower(py_strip(col))
     first = F.substring(t, 1, 1)
-    return F.concat(
-        F.coalesce(_cap_exc_lookup(first), F.upper(first)),
-        F.substring(t, 2, _MAX_LEN),
+    return F.translate(
+        F.concat(
+            F.coalesce(_cap_exc_lookup(first), F.upper(first)),
+            F.substring(t, 2, _MAX_LEN),
+        ),
+        *_UNICODE_14_CASE,
     )
 
 
@@ -168,13 +181,16 @@ def py_title(col: Column | str) -> Column:
        token;
     2. ``initcap`` — titlecases each token's first letter (matches
        Python's titlecase on all exceptional chars, verified empirically);
-    3. strip the marker+space pairs back out.
+    3. strip the marker+space pairs back out;
+    4. map ICU's ƛ/ɤ titlecases back to Unicode 14's (``_UNICODE_14_CASE``).
     """
     t = F.lower(py_strip(col))
     marked = F.regexp_replace(
         t, "([^\\p{Lu}\\p{Ll}\\p{Lt}" + _EXTRA_CASED + "])", "$1" + _TITLE_MARK
     )
-    return F.regexp_replace(F.initcap(marked), _TITLE_MARK, "")
+    return F.translate(
+        F.regexp_replace(F.initcap(marked), _TITLE_MARK, ""), *_UNICODE_14_CASE
+    )
 
 
 def strict_int(col: Column | str, target: str = "int") -> Column:

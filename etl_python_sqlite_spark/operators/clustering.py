@@ -80,7 +80,7 @@ def flatten_quantized(
     embs: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
 ) -> DataFrame:
     """(vid, d, q) rows — the quantized flat form every k-means path
-    (batch and streaming) computes distances on."""
+    computes distances on."""
     return embs.select(
         F.col(id_col).cast("long").alias("vid"),
         F.posexplode(F.expr(f"CAST({vec_col} AS ARRAY<DOUBLE>)")).alias(

@@ -665,9 +665,8 @@ def nb_score_with_weights(
 ) -> DataFrame:
     """Score documents against an ALREADY-TRAINED weight table
     ``(bucket, w)`` — the serve half of the train-once/score-anywhere
-    split: batch training (:func:`nb_quality_classifier` internals),
-    streaming training (``streaming.pipeline.nb_state_weights``) and
-    this scorer all share one weight contract. Unseen buckets score
+    split: batch training (:func:`nb_quality_classifier` internals) and
+    this scorer share one weight contract. Unseen buckets score
     nothing (the inner join over observed buckets — identical to the
     trainer's own scoring pass). Same output shape/decision rule as
     the trainer: ``(id, n_feat, score_micro, pred_pos)``; docs with no

@@ -665,10 +665,7 @@ def portable_band_keys(
     document: per-shingle 60-bit md5 hash → Carter-Wegman salted minima
     (WIDE aggregation, see the pipeline docstring below) → per-band
     comma-joined decimal key. Exactly the band index
-    :func:`minhash_near_dups_portable` self-joins; exposed separately so
-    a precomputed CORPUS index can serve stream-vs-corpus candidate
-    generation (streaming/pipeline.near_dedup_stream_against_corpus)
-    without recomputing corpus signatures per micro-batch."""
+    :func:`minhash_near_dups_portable` self-joins."""
     from etl_python_sqlite_spark.functions.portable import (
         phash60,
         universal_hash,
@@ -1530,8 +1527,6 @@ def passage_instances(
 ) -> DataFrame:
     """(id, pos, chunk) — every consecutive ``window_words``-word
     passage of every document (wordless documents contribute no rows).
-    The shared explode of the batch dedup and its streaming ingest
-    sibling (streaming/pipeline.passage_dedup_stream_against_corpus).
     The passage array is built with slice/array_join HOFs — interpreted,
     but per PASSAGE (1/window_words of the per-word rate that made
     exploded_shingles restructure). Measured (r11 interleaved A/B at

@@ -164,8 +164,7 @@ def connected_components(
     ``round_stats``, when a list is passed, receives one
     ``(round_index, edge_count_after_round)`` tuple per completed
     large-star/small-star round — observability for the O(log n)
-    convergence claim (scale_probe.py records measured round counts);
-    no cost when None.
+    convergence claim; no cost when None.
     """
     if n_edges is not None and n_edges <= local_edge_limit:
         # attested-small graph: one plan, zero gate actions — the

@@ -169,7 +169,7 @@ def band_explode(
 ) -> DataFrame:
     """(id, [hash], band, band_key) — the 60-bit Hamming-band explode
     shared by every banded pipeline (image/audio pair gen, the video
-    frame matcher, the streaming ingest-dedup engines): ``n_bands``
+    frame matcher): ``n_bands``
     disjoint ``DHASH_BITS/n_bands``-bit keys per hash, pure column
     math. ONE definition so a change to the banding scheme cannot
     drift between call sites (code-review r11)."""

@@ -2,10 +2,8 @@
 
 Implements the baseline sequential DCT process of ITU-T T.81 (the public
 JPEG spec): 8-bit samples, Huffman entropy coding, SOF0 frames. This
-closes the repo's long-standing "JPEG needs PIL" env-gate the same way
-``sources/sqlite_ds.py`` closed the JDBC-jar gap and ``sources/avro_py.py``
-closed the spark-avro gap — with a real public-format implementation, not
-a stub (reference scope: scr/etl_batch.py has no media handling at all;
+closes the repo's long-standing "JPEG needs PIL" env-gate with a real
+public-format implementation, not a stub (reference scope: scr/etl_batch.py has no media handling at all;
 multimodal columns are this repo's EXT surface, see SURVEY.md §2).
 
 Encoder (``encode_jpeg``):

@@ -123,18 +123,17 @@ def write_webdataset_shards(
     bounds per input partition, so a DIFFERENT upstream layout
     (changed file splits / parallelism) can move boundary keys between
     adjacent shards; exact layout-independence would need
-    rank-computed cuts (the operators/selection.py machinery).
+    rank-computed cuts.
 
-    Two-phase commit on a non-transactional filesystem (the
-    ``avro_py.write_avro_dataset`` pattern): each task streams its tar
-    to a temp name carrying THIS JOB's id and the DRIVER renames the
-    winning attempts into place — a lost speculative attempt leaves
-    only a temp file, which the commit sweep deletes. The sweep is
-    scoped to this job's id (avro_py's rule): a CONCURRENT writer's
+    Two-phase commit on a non-transactional filesystem: each task
+    streams its tar to a temp name carrying THIS JOB's id and the
+    DRIVER renames the winning attempts into place — a lost speculative
+    attempt leaves only a temp file, which the commit sweep deletes.
+    The sweep is scoped to this job's id: a CONCURRENT writer's
     in-progress temp files are never touched. Per-row work is plain
     streaming IO; nothing is ever collected.
 
-    FILESYSTEM CONTRACT (same as ``avro_py``): tasks open ``path`` with
+    FILESYSTEM CONTRACT: tasks open ``path`` with
     plain ``tarfile`` — every executor AND the driver must see the same
     directory at the same POSIX path (local mode, NFS/Lustre mounts, a
     FUSE-mounted object store). On a deployment without a shared mount

@@ -268,9 +268,8 @@ def kmv_sketches(
     Scale shape: the distinct pass compresses to |distinct| rows with
     map-side combine; the per-group top-k is a window over DISTINCT
     hashes — the repo's documented naive selection form, correct until
-    one group's distinct count outgrows a task (operators/selection.py
-    is the measured upgrade path, same adjudication as the percentile
-    queries)."""
+    one group's distinct count outgrows a task (same adjudication as
+    the percentile queries)."""
     from pyspark.sql import Window
 
     from etl_python_sqlite_spark.functions.portable import phash60

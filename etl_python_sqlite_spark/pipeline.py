@@ -33,8 +33,12 @@ dimension keys, audit rows) enter Spark as Arrow ``LocalRelation``s
 (``session.local_frame``), which start no Python worker. ``source_file``
 rides along on every row, so the reference's audit contract still holds:
 one row per (run, file) with its own run_id (scr/etl_batch.py:132,156-163),
-and new ``persona_id`` and ``ciudad_id`` values come out exactly as the
-reference's sorted per-file loop assigns them.
+and each file's counts and loaded rows match the reference's sorted
+per-file loop. Surrogate ids differ by design: new ``persona_id`` and
+``ciudad_id`` values are dense and ordered by (file, natural key), where
+the reference numbers rows in file order and its AUTOINCREMENT spends an
+id on every ignored insert (``tests/test_reference_parity.py`` replays the
+reference in ``sqlite3``).
 
 The work splits into an extract and a load core. The batch's extract
 (``_process_batch``) lists the files, reads their headers and projects
@@ -322,9 +326,9 @@ def load_file(
     batch = resolved.withColumn("processed_at", F.lit(processed_at)).withColumn(
         "run_id", run_id[F.col("source_file")]
     )
-    # persona_id continues from max existing + 1 (AUTOINCREMENT parity),
-    # read by the append's accounting action; ids go to new rows only,
-    # after the anti-join, so IGNOREd duplicates consume none
+    # persona_id continues from max existing + 1, read by the append's
+    # accounting action; ids go to new rows only, after the anti-join, so
+    # IGNOREd duplicates consume none (the reference's AUTOINCREMENT does)
     return _append_fact(spark, cfg, batch, group_col="source_file")
 
 
@@ -394,7 +398,10 @@ def load_frames(
         (run_id, started_at, f, *counts.get(f, (0, 0)), *loaded.get(f, (0, 0)))
         for f, run_id in run_ids.items()
     ]
-    local_frame(spark, rows, AUDIT_SCHEMA).write.mode("append").parquet(cfg.audit_path)
+    # one audit file per batch, like the dimension write
+    local_frame(spark, rows, AUDIT_SCHEMA).coalesce(1).write.mode("append").parquet(
+        cfg.audit_path
+    )
     return rows
 
 

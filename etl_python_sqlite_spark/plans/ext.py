@@ -4009,10 +4009,9 @@ def ext_ccnet_quality_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (counts + BIGINT checksums); no float mean crosses engines.
 
     Scale note: row_number over (lang) is one sort per language — fine
-    while a language fits a task's spill budget; the histogram
-    rank-select of operators/selection.py is the documented upgrade
-    path (same statistic: mean_p is already quantized), per the
-    measured "naive window wins at sf0.1" A/B. The per-doc score frame
+    while a language fits a task's spill budget; a two-level histogram
+    rank-select is the upgrade path (same statistic: mean_p is already
+    quantized), per the measured "naive window wins at sf0.1" A/B. The per-doc score frame
     is the memoized ``_fivegram_score_stage`` shared with
     ext_fivegram_lm_score (one order-5 explode for both)."""
     docs = _docs(spark, sf_dir)

@@ -24,22 +24,6 @@ from pyspark.sql.pandas.types import to_arrow_schema
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-#: env var naming a sqlite-jdbc driver jar (e.g. xerial
-#: sqlite-jdbc-*.jar). When set AND the file exists, the session builder
-#: puts it on the driver/executor classpath so sources/sqlite.py's JDBC
-#: path activates (distributed partitioned reads of the reference's own
-#: storage engine). Absent in this offline environment — the probe is
-#: how a user with the jar switches the bridge on without code changes.
-SQLITE_JDBC_JAR_ENV = "SPARK_GRAFT_SQLITE_JDBC_JAR"
-
-
-def _sqlite_jdbc_jar() -> str | None:
-    jar = os.environ.get(SQLITE_JDBC_JAR_ENV)
-    if jar and os.path.isfile(jar):
-        return jar
-    return None
-
-
 def get_spark(
     app_name: str = "etl_python_sqlite_spark",
     master: str | None = None,
@@ -54,14 +38,6 @@ def get_spark(
     active = SparkSession.getActiveSession()
     if active is not None:
         return active
-
-    # make google.protobuf importable (shim when absent) BEFORE the JVM
-    # launches: the PYTHONPATH entry must be in the gateway's environment
-    # for python workers to inherit it — transformWithStateInPandas's
-    # state-server clients import it lazily worker-side (protoshim.py)
-    from etl_python_sqlite_spark.protoshim import ensure_protobuf
-
-    ensure_protobuf()
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
@@ -80,9 +56,6 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    jar = _sqlite_jdbc_jar()
-    if jar:
-        builder = builder.config("spark.jars", jar)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -1,4 +1,6 @@
-"""Source connectors: parquet star schema, all-string CSV, SQLite bridge."""
+"""Source connectors: parquet star schema, all-string CSV, WebDataset
+tar shards. There is no SQLite reader: the parquet warehouse replaces
+the reference's SQLite file."""
 
 from etl_python_sqlite_spark.sources.parquet import load_table
 

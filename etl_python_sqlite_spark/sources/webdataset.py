@@ -15,7 +15,7 @@ members sequentially; nothing collects, nothing decodes. The sample
 grouping is within-member-order (the spec's contiguity rule), so no
 shuffle exists anywhere in the read.
 
-FILESYSTEM CONTRACT (same as the writer and ``avro_py``): executors
+FILESYSTEM CONTRACT (same as the writer): executors
 open shard paths with plain ``tarfile`` — every executor must see the
 same directory at the same POSIX path (local mode, NFS/Lustre, a
 FUSE-mounted object store). On raw HDFS/S3 URIs this reader does not

@@ -1,1 +1,1 @@
-"""Structured Streaming mirrors of the batch pipeline."""
+"""Structured Streaming mirror of the batch ETL pipeline."""

@@ -23,10 +23,9 @@ micro-batch also matches the batch in these three respects:
 * ``run_id`` comes from ``pipeline.make_run_id``;
 * ``run_id`` and ``started_at`` come from one clock read.
 
-Also here: a watermarked tumbling-window aggregation over the ``events``
-stream shape (late-data tolerant), the streaming analog of
-``plans.relational.hourly_event_rollup``, and the batch_id-versioned
-state maintainers (``_versioned_state_writer``).
+This mirror is the package's only stream. No entry point starts it
+(``tests/test_reachability.py`` names it as the one module no entry point
+imports); ``tests/test_streaming.py`` runs it.
 """
 
 from __future__ import annotations
@@ -35,7 +34,6 @@ from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from etl_python_sqlite_spark.operators.transform import annotate_rejections
 from etl_python_sqlite_spark.pipeline import (
@@ -106,1385 +104,3 @@ def start_stream(
         .trigger(availableNow=True)
         .start()
     )
-
-
-# ---------------------------------------------------------------------------
-# watermarked windowed aggregation (streaming analog of hourly_event_rollup)
-# ---------------------------------------------------------------------------
-
-EVENTS_STREAM_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType(), True),
-        T.StructField("ts", T.TimestampType(), True),
-        T.StructField("user_id", T.LongType(), True),
-        T.StructField("event_type", T.StringType(), True),
-        T.StructField("value", T.DoubleType(), True),
-    ]
-)
-
-
-def windowed_event_counts(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
-    """1-hour tumbling windows per event_type with late-data tolerance.
-
-    State is bounded by the watermark: windows older than max(event time)
-    − watermark are finalized and evicted. Works on both a streaming and a
-    batch DataFrame (same plan — Spark's unified semantics).
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def run_windowed_stream_once(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "2 hours",
-) -> None:
-    """Drive the watermarked aggregation over a parquet-file stream to a
-    parquet sink (append mode: only watermark-finalized windows emit)."""
-    # one file per micro-batch: append-mode windows only emit in a batch
-    # AFTER the watermark passes them, so multi-batch consumption (plus the
-    # trailing no-data batch) is what flushes finalized windows
-    events = (
-        spark.readStream.schema(EVENTS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    q = (
-        windowed_event_counts(events, watermark=watermark)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start(sink_dir)
-    )
-    q.awaitTermination()
-
-
-def dedup_stream_against_corpus(
-    stream_docs: DataFrame,
-    corpus: DataFrame,
-    text_col: str = "text",
-    watermark: tuple[str, str] | None = None,
-) -> DataFrame:
-    """Streaming ingest dedup — the continuous version of
-    ``plans.ext.ext_incremental_dedup``: documents arriving on a stream
-    are dropped when their exact content already exists in the static
-    corpus, and re-deliveries WITHIN the stream are collapsed to the
-    first arrival across micro-batches.
-
-    Scale shape (the same two-tier design as the batch op):
-
-    * the corpus collapses to DISTINCT 8-byte xxhash64 content keys —
-      ~1/1000th the corpus bytes — broadcast once and anti-joined
-      map-side, so the stream never shuffles against the corpus;
-    * within-stream dedup keys on the same 8 bytes.
-      ``dropDuplicatesWithinWatermark`` bounds the dedup state when the
-      stream has an event-time column (pass ``watermark=(ts_col,
-      delay)``); without one, state grows with distinct content — the
-      documented cost of exactly-first-delivery over an unbounded
-      stream.
-
-    Honest divergence from the batch op: the batch path exact-verifies
-    candidates against corpus TEXT so a hash collision can never
-    mis-drop; a streaming anti-join cannot re-aggregate per row, so this
-    path trusts the 64-bit key — a false drop needs an xxhash64
-    collision with corpus content (~2⁻⁶⁴·|corpus| per doc, ~10⁻⁹ even
-    at 10¹⁰ corpus docs). Nightly batch reconciliation (the incremental
-    dedup op) remains the backstop, mirroring production lakehouse
-    ingest designs.
-    """
-    corpus_keys = corpus.select(
-        F.xxhash64(F.col(text_col)).alias("_h")
-    ).distinct()
-    keyed = stream_docs.withColumn("_h", F.xxhash64(F.col(text_col)))
-    fresh = keyed.join(F.broadcast(corpus_keys), "_h", "left_anti")
-    if watermark is not None:
-        ts_col, delay = watermark
-        fresh = fresh.withWatermark(ts_col, delay)
-        return fresh.dropDuplicatesWithinWatermark(["_h"]).drop("_h")
-    return fresh.dropDuplicates(["_h"]).drop("_h")
-
-
-def near_dedup_stream_against_corpus(
-    stream_docs: DataFrame,
-    corpus: DataFrame,
-    out_path: str,
-    threshold_micro: int = 300_000,
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """NEAR-duplicate streaming ingest dedup — the fuzzy sibling of
-    :func:`dedup_stream_against_corpus`: documents arriving on the
-    stream are dropped when a MinHash-LSH candidate match against the
-    static corpus VERIFIES at exact-Jaccard ``threshold_micro``
-    (micro-units, the portable integer form). Returns a ready-to-start
-    ``foreachBatch`` writer; survivors land in ``out_path`` parquet via
-    the idempotent (first-writer-wins) append, so micro-batch REPLAY
-    inserts zero duplicate rows — the reference's INSERT OR IGNORE
-    semantics carried into the stream.
-
-    Scale shape:
-
-    * the corpus LSH band index (operators/dedup.portable_band_keys) is
-      computed ONCE at stream build and persisted — per micro-batch the
-      stream side only hashes ITS OWN documents and equi-joins the
-      (band, band_key) index: candidate generation never rescans the
-      corpus;
-    * exact-Jaccard verification joins shingle SETS for candidate ids
-      only (both sides semi-join-filtered first), so a false LSH
-      collision can never drop a non-duplicate — same guarantee as the
-      batch pipeline;
-    * the verify pulls corpus text for candidate ids through a join on
-      the (uniform) id key — bounded by the candidate count, not corpus
-      or batch size.
-
-    The corpus index cache lives for the lifetime of the returned query
-    (call ``.stop()`` then ``index.unpersist()`` via the returned
-    handle's ``_corpus_index`` if embedding in a long-lived session).
-    """
-    from etl_python_sqlite_spark.functions.text import word_shingles
-    from etl_python_sqlite_spark.operators.cache import _release_frame
-    from etl_python_sqlite_spark.operators.dedup import portable_band_keys
-    from etl_python_sqlite_spark.operators.idempotent import idempotent_append
-
-    corpus_index = portable_band_keys(
-        corpus, num_hashes, bands, k, text_col, id_col
-    ).select(
-        F.col(id_col).alias("_corpus_id"), "band", "band_key"
-    ).persist()
-    corpus_index.count()  # eager: one signature pass for ALL batches
-
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if batch.isEmpty():
-            return
-        batch = batch.persist()
-        cands = None
-        try:
-            bb = portable_band_keys(
-                batch, num_hashes, bands, k, text_col, id_col
-            )
-            cands = (
-                bb.join(corpus_index, ["band", "band_key"])
-                .select(F.col(id_col).alias("_batch_id"), "_corpus_id")
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            bsh = (
-                batch.join(
-                    cands.select(F.col("_batch_id").alias(id_col)).distinct(),
-                    id_col,
-                    "left_semi",
-                )
-                .select(
-                    F.col(id_col).alias("_batch_id"),
-                    word_shingles(F.col(text_col), k).alias("_sh_b"),
-                )
-            )
-            csh = (
-                corpus.join(
-                    cands.select(F.col("_corpus_id").alias(id_col)).distinct(),
-                    id_col,
-                    "left_semi",
-                )
-                .select(
-                    F.col(id_col).alias("_corpus_id"),
-                    word_shingles(F.col(text_col), k).alias("_sh_c"),
-                )
-            )
-            dup_ids = (
-                cands.join(bsh, "_batch_id")
-                .join(csh, "_corpus_id")
-                .select(
-                    "_batch_id",
-                    F.size(F.array_intersect("_sh_b", "_sh_c"))
-                    .cast("long")
-                    .alias("_i"),
-                    F.size(F.array_union("_sh_b", "_sh_c"))
-                    .cast("long")
-                    .alias("_u"),
-                )
-                .filter(
-                    F.expr(f"(1000000 * _i) div _u") >= threshold_micro
-                )
-                .select(F.col("_batch_id").alias(id_col))
-                .distinct()
-            )
-            survivors = batch.join(dup_ids, id_col, "left_anti")
-            idempotent_append(spark, survivors, out_path, keys=[id_col])
-        finally:
-            batch.unpersist()
-            if cands is not None:
-                # deterministic checkpoint-block release per micro-batch
-                # (never leave a bare localCheckpoint to the async
-                # ContextCleaner in a long-lived stream — ADVICE r4)
-                _release_frame(cands)
-
-    writer = stream_docs.writeStream.foreachBatch(_handle)
-    writer._corpus_index = corpus_index  # release handle for embedders
-    return writer
-
-
-def attribute_purchases_to_clicks(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    horizon: str = "1 hour",
-    watermark: str = "2 hours",
-    how: str = "inner",
-) -> DataFrame:
-    """Stream-stream event-time interval join: attribute each purchase
-    to every click by the same user within the preceding ``horizon`` —
-    the canonical ad-attribution / funnel-stitching shape, and the one
-    Structured Streaming join mode the rest of this module didn't yet
-    exercise (stream-static joins: process_microbatch; watermarked aggs:
-    windowed_event_counts; arbitrary state: stateful.track_sessions).
-
-    State-bound reasoning (what makes this safe on an unbounded 100 TB/day
-    stream): BOTH sides carry a watermark and the join predicate bounds
-    purchase_ts to [click_ts, click_ts + horizon], so Spark derives a
-    state-eviction condition for each side — clicks older than
-    watermark + horizon and purchases older than watermark are dropped
-    from the join state; without the time-range predicate the state
-    would grow forever. The equi-key (user_id) keeps the join a hash
-    shuffle, uniform under the usual user-key assumptions.
-
-    ``how="left_outer"`` additionally emits each UNCONVERTED click once
-    — with NULL purchase columns — as soon as the watermark proves no
-    matching purchase can still arrive (click state expires at
-    watermark + horizon). That is the funnel-abandonment feed, and the
-    outer half of Structured Streaming's stream-stream join matrix:
-    legal precisely because both watermarks + the interval predicate
-    give Spark the state-expiry certificate; the NULL row surfaces in a
-    micro-batch AFTER the watermark passes the click's horizon.
-
-    **Operational contract for the outer rows** (this WILL silently eat
-    your NULL rows if ignored): the watermark is computed from a
-    batch's max event time at batch END and only APPLIED while
-    processing the NEXT batch, so under ``availableNow`` (and at normal
-    stream shutdown) the outer NULLs need **two trailing batches of
-    later events on BOTH sides** after the last real event — one to
-    advance the watermark, one to run under it and flush the expired
-    click state. A quiet side pins the joint watermark (it is the MIN
-    across sides), which is why both sides need them. On a
-    continuously-flowing production stream real traffic plays this
-    role; for drains, backfills and tests use
-    :func:`inject_outer_join_heartbeats`, which writes exactly that
-    file-per-batch heartbeat pattern.
-
-    Works identically on batch frames (unified semantics), which is how
-    the pytest pins the matching itself; the streaming e2e test drives
-    the same plan through micro-batches via the heartbeat helper and
-    checks append-mode emission.
-    """
-    if how not in ("inner", "left_outer"):
-        raise ValueError(f"unsupported join mode: {how!r}")
-    c = clicks.withWatermark("ts", watermark).select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    )
-    p = purchases.withWatermark("ts", watermark).select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    )
-    return c.join(
-        p,
-        F.expr(
-            f"""
-            c_user = p_user AND
-            purchase_ts >= click_ts AND
-            purchase_ts <= click_ts + INTERVAL {horizon}
-            """
-        ),
-        how,
-    ).select(
-        F.col("c_user").alias("user_id"),
-        "click_id",
-        "purchase_id",
-        "click_ts",
-        "purchase_ts",
-        "purchase_value",
-    )
-
-
-def inject_outer_join_heartbeats(
-    spark: SparkSession,
-    sides: dict[str, str],
-    beyond_ts,
-    n_batches: int = 2,
-    step_minutes: int = 600,
-    user_id: int = -1,
-) -> None:
-    """Write the trailing heartbeat batches a stream-stream OUTER join
-    needs before its NULL rows finalize (see
-    :func:`attribute_purchases_to_clicks` — two batches of later events
-    on BOTH sides: the first advances the watermark, the second runs
-    under the advanced watermark and flushes the expired state; a quiet
-    side would pin the MIN-across-sides joint watermark forever).
-
-    ``sides`` maps event_type → file-source directory (e.g.
-    ``{"click": click_dir, "purchase": purchase_dir}``); one
-    single-row parquet FILE per heartbeat is appended to each so that a
-    ``maxFilesPerTrigger=1`` reader sees each as its own micro-batch.
-    Heartbeat rows carry ``user_id=-1`` by convention — filter them
-    from downstream consumers (they can surface as unconverted rows
-    themselves).
-
-    ``beyond_ts`` must be at/after the last real event's timestamp;
-    heartbeats land at ``beyond_ts + k·step_minutes`` with the step
-    chosen ≫ watermark + horizon so even the first heartbeat closes
-    every real click's window.
-    """
-    from datetime import timedelta
-
-    schema = (
-        "event_id long, ts timestamp, user_id long, "
-        "event_type string, value double, props string"
-    )
-    for k in range(1, n_batches + 1):
-        ts = beyond_ts + timedelta(minutes=k * step_minutes)
-        for etype, path in sides.items():
-            row = [(-(1000 + k), ts, user_id, etype, 0.0, "{}")]
-            spark.createDataFrame(row, schema).coalesce(1).write.mode(
-                "append"
-            ).parquet(path)
-
-
-def _vstore_versions(spark: SparkSession, state_path: str):
-    """(fs, sorted [(version, hadoop Path)]) of a batch_id-versioned
-    state store, under ``_versioned_state_writer`` and ``read_state``.
-    Scheme-aware listing via the FileSystem API (never Path.glob — the
-    compact_files lesson); a missing root is ([], not an error) but any OTHER store
-    failure PROPAGATES — "no state yet" must stay distinguishable from
-    "state read failed" (the r4/r5 hazard class)."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(state_path)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return fs, []
-    out = []
-    for st in fs.listStatus(root):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("v="):
-            out.append((int(name[2:]), st.getPath()))
-    out.sort()
-    return fs, out
-
-
-def _vstore_latest(
-    spark: SparkSession, state_path: str, below: int | None = None
-):
-    """Newest version (optionally strictly below ``below`` — the
-    replay-safe predecessor lookup), or None."""
-    _, versions = _vstore_versions(spark, state_path)
-    cands = [v for v, _ in versions if below is None or v < below]
-    return max(cands) if cands else None
-
-
-def _vstore_prune(spark: SparkSession, state_path: str, retain: int) -> None:
-    """Delete all but the newest ``retain`` versions."""
-    fs, versions = _vstore_versions(spark, state_path)
-    for _, p in versions[:-retain]:
-        fs.delete(p, True)
-
-
-def read_state(spark: SparkSession, state_path: str) -> DataFrame | None:
-    """Current state of a batch_id-versioned maintainer (rollup, k-means,
-    NB, KMV): the highest ``v=`` partition. Returns None before the first
-    commit.
-
-    "No state yet" is probed via the FileSystem API, exactly like
-    ``_vstore_latest`` inside the maintenance loop — a transient store
-    error or corrupt parquet footer PROPAGATES to the caller instead of
-    silently reading as "view empty" (VERDICT r5 "What's wrong #2"):
-    a consumer acting on a falsely-empty view is a correctness bug.
-    """
-    best = _vstore_latest(spark, state_path)
-    if best is None:
-        return None
-    # read errors from here on are REAL failures — let them propagate
-    return spark.read.parquet(f"{state_path}/v={best}")
-
-
-def _versioned_state_writer(
-    stream: DataFrame, state_path: str, retain_versions: int, update
-):
-    """The ``foreachBatch`` writer every batch_id-versioned maintainer
-    shares: ``update(batch, prev)`` returns the new state from the
-    micro-batch and the predecessor version's rows (None before the first
-    commit).
-
-    Exactly-once state updates on a non-transactional (parquet) sink:
-    batch N reads the newest version ``< N``, and dynamically overwrites
-    partition ``v=N`` only. A replayed batch recomputes from the same
-    predecessor version (still intact) and rewrites ``v=N`` with the
-    identical deterministic result, so at-least-once foreachBatch
-    delivery yields an exactly-once state — the same batch_id-keyed
-    idempotence pattern as ``run_trending_stream_once``, applied to
-    accumulating state instead of append rows. The micro-batch stays
-    persisted through ``update`` and the write. ``retain_versions`` old
-    versions are kept for replay safety, older ones pruned (the lineage
-    a replay can reach is bounded by the checkpoint's committed offset,
-    which is always ≥ the latest version minus one run).
-    """
-    # replay ALWAYS needs the predecessor version intact: with
-    # retain_versions=1, after batch N prunes only v=N survives, so a
-    # replayed batch N finds no version < N, takes the first-batch path
-    # and silently resets all accumulated state (ADVICE r8)
-    if retain_versions < 2:
-        raise ValueError(
-            "retain_versions must be >= 2: exactly-once replay reads the "
-            f"predecessor version, which {retain_versions} would prune"
-        )
-
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        batch = batch.persist()
-        try:
-            prev_v = _vstore_latest(spark, state_path, below=batch_id)
-            # read errors here are REAL failures — let them propagate
-            prev = None if prev_v is None else spark.read.parquet(f"{state_path}/v={prev_v}")
-            (
-                update(batch, prev)
-                .withColumn("v", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("v")
-                .parquet(state_path)
-            )
-            _vstore_prune(spark, state_path, retain_versions)
-        finally:
-            batch.unpersist()
-
-    return stream.writeStream.foreachBatch(_handle)
-
-
-def maintain_rollup_stream(
-    stream: DataFrame,
-    keys: list[str],
-    value_col: str,
-    state_path: str,
-    retain_versions: int = 3,
-):
-    """Streaming materialized-view maintenance: keep a per-``keys``
-    rollup (count/sum/min/max over an exact-integer ``value_col``)
-    continuously up to date as micro-batches arrive, without ever
-    rescanning history — ``operators/incremental.merge_agg_states``
-    applied to the stream. Returns a ready-to-start ``foreachBatch``
-    writer (``_versioned_state_writer``: exactly-once on plain parquet);
-    read the live view with :func:`read_state`.
-
-    Scale: each version is O(groups) rows (the whole point of mergeable
-    state); the delta aggregation is map-side combined on the uniform
-    group key; history fact rows are never touched.
-    """
-    from etl_python_sqlite_spark.operators.incremental import (
-        build_agg_state,
-        merge_agg_states,
-    )
-
-    def update(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
-        delta = build_agg_state(batch, keys, value_col)
-        return delta if prev is None else merge_agg_states(prev, delta)
-
-    return _versioned_state_writer(stream, state_path, retain_versions, update)
-
-
-def trending_terms(
-    docs: DataFrame,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Watermark-bounded windowed term counts — the state-safe half of a
-    streaming trending-terms feed. Works identically on batch and
-    streaming frames (unified semantics); state is evicted as the
-    watermark passes each window. Expects (ts, text) rows.
-
-    The top-k cut CANNOT live in this plan: ranking needs a window
-    function over a streaming aggregate, which Structured Streaming
-    forbids (no chained stateful ops in append mode) — that's what
-    :func:`run_trending_stream_once` resolves per finalized micro-batch
-    in ``foreachBatch``, the documented pattern for post-aggregate
-    ranking."""
-    from etl_python_sqlite_spark.functions.text import words
-
-    return (
-        docs.withWatermark("ts", watermark)
-        .select(F.col("ts"), F.explode(words(F.col("text"))).alias("term"))
-        .filter(F.length("term") > 0)
-        .groupBy(F.window("ts", window).alias("w"), "term")
-        .agg(F.count("*").alias("n"))
-        .select(F.col("w.start").alias("window_start"), "term", "n")
-    )
-
-
-def run_trending_stream_once(
-    spark: SparkSession,
-    source_dir: str,
-    sink_dir: str,
-    checkpoint_dir: str,
-    k: int = 5,
-    window: str = "1 hour",
-    watermark: str = "2 hours",
-) -> None:
-    """Stream (ts, text) parquet files → per-window top-k trending terms
-    in a parquet sink. Append-mode windowed counts flush once the
-    watermark finalizes a window; ``foreachBatch`` then ranks WITHIN the
-    finalized rows (deterministic: count desc, term asc).
-
-    Exactly-once: ``foreachBatch`` alone is at-least-once — a crash
-    between the sink write and the checkpoint commit replays the batch —
-    so the write is made IDEMPOTENT by keying the sink directory on
-    ``batch_id`` (dynamic overwrite of the replayed batch's own
-    partition), the documented pattern for non-transactional sinks.
-    Read the sink with ``spark.read.parquet(sink_dir)`` as usual; the
-    ``batch_id`` column rides along as partition metadata."""
-    from pyspark.sql import Window as W
-
-    schema = "ts timestamp, text string"
-    docs = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(source_dir)
-    )
-    counts = trending_terms(docs, window=window, watermark=watermark)
-
-    def _rank_and_write(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ranked = batch.withColumn(
-            "rank",
-            F.row_number().over(
-                W.partitionBy("window_start").orderBy(
-                    F.desc("n"), F.asc("term")
-                )
-            ),
-        ).filter(F.col("rank") <= k)
-        # replay of batch N rewrites ONLY batch_id=N — idempotent
-        (
-            ranked.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sink_dir)
-        )
-
-    q = (
-        counts.writeStream.outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(_rank_and_write)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def span_contamination_stream_against_corpus(
-    stream_docs: DataFrame,
-    corpus: DataFrame,
-    sink_dir: str,
-    min_len: int = 40,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Streaming SPAN-level contamination scan — the continuous sibling
-    of the batch repeated-substring family (operators/dedup
-    .repeated_span_mine): every document arriving on the stream is
-    checked for verbatim ≥``min_len``-char overlap with a STATIC
-    reference corpus (the production decontamination shape: held-out
-    benchmarks / eval sets are the corpus, the training stream is
-    scanned before it lands). Emits one report row per contaminated
-    doc per micro-batch: (id, batch_id, n_spans, covered_chars,
-    max_span_len) — maximal overlap regions, the same gaps-and-islands
-    semantics as the batch miner.
-
-    Scale shape:
-
-    * the corpus L-gram index is built ONCE at stream build: DISTINCT
-      128-bit content-hash pairs of every corpus ``min_len``-gram,
-      pre-partitioned on h1 and persisted — per micro-batch only the
-      BATCH side hashes and shuffles (tiny); the index side joins with
-      no exchange (its cached partitioning satisfies the join). At
-      warehouse scale the index becomes a bucketed table, exactly like
-      the co-occurrence stage's documented upgrade path.
-    * hash-trust contract matches dedup_stream_against_corpus: a false
-      span needs a 2⁻¹²⁸ collision; batch-side reconciliation
-      (ext_substring_contamination / repeated_span_mine) remains the
-      exact backstop.
-    * replay of micro-batch N rewrites ONLY ``batch_id=N`` (dynamic
-      partition overwrite) — the exactly-once-on-plain-parquet
-      discipline shared by every sink in this module.
-
-    Returns the ready-to-start ``writeStream`` handle; the corpus
-    index rides on it as ``_corpus_index`` for deterministic release
-    by long-lived embedders.
-    """
-
-    def _lgrams(df: DataFrame) -> DataFrame:
-        d = df.select(
-            F.col(id_col), F.col(text_col), F.length(text_col).alias("_len")
-        ).filter(F.col("_len") >= min_len)
-        g = F.col(text_col).substr(F.col("_i"), F.lit(min_len))
-        return d.select(
-            id_col,
-            F.explode(
-                F.sequence(F.lit(1), F.col("_len") - min_len + 1)
-            ).alias("_i"),
-            F.col(text_col),
-        ).select(
-            id_col,
-            "_i",
-            F.xxhash64(g).alias("_h1"),
-            F.xxhash64(F.lit(0x5F3C), g).alias("_h2"),
-        )
-
-    index = (
-        _lgrams(corpus).select("_h1", "_h2").distinct()
-        .repartition("_h1", "_h2")
-        .persist()
-    )
-    index.count()  # eager: one corpus pass for ALL batches
-
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window
-
-        if batch.isEmpty():
-            return
-        hits = _lgrams(batch).join(index, ["_h1", "_h2"], "left_semi")
-        ow = Window.partitionBy(id_col).orderBy("_i")
-        report = (
-            hits.withColumn("_prev", F.lag("_i").over(ow))
-            .withColumn(
-                "_brk",
-                F.when(
-                    F.col("_prev").isNull()
-                    | (F.col("_i") - F.col("_prev") > min_len),
-                    1,
-                ).otherwise(0),
-            )
-            .withColumn("_grp", F.sum("_brk").over(ow))
-            .groupBy(id_col, "_grp")
-            .agg(
-                F.min("_i").alias("_s"),
-                (F.max("_i") + min_len).alias("_e"),
-            )
-            .groupBy(id_col)
-            .agg(
-                F.count("*").cast("long").alias("n_spans"),
-                F.sum(F.col("_e") - F.col("_s"))
-                .cast("long")
-                .alias("covered_chars"),
-                F.max(F.col("_e") - F.col("_s"))
-                .cast("long")
-                .alias("max_span_len"),
-            )
-        )
-        (
-            report.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(sink_dir)
-        )
-
-    writer = stream_docs.writeStream.foreachBatch(_handle)
-    writer._corpus_index = index
-    return writer
-
-
-def kmeans_state_centroids(state: DataFrame) -> DataFrame:
-    """(cid, d, c) centroid frame from accumulated (sum_q, n) state —
-    the same portable floor division as the batch operator (all
-    quantities non-negative)."""
-    return state.select(
-        "cid", "d", F.expr("CAST(sum_q div n AS BIGINT)").alias("c")
-    )
-
-
-def maintain_kmeans_stream(
-    stream: DataFrame,
-    state_path: str,
-    k: int = 8,
-    retain_versions: int = 3,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-):
-    """Streaming MINI-BATCH k-means (the sequential/online Lloyd variant
-    of Bottou & Bengio, NIPS 1995 — public literature): centroids are
-    maintained continuously as embedding micro-batches arrive, without
-    ever rescanning history.
-
-    Per micro-batch: vectors are assigned to the centroids implied by
-    the CURRENT state (floor-division means of accumulated per-dimension
-    sums — ``operators/clustering`` integer discipline end-to-end), the
-    batch's (Σq, n) contributions merge into the per-(cid, d) state, and
-    the new state lands as version ``v=batch_id``. The first batch seeds
-    itself (k smallest phash60 ids in the batch — deterministic under
-    replay, because a replayed batch has identical content).
-
-    Exactly-once on plain parquet through ``_versioned_state_writer``
-    (read the state with :func:`read_state`). State is O(k·dim) rows
-    per version — constant in stream length, the whole point of the
-    (sum, count) sufficient statistic.
-
-    Dead-centroid POLICY (differs from the batch twin, deliberately):
-    in batch Lloyd an empty cluster receives no update row and drops
-    out per-run; here the accumulated (Σq, n) state keeps a centroid
-    alive FOREVER even if no later batch assigns to it — its mean
-    simply stops moving. This is the correct contract for a continuous
-    stream: a centroid's history is evidence (the cluster existed),
-    starvation in recent batches is not proof it won't recur, and
-    re-seeding on starvation would make the state depend on BATCH
-    BOUNDARIES (the same history split into different micro-batches
-    would yield different centroids), breaking the replay determinism
-    the batch_id-versioned state is built on. Callers wanting decay
-    should window the input, not mutate the state rule. Pinned by
-    ``tests/test_streaming_kmeans.py::test_starved_centroid_state_persists``.
-    """
-    from etl_python_sqlite_spark.operators.clustering import (
-        _assign,
-        flatten_quantized,
-        seed_rank_frame,
-    )
-
-    def update(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
-        flat = flatten_quantized(batch, vec_col, id_col)
-        if prev is not None:
-            cents = kmeans_state_centroids(prev)
-        else:
-            sr = seed_rank_frame(batch, k, id_col)
-            cents = flat.join(F.broadcast(sr), "vid").select(
-                "cid", "d", F.col("q").alias("c")
-            )
-        a = _assign(flat, cents, k).select("vid", "cid")
-        delta = (
-            flat.join(a, "vid")
-            .groupBy("cid", "d")
-            .agg(
-                F.sum(F.expr("CAST(q AS DECIMAL(38,0))")).alias("sum_q"),
-                F.count("*").alias("n"),
-            )
-        )
-        if prev is None:
-            return delta
-        return (
-            prev.select("cid", "d", "sum_q", "n")
-            .unionByName(delta)
-            .groupBy("cid", "d")
-            .agg(
-                F.sum("sum_q").cast("decimal(38,0)").alias("sum_q"),
-                F.sum("n").alias("n"),
-            )
-        )
-
-    return _versioned_state_writer(stream, state_path, retain_versions, update)
-
-
-def maintain_nb_stream(
-    stream: DataFrame,
-    state_path: str,
-    n_buckets: int = 1024,
-    retain_versions: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    pos_col: str = "is_pos",
-):
-    """Streaming (online) training of the fastText-shape NB quality
-    classifier (``operators/curation.nb_quality_classifier``): the
-    model's sufficient statistic is the per-bucket class-conditional
-    count table — MERGEABLE by plain addition — so training needs no
-    rescan of history: each micro-batch's (bucket, cp, cn) delta folds
-    into the accumulated table, exactly the
-    :func:`maintain_rollup_stream` shape. The state is O(n_buckets)
-    rows per version, constant in stream length, and the final table is
-    ORDER-INVARIANT (sums commute) — the streamed model is identical to
-    batch-training on the union of all batches, pinned by
-    ``tests/test_streaming_nb.py``.
-
-    Rows need ``(id, text, is_pos)``: labels ride the stream (weak
-    labels in practice — a lang-id or source flag, the CCNet
-    construction). A NULL label excludes the row's features from BOTH
-    classes (deliberate: unlabeled ≠ negative in a stream, unlike the
-    batch trainer whose ``pos`` frame makes everything else negative
-    by construction). Exactly-once on plain parquet through
-    ``_versioned_state_writer``.
-
-    Derive live classifier weights from :func:`read_state` with
-    :func:`nb_state_weights`.
-    """
-    from etl_python_sqlite_spark.functions.portable import phash60
-    from etl_python_sqlite_spark.operators.curation import doc_bigrams
-
-    def update(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
-        feats = doc_bigrams(batch, text_col, id_col).select(
-            F.col(id_col),
-            F.pmod(
-                phash60(F.concat_ws(" ", "w1", "w2")), F.lit(n_buckets)
-            ).alias("bucket"),
-        )
-        delta = (
-            feats.join(batch.select(id_col, pos_col), id_col)
-            .groupBy("bucket")
-            .agg(
-                F.coalesce(
-                    F.sum(F.when(F.col(pos_col), F.lit(1))), F.lit(0)
-                )
-                .cast("long")
-                .alias("cp"),
-                F.coalesce(
-                    F.sum(F.when(~F.col(pos_col), F.lit(1))), F.lit(0)
-                )
-                .cast("long")
-                .alias("cn"),
-            )
-        )
-        if prev is None:
-            return delta
-        return (
-            prev.select("bucket", "cp", "cn")
-            .unionByName(delta)
-            .groupBy("bucket")
-            .agg(
-                F.sum("cp").cast("long").alias("cp"),
-                F.sum("cn").cast("long").alias("cn"),
-            )
-        )
-
-    return _versioned_state_writer(stream, state_path, retain_versions, update)
-
-
-def nb_state_weights(state: DataFrame, n_buckets: int = 1024) -> DataFrame:
-    """(bucket, w) classifier weights from accumulated class counts —
-    the identical clamped quantized-likelihood-ratio formula as the
-    batch trainer (``curation.nb_quality_classifier``), so a stream
-    that saw the same documents yields the same weights bit-for-bit.
-    Buckets never observed carry the smoothed prior ratio implicitly —
-    score joins treat missing buckets as weightless, matching the
-    batch operator's doc_counts⋈buckets inner join over observed
-    buckets only."""
-    from pyspark.sql import Window
-
-    whole = Window.partitionBy()  # B rows — driver-safe total window
-    return (
-        state.select(
-            "bucket",
-            "cp",
-            "cn",
-            F.sum("cp").over(whole).alias("np"),
-            F.sum("cn").over(whole).alias("nn"),
-        )
-        .select(
-            "bucket",
-            F.least(
-                F.greatest(
-                    F.expr(
-                        f"CAST((CAST(1000000 AS DECIMAL(38,0)) * (cp + 1)"
-                        f" * (nn + {n_buckets}))"
-                        f" div (CAST(cn + 1 AS DECIMAL(38,0))"
-                        f" * (np + {n_buckets})) AS BIGINT)"
-                    ),
-                    F.lit(1).cast("long"),
-                ),
-                F.lit(10**12).cast("long"),
-            ).alias("w"),
-        )
-    )
-
-
-
-def maintain_kmv_stream(
-    stream: DataFrame,
-    state_path: str,
-    group_col: str = "source",
-    value_col: str = "w",
-    k: int = 256,
-    retain_versions: int = 3,
-):
-    """Streaming maintenance of per-group KMV (k-minimum-values)
-    sketches (``operators/sketch.kmv_sketches``): the sketch's
-    sufficient statistic is the k smallest DISTINCT portable hashes per
-    group — mergeable by the KMV merge law (min-k of a union is the
-    min-k of the kept halves' union; every dropped hash is ≥ its
-    sketch's k-th smallest, so it can never re-enter), making this the
-    sketch-family member of the mergeable-statistic maintenance trio
-    (:func:`maintain_rollup_stream` counts, :func:`maintain_kmeans_stream`
-    (Σq, n), :func:`maintain_nb_stream` class-conditionals).
-
-    Rows in: ``(group_col, value_col)`` — the caller owns tokenization
-    (the batch contract query uses lowercased nonzero words; any
-    pre-exploded value stream works). State: O(k·|groups|) rows per
-    version, constant in stream length; ORDER-INVARIANT, so the
-    streamed sketch is BIT-IDENTICAL to batch ``kmv_sketches`` over the
-    union of all batches (pinned by tests/test_streaming.py). The state
-    schema (group, h, rn) is exactly the batch sketch schema —
-    ``operators/sketch.kmv_pair_overlap`` runs on it unchanged for live
-    cross-group overlap estimates, no rescan of history.
-
-    Exactly-once on plain parquet through ``_versioned_state_writer``;
-    read the sketches with :func:`read_state`.
-
-    Scale: the per-batch distinct compresses map-side; the per-group
-    re-rank is a window over ≤ k + |batch distinct| hashes per group —
-    state-bounded, not stream-bounded."""
-    from pyspark.sql import Window
-
-    from etl_python_sqlite_spark.functions.portable import phash60
-
-    def update(batch: DataFrame, prev: DataFrame | None) -> DataFrame:
-        delta = batch.select(
-            F.col(group_col),
-            phash60(F.col(value_col).cast("string")).alias("h"),
-        ).distinct()
-        if prev is not None:
-            delta = prev.select(group_col, "h").unionByName(delta).distinct()
-        w = Window.partitionBy(group_col).orderBy("h")
-        return (
-            delta.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= k)
-            .select(group_col, "h", "rn")
-        )
-
-    return _versioned_state_writer(stream, state_path, retain_versions, update)
-
-
-def image_dedup_stream_against_corpus(
-    stream_media: DataFrame,
-    corpus_media: DataFrame,
-    out_path: str,
-    max_hamming: int = 6,
-    n_bands: int = 4,
-    id_col: str = "media_id",
-    content_col: str = "content",
-):
-    """Streaming ingest dedup for IMAGE payloads — the multimodal
-    sibling of :func:`near_dedup_stream_against_corpus`: an arriving
-    image is dropped when its 60-bit perceptual dHash
-    (operators/imagehash — real stdlib decode, exact integer hash)
-    lands within ``max_hamming`` bits of any corpus image. Candidate
-    generation is the same Hamming-band equi-join as the batch
-    operator (complete for distances < ``n_bands``); verification is
-    the exact ``bit_count(XOR)`` on candidate pairs only. Returns a
-    ready-to-start ``foreachBatch`` writer; survivors land in
-    ``out_path`` parquet via the idempotent first-writer-wins append
-    (micro-batch replay inserts zero duplicates).
-
-    Scale shape mirrors the text pipeline: the corpus is decoded and
-    hashed ONCE at stream build (the expensive Arrow pass) into a
-    persisted (id, dhash) frame; the banded index derives from that
-    cache per batch as pure column math. Per micro-batch, only the
-    batch's own images are decoded; every join is id- or band-keyed.
-
-    Per-row reject contract (the multimodal rule): a stream row whose
-    blob does not decode gets a NULL hash, can never verify as a
-    duplicate, and passes through to the sink — one corrupt blob must
-    never abort (or silently drop from) an ingest stream; surfacing
-    failures is the metadata path's job (decode_media_metadata).
-
-    The corpus hash cache lives for the lifetime of the returned
-    query (embedders in long-lived sessions: stop the query, then
-    unpersist via the handle's ``_corpus_hashes``)."""
-    from etl_python_sqlite_spark.operators.imagehash import image_dhash
-
-    def _hasher(media: DataFrame) -> DataFrame:
-        return image_dhash(media, id_col, content_col)
-
-    return _hash_dedup_stream_against_corpus(
-        stream_media, corpus_media, out_path, _hasher,
-        max_hamming, n_bands, id_col,
-    )
-
-
-def _band_explode(hashes: DataFrame, out_id: str, n_bands: int) -> DataFrame:
-    """(out_id, _h, band, band_key) from a (_hid, _h) 60-bit hash frame
-    — the ingest-dedup streams' view over the ONE shared banding
-    definition (``operators/imagehash.band_explode``)."""
-    from etl_python_sqlite_spark.operators.imagehash import band_explode
-
-    return band_explode(hashes, "_hid", "_h", n_bands).withColumnRenamed(
-        "_hid", out_id
-    )
-
-
-def _hash_dedup_stream_against_corpus(
-    stream_media: DataFrame,
-    corpus_media: DataFrame,
-    out_path: str,
-    hasher,
-    max_hamming: int,
-    n_bands: int,
-    id_col: str,
-):
-    """Shared engine of the perceptual-hash ingest-dedup streams:
-    ``hasher(media)`` must return (id_col, dhash, decode_ok, ...) with
-    a 60-bit hash; everything else (once-hashed corpus index, per-batch
-    banding, XOR verify, idempotent sink, reject pass-through, per-batch
-    checkpoint release) is modality-independent."""
-    from etl_python_sqlite_spark.operators.cache import _release_frame
-    from etl_python_sqlite_spark.operators.idempotent import idempotent_append
-    from etl_python_sqlite_spark.operators.imagehash import DHASH_BITS
-
-    if DHASH_BITS % n_bands:
-        raise ValueError(f"n_bands must divide {DHASH_BITS}")
-
-    def _banded(hashes: DataFrame, out_id: str) -> DataFrame:
-        return _band_explode(hashes, out_id, n_bands)
-
-    corpus_hashes = (
-        hasher(corpus_media)
-        .filter(F.col("dhash").isNotNull())
-        .select(F.col(id_col).alias("_hid"), F.col("dhash").alias("_h"))
-        .persist()
-    )
-    corpus_hashes.count()  # eager: ONE corpus decode pass for ALL batches
-
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if batch.isEmpty():
-            return
-        batch = batch.persist()
-        bh = None
-        try:
-            bh = (
-                hasher(batch)
-                .filter(F.col("dhash").isNotNull())
-                .select(
-                    F.col(id_col).alias("_hid"), F.col("dhash").alias("_h")
-                )
-                .localCheckpoint(eager=True)  # 2 consumers: band + verify
-            )
-            dup_ids = (
-                _banded(bh, "_batch_id")
-                .withColumnRenamed("_h", "_h_b")
-                .join(
-                    _banded(corpus_hashes, "_corpus_id")
-                    .withColumnRenamed("_h", "_h_c"),
-                    ["band", "band_key"],
-                )
-                .filter(
-                    F.bit_count(
-                        F.col("_h_b").bitwiseXOR(F.col("_h_c"))
-                    )
-                    <= max_hamming
-                )
-                .select(F.col("_batch_id").alias(id_col))
-                .distinct()
-            )
-            survivors = batch.join(dup_ids, id_col, "left_anti")
-            idempotent_append(spark, survivors, out_path, keys=[id_col])
-        finally:
-            batch.unpersist()
-            if bh is not None:
-                # deterministic checkpoint-block release per micro-batch
-                _release_frame(bh)
-
-    writer = stream_media.writeStream.foreachBatch(_handle)
-    return _attach_corpus_release(writer, corpus_hashes)
-
-
-def _attach_corpus_release(writer, corpus_hashes: DataFrame):
-    """Tie the lifetime of the once-hashed corpus cache to the query.
-
-    Callers on the normal start/stop path must not leak one persisted
-    frame per stream build in a long-lived session, so ``stop()`` on
-    the query returned by ``start()`` unpersists the cache, and a
-    subsequent ``start()`` re-arms it (replay/restart tests reuse one
-    writer). ``release_corpus_cache()`` is the explicit public handle
-    for callers that never start the stream. PySpark's
-    ``DataStreamWriter`` config methods mutate and return ``self``, so
-    the patched ``start`` survives chained configuration."""
-    orig_start = writer.start
-
-    def _start(*args, **kwargs):
-        if not corpus_hashes.is_cached:
-            corpus_hashes.persist()
-            corpus_hashes.count()  # eager: one decode pass, all batches
-        query = orig_start(*args, **kwargs)
-        orig_stop = query.stop
-
-        def _stop(*sargs, **skwargs):
-            try:
-                return orig_stop(*sargs, **skwargs)
-            finally:
-                corpus_hashes.unpersist()
-
-        query.stop = _stop
-        return query
-
-    writer.start = _start
-    writer.release_corpus_cache = lambda: corpus_hashes.unpersist()
-    writer._corpus_hashes = corpus_hashes  # back-compat alias
-    return writer
-
-
-def audio_dedup_stream_against_corpus(
-    stream_media: DataFrame,
-    corpus_media: DataFrame,
-    out_path: str,
-    max_hamming: int = 6,
-    n_bands: int = 4,
-    id_col: str = "media_id",
-    content_col: str = "content",
-):
-    """Streaming ingest dedup for AUDIO payloads — the energy-envelope
-    sibling of :func:`image_dedup_stream_against_corpus` (same corpus-
-    hashed-once index, Hamming-band candidates, exact XOR-popcount
-    verify, idempotent survivor sink, pass-through reject contract),
-    with ``operators/audiohash.audio_energy_hash`` as the fingerprint —
-    so a re-encoded or volume-scaled copy of a corpus clip is dropped
-    at ingest (the hash is exactly volume-invariant) while novel and
-    undecodable clips land in the sink."""
-    from etl_python_sqlite_spark.operators.audiohash import (
-        audio_energy_hash,
-    )
-
-    def _hasher(media: DataFrame) -> DataFrame:
-        return audio_energy_hash(media, id_col, content_col).select(
-            F.col(id_col), F.col("ahash").alias("dhash"), "decode_ok"
-        )
-
-    return _hash_dedup_stream_against_corpus(
-        stream_media, corpus_media, out_path, _hasher,
-        max_hamming, n_bands, id_col,
-    )
-
-
-def video_dedup_stream_against_corpus(
-    stream_media: DataFrame,
-    corpus_media: DataFrame,
-    out_path: str,
-    min_shared: int = 2,
-    max_hamming: int = 6,
-    n_bands: int = 4,
-    every_n: int = 1,
-    id_col: str = "media_id",
-    content_col: str = "content",
-):
-    """Streaming ingest dedup for VIDEO containers — the set-overlap
-    sibling of :func:`image_dedup_stream_against_corpus` (VERDICT r10
-    #5): the corpus is frame-fingerprinted ONCE at stream build
-    (``operators/videohash.video_frame_hashes`` — the expensive Arrow
-    split+decode pass) into a persisted distinct (video, fingerprint)
-    index; per micro-batch only the ARRIVING videos are decoded.
-
-    A batch video is a duplicate when it shares ≥ ``min_shared``
-    matched frame fingerprints with SOME single corpus video — frames
-    match within ``max_hamming`` dHash bits via the shared Hamming-band
-    index + exact XOR-popcount verify (the per-video set-overlap
-    variant of the scalar engine's any-hash-match rule; reordered,
-    truncated AND lossy-re-encoded copies of a corpus video all drop at
-    ingest). Undecodable containers get NULL fingerprints, can never
-    verify, and pass through to the sink (the per-row reject contract);
-    the idempotent first-writer-wins append makes micro-batch replay
-    insert zero duplicates. Lifetime of the corpus index is tied to the
-    query exactly as in the scalar engine (stop() releases; a restart
-    re-arms)."""
-    from etl_python_sqlite_spark.operators.cache import _release_frame
-    from etl_python_sqlite_spark.operators.idempotent import idempotent_append
-    from etl_python_sqlite_spark.operators.imagehash import DHASH_BITS
-    from etl_python_sqlite_spark.operators.videohash import video_frame_hashes
-
-    if DHASH_BITS % n_bands:
-        raise ValueError(f"n_bands must divide {DHASH_BITS}")
-
-    corpus_fp = (
-        video_frame_hashes(corpus_media, every_n, id_col, content_col)
-        .filter(F.col("fhash").isNotNull())
-        .select(F.col(id_col).alias("_hid"), F.col("fhash").alias("_h"))
-        .distinct()
-        .persist()
-    )
-
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if batch.isEmpty():
-            return
-        batch = batch.persist()
-        bh = None
-        try:
-            bh = (
-                video_frame_hashes(batch, every_n, id_col, content_col)
-                .filter(F.col("fhash").isNotNull())
-                .select(
-                    F.col(id_col).alias("_hid"), F.col("fhash").alias("_h")
-                )
-                .distinct()
-                .localCheckpoint(eager=True)  # 2 consumers: band + verify
-            )
-            matched = (
-                _band_explode(bh, "_batch_id", n_bands)
-                .withColumnRenamed("_h", "_h_b")
-                .join(
-                    _band_explode(corpus_fp, "_corpus_id", n_bands)
-                    .withColumnRenamed("_h", "_h_c"),
-                    ["band", "band_key"],
-                )
-                .filter(
-                    F.bit_count(
-                        F.col("_h_b").bitwiseXOR(F.col("_h_c"))
-                    )
-                    <= max_hamming
-                )
-                .select("_batch_id", "_corpus_id", "_h_b", "_h_c")
-                .distinct()  # set semantics: a fingerprint pair once
-            )
-            dup_ids = (
-                matched.groupBy("_batch_id", "_corpus_id")
-                .agg(F.count("*").alias("_n_shared"))
-                .filter(F.col("_n_shared") >= min_shared)
-                .select(F.col("_batch_id").alias(id_col))
-                .distinct()
-            )
-            survivors = batch.join(dup_ids, id_col, "left_anti")
-            idempotent_append(spark, survivors, out_path, keys=[id_col])
-        finally:
-            batch.unpersist()
-            if bh is not None:
-                _release_frame(bh)
-
-    writer = stream_media.writeStream.foreachBatch(_handle)
-    return _attach_corpus_release(writer, corpus_fp)
-
-
-def passage_dedup_stream_against_corpus(
-    stream_docs: DataFrame,
-    corpus: DataFrame,
-    out_path: str,
-    window_words: int = 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-):
-    """Streaming PASSAGE-level dedup — the sub-document sibling of
-    :func:`dedup_stream_against_corpus` (batch twin:
-    operators/dedup.passage_dedup): documents arriving on the stream
-    have every ``window_words``-word passage that already exists in the
-    static corpus CUT, plus within-batch first-writer-wins passage
-    dedup; the CLEANED documents (surviving passages reassembled in
-    position order) land in ``out_path`` via the idempotent
-    first-writer-wins append, so micro-batch replay inserts zero
-    duplicate rows. Output rows: (id, cleaned_text, n_chunks, n_kept).
-
-    Scale shape:
-
-    * the corpus collapses ONCE at stream build to DISTINCT 8-byte
-      xxhash64 passage keys (~1/2500th of corpus bytes at 20-word
-      passages), persisted — never re-exploded per batch;
-    * per micro-batch, the corpus key frame is probed with a BROADCAST
-      of the batch's own (bounded) passage keys — a semi-join that
-      scans the persisted index map-side, then the (≤ batch-sized)
-      matched set broadcasts back against the batch's passages: the
-      corpus is never shuffled, per-batch cost is one index scan;
-    * wordless documents pass through unchanged (nothing to dedup).
-
-    Honest divergences from the batch op, both documented properties
-    of streaming ingest: (1) the corpus cut trusts the 64-bit passage
-    key (the :func:`dedup_stream_against_corpus` collision argument —
-    ~2⁻⁶⁴·|corpus passages| per passage); (2) passages are deduped
-    within each micro-batch and against the fixed corpus, NOT across
-    micro-batches (cross-batch passage state would grow with the
-    stream; the batch reconciliation op ``passage_dedup`` is the
-    nightly backstop, the lakehouse-ingest pattern used throughout
-    this module). Corpus-cache lifetime is tied to the query (stop()
-    releases, restart re-arms)."""
-    from etl_python_sqlite_spark.operators.cache import _release_frame
-    from etl_python_sqlite_spark.operators.dedup import (
-        _PASSAGE_POS_BITS,
-        passage_instances,
-    )
-    from etl_python_sqlite_spark.operators.idempotent import idempotent_append
-
-    corpus_keys = (
-        passage_instances(corpus, window_words, text_col, id_col)
-        .select(F.xxhash64("chunk").alias("_ph"))
-        .distinct()
-        .persist()
-    )
-
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if batch.isEmpty():
-            return
-        batch = batch.persist()
-        inst = None
-        try:
-            inst = (
-                passage_instances(batch, window_words, text_col, id_col)
-                .withColumn("_ph", F.xxhash64("chunk"))
-                # 3 consumers: probe-key broadcast, anti-join, own-min
-                .localCheckpoint(eager=True)
-            )
-            probe = inst.select("_ph").distinct()
-            matched = corpus_keys.join(
-                F.broadcast(probe), "_ph", "left_semi"
-            )
-            fresh = inst.join(F.broadcast(matched), "_ph", "left_anti")
-            enc = F.col(id_col) * F.lit(1 << _PASSAGE_POS_BITS) + F.col(
-                "pos"
-            )
-            own = fresh.groupBy("_ph").agg(F.min(enc).alias("_first_enc"))
-            kept = (
-                fresh.join(own, "_ph")
-                .filter(enc == F.col("_first_enc"))
-                .groupBy(id_col)
-                .agg(
-                    F.array_join(
-                        F.transform(
-                            F.array_sort(
-                                F.collect_list(F.struct("pos", "chunk"))
-                            ),
-                            lambda s: s["chunk"],
-                        ),
-                        " ",
-                    ).alias("_kept_text"),
-                    F.count("*").cast("long").alias("n_kept"),
-                )
-            )
-            totals = inst.groupBy(id_col).agg(
-                F.count("*").cast("long").alias("n_chunks")
-            )
-            cleaned = (
-                batch.select(id_col, F.col(text_col))
-                .join(totals, id_col, "left")
-                .join(kept, id_col, "left")
-                .select(
-                    id_col,
-                    F.when(
-                        F.col("n_chunks").isNull(), F.col(text_col)
-                    )
-                    .otherwise(F.coalesce("_kept_text", F.lit("")))
-                    .alias("cleaned_text"),
-                    F.coalesce("n_chunks", F.lit(0).cast("long")).alias(
-                        "n_chunks"
-                    ),
-                    F.coalesce("n_kept", F.lit(0).cast("long")).alias(
-                        "n_kept"
-                    ),
-                )
-            )
-            idempotent_append(spark, cleaned, out_path, keys=[id_col])
-        finally:
-            batch.unpersist()
-            if inst is not None:
-                _release_frame(inst)
-
-    writer = stream_docs.writeStream.foreachBatch(_handle)
-    return _attach_corpus_release(writer, corpus_keys)

@@ -59,57 +59,3 @@ def test_bucketed_groupby_avoids_shuffle(spark, bucketed_tables):
     agg.collect()
     plan = agg._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
-
-
-def test_orc_roundtrip_pushdown_and_partition_pruning(spark, tmp_path):
-    """ORC sink/source parity with the parquet scan-quality gates:
-    value-exact roundtrip, predicate pushdown into the ORC scan, and
-    directory-partition pruning."""
-    from pyspark.sql import functions as F
-
-    from etl_python_sqlite_spark.sources.orc import read_orc, write_orc
-
-    df = spark.range(1000).select(
-        F.col("id"),
-        (F.col("id") % 7).alias("bucket"),
-        (F.col("id") * 3).cast("double").alias("val"),
-    )
-    p = str(tmp_path / "orc_plain")
-    write_orc(df, p)
-    back = read_orc(spark, p)
-    assert sorted(r["id"] for r in back.collect()) == list(range(1000))
-
-    filtered = back.filter(F.col("id") > 990).select("id")
-    plan = filtered._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters: [" in plan and "id" in plan.split("PushedFilters")[1][:80]
-
-    pp = str(tmp_path / "orc_part")
-    write_orc(df, pp, partition_by=["bucket"])
-    pruned = read_orc(spark, pp).filter(F.col("bucket") == 3)
-    pplan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert pruned.count() == df.filter(F.col("bucket") == 3).count()
-    # partition filter must be applied at the scan, not post-scan
-    assert "PartitionFilters: [" in pplan
-    seg = pplan.split("PartitionFilters")[1][:120]
-    assert "bucket" in seg
-
-
-def test_avro_round_trip_via_orc_api(spark, tmp_path):
-    """Both Avro directions route jar-free through the stdlib DataSource
-    (sources/avro_py): orc.write_avro delegates to the distributed
-    write_avro_dataset (r9 — the stale NotImplementedError gate removed),
-    and orc.read_avro reads it back."""
-    from etl_python_sqlite_spark.sources.avro_py import write_avro as fixture_write
-    from etl_python_sqlite_spark.sources.orc import read_avro, write_avro
-
-    ds = str(tmp_path / "avrodir")
-    write_avro(spark.range(5).selectExpr("id", "id * 2 AS dbl"), ds)
-    got = read_avro(spark, ds)
-    assert {(r["id"], r["dbl"]) for r in got.collect()} == {
-        (i, 2 * i) for i in range(5)
-    }
-    schema = {"type": "record", "name": "r",
-              "fields": [{"name": "id", "type": "long"}]}
-    p = str(tmp_path / "one.avro")
-    fixture_write([(1,), (2,)], schema, p)
-    assert {r["id"] for r in read_avro(spark, p).collect()} == {1, 2}

@@ -192,32 +192,6 @@ def test_explicit_release(spark):
     release(out)  # idempotent
 
 
-def test_split_rejects_releases_cache(spark, tmp_path):
-    import json
-
-    from etl_python_sqlite_spark.sources.jsonl import (
-        DOCUMENT_SCHEMA,
-        read_jsonl,
-        split_rejects,
-    )
-
-    p = tmp_path / "docs.jsonl"
-    lines = [json.dumps({"doc_id": i, "text": f"t {i}", "lang": "en", "source": "web"}) for i in range(5)]
-    lines.insert(2, "{not json")
-    p.write_text("\n".join(lines) + "\n")
-
-    before = _n_persistent(spark)
-    good, rejects = split_rejects(read_jsonl(spark, p, DOCUMENT_SCHEMA))
-    assert good.count() == 5
-    # dropping ONE output keeps the shared cache (the other still needs it)
-    del good
-    gc.collect()
-    assert rejects.count() == 1
-    del rejects
-    gc.collect()
-    assert _n_persistent(spark) == before
-
-
 def test_shared_flag_histogram_memo_bounded_and_releasable(spark):
     """The mad/robust shared histogram is SESSION-scoped by design (the
     frame is bounded by the price domain, not data volume) — but the

@@ -608,13 +608,12 @@ def test_nb_quality_classifier_planted_precision(spark):
 def test_nb_score_with_weights_matches_trainer(spark):
     """The serve-path scorer fed the trainer's own weight table must
     reproduce the trainer's scores exactly — train-once/score-anywhere
-    with one weight contract (batch + streaming share it)."""
+    with one weight contract."""
     from etl_python_sqlite_spark.operators.curation import (
         bucketed_bigram_counts,
         nb_quality_classifier,
         nb_score_with_weights,
     )
-    from etl_python_sqlite_spark.streaming.pipeline import nb_state_weights
 
     good = "excellent thoughtful prose with careful measured analysis"
     junk = "buy now click here spam spam free offer"
@@ -631,10 +630,10 @@ def test_nb_score_with_weights_matches_trainer(spark):
             docs, df.filter("is_pos").select("doc_id")
         ).collect()
     }
-    # rebuild the SAME weight table through the streaming contract:
-    # class counts -> nb_state_weights (identical clamped-ratio formula)
+    # rebuild the SAME weight table from the class counts in Python: the
+    # trainer's clamped quantized likelihood ratio, exact integer math
     feats = bucketed_bigram_counts(docs)
-    state = (
+    counts = (
         feats.join(df.select("doc_id", "is_pos"), "doc_id")
         .groupBy("bucket")
         .agg(
@@ -645,12 +644,31 @@ def test_nb_score_with_weights_matches_trainer(spark):
                 F.sum(F.when(~F.col("is_pos"), F.col("cnt"))), F.lit(0)
             ).alias("cn"),
         )
+        .collect()
+    )
+    n_buckets = 1024
+    n_p = sum(r["cp"] for r in counts)
+    n_n = sum(r["cn"] for r in counts)
+    weights = spark.createDataFrame(
+        [
+            (
+                r["bucket"],
+                min(
+                    max(
+                        10**6 * (r["cp"] + 1) * (n_n + n_buckets)
+                        // ((r["cn"] + 1) * (n_p + n_buckets)),
+                        1,
+                    ),
+                    10**12,
+                ),
+            )
+            for r in counts
+        ],
+        "bucket long, w long",
     )
     served = {
         r["doc_id"]: (r["n_feat"], r["score_micro"], r["pred_pos"])
-        for r in nb_score_with_weights(
-            docs, nb_state_weights(state)
-        ).collect()
+        for r in nb_score_with_weights(docs, weights).collect()
     }
     assert served == trained
 

@@ -1,62 +1,12 @@
-"""JSONL source (schema-explicit scan, corrupt-line routing, bounded
-write) and the range-ordered training-shard writer."""
+"""The range-ordered training-shard writer and the WebDataset
+source."""
 
 from __future__ import annotations
-
-import json
-from pathlib import Path
 
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from etl_python_sqlite_spark.operators.shards import write_training_shards
-from etl_python_sqlite_spark.sources import jsonl as J
-
-
-def _write_lines(path: Path, lines: list[str]) -> None:
-    path.write_text("\n".join(lines) + "\n")
-
-
-def test_jsonl_read_good_and_corrupt(spark, tmp_path):
-    f = tmp_path / "docs.jsonl"
-    good = [
-        {"doc_id": i, "text": f"doc {i}", "lang": "en", "source": "web"}
-        for i in range(5)
-    ]
-    lines = [json.dumps(g) for g in good]
-    lines.insert(2, '{"doc_id": broken')  # unparseable line
-    lines.insert(4, "not json at all")
-    _write_lines(f, lines)
-
-    df = J.read_jsonl(spark, f, J.DOCUMENT_SCHEMA)
-    ok, rejects = J.split_rejects(df)
-
-    assert ok.count() == 5
-    assert {r["doc_id"] for r in ok.collect()} == {0, 1, 2, 3, 4}
-    # rejects carry the raw line verbatim (reference reject parity)
-    raw = {r["raw_line"] for r in rejects.collect()}
-    assert raw == {'{"doc_id": broken', "not json at all"}
-
-
-def test_jsonl_missing_fields_are_null_not_rejected(spark, tmp_path):
-    f = tmp_path / "sparse.jsonl"
-    _write_lines(f, ['{"doc_id": 1, "text": "no lang"}'])
-    ok, rejects = J.split_rejects(J.read_jsonl(spark, f, J.DOCUMENT_SCHEMA))
-    assert rejects.count() == 0
-    row = ok.collect()[0]
-    assert row["doc_id"] == 1 and row["lang"] is None
-
-
-def test_jsonl_write_bounds_file_sizes(spark, tmp_path):
-    out = tmp_path / "out"
-    df = spark.range(250).select(
-        F.col("id").alias("doc_id"), F.lit("x").alias("text")
-    )
-    J.write_jsonl(df.coalesce(1), out, max_records_per_file=100)
-    files = [p for p in out.glob("part-*") if not p.name.endswith(".crc")]
-    assert len(files) == 3  # 100+100+50
-    back = spark.read.schema("doc_id long, text string").json(str(out))
-    assert back.count() == 250
 
 
 def test_training_shards_are_range_ordered_and_bounded(spark, tmp_path):
@@ -92,14 +42,6 @@ def test_shards_empty_input_writes_valid_dataset(spark, tmp_path):
     df = spark.range(0).select(F.col("id").alias("seq_id"))
     write_training_shards(df, out, order_cols=["seq_id"], num_shards=2)
     assert spark.read.parquet(str(out)).count() == 0
-
-
-def test_jsonl_all_corrupt_file(spark, tmp_path):
-    f = tmp_path / "junk.jsonl"
-    _write_lines(f, ["not json", "{broken", "[1,2"])
-    ok, rejects = J.split_rejects(J.read_jsonl(spark, f, J.DOCUMENT_SCHEMA))
-    assert ok.count() == 0
-    assert rejects.count() == 3
 
 
 def test_webdataset_shards_round_trip_and_determinism(spark, tmp_path):

@@ -10,6 +10,7 @@ from __future__ import annotations
 import random
 import string
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -156,12 +157,17 @@ def _check_strict_int(spark, strings):
 
 
 @given(strings=_batch)
+# Unicode 14 has no uppercase for ƛ or ɤ; ICU 77 maps them to U+A7DC/U+A7CB
+@example(strings=["ƛx"])
+@example(strings=["ɤ de"])
 @_hyp
 def test_hypothesis_capitalize(spark, strings):
     _check_capitalize(spark, strings)
 
 
 @given(strings=_batch)
+@example(strings=["ƛx"])
+@example(strings=["ɤ de"])
 @_hyp
 def test_hypothesis_title(spark, strings):
     _check_title(spark, strings)
@@ -183,3 +189,32 @@ def test_hypothesis_randomized(spark, strings):
     _check_capitalize(spark, strings)
     _check_title(spark, strings)
     _check_strict_int(spark, strings)
+
+
+@pytest.mark.slow
+def test_case_sweep_every_assigned_code_point(spark):
+    """``py_capitalize`` and ``py_title`` equal CPython on every assigned
+    code point ``c`` (surrogates aside), as ``c`` and as ``'a' + c``.
+    Fails when the JVM's ICU or CPython's Unicode tables move; the
+    mismatches then name the code points to map (normalize.py's
+    ``_UNICODE_14_CASE``)."""
+    import sys
+    import unicodedata
+
+    chars = [
+        chr(cp)
+        for cp in range(sys.maxunicode + 1)
+        if unicodedata.category(chr(cp)) not in ("Cn", "Cs")
+    ]
+    values = chars + ["a" + c for c in chars]
+    df = spark.createDataFrame(pd.DataFrame({"v": values}), "v: string")
+    out = df.select(
+        "v", py_capitalize("v").alias("cap"), py_title("v").alias("title")
+    ).toPandas()
+    bad = [
+        (f"U+{ord(v[-1]):04X}", v, cap, title)
+        for v, cap, title in out.itertuples(index=False)
+        if cap != v.strip().lower().capitalize() or title != v.strip().lower().title()
+    ]
+    assert len(out) == len(values)
+    assert bad == []

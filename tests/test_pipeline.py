@@ -85,7 +85,8 @@ def test_batch_end_to_end(spark, cfg):
     assert fact.count() == 4
     # lineage columns attached
     assert {"processed_at", "run_id"} <= set(fact.columns)
-    # AUTOINCREMENT parity: dense ids — IGNOREd duplicates consume none
+    # dense ids: IGNOREd duplicates consume none here, where the
+    # reference's AUTOINCREMENT spends one on each (test_reference_parity)
     assert sorted(r["persona_id"] for r in fact.collect()) == [1, 2, 3, 4]
 
     # reject CSV written with motivo, one per dirty file only
@@ -114,6 +115,15 @@ def test_rerun_is_idempotent(spark, cfg):
     assert spark.read.parquet(cfg.fact_path).count() == 4
     # audit keeps appending: 2 files × 2 runs
     assert spark.read.parquet(cfg.audit_path).count() == 4
+
+
+def test_one_audit_file_per_batch(spark, cfg):
+    """Each batch appends one parquet file to ``etl_runs``, whatever its
+    file count (as the dimension write does)."""
+    run_batch(spark, cfg, now=NOW)
+    run_batch(spark, cfg, now=NOW)
+    parts = sorted(Path(cfg.audit_path).glob("part-*.parquet"))
+    assert len(parts) == 2, [p.name for p in parts]
 
 
 def test_dim_fact_join_roundtrip(spark, cfg):

@@ -4,12 +4,15 @@ Row data mirrors /root/reference/data/in/personas.csv:1-4 and
 personas_crudas.csv:1-7 (cited, not copied code); expectations are the
 reference semantics executed by hand: sorted file order
 (scr/etl_batch.py:175), EDAD_MIN=25, INSERT OR IGNORE with
-UNIQUE(nombre,edad,ciudad_id), dense AUTOINCREMENT ids.
+UNIQUE(nombre,edad,ciudad_id). The engine's surrogate ids are dense; the
+reference's are not (see ``test_sqlite_replay_matches_run_batch``).
 """
 
 from __future__ import annotations
 
 import csv
+import sqlite3
+from contextlib import closing
 from datetime import datetime, timezone
 from pathlib import Path
 
@@ -242,3 +245,103 @@ def test_short_row_nulls_need_every_column(spark, tmp_path):
     assert [r.asDict() for r in scanned.collect()] == replay
     narrow = scanned.select("nombre", "ciudad").collect()
     assert [tuple(r) for r in narrow] == [("ana", "rosario"), ("pedro", ""), ("luz", "lima")]
+
+
+# a dirty batch: b.csv has a reordered header and repeats a.csv's Ana
+# (cross-file duplicate); rows are out of key order; c.csv has a short row
+REPLAY_BATCH = {
+    "a.csv": "nombre,edad,ciudad\nzoe,30,rosario\n  ana ,41, lima\nbruno,x,lima\n"
+    "carla,20,cusco\nANA,41,Lima\n",
+    "b.csv": "ciudad,edad,nombre\nCUSCO,33,diego\nlima,41,ana\nbuenos aires,52,  eva\n",
+    "c.csv": "nombre,edad,ciudad\nbeto,26,zarate\npedro,30\nzoe,30,ROSARIO\n",
+}
+
+REFERENCE_DDL = """
+CREATE TABLE ciudades (
+    ciudad_id INTEGER PRIMARY KEY AUTOINCREMENT,
+    nombre TEXT NOT NULL UNIQUE
+);
+CREATE TABLE personas_limpias (
+    persona_id INTEGER PRIMARY KEY AUTOINCREMENT,
+    nombre TEXT NOT NULL,
+    edad INTEGER NOT NULL,
+    ciudad_id INTEGER NOT NULL REFERENCES ciudades(ciudad_id),
+    UNIQUE(nombre, edad, ciudad_id)
+);
+"""
+
+
+def _reference_load(con, data_in: Path) -> dict[str, tuple[int, int, int, int]]:
+    """The reference's batch load (scr/etl_batch.py:123-175) in ``sqlite3``:
+    files in sorted order, rows in file order, per-row city get-or-create
+    and fact ``INSERT OR IGNORE``, with ``COUNT(*)`` before and after each
+    file. Returns (valid, rejected, inserted, ignored) per file."""
+    audit = {}
+    for path in sorted(data_in.glob("*.csv")):
+        with path.open(newline="", encoding="utf-8") as f:
+            rows = list(csv.DictReader(f))
+        valid = [
+            (r["nombre"].strip().capitalize(), int(r["edad"]), r["ciudad"].strip().title())
+            for r in rows
+            if _reference_motivo(r) is None
+        ]
+        (before,) = con.execute("SELECT COUNT(*) FROM personas_limpias").fetchone()
+        for nombre, edad, ciudad in valid:
+            con.execute("INSERT OR IGNORE INTO ciudades(nombre) VALUES (?)", (ciudad,))
+            (ciudad_id,) = con.execute(
+                "SELECT ciudad_id FROM ciudades WHERE nombre = ?", (ciudad,)
+            ).fetchone()
+            con.execute(
+                "INSERT OR IGNORE INTO personas_limpias(nombre, edad, ciudad_id)"
+                " VALUES (?, ?, ?)",
+                (nombre, edad, ciudad_id),
+            )
+        con.commit()
+        (after,) = con.execute("SELECT COUNT(*) FROM personas_limpias").fetchone()
+        inserted = after - before
+        audit[path.name] = (len(valid), len(rows) - len(valid), inserted, len(valid) - inserted)
+    return audit
+
+
+@pytest.mark.slow  # >8 s e2e/fuzz (default tier deselects)
+def test_sqlite_replay_matches_run_batch(spark, tmp_path):
+    """``run_batch`` against the reference's own storage engine: the same
+    batch loaded twice by ``run_batch`` and by a ``sqlite3`` replay of the
+    reference gives the same per-file audit counts, the same fact ⋈ dim
+    rows by name, and zero inserts on the re-run.
+
+    Surrogate ids are not compared; they differ by design. The engine
+    numbers new keys densely in (file, natural key) order. The reference
+    numbers them in row order, and its AUTOINCREMENT spends an id on every
+    ignored insert (SQLite 3.40: ``a, a, a, b`` gives ``b`` the id 4)."""
+    cfg = PipelineConfig(
+        data_in=str(tmp_path / "in"),
+        data_rejected=str(tmp_path / "rejected"),
+        warehouse=str(tmp_path / "wh"),
+    )
+    data_in = Path(cfg.data_in)
+    data_in.mkdir(parents=True)
+    for name, text in REPLAY_BATCH.items():
+        (data_in / name).write_text(text, encoding="utf-8")
+
+    with closing(sqlite3.connect(":memory:")) as con:
+        con.executescript(REFERENCE_DDL)
+        for run in range(2):
+            want = _reference_load(con, data_in)
+            got = {
+                r.source_file: (
+                    r.valid_count, r.rejected_count, r.inserted_new, r.ignored_duplicates
+                )
+                for r in run_batch(spark, cfg, now=NOW).files
+            }
+            assert got == want, run
+        assert all(inserted == 0 for _, _, inserted, _ in want.values())
+        reference_rows = con.execute(
+            "SELECT p.nombre, p.edad, c.nombre FROM personas_limpias p"
+            " JOIN ciudades c USING (ciudad_id)"
+        ).fetchall()
+
+    fact = spark.read.parquet(cfg.fact_path)
+    dim = spark.read.parquet(cfg.dim_path)
+    loaded = fact.join(dim, "ciudad_id").select(fact.nombre, "edad", dim.nombre)
+    assert sorted(tuple(r) for r in loaded.collect()) == sorted(reference_rows)

@@ -1,9 +1,6 @@
-"""Skew utilities correctness + custom stateful streaming operator."""
+"""Skew utilities correctness."""
 
 from __future__ import annotations
-
-import time
-from datetime import datetime, timedelta
 
 import pytest
 
@@ -76,263 +73,3 @@ def test_salt_spreads_identical_payload_rows(spark):
 def test_top_frequent_keys_finds_hot(spark, skewed):
     top = K.top_frequent_keys(skewed, ["k"], top_n=1).first()
     assert top["k"] == "HOT" and top["n_rows"] == 5000
-
-
-def test_stateful_sessionizer_stream(spark, tmp_path):
-    """Drive applyInPandasWithState through a real micro-batch stream and
-    check the emitted (closed) sessions."""
-    from etl_python_sqlite_spark.streaming.stateful import sessionized_stream
-
-    base = int(datetime(2024, 1, 1).timestamp())
-    rows = [
-        # user 1: two sessions separated by a 2h gap
-        (1, base + 0, 1.0),
-        (1, base + 60, 2.0),
-        (1, base + 7200, 5.0),
-        (1, base + 7260, 1.0),
-        # user 2: one session
-        (2, base + 0, 9.0),
-    ]
-    src = str(tmp_path / "src")
-    spark.createDataFrame(
-        rows, "user_id long, epoch_s long, value double"
-    ).coalesce(1).write.parquet(src)
-
-    stream = spark.readStream.schema(
-        "user_id long, epoch_s long, value double"
-    ).parquet(src)
-    q = (
-        sessionized_stream(stream)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName("sessions_out")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    got = {
-        (r["user_id"], r["session_n"], r["n_events"], r["total_value"])
-        for r in spark.sql("SELECT * FROM sessions_out").collect()
-    }
-    # within the single micro-batch, user 1's first session closes on the
-    # gap; open sessions (u1 s2, u2 s1) stay in state awaiting timeout
-    assert (1, 0, 2, 3.0) in got
-    assert not any(u == 2 for (u, *_ ) in got)
-
-
-def _poll_sink(spark, q, table, done, timeout=420):
-    """Drain a memory-sink streaming query by POLLING the sink until
-    ``done(rows)`` holds. With ``timeMode="processingTime"`` an
-    availableNow TWS query never self-terminates (the trigger keeps
-    scheduling timer/TTL micro-batches forever — observed state store
-    at version 122), and ``processAllAvailable()`` blocks on the same
-    never-quiescent condition; watching the sink for the expected final
-    data is the only deterministic drain. Caller stops the query."""
-    deadline = time.monotonic() + timeout
-    rows = []
-    while time.monotonic() < deadline:
-        if q.exception() is not None:
-            raise q.exception()
-        rows = spark.sql(f"select * from {table}").collect()
-        if done(rows):
-            return rows
-        time.sleep(2)
-    raise AssertionError(
-        f"sink {table} never reached the expected state; last rows: {rows}"
-    )
-
-
-def test_transform_with_state_running_totals(spark, tmp_path):
-    """Spark-4 typed-state API: cumulative per-user totals persist across
-    micro-batches (file-per-batch source, availableNow trigger).
-
-    The state-server protocol needs google.protobuf — satisfied here by
-    the repo's pure-stdlib shim (protoshim.py) when the real package is
-    absent, so this exercises the FULL runtime: python-side protobuf
-    encode → JVM state server → RocksDB state store (the only provider
-    that supports TWS's multiple column families) → protobuf decode."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from etl_python_sqlite_spark.streaming.stateful import running_totals_stream
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    q = None
-    try:
-        src = str(tmp_path / "tws_src")
-        schema = "user_id long, value double"
-        spark.createDataFrame([(1, 10.0), (1, 5.0), (2, 1.0)], schema).coalesce(
-            1
-        ).write.mode("append").parquet(src)
-        spark.createDataFrame([(1, 2.0), (3, 7.0)], schema).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-
-        stream = (
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        q = (
-            running_totals_stream(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("tws_out")
-            .option("checkpointLocation", str(tmp_path / "tws_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        assert q.awaitTermination(300), "TWS query did not terminate"
-    finally:
-        if q is not None:
-            q.stop()  # idempotent; frees the query name on timeout paths
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    rows = spark.sql("select * from tws_out").collect()
-    # final cumulative value per user must reflect BOTH batches for user 1
-    final = {}
-    for r in rows:
-        final[r["user_id"]] = (r["n_events"], r["total_value"])
-    assert final[1] == (3, 17.0)
-    assert final[2] == (1, 1.0)
-    assert final[3] == (1, 7.0)
-
-
-def test_transform_with_state_plan_builds(spark):
-    """Even without protobuf at runtime, the transformWithStateInPandas
-    plan must ANALYZE cleanly (schema + grouping wiring are correct)."""
-    from etl_python_sqlite_spark.streaming.stateful import running_totals_stream
-
-    stream = spark.readStream.format("rate").load().selectExpr(
-        "value as user_id", "cast(value as double) as value"
-    )
-    out = running_totals_stream(stream)
-    assert [f.name for f in out.schema.fields] == [
-        "user_id", "n_events", "total_value",
-    ]
-
-
-def test_transform_with_state_event_profile(spark, tmp_path):
-    """ListState + MapState + TTL'd ValueState through the full protocol:
-    per-user profile accumulates across two micro-batches (memory sink,
-    last emission per user wins)."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from etl_python_sqlite_spark.streaming.stateful import (
-        PROFILE_RECENT_K,
-        user_event_profile_stream,
-    )
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    q = None
-    try:
-        src = str(tmp_path / "twsp_src")
-        schema = "user_id long, event_type string, value double"
-        spark.createDataFrame(
-            [(1, "click", 1.0), (1, "view", 2.0), (1, "click", 3.0), (2, "view", 5.0)],
-            schema,
-        ).coalesce(1).write.mode("append").parquet(src)
-        # batch 2: user 1 again (ties click/view 2-2 -> lexicographic min),
-        # plus a burst that overflows user 2's recent-K buffer
-        burst = [(2, "buy", float(i)) for i in range(1, PROFILE_RECENT_K + 3)]
-        spark.createDataFrame(
-            [(1, "view", 4.0)] + burst, schema
-        ).coalesce(1).write.mode("append").parquet(src)
-
-        stream = (
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        q = (
-            user_event_profile_stream(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("twsp_out")
-            .option("checkpointLocation", str(tmp_path / "twsp_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        # timeMode=processingTime: never self-terminates — poll the sink
-        # until both users' batch-2 emissions have committed
-        rows = _poll_sink(
-            spark,
-            q,
-            "twsp_out",
-            lambda rs: any(r["user_id"] == 1 and r["n_events"] >= 4 for r in rs)
-            and any(r["user_id"] == 2 and r["n_events"] >= PROFILE_RECENT_K + 3
-                    for r in rs),
-        )
-    finally:
-        if q is not None:
-            q.stop()
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    final = {}
-    for r in rows:  # last emission per user = max n_events
-        cur = final.get(r["user_id"])
-        if cur is None or r["n_events"] > cur["n_events"]:
-            final[r["user_id"]] = r
-    u1 = final[1]
-    assert (u1["n_events"], u1["n_types"], u1["top_type"]) == (4, 2, "click")
-    assert u1["recent_sum"] == 1.0 + 2.0 + 3.0 + 4.0
-    u2 = final[2]
-    # 1 view + K+2 buys: buffer keeps the LAST K values
-    assert (u2["n_events"], u2["n_types"], u2["top_type"]) == (
-        PROFILE_RECENT_K + 3, 2, "buy",
-    )
-    assert u2["recent_sum"] == float(
-        sum(range(3, PROFILE_RECENT_K + 3))
-    )
-
-
-def test_first_occurrence_stream_dedup(spark, tmp_path):
-    """TTL'd seen-key state across micro-batches: batch-2 re-sends of
-    batch-1 keys are suppressed entirely; within-batch duplicates are
-    collapsed to one emission with the drop count."""
-    pytest.importorskip("google.protobuf.descriptor")
-    from etl_python_sqlite_spark.streaming.stateful import first_occurrence_stream
-
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    q = None
-    try:
-        src = str(tmp_path / "dedup_src")
-        schema = "doc_key string, payload string"
-        spark.createDataFrame(
-            [("a", "1"), ("a", "2"), ("b", "3")], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-        spark.createDataFrame(
-            [("a", "4"), ("c", "5"), ("c", "6"), ("c", "7")], schema
-        ).coalesce(1).write.mode("append").parquet(src)
-
-        stream = (
-            spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-        )
-        q = (
-            first_occurrence_stream(stream)
-            .writeStream.outputMode("append")
-            .format("memory")
-            .queryName("tws_dedup_out")
-            .option("checkpointLocation", str(tmp_path / "dedup_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        # processingTime mode never self-terminates: poll until batch 2's
-        # commit is visible ('c' only exists in batch 2), then stop
-        raw = _poll_sink(
-            spark, q, "tws_dedup_out",
-            lambda rs: any(r["key"] == "c" for r in rs),
-        )
-    finally:
-        if q is not None:
-            q.stop()
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-
-    rows = {(r["key"], r["n_dropped"]) for r in raw}
-    # a: first batch wins (1 within-batch dup dropped); batch-2 're-crawl'
-    # suppressed with NO new emission. c: 3 copies -> one row, 2 dropped.
-    assert rows == {("a", 1), ("b", 0), ("c", 2)}
