@@ -30,13 +30,13 @@ def main(argv: list[str] | None = None) -> int:
         default="relational",
         help="which reference script's reject strings to reproduce",
     )
-    p.add_argument(
-        "--fact-table",
-        default=None,
-        help="catalog table name — enables the bucketed 100 TB layout",
-    )
     p.add_argument("--master", default="local[*]")
-    p.add_argument("--shuffle-partitions", default="32")
+    p.add_argument(
+        "--shuffle-partitions",
+        type=int,
+        default=None,
+        help="default: the session's core count ($SPARK_GRAFT_CPUS, else 32)",
+    )
     args = p.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -47,7 +47,7 @@ def main(argv: list[str] | None = None) -> int:
     # get_spark joins an already-active session (embedding callers,
     # tests); only stop what we actually created
     owns_session = SparkSession.getActiveSession() is None
-    spark = get_spark(master=args.master, shuffle_partitions=int(args.shuffle_partitions))
+    spark = get_spark(master=args.master, shuffle_partitions=args.shuffle_partitions)
     try:
         cfg = PipelineConfig(
             data_in=args.data_in,
@@ -55,7 +55,6 @@ def main(argv: list[str] | None = None) -> int:
             warehouse=args.warehouse,
             edad_min=args.edad_min,
             message_style=args.message_style,
-            fact_table=args.fact_table,
         )
         result = run_batch(spark, cfg)
         for f in result.files:

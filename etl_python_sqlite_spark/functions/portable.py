@@ -1,10 +1,10 @@
 """Cross-engine deterministic 60-bit hashing (Spark ⇄ DuckDB).
 
-The fast dedup/fingerprint operators key on ``xxhash64`` — ideal inside
-one engine, but engine-internal: no other SQL engine reproduces it, so
+``xxhash64`` is engine-internal: no other SQL engine reproduces it, so
 queries built on it can only get the driver's weaker rows-only check.
 This module defines a *portable* hash both engines compute bit-for-bit
-identically, making MinHash/SimHash/winnowing pipelines fully
+identically, making the MinHash/SimHash/winnowing pipelines
+(``operators/dedup.py``'s ``*_portable`` operators) fully
 oracle-checkable:
 
     P(x) = int(md5(utf8(x)).hexdigest()[:15], 16)     # 60 bits
@@ -16,13 +16,12 @@ oracle-checkable:
 15 hex digits = 60 bits < 2^63, so the BIGINT cast can never overflow
 (ANSI mode on the Spark side would otherwise raise). md5 on both engines
 hashes the UTF-8 bytes of the string and prints lowercase hex, so the
-derived integer is identical by construction. The salted family re-hashes
-the *decimal string* of a base hash with a salt prefix — md5 over a short
-ASCII string, far cheaper than re-hashing the original text per salt.
+derived integer is identical by construction. The salt family
+(:func:`universal_hash`) re-hashes a base hash in pure BIGINT
+arithmetic, far cheaper than re-hashing the original text per salt.
 
-md5 is ~2-4× slower than xxhash64 per call; production paths keep
-xxhash64 (see operators/dedup.py), the ``*_portable`` variants trade
-that margin for cross-engine verifiability and are still pure codegen.
+md5 is ~2-4× slower than xxhash64 per call; the dedup operators pay
+that margin for cross-engine verifiability and stay pure codegen.
 """
 
 from __future__ import annotations
@@ -32,11 +31,6 @@ from pyspark.sql import functions as F
 
 #: DuckDB SQL twin of ``phash60`` — format with the column/expression text.
 PHASH60_SQL = "CAST('0x' || substr(md5({c}), 1, 15) AS BIGINT)"
-
-#: DuckDB SQL twin of ``phash60_salted`` — format with salt + hash exprs.
-PHASH60_SALTED_SQL = PHASH60_SQL.format(
-    c="CAST({s} AS VARCHAR) || ':' || CAST({h} AS VARCHAR)"
-)
 
 #: second independent 60-bit value from the SAME md5 (hex digits 16-30).
 PHASH60B_SQL = "CAST('0x' || substr(md5({c}), 16, 15) AS BIGINT)"
@@ -78,15 +72,6 @@ def phash60b(c: Column) -> Column:
     """Second 60-bit hash from the SAME md5 digest (hex chars 16..30) —
     independent of :func:`phash60` bits, zero extra digest cost."""
     return F.conv(F.substring(F.md5(c), 16, 15), 16, 10).cast("long")
-
-
-def phash60_salted(h: Column, s: Column) -> Column:
-    """Portable salted re-hash of an integer hash ``h`` with salt ``s``:
-    ``P(str(s) || ':' || str(h))``. Both operands are rendered as decimal
-    strings (identical text on both engines). One md5 per (value, salt) —
-    prefer :func:`double_hash_family` when many salts are evaluated per
-    value (one md5 total)."""
-    return phash60(F.concat_ws(":", s.cast("string"), h.cast("string")))
 
 
 def universal_salt_constants(num: int) -> list[tuple[int, int, int]]:

@@ -65,11 +65,6 @@ def regex_tokens(col: Column | str) -> Column:
     return F.regexp_extract_all(c, F.lit(TOKEN_RE), 0)
 
 
-def char_len(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return F.length(c)
-
-
 def avg_word_len(col: Column | str) -> Column:
     """Mean word length = (chars excluding whitespace) / word count, as an
     exact ratio of two ints (portable double division)."""
@@ -163,15 +158,6 @@ def word_shingles(col: Column | str, k: int = 3) -> Column:
     )
 
 
-def all_word_ngrams(col: Column | str, n: int = 3) -> Column:
-    """ALL k-word n-grams in order (duplicates kept — the multiset view
-    repetition metrics need, unlike ``word_shingles`` which dedups for
-    Jaccard). Documents shorter than n words yield one whole-doc gram."""
-    w = words(col)
-    starts = F.sequence(F.lit(1), F.greatest(F.size(w) - (n - 1), F.lit(1)))
-    return F.transform(starts, lambda i: F.concat_ws(" ", F.slice(w, i, n)))
-
-
 def dup_word_frac(col: Column | str) -> Column:
     """Fraction of word occurrences that repeat an earlier word:
     1 − distinct_words/total_words (0 for empty docs). Gopher-style
@@ -182,21 +168,6 @@ def dup_word_frac(col: Column | str) -> Column:
         n_words(c) > 0,
         F.lit(1.0) - F.size(F.array_distinct(w)).cast("double") / F.size(w),
     ).otherwise(F.lit(0.0))
-
-
-def dup_ngram_frac(col: Column | str, n: int = 3) -> Column:
-    """Fraction of n-gram occurrences that are duplicates:
-    1 − distinct_ngrams/total_ngrams. The Gopher paper's
-    duplicate-n-gram-fraction filter, as pure JVM array expressions."""
-    g = all_word_ngrams(col, n)
-    return F.lit(1.0) - F.size(F.array_distinct(g)).cast("double") / F.size(g)
-
-
-def token_fingerprint(col: Column | str) -> Column:
-    """Order-sensitive 64-bit document fingerprint: xxhash64 of the
-    whitespace-normalized text (fast exact-dup key that ignores spacing)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.xxhash64(F.concat_ws(" ", words(c)))
 
 
 #: distinctive character trigrams per language for the char-n-gram

@@ -43,17 +43,6 @@ def word_histogram(
     return [(r["w"], int(r["c"])) for r in wc.collect()]
 
 
-def train_bpe_merges(
-    df: DataFrame,
-    n_merges: int = 100,
-    text_col: str = "text",
-    max_vocab: int = 65536,
-) -> list[tuple[str, str]]:
-    """Learn ``n_merges`` BPE merge rules from the corpus word histogram."""
-    hist = word_histogram(df, text_col, max_vocab)
-    return merges_from_histogram(hist, n_merges)
-
-
 def merges_from_histogram(
     hist: list[tuple[str, int]], n_merges: int
 ) -> list[tuple[str, str]]:

@@ -130,32 +130,6 @@ def tie(
     return result
 
 
-def tie_shared(
-    results: Iterable[DataFrame], *cached: DataFrame
-) -> list[DataFrame]:
-    """Like ``tie`` for operators returning SEVERAL frames over the same
-    cached parent (e.g. a good/reject split): the parent is unpersisted
-    only after the LAST surviving result is dropped."""
-    out = list(results)
-    frames = tuple(cached)
-    remaining = {"n": len(out)}
-
-    def _release_one(_frames=frames, _remaining=remaining) -> None:
-        _remaining["n"] -= 1
-        if _remaining["n"] <= 0:
-            for f in _frames:
-                try:
-                    f.unpersist()
-                except Exception:
-                    pass
-
-    for r in out:
-        fin = weakref.finalize(r, _release_one)
-        fin.atexit = False
-        setattr(r, _RELEASE_ATTR, fin)
-    return out
-
-
 def tie_stage_table(frame: DataFrame, tbl: str) -> DataFrame:
     """Stamp ``frame`` (a scan of the stage table ``tbl``) with the table
     name under ``STAGE_TABLE_ATTR`` and DROP the table when the LAST

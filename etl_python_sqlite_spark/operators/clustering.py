@@ -423,21 +423,3 @@ def kmeans_lloyd(
         .orderBy("cluster")
     )
     return tie(result, flat, cents)
-
-
-def kmeans_assignments(
-    embs: DataFrame,
-    k: int = 8,
-    iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    n_partitions: int | None = None,
-    seeding: str = "phash",
-) -> DataFrame:
-    """The final per-vector assignment of the same Lloyd run:
-    ``(vid, cid, dist)`` — for evaluation joins (label purity, routing
-    tables, SemDeDup-style per-cluster passes)."""
-    flat, cents, final = _lloyd_chain(
-        embs, k, iters, vec_col, id_col, n_partitions, seeding
-    )
-    return tie(final, flat, cents)

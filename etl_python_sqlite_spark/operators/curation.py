@@ -654,46 +654,3 @@ def nb_quality_classifier(
     if _counts is not None:
         return tie(out, keepalive=[_counts])
     return tie(out, doc_counts)
-
-
-def nb_score_with_weights(
-    df: DataFrame,
-    weights: DataFrame,
-    n_buckets: int = 1024,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Score documents against an ALREADY-TRAINED weight table
-    ``(bucket, w)`` — the serve half of the train-once/score-anywhere
-    split: batch training (:func:`nb_quality_classifier` internals) and
-    this scorer share one weight contract. Unseen buckets score
-    nothing (the inner join over observed buckets — identical to the
-    trainer's own scoring pass). Same output shape/decision rule as
-    the trainer: ``(id, n_feat, score_micro, pred_pos)``; docs with no
-    in-vocabulary features carry n_feat = 0 and pred false."""
-    feats = bucketed_bigram_counts(df, n_buckets, text_col, id_col)
-    scored = (
-        feats.join(F.broadcast(weights), "bucket")
-        .groupBy(id_col)
-        .agg(
-            F.sum("cnt").cast("long").alias("n_feat"),
-            F.sum(F.col("cnt") * F.col("w")).cast("long").alias(
-                "score_micro"
-            ),
-        )
-    )
-    return (
-        df.select(id_col)
-        .join(scored, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("n_feat", F.lit(0)).cast("long").alias("n_feat"),
-            F.coalesce("score_micro", F.lit(0))
-            .cast("long")
-            .alias("score_micro"),
-            (
-                F.coalesce("score_micro", F.lit(0))
-                > F.coalesce("n_feat", F.lit(0)) * F.lit(1_000_000)
-            ).alias("pred_pos"),
-        )
-    )

@@ -1,24 +1,26 @@
 """Deduplication operators for training-data pipelines (EXT, SURVEY §2.7).
 
-Five tiers, cheapest-first — the standard large-corpus dedup ladder:
+Tiers, cheapest-first — the standard large-corpus dedup ladder:
 
 1. exact content dedup — hash groupBy, one shuffle on the hash;
-2. normalized-text dedup — same, keyed on a whitespace-insensitive
-   fingerprint;
-3. n-gram Jaccard — exact set similarity on word shingles (quadratic;
+2. n-gram Jaccard — exact set similarity on word shingles (quadratic;
    use on candidate pairs or bounded samples);
-4. MinHash + LSH — near-dup at corpus scale: signatures are one
+3. MinHash + LSH — near-dup at corpus scale: signatures are one
    narrow pass, banding turns O(n²) similarity into an equi-join on
    (band, bucket), then candidates are verified with exact Jaccard;
-5. SimHash — 64-bit fingerprints; near-dups = small Hamming distance,
-   found via 4×16-bit block equi-joins (any pair within distance 3
-   shares at least one exact block — pigeonhole).
+4. SimHash — 60-bit fingerprints; near-dups = small Hamming distance,
+   found via block equi-joins (any pair within distance d shares at
+   least one exact block — pigeonhole);
+5. winnowing — windowed-minimum rolling-hash fingerprints, pairs that
+   share enough of them.
 
 Scale notes: every step is expressed as DataFrame ops (explode /
 groupBy / join) so Spark distributes them; the only shuffles are on
 hash/bucket keys which are uniformly distributed by construction (no
-skew). Signatures use xxhash64 with fixed integer salts — deterministic
-across runs and clusters, no RNG state to ship.
+skew). Tiers 3-5 key on ``functions.portable.phash60`` (MinHash adds
+fixed integer salts) — deterministic across runs and clusters, no RNG
+state to ship, and bit-identical in the DuckDB oracle, so the oracle's
+value-hash check covers the full near-dup pipeline, not just a row count.
 
 Published basis (public literature): MinHash resemblance — Broder, "On
 the resemblance and containment of documents" (SEQUENCES 1997); banding
@@ -35,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from etl_python_sqlite_spark.functions.text import token_fingerprint, word_shingles
+from etl_python_sqlite_spark.functions.text import word_shingles
 from etl_python_sqlite_spark.operators.cache import tie
 
 
@@ -92,7 +94,7 @@ def exploded_shingles(
 
 
 # ---------------------------------------------------------------------------
-# 1+2. exact / normalized dedup
+# 1. exact dedup
 # ---------------------------------------------------------------------------
 
 def exact_dedup_groups(
@@ -109,29 +111,8 @@ def exact_dedup_groups(
     )
 
 
-def drop_exact_dups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep the minimum-id row per distinct text — a semi-join of the
-    input against its keeper set (no row data shuffled twice)."""
-    keepers = exact_dedup_groups(df, text_col, id_col).select(
-        F.col("keeper_id").alias(id_col)
-    )
-    return df.join(keepers, on=id_col, how="left_semi")
-
-
-def normalized_dedup_groups(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Like exact dedup but keyed on the whitespace-normalized fingerprint."""
-    return (
-        df.groupBy(token_fingerprint(F.col(text_col)).alias("fingerprint"))
-        .agg(F.min(id_col).alias("keeper_id"), F.count("*").alias("n_copies"))
-    )
-
-
 # ---------------------------------------------------------------------------
-# 3. exact n-gram Jaccard similarity
+# 2. exact n-gram Jaccard similarity
 # ---------------------------------------------------------------------------
 
 def _jaccard_candidates(
@@ -235,363 +216,15 @@ def ngram_jaccard_pairs(
     return tie(out, sh, inv)
 
 
-# ---------------------------------------------------------------------------
-# 4. MinHash + LSH
-# ---------------------------------------------------------------------------
-
-def minhash_signatures(
-    df: DataFrame,
-    num_hashes: int = 64,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """(id, signature array<long>[num_hashes]) — min over shingles of
-    xxhash64(shingle, salt_i) per salt.
-
-    Shape: explode distinct shingles → hash the (variable-length)
-    shingle string ONCE → explode over the salt range → ONE tiny
-    ``xxhash64(h, s)`` expression → ``groupBy(id, s).agg(min)`` → pack
-    via ``sort_array(collect_list(struct))`` (all native expressions —
-    struct-field extraction from an array is codegen, not a lambda).
-
-    Why narrow rows instead of ``num_hashes`` wide hash/min columns: the
-    wide plan generates ~64× the Java code, and whole-stage-codegen
-    COMPILE time dominated the measured cold cost (12.4 s cold vs 2.7 s
-    warm for the full near-dup pipeline at sf0.1). This plan computes
-    bitwise-identical signatures with one 5-line generated loop: 3.3 s
-    cold, same warm. Shuffle volume is unchanged (docs × num_hashes
-    longs, as rows instead of columns) and partial aggregation still
-    reduces map-side. A fold over array lambdas LOOKS cheaper still (no
-    shuffle) but higher-order functions are interpreted per element —
-    measured 60× slower. No RNG: fixed integer salts.
-    """
-    mins = _salted_min_hashes(df, num_hashes, k, text_col, id_col)
-    return (
-        mins.groupBy(id_col)
-        .agg(F.sort_array(F.collect_list(F.struct("s", "mh"))).alias("sm"))
-        .select(id_col, F.col("sm.mh").alias("signature"))
-    )
-
-
-def _salted_min_hashes(
-    df: DataFrame,
-    num_hashes: int,
-    k: int,
-    text_col: str,
-    id_col: str,
-) -> DataFrame:
-    """(id, s, mh) rows: per document and salt ``s`` in [0, num_hashes),
-    the min over shingles of xxhash64(xxhash64(shingle), s). String
-    hashing runs once per shingle; the salted family re-hashes the
-    8-byte long (~free)."""
-    sh = exploded_shingles(df, k, text_col, id_col)
-    base = sh.select(id_col, F.xxhash64("shingle").alias("h"))
-    salted = base.select(
-        id_col,
-        "h",
-        F.explode(F.sequence(F.lit(0), F.lit(num_hashes - 1))).alias("s"),
-    )
-    return salted.groupBy(id_col, "s").agg(
-        F.min(F.xxhash64("h", "s")).alias("mh")
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    bands: int = 16,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Band the signatures and equi-join on (band, band_hash).
-
-    With num_hashes=64, bands=16 → rows-per-band r=4; the S-curve
-    collision probability is 1-(1-j^4)^16 (≈0.97 at j=0.8). The shuffle
-    key (band, hash-of-4-longs) is uniform — no skew. Output: distinct
-    candidate (id_a < id_b) pairs.
-
-    The input is persisted: without it Catalyst inlines the signature
-    expression into all 16 band structs on BOTH sides of the self-join —
-    a 32× recompute of the minhash pass.
-    """
-    signatures = signatures.persist()
-    n_hashes_col = F.size(F.col("signature"))
-    rows_per_band = F.floor(n_hashes_col / bands)
-    banded = signatures.select(
-        F.col(id_col),
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
-                lambda b: F.struct(
-                    b.alias("band"),
-                    F.xxhash64(
-                        F.concat_ws(
-                            ",",
-                            F.transform(
-                                F.slice(
-                                    F.col("signature"),
-                                    (b * rows_per_band + 1).cast("int"),
-                                    rows_per_band.cast("int"),
-                                ),
-                                lambda x: x.cast("string"),
-                            ),
-                        )
-                    ).alias("band_hash"),
-                ),
-            )
-        ).alias("bb"),
-    ).select(id_col, "bb.band", "bb.band_hash")
-
-    a = banded.alias("a")
-    b = banded.alias("b")
-    out = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-    return tie(out, signatures)
-
-
-def minhash_near_dups(
-    df: DataFrame,
-    threshold: float = 0.5,
-    num_hashes: int = 64,
-    bands: int = 16,
-    k: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Full near-dup pipeline: signatures → LSH candidates → exact-Jaccard
-    verification of ONLY the candidates (no quadratic step at corpus
-    scale). Returns (id_a, id_b, jaccard ≥ threshold).
-
-    The banding here skips the packed signature array entirely: band
-    keys are aggregated straight from the narrow (id, salt, min-hash)
-    rows — ``groupBy(id, s div r)`` with an order-sensitive
-    ``xxhash64(sort_array(collect_list(struct(s, mh))))``. Identical
-    candidate set to banding the packed array (same 4-tuples, same
-    grouping), one less wide plan to compile, and the banded frame the
-    self-join persists is 16 small rows/doc instead of a 64-long array.
-    Measured cold 12.4 s → 9.5 s, warm 2.7 s → 0.9 s at sf0.1.
-    """
-    r = num_hashes // bands
-    banded = (
-        _salted_min_hashes(df, num_hashes, k, text_col, id_col)
-        .groupBy(id_col, (F.col("s") / r).cast("int").alias("band"))
-        .agg(
-            F.xxhash64(
-                F.sort_array(F.collect_list(F.struct("s", "mh")))
-            ).alias("band_hash")
-        )
-        .persist()  # stop Catalyst re-inlining the agg into both join sides
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    cands = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-        .persist()
-    )
-
-    # build shingle ARRAYS only for docs that appear in a candidate pair —
-    # the expensive array construction runs on |candidates| docs, not the
-    # whole corpus
-    cand_ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .union(cands.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    sh = (
-        df.join(F.broadcast(cand_ids), on=id_col, how="left_semi")
-        .select(F.col(id_col), word_shingles(F.col(text_col), k).alias("sh"))
-        .persist()  # reused by both sides of the verify join
-    )
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b"))
-    verified = (
-        cands.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            (
-                F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-                / F.size(F.array_union("sh_a", "sh_b"))
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-    return tie(verified, banded, cands, sh)
-
-
-# ---------------------------------------------------------------------------
-# 5. SimHash
-# ---------------------------------------------------------------------------
-
-def simhash64(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit SimHash per document: sign of the per-bit sum of token-hash
-    bits (±1). One narrow pass — per-row fold over the token array into a
-    64-counter accumulator, then bit-pack. No explode/shuffle.
-    """
-    from etl_python_sqlite_spark.functions.text import words
-
-    # Same narrow shape as minhash_signatures: explode tokens → one
-    # hashed long per row → explode over the 64 bit positions → a single
-    # conditional-sum aggregate keyed on (id, bit) → bit_or of per-bit
-    # masks. The previous 64-wide conditional-sum plan computed the same
-    # thing but generated ~64× the Java code; whole-stage-codegen compile
-    # dominated its cold cost (this plan: 2.2 s cold / 0.8 s warm vs the
-    # wide plan's 1.7 s *warm* at sf0.1, identical fingerprints).
-    # getbit/shiftleft take the bit position as a COLUMN here — only the
-    # PySpark wrappers restrict the count to a Python int, SQL does not.
-    # (Higher-order array folds would be interpreted per element —
-    # orders of magnitude slower at corpus scale.)
-    toks = df.select(
-        F.col(id_col), F.explode(words(F.col(text_col))).alias("tok")
-    ).select(id_col, F.xxhash64("tok").alias("h"))
-    bits = toks.select(
-        id_col, "h", F.explode(F.sequence(F.lit(0), F.lit(63))).alias("s")
-    )
-    bit_sums = bits.groupBy(id_col, "s").agg(
-        F.sum(F.when(F.expr("getbit(h, s)") == 1, 1).otherwise(-1)).alias("bsum")
-    )
-    # shiftleft(1L, 63) is the two's-complement min-long mask — bitwise,
-    # not arithmetic, so no ANSI overflow; bit_or of disjoint masks packs
-    # the fingerprint in one tiny aggregate
-    return bit_sums.groupBy(id_col).agg(
-        F.bit_or(
-            F.when(F.col("bsum") > 0, F.expr("shiftleft(1L, s)")).otherwise(
-                F.lit(0).cast("long")
-            )
-        ).alias("simhash")
-    )
-
-
-def simhash_near_dups(
-    df: DataFrame,
-    max_hamming: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Pairs with Hamming(simhash_a, simhash_b) ≤ max_hamming.
-
-    Pigeonhole blocking: split 64 bits into 4 16-bit blocks; any pair
-    within distance 3 matches exactly on ≥1 block → equi-join per block,
-    union, verify with bit_count. Joins are on uniform 16-bit keys.
-    """
-    sh = simhash64(df, text_col, id_col).persist()  # self-joined below
-    blocks = sh.select(
-        F.col(id_col),
-        F.col("simhash"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(blk).alias("block"),
-                        F.shiftright(F.col("simhash"), blk * 16)
-                        .bitwiseAND(0xFFFF)
-                        .alias("key"),
-                    )
-                    for blk in range(4)
-                ]
-            )
-        ).alias("bk"),
-    ).select(id_col, "simhash", "bk.block", "bk.key")
-
-    a = blocks.alias("a")
-    b = blocks.alias("b")
-    hamming = F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
-    out = (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            hamming.alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .distinct()
-    )
-    return tie(out, sh)
-
-
-# ---------------------------------------------------------------------------
-# 6. Winnowing (rolling-hash document fingerprinting, MOSS-style)
-# ---------------------------------------------------------------------------
-
-def winnowing_fingerprints(
-    df: DataFrame,
-    k: int = 3,
-    window: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Positional rolling-hash fingerprints: hash the k-word shingle at
-    every position, slide a ``window``-wide frame, keep each frame's
-    minimum hash, dedupe. Guarantees: any shared run of ≥ k+window-1
-    words between two documents yields at least one shared fingerprint
-    (the winnowing coverage property).
-
-    All codegen: posexplode → lead-concat shingles → xxhash64 → windowed
-    min → distinct. One shuffle on the uniform doc id.
-    Output: (id, fingerprint) rows.
-    """
-    from etl_python_sqlite_spark.functions.text import words
-
-    wtok = Window.partitionBy(id_col).orderBy("pos")
-    toks = df.select(
-        F.col(id_col), F.posexplode(words(F.col(text_col))).alias("pos", "w0")
-    )
-    cols = [F.col("w0")] + [
-        F.lead("w0", i).over(wtok).alias(f"w{i}") for i in range(1, k)
-    ]
-    grams = (
-        toks.select(F.col(id_col), F.col("pos"), *cols)
-        .filter(F.col(f"w{k-1}").isNotNull() | (F.col("pos") == 0))
-        .select(
-            F.col(id_col),
-            F.col("pos"),
-            F.xxhash64(F.concat_ws(" ", *[f"w{i}" for i in range(k)])).alias("h"),
-        )
-    )
-    frame = (
-        Window.partitionBy(id_col).orderBy("pos").rowsBetween(0, window - 1)
-    )
-    return (
-        grams.select(F.col(id_col), F.min("h").over(frame).alias("fingerprint"))
-        .distinct()
-    )
-
-
 def cap_fingerprint_df(
     fp: DataFrame, max_df: int | None, key_col: str = "fingerprint"
 ) -> DataFrame:
     """Stop-fingerprint pruning for fingerprint-identity pair joins:
     drop fingerprints whose document frequency exceeds ``max_df``
     BEFORE the self-join (the stop-shingle pattern of
-    :func:`setsim_join_prefix`, shared by winnowing and the video
-    frame matchers). On a real corpus a ubiquitous fingerprint — black
-    frames, intro cards, boilerplate text windows — has a posting list
+    :func:`setsim_join_prefix`, used by the video frame matchers in
+    ``operators/videohash.py``). On a real corpus a ubiquitous
+    fingerprint — black frames, intro cards, boilerplate text windows — has a posting list
     of millions and an uncapped identity join emits its SQUARE; set
     semantics tolerate dropping it (a pair whose every shared
     fingerprint is boilerplate is not a content duplicate). ``fp`` must
@@ -612,46 +245,12 @@ def cap_fingerprint_df(
     return fp.join(F.broadcast(stop), key_col, "left_anti")
 
 
-def winnowing_overlap_pairs(
-    df: DataFrame,
-    min_shared: int = 2,
-    k: int = 3,
-    window: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_fingerprint_df: int | None = None,
-) -> DataFrame:
-    """Document pairs sharing ≥ ``min_shared`` winnowing fingerprints —
-    plagiarism/near-dup detection as a self-equi-join on the fingerprint
-    + a pair-count aggregate.
-
-    The fingerprint key is uniform on hash-synthetic corpora, but on a
-    real corpus a ubiquitous fingerprint (boilerplate windows — license
-    headers, navigation chrome) has a posting list of millions and the
-    identity join emits its square — ``max_fingerprint_df`` prunes it
-    via :func:`cap_fingerprint_df` (caveats there)."""
-    fp = winnowing_fingerprints(df, k, window, text_col, id_col).persist()
-    paired = cap_fingerprint_df(fp, max_fingerprint_df)
-    a = paired.select(F.col(id_col).alias("id_a"), "fingerprint")
-    b = paired.select(F.col(id_col).alias("id_b"), "fingerprint")
-    out = (
-        a.join(b, "fingerprint")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
-    )
-    return tie(out, fp)
-
-
 # ---------------------------------------------------------------------------
-# 7. Portable (cross-engine oracle-checkable) variants
+# 3-5. MinHash + LSH, SimHash, winnowing (portable 60-bit hash)
 # ---------------------------------------------------------------------------
-# Same pipelines as tiers 4-6 keyed on functions.portable.phash60 instead
-# of xxhash64, so a DuckDB twin reproduces every hash bit-for-bit and the
-# driver's value-hash gate applies to the FULL near-dup pipeline, not just
-# a rows-only count. Plan shapes are identical (explode → groupBy → band /
-# block / window-min equi-joins); only the leaf hash expression differs.
+# Keyed on functions.portable.phash60, so a DuckDB twin reproduces every
+# hash bit-for-bit (explode → groupBy → band / block / window-min
+# equi-joins).
 
 def portable_band_keys(
     df: DataFrame,
@@ -678,7 +277,7 @@ def portable_band_keys(
     base = sh.select(id_col, phash60(F.col("shingle")).alias("h"))
     # WIDE aggregation: one row per shingle, num_hashes min-aggregate
     # columns — no ×num_hashes row explode. The narrow salted-row plan
-    # (r2's choice for the xxhash64 path, driven by codegen COMPILE cost)
+    # (r2's choice, driven by codegen COMPILE cost)
     # loses at scale: the 64× probe measured the 6G-row explode+hash-agg
     # machinery — not hashing — as the dominant term (394 s narrow; the
     # md5→3-int-op family swap moved nothing), and bench's warm-up pass
@@ -815,9 +414,14 @@ def simhash_portable(
     words_arr: DataFrame | None = None,
 ) -> DataFrame:
     """SimHash fingerprints on the portable 60-bit hash: (id, simhash)
-    with ``simhash`` a non-negative BIGINT of ``bits`` bits. Same narrow
-    explode → conditional-sum shape as ``simhash64`` (the 64-wide plan's
-    codegen-compile blowup documented there applies equally here).
+    with ``simhash`` a non-negative BIGINT of ``bits`` bits. Narrow
+    shape: explode tokens → one hashed long per row → explode over the
+    bit positions → one conditional-sum aggregate keyed on (id, bit) →
+    bit_or of per-bit masks. A ``bits``-wide conditional-sum plan
+    computes the same thing but generates ~``bits``× the Java code, and
+    whole-stage-codegen compile dominated its cold cost (2.2 s cold /
+    0.8 s warm for the narrow plan vs the wide plan's 1.7 s *warm* at
+    sf0.1, identical fingerprints).
 
     ``words_arr``: an already-tokenized (id, ws) RAW word-array frame
     (the plans-layer shared stage) — exploded instead of re-running the
@@ -921,9 +525,12 @@ def winnowing_overlap_pairs_portable(
     words_arr: DataFrame | None = None,
 ) -> DataFrame:
     """Winnowing overlap pairs on the portable hash: (id_a, id_b,
-    n_shared). Same windowed-min plan as ``winnowing_fingerprints`` with
-    ``phash60`` leaves; DuckDB rebuilds the identical fingerprint set with
-    a ROWS BETWEEN CURRENT ROW AND window-1 FOLLOWING frame.
+    n_shared). Hash the k-word shingle at every position with
+    ``phash60``, slide a ``window``-wide frame, keep each frame's minimum
+    (any shared run of ≥ k+window-1 words yields a shared fingerprint —
+    the winnowing coverage property); DuckDB rebuilds the identical
+    fingerprint set with a ROWS BETWEEN CURRENT ROW AND window-1
+    FOLLOWING frame.
 
     ``words_arr``: an already-tokenized (id, ws) RAW word-array frame
     (the plans-layer shared stage) — posexploded instead of re-running

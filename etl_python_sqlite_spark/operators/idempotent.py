@@ -16,11 +16,11 @@ engine's genuinely custom machinery (SURVEY.md §4.2):
 
 Scale notes:
 
-* The anti-join shuffles on the natural key. At 100 TB use
-  ``idempotent_append_bucketed`` — the target lives in a catalog table
-  bucketed by the key, so the anti-join consumes the bucket layout with
-  NO exchange over the accumulated table (asserted in
-  tests/test_idempotent.py); alternatively a small batch side broadcasts.
+* The anti-join shuffles the whole accumulated target on the natural key
+  for every batch. At warehouse scale that exchange, not the batch,
+  would dominate; the remedy is a target bucketed by the key, whose
+  scan the anti-join consumes with no exchange over it (the layout
+  ``operators/cache.bucketed_stage_table`` builds for query stages).
 * Contiguous id assignment needs a global order: a dimension's new keys
   (small by definition) get theirs on the driver, a per-batch fact append
   (bounded) in a single-task window. That is the reference's
@@ -60,7 +60,6 @@ class AppendResult:
     attempted: int
     inserted_new: int
     ignored_duplicates: int
-    target_path: str
     #: (group, inserted_new, ignored_duplicates) rows, populated only when
     #: ``group_col`` was given: one collect of O(#groups) rows, which also
     #: yields the totals above, so the accounting costs one action
@@ -105,26 +104,6 @@ def idempotent_append(
         spark.read.schema(schema).parquet(target_path) if _exists(target_path) else None
     )
 
-    def _write(out: DataFrame) -> None:
-        out.write.mode("append").parquet(target_path)
-
-    return _append_with_accounting(
-        batch, keys, existing, schema, id_col, group_col, _write, target_path
-    )
-
-
-def _append_with_accounting(
-    batch: DataFrame,
-    keys: list[str],
-    existing: DataFrame | None,
-    schema: T.StructType,
-    id_col: str | None,
-    group_col: str | None,
-    write_fn,
-    target_label: str,
-) -> AppendResult:
-    """Shared INSERT OR IGNORE core: in-batch dedup → anti-join vs target
-    keys → per-group accounting → id assignment → schema-cast write."""
     if group_col is None:
         deduped = batch.dropDuplicates(keys)
     else:
@@ -172,9 +151,8 @@ def _append_with_accounting(
             out = new_rows
             if id_col is not None:
                 out = assign_ids(out, id_col, start=id_start, order_by=[*group, *keys])
-            write_fn(
-                out.select([F.col(f.name).cast(f.dataType) for f in schema.fields])
-            )
+            cast = [F.col(f.name).cast(f.dataType) for f in schema.fields]
+            out.select(cast).write.mode("append").parquet(target_path)
     finally:
         new_rows.unpersist()
 
@@ -182,7 +160,6 @@ def _append_with_accounting(
         attempted=attempted,
         inserted_new=inserted,
         ignored_duplicates=attempted - inserted,
-        target_path=target_label,
         per_group=per_group,
     )
 
@@ -243,40 +220,3 @@ def upsert_dimension(
         )
     return local_frame(spark, [(i, k) for k, i in ids.items()] + new_rows, dim_schema)
 
-
-def idempotent_append_bucketed(
-    spark: SparkSession,
-    batch: DataFrame,
-    table_name: str,
-    keys: list[str],
-    buckets: int = 16,
-    target_schema: T.StructType | None = None,
-    id_col: str | None = None,
-    group_col: str | None = None,
-) -> AppendResult:
-    """Scale-path INSERT OR IGNORE onto a catalog table bucketed by the
-    natural key — full drop-in for :func:`idempotent_append` (same id
-    assignment, schema cast and per-group accounting).
-
-    The reference's UNIQUE-constraint dedup becomes an anti-join whose
-    TARGET side is pre-hashed into buckets: the join consumes the bucket
-    layout directly (no exchange over the accumulated table — only the
-    small new batch shuffles; bucketing on ``keys[0]`` satisfies the
-    ClusteredDistribution of the full-key join because it is a subset of
-    the join keys). This is the variant that holds at 100 TB, where
-    re-shuffling the target per batch would dominate.
-    """
-    schema = target_schema or batch.drop(*([group_col] if group_col else [])).schema
-    existing = spark.table(table_name) if spark.catalog.tableExists(table_name) else None
-
-    def _write(out: DataFrame) -> None:
-        (
-            out.write.mode("append")
-            .bucketBy(buckets, keys[0])
-            .sortBy(keys[0])
-            .saveAsTable(table_name)
-        )
-
-    return _append_with_accounting(
-        batch, keys, existing, schema, id_col, group_col, _write, table_name
-    )

@@ -282,14 +282,6 @@ class _BitReader:
             v = (v << 1) | self.read_bit()
         return v
 
-    def align_after_rst(self) -> None:
-        """Consume the RSTn marker we just hit and byte-align."""
-        # marker position: self.pos points AT the FF of the marker
-        self.pos += 2
-        self.acc = 0
-        self.nbits = 0
-        self.marker = None
-
 
 class _MarkerHit(Exception):
     """Internal: the bit reader ran into a non-stuffing marker."""

@@ -1,6 +1,5 @@
-"""Physical-layout operators: Z-order clustering and small-file
-compaction — the two knobs that decide how much data a 100 TB scan can
-SKIP.
+"""Physical layout: Z-order clustering — the knob that decides how much
+data a multi-dimensional scan can SKIP.
 
 Z-ordering (Morton curve) interleaves the bits of several columns'
 normalized ranks so that sorting by the single z-value co-locates rows
@@ -13,73 +12,12 @@ Iceberg sort orders) re-expressed as plain DataFrame ops: rank → bit
 interleave → sort — no engine extension needed, and the z-value is exact
 integer arithmetic, portable to any engine (the contract query's DuckDB
 twin replays it bit-for-bit).
-
-Compaction rewrites a directory of many small files into size-targeted
-files: small files are the silent scan killer at warehouse scale (one
-scheduler task + one footer fetch each). ``repartitionByRange`` on the
-requested sort keys keeps the rewrite clustered, so compaction and
-clustering compose.
 """
 
 from __future__ import annotations
 
-import math
-from pathlib import Path
-
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-
-def _bucket_expr(col: Column, bounds: list[float], lo: int = 0, hi: int | None = None) -> Column:
-    """Balanced binary-search CASE tree: number of ``bounds`` ≤ col, i.e.
-    the rank bucket of ``col`` against sorted cut points. Depth is
-    log2(len(bounds)) comparisons per row, all JVM codegen — no window,
-    no shuffle, no higher-order-function fold."""
-    if hi is None:
-        hi = len(bounds)
-    if lo == hi:
-        return F.lit(lo)
-    mid = (lo + hi) // 2
-    return (
-        F.when(col >= F.lit(bounds[mid]), _bucket_expr(col, bounds, mid + 1, hi))
-        .otherwise(_bucket_expr(col, bounds, lo, mid))
-    )
-
-
-def zorder_ranks_approx(
-    df: DataFrame,
-    cols: list[str],
-    bits: int = 8,
-    relative_error: float = 0.001,
-) -> DataFrame:
-    """Scale-path rank assignment: per-column approx-quantile cut points
-    (one distributed Greenwald-Khanna pass, tiny driver result) + a
-    broadcast-free binary-search bucket expression per row. No window
-    sorts — the exact-rank form in :func:`zorder_ranks` funnels every row
-    through ONE partition per column, which is the wrong shape past a few
-    million rows; this form is a full-scan quantile sketch plus a
-    per-row O(bits) expression, both embarrassingly parallel."""
-    n_buckets = 1 << bits
-    probs = [i / n_buckets for i in range(1, n_buckets)]
-    # ONE multi-column sketch pass — approxQuantile computes every
-    # column's sketch in a single scan (per-column calls would re-scan
-    # the full input once per z-order dimension)
-    all_bounds = df.select(
-        *[F.col(c).cast("double").alias(c) for c in cols]
-    ).approxQuantile(cols, probs, relative_error)
-    out = df
-    for c, bounds in zip(cols, all_bounds):
-        # dedupe (skewed columns repeat cut points) while keeping order
-        uniq: list[float] = []
-        for b in bounds:
-            if not uniq or b > uniq[-1]:
-                uniq.append(b)
-        out = out.withColumn(
-            f"_r_{c}",
-            _bucket_expr(F.col(c).cast("double"), uniq).cast("long"),
-        )
-    z = zvalue_expr([f"_r_{c}" for c in cols], bits)
-    return out.withColumn("zvalue", F.expr(z).cast("long"))
 
 
 def zvalue_expr(cols: list[str], bits: int = 16) -> str:
@@ -133,85 +71,3 @@ def zorder_ranks(
     return sel.withColumn("zvalue", F.expr(z).cast("long")).drop(
         *[f"_rn_{c}" for c in cols]
     )
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str | Path,
-    cols: list[str],
-    bits: int = 8,
-    files: int = 8,
-) -> None:
-    """Write parquet clustered on the Morton curve: range-partition by
-    z-value into ``files`` buckets, sort within partitions, write. Every
-    output file then covers a narrow hyper-rectangle of the column
-    space (see tests: per-file min/max ranges shrink on ALL z columns
-    vs an unsorted write — that shrink IS the data-skipping win).
-
-    Uses the approx-quantile rank path (no single-partition window sort)
-    — LAYOUT needs bucket boundaries, not exact ranks, so the sketch is
-    the right tool at any scale; :func:`zorder_ranks` stays exact for the
-    engine-replayable contract query."""
-    zdf = zorder_ranks_approx(df, cols, bits)
-    (
-        zdf.repartitionByRange(files, "zvalue")
-        .sortWithinPartitions("zvalue")
-        .drop("zvalue", *[f"_r_{c}" for c in cols])
-        .write.mode("overwrite")
-        .parquet(str(path))
-    )
-
-
-def compact_files(
-    spark,
-    src: str | Path,
-    dst: str | Path,
-    target_mb: int = 128,
-    sort_cols: list[str] | None = None,
-) -> int:
-    """Rewrite a (possibly many-small-files) parquet directory into
-    ~``target_mb`` files; returns the output file count. Sizing uses the
-    SOURCE byte size (compressed) as the estimate — the standard
-    compaction heuristic. With ``sort_cols``, range-partitions on them
-    so compaction preserves/establishes clustering.
-
-    Sizing and output counting go through the Hadoop FileSystem API, so
-    any URI scheme the cluster's Hadoop conf resolves (s3a://, hdfs://,
-    file:/) works — not just the local filesystem."""
-    total = _fs_parquet_bytes(spark, str(src))
-    if total == 0:
-        return 0  # nothing to compact — empty/absent source directory
-    n_files = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(str(src))
-    if sort_cols:
-        df = df.repartitionByRange(n_files, *sort_cols).sortWithinPartitions(
-            *sort_cols
-        )
-    else:
-        df = df.repartition(n_files)
-    df.write.mode("overwrite").parquet(str(dst))
-    return _fs_parquet_count(spark, str(dst))
-
-
-def _fs_list_parquet(spark, uri: str):
-    """Yield (path, length) for every ``*.parquet`` under ``uri`` via the
-    Hadoop FileSystem API (scheme-aware: local, hdfs://, s3a://…)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(uri)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return
-    it = fs.listFiles(jpath, True)
-    while it.hasNext():
-        st = it.next()
-        name = st.getPath().getName()
-        if name.endswith(".parquet"):
-            yield st.getPath().toString(), st.getLen()
-
-
-def _fs_parquet_bytes(spark, uri: str) -> int:
-    return sum(length for _, length in _fs_list_parquet(spark, uri))
-
-
-def _fs_parquet_count(spark, uri: str) -> int:
-    return sum(1 for _ in _fs_list_parquet(spark, uri))

@@ -15,7 +15,7 @@ container-friendly formats:
   baseline codec in ``operators/jpeg.py``, encoder + decoder, 4:4:4 /
   4:2:0 / grayscale / restart markers) parsed with ``struct`` + numpy —
   full pixel arrays, not just headers — plus matching encoders for
-  round-trips and a real nearest-neighbor resize.
+  round-trips.
 * audio: WAV PCM via the stdlib ``wave`` module — sample rate, channels,
   frames, and the decoded sample matrix; MP3 gets a real FRAME-HEADER
   walk (``mp3_frame_metadata``: MPEG-1/2 Layer I–III header tables,
@@ -70,7 +70,6 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from etl_python_sqlite_spark.operators.jpeg import (  # noqa: F401  re-export
@@ -97,16 +96,6 @@ MEDIA_SCHEMA = T.StructType(
             ),
             True,
         ),
-    ]
-)
-
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("modality", T.StringType(), False),
-        T.StructField("n_bytes", T.LongType(), False),
-        T.StructField("byte_entropy", T.DoubleType(), True),
-        T.StructField("histogram", T.ArrayType(T.DoubleType()), True),
     ]
 )
 
@@ -527,59 +516,6 @@ def _lzw_decode(data: bytes, min_code_size: int, max_pixels: int) -> list[int]:
     return out
 
 
-def encode_gif(pixels: "np.ndarray") -> bytes:
-    """(h, w, 3) uint8 RGB → valid GIF87a. The palette is the image's
-    distinct colors (≤256 required); pixel data uses the classic
-    "uncompressed LZW" trick — every index emitted as a literal code
-    with a CLEAR before each dictionary overflow — which every decoder
-    accepts."""
-    h, w = pixels.shape[:2]
-    px = np.ascontiguousarray(pixels, dtype=np.uint8).reshape(-1, 3)
-    colors, inverse = np.unique(px, axis=0, return_inverse=True)
-    if len(colors) > 256:
-        raise ValueError("encode_gif: more than 256 distinct colors")
-    cbits = max(2, int(np.ceil(np.log2(max(len(colors), 2)))))
-    n_pal = 1 << cbits
-    pal = np.zeros((n_pal, 3), dtype=np.uint8)
-    pal[: len(colors)] = colors
-    mcs = cbits
-    clear, eoi = 1 << mcs, (1 << mcs) + 1
-    width = mcs + 1
-    codes: list[tuple[int, int]] = [(clear, width)]
-    next_code = eoi + 1
-    for i in inverse.tolist():
-        codes.append((int(i), width))
-        # emitting a literal still grows the decoder's dict: reset before
-        # the decoder's next_code reaches the current width's capacity
-        next_code += 1
-        if next_code == (1 << width):
-            codes.append((clear, width))
-            next_code = eoi + 1
-    codes.append((eoi, width))
-    acc = nbits = 0
-    stream = bytearray()
-    for code, cw in codes:
-        acc |= code << nbits
-        nbits += cw
-        while nbits >= 8:
-            stream.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-    if nbits:
-        stream.append(acc & 0xFF)
-    out = bytearray(b"GIF87a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | ((cbits - 1) & 0x07), 0, 0)
-    out += pal.tobytes()
-    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
-    out.append(mcs)
-    for i in range(0, len(stream), 255):
-        chunk = stream[i : i + 255]
-        out.append(len(chunk))
-        out += chunk
-    out += b"\x00\x3b"
-    return bytes(out)
-
-
 def decode_audio(content: bytes) -> DecodedAudio:
     """Decode WAV PCM via the stdlib ``wave`` module — real samples, not a
     header peek. Compressed codecs (MP3/AAC/OGG) still raise."""
@@ -726,71 +662,6 @@ def encode_wav(
     return buf.getvalue()
 
 
-def _byte_features(content: bytes | None) -> tuple[int, float | None, list[float]]:
-    """Deterministic fake 'decode': byte histogram (16 buckets, L1-normed)
-    + Shannon entropy. Stands in for a real feature extractor with the
-    same per-row contract (bytes → fixed-width vector)."""
-    import math
-
-    if content is None:
-        return 0, None, [0.0] * 16
-    n = len(content)
-    hist = [0] * 16
-    for b in content:
-        hist[b >> 4] += 1
-    probs = [h / n for h in hist] if n else [0.0] * 16
-    entropy = -sum(p * math.log2(p) for p in probs if p > 0) if n else None
-    return n, entropy, probs
-
-
-def extract_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads.
-
-    ``mapInPandas`` keeps whole record batches in flight (vs row-at-a-time
-    UDF); output schema is fixed so downstream plans stay columnar.
-    """
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = [_byte_features(c) for c in pdf["content"]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "modality": pdf["modality"],
-                    "n_bytes": [f[0] for f in feats],
-                    "byte_entropy": [f[1] for f in feats],
-                    "histogram": [f[2] for f in feats],
-                }
-            )
-
-    return media.select("media_id", "modality", "content").mapInPandas(
-        _extract, schema=FEATURE_SCHEMA
-    )
-
-
-def frame_sample_plan(
-    media: DataFrame,
-    every_ms: int = 1000,
-) -> DataFrame:
-    """Plan-level frame sampling for video rows: explode the timeline into
-    per-frame tasks (timestamps only — the actual frame grab lives behind
-    ``decode_image``). Demonstrates fan-out partitioning: one row per
-    sampled frame, repartitionable downstream."""
-    return (
-        media.filter(F.col("modality") == "video")
-        .select(
-            "media_id",
-            F.explode(
-                F.sequence(
-                    F.lit(0),
-                    F.greatest(F.coalesce(F.col("meta.duration_ms"), F.lit(0)) - 1, F.lit(0)),
-                    F.lit(every_ms),
-                )
-            ).alias("frame_ts_ms"),
-        )
-    )
-
-
 DECODED_META_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -882,63 +753,8 @@ def decode_media_metadata(media: DataFrame) -> DataFrame:
     )
 
 
-def resize_images(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Real nearest-neighbor resize for decodable image rows, re-encoded
-    as PPM; non-image rows pass through untouched. Output schema ==
-    input schema, so resize stages compose.
-
-    Per-row failure contract (module docstring): an image row whose blob
-    can't be decoded passes through UNCHANGED instead of failing the
-    stage — one corrupt blob must never abort a corpus-wide resize; the
-    metadata path (``decode_media_metadata``) is where failures are
-    surfaced as data."""
-
-    def _resize_px(img: DecodedImage) -> "np.ndarray":
-        ys = np.arange(height) * img.height // height
-        xs = np.arange(width) * img.width // width
-        return img.pixels[np.ix_(ys, xs)]
-
-    def _resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            contents, mimes, metas = [], [], []
-            for modality, content, mime, meta in zip(
-                pdf["modality"], pdf["content"], pdf["mime"], pdf["meta"]
-            ):
-                if modality != "image":
-                    contents.append(content)
-                    mimes.append(mime)
-                    metas.append(meta)
-                    continue
-                try:
-                    img = decode_image(
-                        bytes(content) if content is not None else b""
-                    )
-                except (ValueError, NotImplementedError, struct.error):
-                    # undecodable blob: route through untouched (never
-                    # fail the stage on one corrupt row)
-                    contents.append(content)
-                    mimes.append(mime)
-                    metas.append(meta)
-                    continue
-                contents.append(encode_ppm(_resize_px(img)))
-                mimes.append("image/x-portable-pixmap")
-                if meta is not None:
-                    meta = dict(meta)
-                    meta["width"], meta["height"] = width, height
-                metas.append(meta)
-            pdf["content"], pdf["mime"], pdf["meta"] = contents, mimes, metas
-            yield pdf
-
-    return media.mapInPandas(_resize, schema=media.schema)
-
-
-#: historical name from the stub era — the implementation is real now
-resize_stub = resize_images
-
-
 # ---------------------------------------------------------------------------
-# video: concatenated-BMP container ("BMV") + real frame sampling
+# video: concatenated-BMP container ("BMV")
 # ---------------------------------------------------------------------------
 
 def encode_bmv(frames: "list[np.ndarray]") -> bytes:
@@ -966,67 +782,3 @@ def split_bmv_frames(content: bytes) -> "list[bytes]":
         frames.append(content[off : off + size])
         off += size
     return frames
-
-
-def sample_video_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
-    """REAL frame sampling over video rows: split the concatenated-BMP
-    container, decode every ``every_n``-th frame, return one row per
-    sampled frame with dimensions and an exact pixel checksum.
-
-    Scale: ``mapInPandas`` over (media_id, content) only — column
-    pruning keeps other blobs off the wire; the split walks headers, so
-    only SAMPLED frames pay the pixel decode. Fan-out is rows→frames,
-    so a repartition on media_id upstream spreads decode across
-    executors; per-row failures route to ``decode_ok=false`` like the
-    metadata path (a corrupt frame never fails the stage).
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField("media_id", T.LongType(), False),
-            T.StructField("frame_idx", T.IntegerType(), False),
-            T.StructField("width", T.IntegerType(), True),
-            T.StructField("height", T.IntegerType(), True),
-            T.StructField("pixel_sum", T.LongType(), True),
-            T.StructField("decode_ok", T.BooleanType(), False),
-            T.StructField("decode_error", T.StringType(), True),
-        ]
-    )
-
-    def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, content in zip(pdf["media_id"], pdf["content"]):
-                try:
-                    frames = split_bmv_frames(
-                        bytes(content) if content is not None else b""
-                    )
-                except (ValueError, struct.error) as ex:
-                    rows.append((int(media_id), -1, None, None, None, False, str(ex)))
-                    continue
-                for idx in range(0, len(frames), every_n):
-                    try:
-                        img = _decode_bmp(frames[idx])
-                        rows.append(
-                            (
-                                int(media_id),
-                                idx,
-                                img.width,
-                                img.height,
-                                int(img.pixels.astype(np.int64).sum()),
-                                True,
-                                None,
-                            )
-                        )
-                    except (ValueError, NotImplementedError, struct.error) as ex:
-                        rows.append((int(media_id), idx, None, None, None, False, str(ex)))
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "frame_idx", "width", "height",
-                    "pixel_sum", "decode_ok", "decode_error",
-                ],
-            )
-
-    return media.filter(F.col("modality") == "video").select(
-        "media_id", "content"
-    ).mapInPandas(_sample, schema=out_schema)

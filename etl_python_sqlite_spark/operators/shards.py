@@ -1,14 +1,12 @@
-"""Training-shard writer: deterministic, size-bounded, globally ordered
-output layout for packed training data.
+"""Training-shard writer: deterministic, globally ordered WebDataset tar
+shards for packed training data.
 
-A training job wants shards that are (a) size-bounded so loader workers
-balance, (b) globally range-ordered so shard N's content is a stable
-function of the data (reshuffling the cluster must not reshuffle the
-curriculum), and (c) many-per-executor so stragglers rebalance. That is
-``repartitionByRange`` (one range-partitioned shuffle — sampled bounds,
-no driver collect) + ``sortWithinPartitions`` (merge-sort inside each
-shard, no extra exchange) + ``maxRecordsPerFile`` (splits oversized
-partitions at write time without a coalesce barrier).
+A training job wants shards that are globally range-ordered so shard N's
+content is a stable function of the data (reshuffling the cluster must
+not reshuffle the curriculum), and many-per-executor so stragglers
+rebalance. That is ``repartitionByRange`` (one range-partitioned
+shuffle — sampled bounds, no driver collect) + ``sortWithinPartitions``
+(merge-sort inside each shard, no extra exchange).
 """
 
 from __future__ import annotations
@@ -44,60 +42,6 @@ def _with_shuffle_key(
         parts.append(F.when(col.isNull(), "1").otherwise("0"))
         parts.append(F.coalesce(col.cast("string"), F.lit("")))
     return df.withColumn(_SHUF, phash60(F.concat_ws("\x1f", *parts)))
-
-
-def write_training_shards(
-    df: DataFrame,
-    path: str | Path,
-    order_cols: Sequence[str],
-    num_shards: int,
-    max_records_per_file: int = 1_000_000,
-    fmt: str = "parquet",
-    shuffle_salt: str | None = None,
-) -> None:
-    """Write ``df`` as ``num_shards`` range-ordered shards at ``path``.
-
-    ``order_cols`` defines the global order (e.g. ``["source",
-    "seq_id"]`` from the sequence-packing pass); rows within each shard
-    file are sorted by it, and shard i's key range precedes shard
-    i+1's. ``num_shards`` sizes the range shuffle — pick
-    total_rows / records_per_shard at the caller (a count you usually
-    already have from the packing audit; never computed here to keep
-    this a single-job write).
-
-    ``shuffle_salt`` switches the global order from curriculum order to
-    a SEEDED PSEUDO-RANDOM permutation: rows are range-partitioned and
-    sorted by ``phash60(salt || order_cols)`` instead of the raw keys
-    (``order_cols`` stays the tiebreak so the layout is total). Same
-    data + same salt + same input layout ⇒ byte-stable shard
-    assignment on rerun; a new salt ⇒ an independent permutation. The
-    PERMUTATION (the global sort order) is layout-independent, but the
-    shard BOUNDARIES are not: ``repartitionByRange`` samples the
-    input's actual partition splits to place range boundaries, so a
-    different parallelism / ``maxPartitionBytes`` layout can shift
-    boundary rows between adjacent shards. Callers that need
-    cross-layout byte-stable shard files should derive explicit
-    boundaries from the key domain instead (e.g. fixed phash60 value
-    ranges) — not offered here because training runs replay on the
-    same materialized input. This is
-    what a training run usually wants — decorrelated shards without a
-    nondeterministic ``rand()`` that would break replay.
-    """
-    if shuffle_salt is not None:
-        df = _with_shuffle_key(df, order_cols, shuffle_salt)
-        sort_cols = [_SHUF, *order_cols]
-    else:
-        sort_cols = list(order_cols)
-    out = df.repartitionByRange(num_shards, *sort_cols).sortWithinPartitions(
-        *sort_cols
-    )
-    if shuffle_salt is not None:
-        out = out.drop(_SHUF)
-    writer = (
-        out.write.mode("overwrite")
-        .option("maxRecordsPerFile", max_records_per_file)
-    )
-    writer.format(fmt).save(str(path))
 
 
 def write_webdataset_shards(
@@ -137,16 +81,17 @@ def write_webdataset_shards(
     plain ``tarfile`` — every executor AND the driver must see the same
     directory at the same POSIX path (local mode, NFS/Lustre mounts, a
     FUSE-mounted object store). On a deployment without a shared mount
-    (raw HDFS/S3 URIs) this writer does not apply — pack with
-    :func:`write_training_shards` (parquet shards go through Spark's
-    own committers) and materialize tars at the loader. The driver-side
+    (raw HDFS/S3 URIs) this writer does not apply — write parquet
+    shards through Spark's own committers and materialize tars at the
+    loader. The driver-side
     rename + sweep go through the Hadoop FileSystem API (scheme-aware,
     the repo rule), so any mounted scheme the driver resolves works.
 
-    ``shuffle_salt``: as in :func:`write_training_shards` — shard
-    assignment and member order become a seeded pseudo-random
-    permutation (``phash60(salt || key)``; key tiebreak) instead of key
-    order. Byte-identical replays still hold for the same salt.
+    ``shuffle_salt``: shard assignment and member order become a seeded
+    pseudo-random permutation (``phash60(salt || key)``; key tiebreak)
+    instead of key order — decorrelated shards without a
+    nondeterministic ``rand()`` that would break replay. Byte-identical
+    replays still hold for the same salt.
     """
     import tarfile
     import uuid

@@ -12,7 +12,7 @@ Scale design:
   ``orderBy().limit(k)`` which Spark executes as per-partition top-k +
   driver merge (TakeOrderedAndProject) — no full sort, no shuffle of the
   corpus.
-* ANN via sign-LSH: 16 deterministic hyperplanes (xxhash-derived
+* ANN via sign-LSH: 16 deterministic hyperplanes (integer-hash-derived
   pseudo-random components) → 16-bit bucket; queries probe their bucket
   (and optionally neighboring buckets by Hamming distance). The bucket
   assignment is one narrow pass and the per-bucket search touches
@@ -72,32 +72,6 @@ def cosine_topk(
     return scored.orderBy(F.desc("cos_sim"), F.asc(id_col)).limit(k)
 
 
-def knn_join_brute(
-    df: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Each vector's k nearest neighbors (cosine), excluding itself.
-
-    O(n²) pair scores + per-id window top-k — bounded inputs only; the
-    scalable variant is ``ann_topk_lsh`` / IVF below.
-    """
-    a = df.select(F.col(id_col).alias("id_a"), _as_double_array(vec_col).alias("va"))
-    b = df.select(F.col(id_col).alias("id_b"), _as_double_array(vec_col).alias("vb"))
-    pairs = a.join(b, F.col("id_a") != F.col("id_b")).select(
-        "id_a",
-        "id_b",
-        F.round(cosine(F.col("va"), F.col("vb")), 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("id_a").orderBy(F.desc("cos_sim"), F.asc("id_b"))
-    return (
-        pairs.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("id_a", "id_b", "cos_sim", "rk")
-    )
-
-
 # ---------------------------------------------------------------------------
 # sign-LSH ANN
 # ---------------------------------------------------------------------------
@@ -115,18 +89,6 @@ def _hyperplane(dim: int, plane: int) -> list[float]:
     return comps
 
 
-def lsh_bucket(vec: Column, dim: int, planes: int = 16) -> Column:
-    """Sign-LSH bucket id: bit i = sign(vec · hyperplane_i)."""
-    acc = F.lit(0).cast("long")
-    for i in range(planes):
-        h = F.array(*[F.lit(c) for c in _hyperplane(dim, i + 1)])
-        bit = F.when(_dot(vec, h) >= 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        )
-        acc = acc.bitwiseOR(bit)
-    return acc
-
-
 def _hyperplane_matrix(dim: int, planes: int):
     """dim × planes hyperplane matrix (numpy) for the vectorized path."""
     return np.array([_hyperplane(dim, i + 1) for i in range(planes)]).T
@@ -135,9 +97,7 @@ def _hyperplane_matrix(dim: int, planes: int):
 def lsh_bucket_vectorized(vec_col: str, dim: int, planes: int = 8):
     """Arrow-batched sign-LSH bucket assignment: one numpy matmul per
     batch instead of ``planes`` interpreted fold expressions per row —
-    measured ~3× faster end-to-end with identical buckets. The slow-path
-    pure-expression twin (``lsh_bucket``) remains for environments where
-    the Python worker is unwanted."""
+    measured ~3× faster end-to-end with identical buckets."""
     from pyspark.sql.functions import pandas_udf
 
     H = _hyperplane_matrix(dim, planes)
@@ -211,14 +171,6 @@ def lsh_probe_buckets_vectorized(
         return pd.Series(list(out))
 
     return _probes(_as_double_array(vec_col))
-
-
-def _bucket_of(vec: list[float], dim: int, planes: int) -> int:
-    """Driver-side bucket of one vector — numpy, same H as the UDF so a
-    query never disagrees with the data-side assignment at a boundary."""
-    H = _hyperplane_matrix(dim, planes)
-    bits = (np.asarray(vec, dtype=float) @ H) >= 0
-    return int((bits * (1 << np.arange(planes))).sum())
 
 
 def _probe_buckets_of(
@@ -656,67 +608,15 @@ def ann_knn_join_lsh(
     )
 
 
-def label_centroid_quality(
-    embs: DataFrame,
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Per-label embedding cluster quality: centroid (element-wise mean)
-    and each member's cosine to its own centroid, summarized per label as
-    (n_members, mean/min cosine-to-centroid). The standard audit before
-    trusting class labels for curriculum or dedup grouping — a label
-    whose members barely point at their centroid is noise.
-
-    Scale shape: the centroid is a posexplode → groupBy(label, pos)
-    average (codegen, map-side combined; |labels|·dim rows out — KB-sized
-    for any real label space), reassembled with sort_array(collect_list)
-    and BROADCAST back; member cosines are then one map-side pass over
-    the embeddings scan, and the summary is a |labels|-row aggregate.
-    Nothing quadratic, nothing driver-side.
-    """
-    v = _as_double_array(vec_col)
-    exploded = embs.select(
-        F.col(label_col).alias("label"), F.posexplode(v).alias("pos", "x")
-    )
-    centroids = (
-        exploded.groupBy("label", "pos")
-        .agg(F.avg("x").alias("c"))
-        .groupBy("label")
-        .agg(F.sort_array(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-        .select("label", F.col("pc.c").alias("centroid"))
-    )
-    scored = (
-        embs.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(label_col).alias("label"),
-            v.alias("v"),
-        )
-        .join(F.broadcast(centroids), "label")
-        .select(
-            "label",
-            cosine(F.col("v"), F.col("centroid")).alias("cos_to_centroid"),
-        )
-    )
-    return (
-        scored.groupBy("label")
-        .agg(
-            F.count("*").alias("n_members"),
-            F.round(F.avg("cos_to_centroid"), 6).alias("mean_cos"),
-            F.round(F.min("cos_to_centroid"), 6).alias("min_cos"),
-        )
-        .orderBy("label")
-    )
-
-
 def label_centroid_quality_exactable(
     embs: DataFrame,
     vec_col: str = "embedding",
     label_col: str = "label",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Cross-engine-exact twin of :func:`label_centroid_quality`, built on
-    two identities that remove every order-dependent float reduction:
+    """Per-label embedding quality — each member's cosine to its label
+    centroid — made cross-engine exact by two identities that remove
+    every order-dependent float reduction:
 
     * cosine is invariant to positive scaling of either argument, so the
       cosine to the centroid (mean vector) equals the cosine to the
@@ -782,7 +682,7 @@ def _lloyd_refine_centroids(
     result is identical for any partitioning/merge order (a float mean
     would depend on partial-sum order). Cosine assignment only needs the
     centroid DIRECTION, and the quantized sum is a scale multiple of the
-    quantized mean — the same trick as ``label_centroid_quality``.
+    quantized mean — the same trick as ``label_centroid_quality_exactable``.
     Empty clusters keep their previous centroid. The per-cluster sums
     are k×dim rows — trivially collectable at any corpus size."""
     sums = (
@@ -812,45 +712,6 @@ def _unit(vecs: list[tuple[int, list[float]]]) -> list[tuple[int, list[float]]]:
         n = float(np.linalg.norm(v))
         out.append((cid, [x / n for x in v] if n > 0 else v))
     return out
-
-
-def semantic_dedup_pairs(
-    df: DataFrame,
-    n_clusters: int = 16,
-    threshold: float = 0.9,
-    refine_iters: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
-    web-scale through semantic deduplication", 2023): cluster the
-    embedding space, then search for near-duplicate pairs ONLY within
-    each cluster — O(n·cluster_size) exact pair work instead of O(n²).
-    Returns (cluster_id, id_a, id_b, cos_sim) with id_a < id_b and
-    cos_sim ≥ threshold (rounded to 6dp); the keep-lowest-id rule makes
-    ``id_b`` the drop candidate.
-
-    Determinism without RNG state: the codebook seeds from the
-    ``n_clusters`` lowest-id vectors, Lloyd refinement uses
-    order-independent integer-quantized sums, and assignment is argmax
-    cosine against UNIT-normalized centroids (so dot argmax ≡ cosine
-    argmax and a big cluster's unnormalized sum cannot attract
-    everything).
-
-    Scale shape: assignment is one Arrow-batched matmul per batch
-    against a k-row codebook (broadcast-sized); per-cluster pair search
-    is a numpy matmul inside ``applyInPandas`` — the same
-    verified-pairs-only output contract as ``embedding_near_dup_pairs``.
-    At warehouse scale the cluster column doubles as the partition key
-    (write PARTITIONED BY cluster_id; each cluster's pair scan is an
-    independent partition-pruned job, and oversized clusters would be
-    sub-bucketed by sign-LSH within the cluster — composition with
-    ``lsh_buckets_multitable``, not a new mechanism).
-    """
-    assigned = semantic_assign(
-        df, n_clusters, refine_iters, vec_col, id_col
-    )
-    return semantic_dedup_pairs_from_assignment(assigned, threshold, id_col)
 
 
 def semantic_centroids(
@@ -946,8 +807,20 @@ def farthest_point_seeds(
 def semantic_dedup_pairs_from_assignment(
     assigned: DataFrame, threshold: float = 0.9, id_col: str = "vec_id"
 ) -> DataFrame:
-    """Within-cluster exhaustive pair search over a precomputed
-    ``semantic_assign`` frame (see :func:`semantic_dedup_pairs`)."""
+    """SemDeDup (Abbas et al., "SemDeDup: Data-efficient learning at
+    web-scale through semantic deduplication", 2023) over a precomputed
+    ``semantic_assign`` frame: search for near-duplicate pairs ONLY
+    within each cluster — O(n·cluster_size) exact pair work instead of
+    O(n²). Returns (cluster_id, id_a, id_b, cos_sim) with id_a < id_b and
+    cos_sim ≥ threshold (rounded to 6dp); the keep-lowest-id rule makes
+    ``id_b`` the drop candidate.
+
+    Scale shape: the per-cluster pair search is a numpy matmul inside
+    ``applyInPandas`` — the same verified-pairs-only output contract as
+    ``embedding_near_dup_pairs``. At warehouse scale the cluster column
+    doubles as the partition key (each cluster's pair scan is an
+    independent partition-pruned job; oversized clusters would be
+    sub-bucketed by sign-LSH within the cluster)."""
     thr = float(threshold)
 
     def _cluster_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -982,11 +855,6 @@ def semantic_dedup_pairs_from_assignment(
             schema="cluster_id int, id_a long, id_b long, cos_sim double",
         )
     )
-
-
-def semantic_dedup_drops(pairs: DataFrame) -> DataFrame:
-    """Drop set under keep-lowest-id: every id that appears as ``id_b``."""
-    return pairs.select(F.col("id_b").alias("drop_id")).distinct()
 
 
 # ---------------------------------------------------------------------------
@@ -1044,39 +912,4 @@ def semantic_contamination_pairs_from_assignment(
             _cluster_pairs,
             schema="corpus_id long, bench_id long, cos_sim double",
         )
-    )
-
-
-def semantic_contamination_pairs(
-    corpus: DataFrame,
-    benchmark: DataFrame,
-    threshold: float = 0.9,
-    n_clusters: int = 16,
-    refine_iters: int = 1,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Benchmark-vs-corpus embedding contamination scan: ONE
-    ``semantic_assign`` clustering over the tagged union (ids must be
-    disjoint across the two frames — the caller's contract), then the
-    cross-side within-cluster search. Convenience wrapper over
-    :func:`semantic_contamination_pairs_from_assignment` for callers
-    that don't need the assignment for their own audits."""
-    union = corpus.select(
-        F.col(id_col), _as_double_array(vec_col).alias("v"),
-        F.lit(0).alias("side"),
-    ).unionByName(
-        benchmark.select(
-            F.col(id_col), _as_double_array(vec_col).alias("v"),
-            F.lit(1).alias("side"),
-        )
-    )
-    assigned = semantic_assign(
-        union, n_clusters=n_clusters, refine_iters=refine_iters,
-        vec_col="v", id_col=id_col,
-    )
-    sides = union.select(id_col, "side")
-    tagged = assigned.join(sides, id_col)
-    return semantic_contamination_pairs_from_assignment(
-        tagged, threshold, id_col
     )

@@ -178,17 +178,6 @@ def cms_build(
     ).agg(F.sum("w").cast("long").alias("cnt"))
 
 
-def cms_merge(*sketches: DataFrame) -> DataFrame:
-    """Merge CMS frames built with the SAME (depth, width): union + re-sum.
-    Mergeability is the whole point — per-shard/per-day sketches roll up
-    without rescanning raw data; tests pin merge ≡ one-shot."""
-    it = iter(sketches)
-    u = next(it)
-    for s in it:
-        u = u.unionByName(s)
-    return u.groupBy("j", "bucket").agg(F.sum("cnt").alias("cnt"))
-
-
 def cms_estimate(
     sketch: DataFrame,
     keys: DataFrame,

@@ -83,16 +83,3 @@ def salted_broadcast_join(
     )
     out = salted_big.join(F.broadcast(exploded_small), on=[on, "_salt"], how=how)
     return out.drop("_salt")
-
-
-def top_frequent_keys(
-    df: DataFrame, key_cols: list[str], top_n: int = 20
-) -> DataFrame:
-    """Skew diagnostic: the heaviest keys and their row counts — what you
-    run FIRST to decide whether salting is needed."""
-    return (
-        df.groupBy(*key_cols)
-        .agg(F.count("*").alias("n_rows"))
-        .orderBy(F.desc("n_rows"))
-        .limit(top_n)
-    )

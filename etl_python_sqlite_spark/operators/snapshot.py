@@ -65,11 +65,6 @@ def snapshot_diff(
     )
 
 
-def snapshot_diff_summary(diff: DataFrame) -> DataFrame:
-    """Per-status row counts of a ``snapshot_diff`` frame."""
-    return diff.groupBy("status").agg(F.count("*").alias("n_rows"))
-
-
 def scd1_merge(
     target: DataFrame,
     updates: DataFrame,

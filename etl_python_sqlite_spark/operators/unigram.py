@@ -7,10 +7,11 @@ The BPE sibling (``operators/bpe.py``): the reference engine has no
 tokenizer surface at all, so this is EXT surface, and the scale shape is
 identical — unigram training never needs the corpus, it needs the WORD
 HISTOGRAM. The only distributed work is the one explode→groupBy word
-count (``bpe.word_histogram`` is REUSED verbatim — same stage, same
-single map-side-combined shuffle); seeding, EM and pruning then run on
-the bounded vocabulary driver-side, which is how you train a tokenizer
-over 100 TB without 100 TB ever touching the trainer. Applying the
+count (the caller passes ``bpe.word_histogram``'s output — the BPE
+trainer's stage, one map-side-combined shuffle); seeding, EM and
+pruning then run on the bounded vocabulary driver-side, which is how
+you train a tokenizer over 100 TB without 100 TB ever touching the
+trainer. Applying the
 learned vocabulary back to the corpus is an Arrow-batched ``mapInPandas``
 with a per-batch distinct-word cache (same natural-language-skew
 argument as the BPE encoder).
@@ -40,8 +41,6 @@ discipline) and pinned by ``tests/test_unigram.py``:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-from etl_python_sqlite_spark.operators.bpe import word_histogram
 
 
 def _better(
@@ -147,23 +146,6 @@ def unigram_from_histogram(
     return sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
 
 
-def train_unigram(
-    df: DataFrame,
-    vocab_size: int = 512,
-    text_col: str = "text",
-    max_vocab: int = 65536,
-    seed_size: int = 2048,
-    max_piece_len: int = 8,
-    em_rounds: int = 2,
-) -> list[tuple[str, int]]:
-    """ONE distributed word-histogram pass (shared with the BPE
-    trainer), then the driver-side unigram pipeline."""
-    hist = word_histogram(df, text_col, max_vocab)
-    return unigram_from_histogram(
-        hist, vocab_size, seed_size, max_piece_len, em_rounds
-    )
-
-
 def unigram_token_counts(
     df: DataFrame,
     vocab: list[tuple[str, int]],
@@ -215,25 +197,3 @@ def unigram_token_counts(
             )
 
     return df.select(id_col, text_col).mapInPandas(_encode, schema=schema)
-
-
-def save_vocab(
-    spark, vocab: list[tuple[str, int]], path: str
-) -> None:
-    """Persist a trained vocabulary as a tiny parquet table
-    ``(piece, count)`` — the train-once / encode-anywhere split every
-    tokenizer deployment needs. Counts are the model (Viterbi scores
-    derive from them), so the round trip is lossless."""
-    spark.createDataFrame(vocab, "piece string, count long").coalesce(
-        1
-    ).write.mode("overwrite").parquet(path)
-
-
-def load_vocab(spark, path: str) -> list[tuple[str, int]]:
-    """Inverse of :func:`save_vocab`, restoring the canonical
-    (count DESC, piece ASC) order the trainer emits."""
-    rows = spark.read.parquet(path).collect()
-    return sorted(
-        ((r["piece"], int(r["count"])) for r in rows),
-        key=lambda kv: (-kv[1], kv[0]),
-    )

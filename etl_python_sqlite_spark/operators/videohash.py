@@ -16,8 +16,8 @@ fingerprints.
 Scale shape: one Arrow-batched pass splits the container (byte
 arithmetic, only sampled frames pay a pixel decode) and hashes frames;
 the pair stage is DISTINCT (id, hash) → self-equi-join on the hash →
-pair-count aggregate — the ``winnowing_overlap_pairs`` plan over frame
-fingerprints instead of text shingles.
+pair-count aggregate — the ``dedup.winnowing_overlap_pairs_portable``
+plan over frame fingerprints instead of text shingles.
 """
 
 from __future__ import annotations

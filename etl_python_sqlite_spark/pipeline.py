@@ -18,6 +18,10 @@ Tables (warehouse_dir/):
     etl_runs/          run_id, started_at, source_file, valid_count,
                        rejected_count, inserted_new, ignored_duplicates
 
+Each table is one path-parquet layout; the fact's first-writer-wins
+append is ``operators.idempotent.idempotent_append``, whose anti-join
+shuffles the accumulated fact once per batch.
+
 A batch runs as one set-based pass, not a loop over its files. The
 driver lists the files and reads each header with ``csv.reader``; files
 that share a header are scanned and validated together. Each header
@@ -133,14 +137,6 @@ class PipelineConfig:
     data_rejected: str
     warehouse: str
     edad_min: int = 25
-    #: catalog table name for the fact — when set, the warehouse default is
-    #: the BUCKETED layout (``idempotent_append_bucketed``): the accumulated
-    #: fact is bucketed by the natural key, so each batch's anti-join
-    #: consumes the bucket layout with NO exchange over the target. This is
-    #: the 100 TB path; the path-parquet layout (``fact_table=None``) stays
-    #: as the zero-setup default for small warehouses.
-    fact_table: str | None = None
-    fact_buckets: int = 16
     #: which reference script's reject strings to reproduce byte-for-byte:
     #: "relational" (scr/etl_relational.py:30-92, granular per-failure
     #: messages) or "batch" (scr/etl_batch.py:48-64, whose single
@@ -158,39 +154,6 @@ class PipelineConfig:
     @property
     def audit_path(self) -> str:
         return str(Path(self.warehouse) / "etl_runs")
-
-
-def _append_fact(
-    spark: SparkSession,
-    cfg: PipelineConfig,
-    batch: DataFrame,
-    group_col: str | None = None,
-):
-    """Route a fact batch to the configured warehouse layout."""
-    if cfg.fact_table is not None:
-        from etl_python_sqlite_spark.operators.idempotent import (
-            idempotent_append_bucketed,
-        )
-
-        return idempotent_append_bucketed(
-            spark,
-            batch,
-            cfg.fact_table,
-            FACT_NATURAL_KEY,
-            buckets=cfg.fact_buckets,
-            target_schema=FACT_SCHEMA,
-            id_col="persona_id",
-            group_col=group_col,
-        )
-    return idempotent_append(
-        spark,
-        batch,
-        cfg.fact_path,
-        FACT_NATURAL_KEY,
-        target_schema=FACT_SCHEMA,
-        id_col="persona_id",
-        group_col=group_col,
-    )
 
 
 @dataclass
@@ -329,7 +292,15 @@ def load_file(
     # persona_id continues from max existing + 1, read by the append's
     # accounting action; ids go to new rows only, after the anti-join, so
     # IGNOREd duplicates consume none (the reference's AUTOINCREMENT does)
-    return _append_fact(spark, cfg, batch, group_col="source_file")
+    return idempotent_append(
+        spark,
+        batch,
+        cfg.fact_path,
+        FACT_NATURAL_KEY,
+        target_schema=FACT_SCHEMA,
+        id_col="persona_id",
+        group_col="source_file",
+    )
 
 
 #: columns of the one frame a batch persists, next to ``_line`` (a

@@ -10,7 +10,7 @@ md5-derived hash (functions/portable.py) so their DuckDB twins replay
 every hash bit-for-bit; sign-LSH/IVF ANN queries — whose bucketing has no
 SQL twin — are checked through one-row recall/containment INVARIANTS
 whose non-boolean columns the oracle computes exactly (plus pytest
-ground-truth recall tests on the fast xxhash64/numpy paths).
+ground-truth recall tests on the operators they call).
 """
 
 from __future__ import annotations
@@ -310,8 +310,8 @@ def ext_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     verification, so the FULL pipeline is value-hash-checked by the
     driver (was rows-only under xxhash64). jaccard_micro is the exact
     Jaccard floor-quantized to micro-units (integer on both engines).
-    The xxhash64 fast path remains ``operators.dedup.minhash_near_dups``
-    (pytest carries its ground-truth recall comparison). The pair
+    pytest carries the operator's ground-truth recall comparison
+    (``operators.dedup.minhash_near_dups_portable``). The pair
     pipeline is the memoized stage shared with
     ext_minhash_dedup_clusters (see ``_minhash_pairs``)."""
     return _minhash_pairs(spark, sf_dir)
@@ -320,7 +320,7 @@ def ext_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ext_simhash_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2b — SimHash fingerprints on the portable 60-bit hash; DuckDB
     recomputes every fingerprint bit-for-bit (was rows-only under
-    xxhash64; the fast path remains ``operators.dedup.simhash64``).
+    xxhash64).
     Reads the session-shared fingerprint stage (``_simhash_stage``) —
     the identical frame ext_simhash_near_dups blocks on."""
     return _simhash_stage(spark, sf_dir).orderBy("doc_id")
@@ -473,8 +473,8 @@ def ext_token_count_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 def ext_winnowing_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2c — rolling-hash winnowing fingerprint overlap pairs on the
     portable hash; the DuckDB twin replays the windowed-min fingerprint
-    selection exactly (was rows-only under xxhash64; pytest keeps the
-    coverage guarantee on the fast path)."""
+    selection exactly (was rows-only under xxhash64; pytest checks the
+    operator's fingerprints against a CPython replay)."""
     # NOT on the shared raw-words stage (r12 negative result, 10×
     # probe): the cached upstream's accurate size stats flip the
     # fingerprint self-join from the streaming BroadcastHashJoin to a
@@ -1081,7 +1081,7 @@ def ext_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("w2", F.lead("w", 2).over(win))
         # full 3-grams only; docs shorter than 3 words keep their single
         # whole-doc gram at pos 0 (concat_ws skips the null leads) —
-        # exactly all_word_ngrams' "starts = 1..max(size-2, 1)" multiset
+        # exactly the multiset of starts 1..max(size-2, 1)
         .filter(F.col("w2").isNotNull() | (F.col("pos") == 0))
         .select("doc_id", F.concat_ws(" ", "w", "w1", "w2").alias("gram"))
     )
@@ -3286,7 +3286,8 @@ _SEMCON_OFFSET = 1_000_000_000
 
 def ext_semantic_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXT (r10) — benchmark-vs-corpus EMBEDDING-similarity
-    contamination scan (operators/similarity.semantic_contamination_pairs):
+    contamination scan (operators/similarity.
+    semantic_contamination_pairs_from_assignment):
     catches the paraphrased leakage that verbatim/n-gram/span scans
     (ext_substring_contamination, ext_contamination_scan) cannot.
     Benchmark = the ``vec_id % 40 == 7`` slice; corpus = the rest PLUS

@@ -43,13 +43,14 @@ def _dsum(col: Column | str, scale: int = 2) -> Column:
 
 
 def _units(col: Column | str, scale: int = 2) -> Column:
-    """Exact 10^-scale-unit BIGINT of a ``scale``-dp money/qty DOUBLE via
-    pure double math: ``floor(x·10^scale + 0.5)``. For a double that is
-    the nearest representation of an exact ``scale``-dp value (every
-    money/quantity column this schema generates — measured deviation
-    ≤4e-9 of an integer at all SFs, nowhere near the 0.5 boundary) this
-    recovers the integer bit-identically to
-    ``CAST(x AS DECIMAL(p,scale)) · 10^scale`` on BOTH engines — but as
+    """10^-scale-unit BIGINT of a ``scale``-dp money/qty DOUBLE via pure
+    double math: ``floor(x·10^scale + 0.5)`` — bit-identical across
+    engines, ≤1 ulp vs decimal-exact. For a double that is the nearest
+    representation of an exact ``scale``-dp value (every money/quantity
+    column this schema generates — measured deviation ≤4e-9 of an
+    integer at all SFs, nowhere near the 0.5 boundary, and checked by
+    ``tests/test_testdata_precision.py``) the integer equals
+    ``CAST(x AS DECIMAL(p,scale)) · 10^scale`` — but as
     one IEEE multiply+add+floor per row instead of a per-row BigDecimal
     (Spark stores DECIMAL(p>18) as byte-array BigDecimal in agg buffers;
     guide §2.3 narrower types — measured 2.2× on promo_revenue_ratio).

@@ -22,7 +22,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+#: local cores of a session this module builds, and its default shuffle
+#: partition count
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
 
 def get_spark(
     app_name: str = "etl_python_sqlite_spark",
@@ -39,14 +42,10 @@ def get_spark(
     if active is not None:
         return active
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
-        .config(
-            "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
-        )
+        .master(master or f"local[{CPUS}]")
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions or CPUS))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

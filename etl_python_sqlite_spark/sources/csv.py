@@ -78,7 +78,8 @@ def scan_csv(reader, names: Sequence[str], paths, *extra: Column) -> DataFrame:
     or ``spark.readStream``) over ``paths`` with a header line, all-string
     columns ``names`` in file order, then the ``extra`` columns.
 
-    An empty field reads as '', and only a row with too few fields has
+    A doubled quote inside a quoted field reads as one quote. An empty
+    field reads as '', and only a row with too few fields has
     nulls (in every column it leaves empty, a superset of the ones it
     lacks). Spark flags such rows only when the scan parses every column,
     so keep all columns in the plan: a projection that prunes some of
@@ -88,6 +89,9 @@ def scan_csv(reader, names: Sequence[str], paths, *extra: Column) -> DataFrame:
     raw = (
         reader.schema(schema)
         .option("header", True)
+        # csv.reader reads a doubled quote inside a quoted field as one
+        # quote; Spark's default escape is a backslash
+        .option("escape", '"')
         .option("nullValue", _NULL_SENTINEL)
         .option("columnNameOfCorruptRecord", _CORRUPT)
         .csv(paths)

@@ -94,7 +94,7 @@ def test_distributed_histogram_and_token_counts(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     hist = dict(B.word_histogram(df))
     assert hist["the"] == 4 and hist["cat"] == 3 and hist["mat"] == 2
-    merges = B.train_bpe_merges(df, n_merges=20)
+    merges = B.merges_from_histogram(B.word_histogram(df), n_merges=20)
     out = {
         r["doc_id"]: (r["n_bpe_tokens"], r["n_words"])
         for r in B.bpe_token_counts(df, merges).collect()
@@ -114,7 +114,7 @@ def test_compression_on_repetitive_corpus(spark):
         [(i, "abcabcabc " * 20) for i in range(10)],
         "doc_id long, text string",
     )
-    merges = B.train_bpe_merges(df, n_merges=30)
+    merges = B.merges_from_histogram(B.word_histogram(df), n_merges=30)
     out = B.bpe_token_counts(df, merges).collect()
     # 20 words/doc, each "abcabcabc": near-total merge → ≤ 2 tokens/word
     for r in out:

@@ -77,40 +77,26 @@ def test_ngram_jaccard_pairs_releases_cache(spark):
 
 
 def test_minhash_near_dups_releases_cache(spark):
-    from etl_python_sqlite_spark.operators.dedup import minhash_near_dups
+    from etl_python_sqlite_spark.operators.dedup import minhash_near_dups_portable
 
     before = _n_persistent(spark)
-    assert _run_and_drop(minhash_near_dups(_docs(spark), threshold=0.3)) >= 0
+    assert _run_and_drop(minhash_near_dups_portable(_docs(spark), threshold_micro=300_000)) >= 0
     assert _n_persistent(spark) == before
 
 
 def test_simhash_near_dups_releases_cache(spark):
-    from etl_python_sqlite_spark.operators.dedup import simhash_near_dups
+    from etl_python_sqlite_spark.operators.dedup import simhash_near_dups_portable
 
     before = _n_persistent(spark)
-    assert _run_and_drop(simhash_near_dups(_docs(spark), max_hamming=6)) >= 0
+    assert _run_and_drop(simhash_near_dups_portable(_docs(spark), max_hamming=6)) >= 0
     assert _n_persistent(spark) == before
 
 
 def test_winnowing_pairs_releases_cache(spark):
-    from etl_python_sqlite_spark.operators.dedup import winnowing_overlap_pairs
+    from etl_python_sqlite_spark.operators.dedup import winnowing_overlap_pairs_portable
 
     before = _n_persistent(spark)
-    assert _run_and_drop(winnowing_overlap_pairs(_docs(spark))) >= 0
-    assert _n_persistent(spark) == before
-
-
-def test_lsh_candidate_pairs_releases_cache(spark):
-    from etl_python_sqlite_spark.operators.dedup import (
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
-
-    before = _n_persistent(spark)
-    sigs = minhash_signatures(_docs(spark))
-    assert _run_and_drop(lsh_candidate_pairs(sigs)) >= 0
-    del sigs
-    gc.collect()
+    assert _run_and_drop(winnowing_overlap_pairs_portable(_docs(spark))) >= 0
     assert _n_persistent(spark) == before
 
 
@@ -168,10 +154,10 @@ def test_contamination_scan_releases_cache(spark):
 def test_tie_keeps_cache_alive_while_result_lives(spark):
     """The flip side: the cache must NOT be released early — while the
     result frame is referenced, its tied intermediates stay cached."""
-    from etl_python_sqlite_spark.operators.dedup import minhash_near_dups
+    from etl_python_sqlite_spark.operators.dedup import minhash_near_dups_portable
 
     before = _n_persistent(spark)
-    pairs = minhash_near_dups(_docs(spark), threshold=0.3)
+    pairs = minhash_near_dups_portable(_docs(spark), threshold_micro=300_000)
     pairs.count()
     assert _n_persistent(spark) > before  # intermediates still cached
     pairs.count()  # second action reuses them — no error, no recompute race
@@ -182,10 +168,10 @@ def test_tie_keeps_cache_alive_while_result_lives(spark):
 
 def test_explicit_release(spark):
     from etl_python_sqlite_spark.operators.cache import release
-    from etl_python_sqlite_spark.operators.dedup import simhash_near_dups
+    from etl_python_sqlite_spark.operators.dedup import simhash_near_dups_portable
 
     before = _n_persistent(spark)
-    out = simhash_near_dups(_docs(spark), max_hamming=6)
+    out = simhash_near_dups_portable(_docs(spark), max_hamming=6)
     out.count()
     release(out)
     assert _n_persistent(spark) == before

@@ -605,14 +605,12 @@ def test_nb_quality_classifier_planted_precision(spark):
         assert got[d] == (0, 0, False), (d, got[d])
 
 
-def test_nb_score_with_weights_matches_trainer(spark):
-    """The serve-path scorer fed the trainer's own weight table must
-    reproduce the trainer's scores exactly — train-once/score-anywhere
-    with one weight contract."""
+def test_nb_trainer_scores_match_weight_replay(spark):
+    """The trainer's scores are its weight table applied to the bucketed
+    features: a Python replay of both reproduces them exactly."""
     from etl_python_sqlite_spark.operators.curation import (
         bucketed_bigram_counts,
         nb_quality_classifier,
-        nb_score_with_weights,
     )
 
     good = "excellent thoughtful prose with careful measured analysis"
@@ -649,27 +647,24 @@ def test_nb_score_with_weights_matches_trainer(spark):
     n_buckets = 1024
     n_p = sum(r["cp"] for r in counts)
     n_n = sum(r["cn"] for r in counts)
-    weights = spark.createDataFrame(
-        [
-            (
-                r["bucket"],
-                min(
-                    max(
-                        10**6 * (r["cp"] + 1) * (n_n + n_buckets)
-                        // ((r["cn"] + 1) * (n_p + n_buckets)),
-                        1,
-                    ),
-                    10**12,
-                ),
-            )
-            for r in counts
-        ],
-        "bucket long, w long",
-    )
-    served = {
-        r["doc_id"]: (r["n_feat"], r["score_micro"], r["pred_pos"])
-        for r in nb_score_with_weights(docs, weights).collect()
+    weights = {
+        r["bucket"]: min(
+            max(
+                10**6 * (r["cp"] + 1) * (n_n + n_buckets)
+                // ((r["cn"] + 1) * (n_p + n_buckets)),
+                1,
+            ),
+            10**12,
+        )
+        for r in counts
     }
+    # score = Σ cnt·w over a doc's buckets; positive when it beats the
+    # neutral weight 10^6 per feature; no features scores (0, 0, False)
+    totals = {r[0]: [0, 0] for r in rows}
+    for r in feats.collect():
+        totals[r["doc_id"]][0] += r["cnt"]
+        totals[r["doc_id"]][1] += r["cnt"] * weights[r["bucket"]]
+    served = {d: (n, s, s > n * 10**6) for d, (n, s) in totals.items()}
     assert served == trained
 
 

@@ -78,41 +78,10 @@ def test_dimension_dedup_within_batch(spark, tmp_path):
     assert d.count() == 2
 
 
-def test_bucketed_append_idempotent_and_prunes_shuffle(spark):
-    from etl_python_sqlite_spark.operators.idempotent import (
-        idempotent_append_bucketed,
-    )
-
-    spark.sql("DROP TABLE IF EXISTS fact_bucketed")
-    batch = _df(spark, [("Ana", 30), ("Luis", 40)])
-    r1 = idempotent_append_bucketed(spark, batch, "fact_bucketed", ["nombre", "edad"])
-    assert (r1.inserted_new, r1.ignored_duplicates) == (2, 0)
-
-    r2 = idempotent_append_bucketed(spark, batch, "fact_bucketed", ["nombre", "edad"])
-    assert (r2.inserted_new, r2.ignored_duplicates) == (0, 2)
-    assert spark.table("fact_bucketed").count() == 2
-
-    # the target side of the anti-join must consume the bucket layout:
-    # the bucketed scan needs no Exchange, so the whole join has exactly
-    # one (the tiny probe batch)
-    probe = _df(spark, [("Eva", 22)]).hint("merge").join(
-        spark.table("fact_bucketed").select("nombre"), on="nombre", how="left_anti"
-    )
-    probe.collect()
-    final_plan = (
-        probe._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
-    )
-    assert "Bucketed: true" in final_plan
-    assert final_plan.count("Exchange hashpartitioning") == 1
-
-
 def test_snapshot_diff_null_semantics(spark):
     """NULL→value and value→NULL are changes; NULL==NULL is not; missing
     keys classify as added/removed."""
-    from etl_python_sqlite_spark.operators.snapshot import (
-        snapshot_diff,
-        snapshot_diff_summary,
-    )
+    from etl_python_sqlite_spark.operators.snapshot import snapshot_diff
 
     a = spark.createDataFrame(
         [(1, "x"), (2, None), (3, None), (4, "gone")],
@@ -131,11 +100,6 @@ def test_snapshot_diff_null_semantics(spark):
         4: "removed",
         5: "added",
     }
-    summary = {
-        r["status"]: r["n_rows"]
-        for r in snapshot_diff_summary(diff).collect()
-    }
-    assert summary == {"unchanged": 2, "changed": 1, "removed": 1, "added": 1}
 
 
 def test_snapshot_diff_presence_only(spark):

@@ -1,21 +1,23 @@
 """End-to-end training-data pipeline integration: curate → pack → shard.
 
 Chains the real operators (curation predicates from the funnel, the
-sequence-packing window, the range-ordered shard writer) over the
-driver's documents table and asserts the invariants a training job
+sequence-packing window, the WebDataset shard writer and reader) over
+the testdata documents table and asserts the invariants a training job
 relies on: every kept doc lands in exactly one shard, shards are
 globally range-ordered, and token mass is conserved.
 """
 
 from __future__ import annotations
 
-import pyarrow.parquet as pq
+import tarfile
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from etl_python_sqlite_spark.functions import text as X
-from etl_python_sqlite_spark.operators.shards import write_training_shards
+from etl_python_sqlite_spark.operators.shards import write_webdataset_shards
 from etl_python_sqlite_spark.sources.parquet import load_table
+from etl_python_sqlite_spark.sources.webdataset import read_webdataset
 from tests.conftest import SF_SMOKE
 
 
@@ -54,32 +56,34 @@ def test_curate_pack_shard_end_to_end(spark, tmp_path):
     )
 
     out = tmp_path / "train_shards"
-    write_training_shards(
-        packed, out, order_cols=["source", "seq_id", "doc_id"], num_shards=3
+    # one sample per doc, keyed (source, seq_id, doc_id); zero padding
+    # makes the key's string order the tuple order
+    samples = packed.select(
+        F.format_string("%s-%012d-%012d", "source", "seq_id", "doc_id").alias("key"),
+        F.col("n_tokens").cast("string").alias("tok"),
     )
+    write_webdataset_shards(samples, out, key_col="key", members={"tok": "tok"}, num_shards=3)
 
-    files = sorted(out.glob("part-*.parquet"))
-    assert files, "shards must be written"
+    tars = sorted(out.glob("shard-*.tar"))
+    assert tars, "shards must be written"
 
-    back = spark.read.parquet(str(out))
+    back = read_webdataset(spark, str(out), members=["tok"]).collect()
     n_kept = kept.count()
-    assert back.count() == n_kept, "every kept doc in exactly one shard"
-    assert back.select("doc_id").distinct().count() == n_kept
+    assert len(back) == n_kept, "every kept doc in exactly one shard"
+    assert len({r["key"] for r in back}) == n_kept
 
     # token mass conserved through the pipeline
     assert (
-        back.agg(F.sum("n_tokens")).collect()[0][0]
+        sum(int(bytes(r["tok"])) for r in back)
         == toks.agg(F.sum("n_tokens")).collect()[0][0]
     )
 
-    # global range order across shard files on the (source, seq_id) key
+    # global range order across shards on the (source, seq_id, doc_id) key
     spans = []
-    for p in files:
-        t = pq.read_table(p, columns=["source", "seq_id", "doc_id"])
-        keys = list(
-            zip(t["source"].to_pylist(), t["seq_id"].to_pylist(), t["doc_id"].to_pylist())
-        )
-        assert keys == sorted(keys), "rows inside a shard must be sorted"
+    for tar in tars:
+        with tarfile.open(tar) as tf:
+            keys = [m.name.split(".", 1)[0] for m in tf.getmembers()]
+        assert keys == sorted(keys), "samples inside a shard must be sorted"
         if keys:
             spans.append((keys[0], keys[-1]))
     spans.sort()

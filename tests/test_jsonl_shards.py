@@ -1,47 +1,10 @@
-"""The range-ordered training-shard writer and the WebDataset
-source."""
+"""The WebDataset training-shard writer and source."""
 
 from __future__ import annotations
 
-import pyarrow.parquet as pq
-from pyspark.sql import functions as F
+import tarfile
 
-from etl_python_sqlite_spark.operators.shards import write_training_shards
-
-
-def test_training_shards_are_range_ordered_and_bounded(spark, tmp_path):
-    out = tmp_path / "shards"
-    df = spark.range(1000).select(
-        F.col("id").alias("seq_id"),
-        (F.col("id") % 7).alias("payload"),
-    )
-    write_training_shards(
-        df, out, order_cols=["seq_id"], num_shards=4, max_records_per_file=200
-    )
-    files = sorted(p for p in out.glob("part-*.parquet"))
-    # 4 range partitions of ~250 rows, each split by the 200-record cap
-    assert len(files) >= 5
-    # global range order: each file's seq_id span must not overlap the next
-    spans = []
-    for p in files:
-        col = pq.read_table(p, columns=["seq_id"])["seq_id"].to_pylist()
-        assert col == sorted(col), "rows inside a shard must be sorted"
-        assert len(col) <= 200
-        spans.append((min(col), max(col), p.name))
-    spans.sort()
-    for (_, hi, _), (lo, _, _) in zip(spans, spans[1:]):
-        assert hi < lo, "shard key ranges must not overlap"
-    total = sum(
-        pq.ParquetFile(p).metadata.num_rows for p in files
-    )
-    assert total == 1000
-
-
-def test_shards_empty_input_writes_valid_dataset(spark, tmp_path):
-    out = tmp_path / "empty_shards"
-    df = spark.range(0).select(F.col("id").alias("seq_id"))
-    write_training_shards(df, out, order_cols=["seq_id"], num_shards=2)
-    assert spark.read.parquet(str(out)).count() == 0
+from etl_python_sqlite_spark.operators.shards import write_webdataset_shards
 
 
 def test_webdataset_shards_round_trip_and_determinism(spark, tmp_path):
@@ -50,11 +13,6 @@ def test_webdataset_shards_round_trip_and_determinism(spark, tmp_path):
     and a rewrite of identical data is BYTE-identical (pinned tar
     metadata)."""
     import hashlib
-    import tarfile
-
-    from etl_python_sqlite_spark.operators.shards import (
-        write_webdataset_shards,
-    )
 
     rows = [
         (f"k{i:03d}", bytes([i, 255 - i, 0]), f'{{"i": {i}}}')
@@ -100,26 +58,24 @@ def test_webdataset_shards_round_trip_and_determinism(spark, tmp_path):
 def test_training_shards_seeded_shuffle(spark, tmp_path):
     """shuffle_salt: deterministic across reruns for the same salt,
     decorrelated from key order, independent across salts, and the
-    shuffle key never leaks into the output schema."""
-    import glob
+    shuffle key never leaks into the shards."""
+    from pathlib import Path
 
     df = spark.createDataFrame(
         [(i, f"p{i}") for i in range(500)], "seq_id long, payload string"
     )
 
     def run(out, salt):
-        write_training_shards(
-            df, out, order_cols=["seq_id"], num_shards=4,
-            shuffle_salt=salt,
+        write_webdataset_shards(
+            df, out, key_col="seq_id", members={"txt": "payload"},
+            num_shards=4, shuffle_salt=salt,
         )
-        got = spark.read.parquet(out)
-        assert set(got.columns) == {"seq_id", "payload"}
         rows = []
-        for f in sorted(glob.glob(f"{out}/part-*.parquet")):
-            rows += [
-                r["seq_id"]
-                for r in spark.read.parquet(f"file://{f}").collect()
-            ]
+        for tar in sorted(Path(out).glob("shard-*.tar")):
+            with tarfile.open(tar) as tf:
+                names = tf.getnames()
+            assert all(n.endswith(".txt") for n in names)
+            rows += [int(n.split(".", 1)[0]) for n in names]
         return rows
 
     a1 = run(str(tmp_path / "a1"), "salt-a")
@@ -135,11 +91,6 @@ def test_training_shards_seeded_shuffle(spark, tmp_path):
 
 
 def test_webdataset_shards_seeded_shuffle(spark, tmp_path):
-    import tarfile
-
-    from etl_python_sqlite_spark.operators.shards import (
-        write_webdataset_shards,
-    )
 
     df = spark.createDataFrame(
         [(f"k{i:04d}", f"body{i}") for i in range(200)],

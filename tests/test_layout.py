@@ -1,6 +1,6 @@
 """Physical-layout tests: Z-order clustering must measurably shrink
-per-file min/max ranges (the data-skipping win), compaction must hit the
-file-count target, and the z-value algebra must be exact."""
+per-file min/max ranges (the data-skipping win), and the z-value algebra
+must be exact."""
 
 from __future__ import annotations
 
@@ -8,12 +8,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
-from etl_python_sqlite_spark.operators.layout import (
-    compact_files,
-    write_zordered,
-    zorder_ranks,
-    zvalue_expr,
-)
+from etl_python_sqlite_spark.operators.layout import zorder_ranks, zvalue_expr
 
 
 def _per_file_ranges(path, cols):
@@ -60,7 +55,13 @@ def test_zorder_shrinks_both_dims(spark, grid, tmp_path):
     zord = str(tmp_path / "zord")
     grid.repartition(8).write.parquet(plain)
     grid.repartitionByRange(8, "x").sortWithinPartitions("x", "y").write.parquet(lexi)
-    write_zordered(grid, zord, ["x", "y"], bits=6, files=8)
+    (
+        zorder_ranks(grid, ["x", "y"], bits=6)
+        .repartitionByRange(8, "zvalue")
+        .sortWithinPartitions("zvalue")
+        .select(grid.columns)
+        .write.parquet(zord)
+    )
 
     r_plain = _per_file_ranges(plain, ["x", "y"])
     r_lexi = _per_file_ranges(lexi, ["x", "y"])
@@ -98,74 +99,9 @@ def test_zorder_ranks_deterministic_with_tiebreak(spark, grid):
     assert {r["id"]: r["zvalue"] for r in a} == {r["id"]: r["zvalue"] for r in b}
 
 
-def test_compact_files_hits_target(spark, tmp_path):
-    src = str(tmp_path / "many")
-    dst = str(tmp_path / "few")
-    spark.range(100_000).selectExpr(
-        "id", "id * 2 AS v"
-    ).repartition(64).write.parquet(src)
-    n = compact_files(spark, src, dst, target_mb=1, sort_cols=["id"])
-    import glob
-
-    assert n == len(glob.glob(f"{dst}/*.parquet"))
-    assert n < 16  # 64 tiny files → a handful of ~1 MB targets
-    assert (
-        spark.read.parquet(dst).count()
-        == spark.read.parquet(src).count()
-    )
-
-
-def test_zorder_and_compact_empty_inputs(spark, tmp_path):
-    from etl_python_sqlite_spark.operators.layout import (
-        compact_files,
-        zorder_ranks,
-    )
-
+def test_zorder_empty_input(spark):
     empty = spark.createDataFrame([], "x long, y long")
     assert zorder_ranks(empty, ["x", "y"], bits=4).count() == 0
-    assert compact_files(spark, tmp_path / "nope", tmp_path / "out") == 0
-
-
-def test_zorder_approx_no_window_in_plan(spark, grid):
-    """The write-path rank assignment must not contain a window sort —
-    that is the whole point of the approx-quantile form (ADVICE r3)."""
-    from etl_python_sqlite_spark.operators.layout import zorder_ranks_approx
-
-    zdf = zorder_ranks_approx(grid, ["x", "y"], bits=6)
-    plan = zdf._jdf.queryExecution().executedPlan().toString()
-    assert "Window" not in plan
-    rows = zdf.collect()
-    # buckets are monotone in the underlying value
-    by_x = sorted(rows, key=lambda r: (r["x"], r["_r_x"]))
-    for a, b in zip(by_x, by_x[1:]):
-        if a["x"] <= b["x"]:
-            assert a["_r_x"] <= b["_r_x"]
-    # and spread across the bucket range (64 distinct x → many buckets)
-    assert len({r["_r_x"] for r in rows}) > 16
-
-
-def test_write_zordered_still_shrinks_with_approx(spark, grid, tmp_path):
-    plain = str(tmp_path / "plain")
-    zord = str(tmp_path / "zord")
-    grid.repartition(8).write.parquet(plain)
-    write_zordered(grid, zord, ["x", "y"], bits=6, files=8)
-    r_plain = _per_file_ranges(plain, ["x", "y"])
-    r_zord = _per_file_ranges(zord, ["x", "y"])
-    assert r_zord["x"] < r_plain["x"] * 0.6
-    assert r_zord["y"] < r_plain["y"] * 0.6
-
-
-def test_compact_files_hadoop_fs_uri(spark, tmp_path):
-    """compact_files resolves sizes through the Hadoop FileSystem API —
-    an explicit file:/ URI (non-Path-able scheme form) must work."""
-    src = str(tmp_path / "many_uri")
-    dst = str(tmp_path / "few_uri")
-    spark.range(10_000).selectExpr("id", "id * 3 AS v").repartition(
-        16
-    ).write.parquet(src)
-    n = compact_files(spark, f"file://{src}", f"file://{dst}", target_mb=64)
-    assert n == 1
-    assert spark.read.parquet(dst).count() == 10_000
 
 
 def test_snapshot_diff_empty_keys_raises(spark):

@@ -3,18 +3,9 @@ media decoding is stubbed."""
 
 from __future__ import annotations
 
-import math
-
 import pytest
-from pyspark.sql import functions as F
 
-from etl_python_sqlite_spark.operators.multimodal import (
-    MEDIA_SCHEMA,
-    decode_image,
-    extract_features,
-    frame_sample_plan,
-    resize_stub,
-)
+from etl_python_sqlite_spark.operators.multimodal import MEDIA_SCHEMA, decode_image
 
 
 @pytest.fixture(scope="module")
@@ -27,20 +18,6 @@ def media(spark):
         (5, "image", None, "image/png", (8, 8, None, None)),
     ]
     return spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-
-def test_feature_extraction_batch_shape(spark, media):
-    feats = {r["media_id"]: r for r in extract_features(media).collect()}
-    assert len(feats) == 5
-    # uniform bytes 0..255 → flat histogram, max entropy (log2 16 buckets)
-    assert feats[1]["n_bytes"] == 256
-    assert feats[1]["byte_entropy"] == pytest.approx(4.0)
-    assert feats[1]["histogram"] == pytest.approx([1 / 16] * 16)
-    # constant bytes → zero entropy, all mass in bucket 0
-    assert feats[2]["byte_entropy"] == pytest.approx(0.0)
-    assert feats[2]["histogram"][0] == pytest.approx(1.0)
-    # null payload handled
-    assert feats[5]["n_bytes"] == 0 and feats[5]["byte_entropy"] is None
 
 
 def test_metadata_only_query_prunes_content(spark, media, tmp_path):
@@ -56,25 +33,9 @@ def test_metadata_only_query_prunes_content(spark, media, tmp_path):
     assert "content" not in read_schema
 
 
-def test_frame_sampling_fanout(spark, media):
-    frames = frame_sample_plan(media, every_ms=1000).collect()
-    # one video of 3500ms → frames at 0,1000,2000,3000
-    assert [r["frame_ts_ms"] for r in frames] == [0, 1000, 2000, 3000]
-
-
 def test_decode_stub_raises(spark, media):
     with pytest.raises(NotImplementedError):
         decode_image(b"not-a-real-png")
-
-
-def test_resize_routes_undecodable_rows_through(spark, media):
-    """Per-row failure contract: an undecodable image blob passes through
-    a resize stage UNCHANGED instead of aborting the job."""
-    rows = resize_stub(media.limit(1), 8, 8).collect()
-    src = media.limit(1).collect()
-    assert len(rows) == 1
-    assert rows[0]["content"] == src[0]["content"]
-    assert rows[0]["mime"] == src[0]["mime"]
 
 
 # ---------------------------------------------------------------------------
@@ -89,7 +50,6 @@ from etl_python_sqlite_spark.operators.multimodal import (
     encode_bmp,
     encode_ppm,
     encode_wav,
-    resize_images,
 )
 
 
@@ -150,24 +110,6 @@ def test_decode_media_metadata_spark_path(spark):
     assert got[5]["decode_ok"] is False and got[5]["decode_error"]
 
 
-def test_resize_images_spark_path(spark):
-    px = _gradient(16, 16)
-    rows = [
-        (1, "image", bytearray(encode_bmp(px)), "image/bmp", (16, 16, None, None)),
-        (2, "audio", bytearray(encode_wav(np.zeros(80, np.int16), 8000)), "audio/wav",
-         (None, None, 10, 8000)),
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = {r["media_id"]: r for r in resize_images(media, 8, 8).collect()}
-    resized = decode_image(bytes(out[1]["content"]))
-    assert (resized.width, resized.height) == (8, 8)
-    # nearest-neighbor: top-left pixel preserved exactly
-    assert list(resized.pixels[0, 0]) == list(px[0, 0])
-    assert out[1]["meta"]["width"] == 8 and out[1]["mime"] == "image/x-portable-pixmap"
-    # non-image rows pass through byte-identical
-    assert bytes(out[2]["content"]) == bytes(rows[1][2])
-
-
 def test_bmv_split_and_roundtrip():
     import numpy as np
 
@@ -191,37 +133,6 @@ def test_bmv_split_rejects_garbage():
 
     with pytest.raises(ValueError):
         split_bmv_frames(b"not a bmp stream")
-
-
-def test_sample_video_frames_spark_path(spark):
-    import numpy as np
-
-    from etl_python_sqlite_spark.operators.multimodal import (
-        MEDIA_SCHEMA,
-        encode_bmv,
-        sample_video_frames,
-    )
-
-    rng = np.random.default_rng(11)
-    frames = [rng.integers(0, 256, (4, 4, 3), dtype=np.uint8) for _ in range(6)]
-    good = encode_bmv(frames)
-    rows = [
-        (10, "video", good, "video/x-bmv", (4, 4, None, None)),
-        (11, "video", b"BMgarbage", "video/x-bmv", (None, None, None, None)),
-        (12, "image", good, "image/bmp", (4, 4, None, None)),  # filtered out
-    ]
-    media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    out = sample_video_frames(media, every_n=2).collect()
-
-    ok = [r for r in out if r["media_id"] == 10]
-    assert [r["frame_idx"] for r in sorted(ok, key=lambda r: r["frame_idx"])] == [0, 2, 4]
-    for r in ok:
-        assert r["decode_ok"] and (r["width"], r["height"]) == (4, 4)
-        assert r["pixel_sum"] == int(frames[r["frame_idx"]].astype("int64").sum())
-
-    bad = [r for r in out if r["media_id"] == 11]
-    assert len(bad) == 1 and not bad[0]["decode_ok"]
-    assert not [r for r in out if r["media_id"] == 12]
 
 
 def test_png_roundtrip_exact():
@@ -441,8 +352,63 @@ def test_png_adam7_interlaced_decode():
     assert np.array_equal(img.pixels, pal[idx])
 
 
+def _encode_gif(pixels) -> bytes:
+    """(h, w, 3) uint8 RGB → valid GIF87a, the fixture for the GIF
+    decoder. The palette is the image's distinct colors (≤256); pixel
+    data uses the classic "uncompressed LZW" trick — every index emitted
+    as a literal code with a CLEAR before each dictionary overflow —
+    which every decoder accepts."""
+    import struct
+
+    import numpy as np
+
+    h, w = pixels.shape[:2]
+    px = np.ascontiguousarray(pixels, dtype=np.uint8).reshape(-1, 3)
+    colors, inverse = np.unique(px, axis=0, return_inverse=True)
+    assert len(colors) <= 256
+    cbits = max(2, int(np.ceil(np.log2(max(len(colors), 2)))))
+    pal = np.zeros((1 << cbits, 3), dtype=np.uint8)
+    pal[: len(colors)] = colors
+    mcs = cbits
+    clear, eoi = 1 << mcs, (1 << mcs) + 1
+    width = mcs + 1
+    codes = [clear]
+    next_code = eoi + 1
+    for i in inverse.reshape(-1).tolist():
+        codes.append(int(i))
+        # emitting a literal still grows the decoder's dict: reset before
+        # the decoder's next_code reaches the current width's capacity
+        next_code += 1
+        if next_code == (1 << width):
+            codes.append(clear)
+            next_code = eoi + 1
+    codes.append(eoi)
+    acc = nbits = 0
+    stream = bytearray()
+    for code in codes:
+        acc |= code << nbits
+        nbits += width
+        while nbits >= 8:
+            stream.append(acc & 0xFF)
+            acc >>= 8
+            nbits -= 8
+    if nbits:
+        stream.append(acc & 0xFF)
+    out = bytearray(b"GIF87a")
+    out += struct.pack("<HHBBB", w, h, 0x80 | ((cbits - 1) & 0x07), 0, 0)
+    out += pal.tobytes()
+    out += b"\x2c" + struct.pack("<HHHHB", 0, 0, w, h, 0)
+    out.append(mcs)
+    for i in range(0, len(stream), 255):
+        chunk = stream[i : i + 255]
+        out.append(len(chunk))
+        out += chunk
+    out += b"\x00\x3b"
+    return bytes(out)
+
+
 def test_gif_roundtrip_exact():
-    """encode_gif → decode_image reproduces pixels exactly (LZW decode,
+    """A GIF → decode_image reproduces pixels exactly (LZW decode,
     palette reconstruction)."""
     import numpy as np
 
@@ -453,7 +419,7 @@ def test_gif_roundtrip_exact():
     pal = rng.integers(0, 256, size=(13, 3), dtype=np.uint8)
     idx = rng.integers(0, 13, size=(17, 31))
     px = pal[idx]
-    blob = M.encode_gif(px)
+    blob = _encode_gif(px)
     assert blob[:6] == b"GIF87a"
     img = M.decode_image(blob)
     assert (img.width, img.height) == (31, 17)
@@ -466,14 +432,14 @@ def test_gif_single_color_and_wide():
     from etl_python_sqlite_spark.operators import multimodal as M
 
     px = np.full((3, 300, 3), 7, dtype=np.uint8)
-    img = M.decode_image(M.encode_gif(px))
+    img = M.decode_image(_encode_gif(px))
     assert (img.pixels == px).all()
     # >256-pixel rows exercise the 255-byte sub-block split
     rng = np.random.default_rng(9)
     px2 = rng.integers(0, 256, size=(2, 3), dtype=np.uint8)[
         rng.integers(0, 2, size=(40, 200))
     ]
-    assert (M.decode_image(M.encode_gif(px2)).pixels == px2).all()
+    assert (M.decode_image(_encode_gif(px2)).pixels == px2).all()
 
 
 def test_gif_interlaced_and_extensions():
@@ -491,7 +457,7 @@ def test_gif_interlaced_and_extensions():
         list(range(0, h, 8)) + list(range(4, h, 8))
         + list(range(2, h, 4)) + list(range(1, h, 2))
     )
-    blob = bytearray(M.encode_gif(px[order]))  # rows stored in pass order
+    blob = bytearray(_encode_gif(px[order]))  # rows stored in pass order
     n_pal = (len(blob) and 2 << (blob[10] & 0x07))
     desc = 6 + 7 + 3 * n_pal  # image descriptor offset
     assert blob[desc] == 0x2C
@@ -515,7 +481,7 @@ def test_gif_lzw_dictionary_growth():
     px = np.zeros((64, 64, 3), dtype=np.uint8)
     for i in range(64):
         px[i, :, 0] = (i * 4) % 256
-    img = M.decode_image(M.encode_gif(px))
+    img = M.decode_image(_encode_gif(px))
     assert (img.pixels == px).all()
 
 
@@ -528,7 +494,7 @@ def test_gif_offset_frames_rejected():
     from etl_python_sqlite_spark.operators import multimodal as M
 
     px = np.zeros((4, 4, 3), dtype=np.uint8)
-    blob = bytearray(M.encode_gif(px))
+    blob = bytearray(_encode_gif(px))
     n_pal = 2 << (blob[10] & 0x07)
     desc = 6 + 7 + 3 * n_pal
     assert blob[desc] == 0x2C

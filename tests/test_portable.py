@@ -12,7 +12,7 @@ import hashlib
 
 from pyspark.sql import functions as F
 
-from etl_python_sqlite_spark.functions.portable import phash60, phash60_salted
+from etl_python_sqlite_spark.functions.portable import phash60
 from etl_python_sqlite_spark.operators import dedup as D
 
 SAMPLES = [
@@ -35,14 +35,6 @@ def test_phash60_matches_cpython_md5(spark):
     for s in SAMPLES:
         assert got[s] == _ref(s), s
         assert 0 <= got[s] < 2**60
-
-
-def test_phash60_salted_matches_reference(spark):
-    df = spark.createDataFrame([(7, 123456789)], "s int, h long")
-    (row,) = df.select(
-        phash60_salted(F.col("h"), F.col("s")).alias("p")
-    ).collect()
-    assert row["p"] == _ref("7:123456789")
 
 
 def test_universal_hash_matches_reference(spark):

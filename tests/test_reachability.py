@@ -1,16 +1,27 @@
-"""Every package module is reachable from an entry point.
+"""Every package module and function is reachable from an entry point.
 
-The import graph is read from the AST only (nothing is imported, no Spark
+The graphs are read from the AST only (nothing is imported, no Spark
 session starts). The roots are the programs that run this package: the
 query contract (``__spark_entry__.py``), the benchmark, the query bench
 and the CLI. Imports inside function bodies count, because the package
 imports lazily. A module that only tests import is unreached: delete it,
 or wire it into an entry point.
+
+Functions are checked by name, conservatively: a function, class or
+method of a reached module is reached when live code names it — as a
+name, an attribute, an identifier string (``getattr`` and perfbench's
+wrapper list look names up that way) or the source of an ``import ...
+as``. Live code is every root and helper script, each allowed unreached
+module, each reached module's top-level statements, and the bodies of
+reached functions. A function
+that only tests call is unreached: delete it, or call it from an entry
+point.
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -28,6 +39,21 @@ UNREACHED_ALLOWED = {
         "6); no entry point starts a stream"
     ),
 }
+# function -> why it stays although no entry point calls it
+UNCALLED_ALLOWED = {
+    f"{PACKAGE}.operators.clustering._quantize_py": (
+        "the CPython replay of the Spark quantizer that the k-means tests "
+        "compare against"
+    ),
+    f"{PACKAGE}.operators.cache.release_all": (
+        "frees every stage memo; it isolates the tests from each other"
+    ),
+    f"{PACKAGE}.pipeline.migrate_fact_if_needed": (
+        "the legacy-fact migration (SURVEY S7) that ROADMAP item 4 "
+        "extends to etl_runs"
+    ),
+}
+_IDENTIFIER = re.compile(r"[A-Za-z_][A-Za-z0-9_]*(\.[A-Za-z_][A-Za-z0-9_]*)*")
 
 
 def _module_file(name: str, search: tuple[Path, ...]) -> Path | None:
@@ -77,7 +103,8 @@ def _imported_names(path: Path) -> set[str]:
     return out
 
 
-def reachable_modules() -> set[str]:
+def reached_files() -> set[Path]:
+    """Every file the roots import, the roots included."""
     # a root script's directory is on sys.path when it runs (perfbench's
     # helper modules); ``python -m`` puts only the working directory there
     scripts = [(REPO / r).parent for r in ROOTS if not r.startswith(PACKAGE)]
@@ -93,11 +120,86 @@ def reachable_modules() -> set[str]:
             found = _module_file(name, search)
             if found is not None and found not in seen:
                 todo.append(found)
-    return {_module_name(p) for p in seen if p.is_relative_to(REPO / PACKAGE)}
+    return seen
+
+
+def reachable_modules() -> set[str]:
+    return {_module_name(p) for p in reached_files() if p.is_relative_to(REPO / PACKAGE)}
 
 
 def package_modules() -> set[str]:
     return {_module_name(p) for p in (REPO / PACKAGE).rglob("*.py")}
+
+
+def _names_used(nodes) -> set[str]:
+    """Every name the AST ``nodes`` may refer to a definition by."""
+    out: set[str] = set()
+    for node in nodes:
+        for x in ast.walk(node):
+            if isinstance(x, ast.Name):
+                out.add(x.id)
+            elif isinstance(x, ast.Attribute):
+                out.add(x.attr)
+            elif isinstance(x, ast.alias) and x.asname:
+                out.add(x.name.split(".")[-1])
+            elif (
+                isinstance(x, ast.Constant)
+                and isinstance(x.value, str)
+                and _IDENTIFIER.fullmatch(x.value)
+            ):
+                out.update(x.value.split("."))
+    return out
+
+
+def _definitions(path: Path):
+    """(qualified name, bare name, AST nodes a reach makes live) for each
+    top-level function and class of ``path`` and each method of its
+    classes, and the module's other top-level statements. A class's own
+    nodes are its bases, decorators, non-function statements and dunder
+    methods (Python calls those implicitly)."""
+    module = _module_name(path)
+    defs, rest = [], []
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+    for st in ast.parse(path.read_text(), filename=str(path)).body:
+        if isinstance(st, funcs):
+            defs.append((f"{module}.{st.name}", st.name, [st]))
+        elif isinstance(st, ast.ClassDef):
+            own = [*st.bases, *st.keywords, *st.decorator_list]
+            for m in st.body:
+                if isinstance(m, funcs) and not (
+                    m.name.startswith("__") and m.name.endswith("__")
+                ):
+                    defs.append((f"{module}.{st.name}.{m.name}", m.name, [m]))
+                else:
+                    own.append(m)
+            defs.append((f"{module}.{st.name}", st.name, own))
+        else:
+            rest.append(st)
+    return defs, rest
+
+
+def uncalled_functions() -> set[str]:
+    """Qualified names of the definitions in reached package modules that
+    no live code names."""
+    package = REPO / PACKAGE
+    allowed_files = {_module_file(name, (REPO,)) for name in UNREACHED_ALLOWED}
+    live, defs = [], []
+    for path in reached_files() | allowed_files:
+        if path.is_relative_to(package) and path not in allowed_files:
+            found, rest = _definitions(path)
+            defs += found
+            live += rest
+        else:
+            live.append(ast.parse(path.read_text(), filename=str(path)))
+    used = _names_used(live)
+    pending = defs
+    while True:
+        reached = [d for d in pending if d[1] in used]
+        if not reached:
+            return {qual for qual, _, _ in pending}
+        pending = [d for d in pending if d[1] not in used]
+        for _, _, nodes in reached:
+            used |= _names_used(nodes)
 
 
 def test_every_package_module_is_reached_from_an_entry_point():
@@ -114,9 +216,28 @@ def test_every_package_module_is_reached_from_an_entry_point():
     )
 
 
+def test_every_package_function_is_reached_from_an_entry_point():
+    unreached = uncalled_functions() - set(UNCALLED_ALLOWED)
+    assert not unreached, (
+        "package functions no entry point reaches (delete them or call "
+        f"them from an entry point): {sorted(unreached)}"
+    )
+
+
 def test_allowed_exceptions_are_still_needed():
     for name, reason in UNREACHED_ALLOWED.items():
         assert name in package_modules(), f"{name} is gone; drop it ({reason})"
         assert name not in reachable_modules(), (
+            f"{name} is now reached; drop its exception ({reason})"
+        )
+    defined = {
+        qual
+        for path in (REPO / PACKAGE).rglob("*.py")
+        for qual, _, _ in _definitions(path)[0]
+    }
+    uncalled = uncalled_functions()
+    for name, reason in UNCALLED_ALLOWED.items():
+        assert name in defined, f"{name} is gone; drop it ({reason})"
+        assert name in uncalled, (
             f"{name} is now reached; drop its exception ({reason})"
         )

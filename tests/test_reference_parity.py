@@ -226,6 +226,48 @@ def test_empty_fields_match_dictreader(spark, tmp_path):
     )
 
 
+def test_quoted_fields_match_dictreader(spark, tmp_path):
+    """A doubled quote inside a quoted field is one quote, as
+    ``csv.DictReader`` reads it: the loaded fact rows and the reject
+    motivos equal a DictReader replay of the reference's cascade, next
+    to an empty field, a short row and a long row. (The reject file is
+    Spark's CSV writer output, which escapes a quote with a backslash.)"""
+    cfg = PipelineConfig(
+        data_in=str(tmp_path / "in"),
+        data_rejected=str(tmp_path / "rejected"),
+        warehouse=str(tmp_path / "wh"),
+    )
+    path = Path(cfg.data_in) / "comillas.csv"
+    path.parent.mkdir(parents=True)
+    path.write_text(
+        'nombre,edad,ciudad\n"say ""hi""",30,lima\n"q""",31,"san ""x"" juan"\n'
+        '"ro ""sa""",20,cusco\nbruno,"x""1",lima\nana,,rosario\npedro,30\n'
+        'luz,40,lima,extra\n"a,b",27,"x,y"\n',
+        encoding="utf-8",
+    )
+    with path.open(newline="", encoding="utf-8") as f:
+        replay = list(csv.DictReader(f))
+
+    result = run_batch(spark, cfg, now=NOW).files[0]
+    want = [(r["nombre"], _reference_motivo(r)) for r in replay]
+    assert (result.valid_count, result.rejected_count) == (
+        sum(m is None for _, m in want),
+        sum(m is not None for _, m in want),
+    )
+    with (Path(cfg.data_rejected) / "rejected_comillas.csv").open(newline="") as f:
+        rejects = csv.DictReader(f, escapechar="\\", doublequote=False)
+        got = [(r["nombre"], r["motivo"]) for r in rejects]
+    assert got == [(n, m) for n, m in want if m is not None]
+    fact = spark.read.parquet(cfg.fact_path)
+    dim = spark.read.parquet(cfg.dim_path)
+    loaded = fact.join(dim, "ciudad_id").select(fact.nombre, "edad", dim.nombre)
+    assert sorted(tuple(r) for r in loaded.collect()) == sorted(
+        (r["nombre"].strip().capitalize(), int(r["edad"]), r["ciudad"].strip().title())
+        for r in replay
+        if _reference_motivo(r) is None
+    )
+
+
 def test_short_row_nulls_need_every_column(spark, tmp_path):
     """With an extra column, a scan of every column still gives the short
     row ``pedro,30`` DictReader's None values. A projection that prunes

@@ -45,13 +45,6 @@ def test_brute_force_topk_matches_numpy(spark, vectors):
     assert {got[0]["vec_id"], got[1]["vec_id"]} == {500, 501}
 
 
-def test_knn_join_brute(spark, vectors):
-    df, truth = vectors
-    got = S.knn_join_brute(df.filter(F.col("vec_id") >= 500), k=1).collect()
-    # with only the two planted vectors they are each other's NN
-    assert {(r["id_a"], r["id_b"]) for r in got} == {(500, 501), (501, 500)}
-
-
 def test_ann_lsh_recall(spark, vectors):
     df, truth = vectors
     q = [float(x) for x in truth[0]]
@@ -169,14 +162,16 @@ def test_ann_knn_join_finds_planted(spark, vectors):
 def test_label_centroid_quality_matches_numpy(spark):
     import numpy as np
 
-    from etl_python_sqlite_spark.operators.similarity import label_centroid_quality
+    from etl_python_sqlite_spark.operators.similarity import (
+        label_centroid_quality_exactable,
+    )
     from etl_python_sqlite_spark.sources.parquet import load_table
     from tests.conftest import SF_SMOKE
 
     embs = load_table(spark, SF_SMOKE, "embeddings")
     got = {
-        r["label"]: (r["n_members"], r["mean_cos"], r["min_cos"])
-        for r in label_centroid_quality(embs).collect()
+        r["label"]: (r["n_members"], r["sum_cos_micro"] / r["n_members"] / 1e6, r["min_cos"])
+        for r in label_centroid_quality_exactable(embs).collect()
     }
 
     rows = embs.select("vec_id", "label", "embedding").collect()
@@ -226,6 +221,12 @@ def semdedup_corpus(spark):
     return df, truth, planted
 
 
+def _semantic_dedup_pairs(df, n_clusters, threshold):
+    return S.semantic_dedup_pairs_from_assignment(
+        S.semantic_assign(df, n_clusters=n_clusters), threshold
+    )
+
+
 def _exact_pairs(truth, thr):
     ids = sorted(truth)
     V = np.vstack([truth[i] for i in ids])
@@ -241,10 +242,9 @@ def _exact_pairs(truth, thr):
 
 def test_semantic_dedup_finds_planted(spark, semdedup_corpus):
     """Every planted near-dup/exact-dup pair is recovered (blob members
-    cluster together), pairs report exact 6dp cosine, and the drop set
-    is the keep-lowest-id complement."""
+    cluster together) and pairs report exact 6dp cosine."""
     df, truth, planted = semdedup_corpus
-    pairs = S.semantic_dedup_pairs(df, n_clusters=4, threshold=0.95)
+    pairs = _semantic_dedup_pairs(df, n_clusters=4, threshold=0.95)
     got = {(r["id_a"], r["id_b"]): r["cos_sim"] for r in pairs.collect()}
     for a, b in planted:
         assert (a, b) in got, (a, b)
@@ -255,8 +255,6 @@ def test_semantic_dedup_finds_planted(spark, semdedup_corpus):
             round(float(np.dot(va, vb) / (np.linalg.norm(va) * np.linalg.norm(vb))), 6),
             abs=2e-6,
         )
-    drops = {r["drop_id"] for r in S.semantic_dedup_drops(pairs).collect()}
-    assert {1000, 1001, 1002, 1003, 2000} <= drops
 
 
 def test_semantic_dedup_no_false_positives(spark, semdedup_corpus):
@@ -265,7 +263,7 @@ def test_semantic_dedup_no_false_positives(spark, semdedup_corpus):
     df, truth, _ = semdedup_corpus
     got = {
         (r["id_a"], r["id_b"])
-        for r in S.semantic_dedup_pairs(df, n_clusters=4, threshold=0.95).collect()
+        for r in _semantic_dedup_pairs(df, n_clusters=4, threshold=0.95).collect()
     }
     assert got <= _exact_pairs(truth, 0.95 - 1e-6)
 
@@ -289,7 +287,7 @@ def test_semantic_assign_partitions_everything(spark, semdedup_corpus):
 def test_semantic_assign_empty_corpus(spark):
     empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
     assert S.semantic_assign(empty, n_clusters=4).count() == 0
-    assert S.semantic_dedup_pairs(empty, n_clusters=4).count() == 0
+    assert _semantic_dedup_pairs(empty, n_clusters=4, threshold=0.9).count() == 0
 
 
 def test_lsh_probe_buckets_margin_directed(spark):
@@ -301,7 +299,6 @@ def test_lsh_probe_buckets_margin_directed(spark):
     import numpy as np
 
     from etl_python_sqlite_spark.operators.similarity import (
-        _bucket_of,
         _hyperplane_matrix,
         lsh_probe_buckets_vectorized,
     )
@@ -326,7 +323,8 @@ def test_lsh_probe_buckets_margin_directed(spark):
     for i, v in enumerate(vecs):
         probes = out[i]
         assert len(probes) == n_probes + 1
-        assert probes[0] == _bucket_of(v, dim, planes)  # home first
+        home = int((((np.asarray(v) @ H) >= 0) * (1 << np.arange(planes))).sum())
+        assert probes[0] == home  # home first
         assert len(set(probes)) == len(probes)  # distinct buckets
         # flips restricted to the m lowest-margin planes
         proj = np.abs(np.asarray(v) @ H)
@@ -342,14 +340,22 @@ def test_lsh_probe_buckets_margin_directed(spark):
 # semantic benchmark-contamination scan (r10)
 # ---------------------------------------------------------------------------
 
+def _semantic_contamination_pairs(corpus, benchmark, threshold, n_clusters):
+    """One clustering over the side-tagged union, then the cross-side
+    within-cluster search (the shape of ``ext_semantic_contamination``)."""
+    union = corpus.withColumn("side", F.lit(0)).unionByName(
+        benchmark.withColumn("side", F.lit(1))
+    )
+    assigned = S.semantic_assign(union, n_clusters=n_clusters).join(
+        union.select("vec_id", "side"), "vec_id"
+    )
+    return S.semantic_contamination_pairs_from_assignment(assigned, threshold)
+
+
 def test_semantic_contamination_exhaustive_single_cluster(spark):
     """n_clusters=1 makes the scan exhaustive: the reported pair set
     must EQUAL the exact cross-side cosine>=0.9 ground truth."""
     import numpy as np
-
-    from etl_python_sqlite_spark.operators.similarity import (
-        semantic_contamination_pairs,
-    )
 
     dim = 8
     def e(i, scale=1.0):
@@ -367,7 +373,7 @@ def test_semantic_contamination_exhaustive_single_cluster(spark):
     corpus += [(400, e(6)), (401, e(7))]            # unrelated
     cdf = spark.createDataFrame(corpus, "vec_id long, embedding array<double>")
     bdf = spark.createDataFrame(bench, "vec_id long, embedding array<double>")
-    pairs = semantic_contamination_pairs(
+    pairs = _semantic_contamination_pairs(
         cdf, bdf, threshold=0.9, n_clusters=1
     )
     got = {(r["corpus_id"], r["bench_id"]): r["cos_sim"]
@@ -392,10 +398,6 @@ def test_semantic_contamination_scaled_twins_always_recovered(spark):
     always reported with cos 1.0, for any cluster count."""
     import numpy as np
 
-    from etl_python_sqlite_spark.operators.similarity import (
-        semantic_contamination_pairs,
-    )
-
     rng = np.random.default_rng(5)
     bench = [
         (1000 + i, (rng.normal(size=12)).tolist()) for i in range(30)
@@ -406,7 +408,7 @@ def test_semantic_contamination_scaled_twins_always_recovered(spark):
         corpus + noise, "vec_id long, embedding array<double>"
     )
     bdf = spark.createDataFrame(bench, "vec_id long, embedding array<double>")
-    pairs = semantic_contamination_pairs(
+    pairs = _semantic_contamination_pairs(
         cdf, bdf, threshold=0.999, n_clusters=6
     )
     got = {(r["corpus_id"], r["bench_id"]): r["cos_sim"]

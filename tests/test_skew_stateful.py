@@ -68,8 +68,3 @@ def test_salt_spreads_identical_payload_rows(spark):
         .count()
     )
     assert n_distinct >= 12, f"only {n_distinct}/16 salts used for a constant payload"
-
-
-def test_top_frequent_keys_finds_hot(spark, skewed):
-    top = K.top_frequent_keys(skewed, ["k"], top_n=1).first()
-    assert top["k"] == "HOT" and top["n_rows"] == 5000

@@ -9,8 +9,8 @@ import itertools
 
 import pytest
 
+from etl_python_sqlite_spark.operators.bpe import word_histogram
 from etl_python_sqlite_spark.operators.unigram import (
-    train_unigram,
     unigram_from_histogram,
     unigram_token_counts,
     viterbi_segment,
@@ -167,8 +167,8 @@ def test_spark_trainer_and_encoder(spark):
         + [(100, ""), (101, None), (102, "\tnation  these\n")],
         "doc_id long, text string",
     )
-    vocab = train_unigram(df, vocab_size=32)
-    assert vocab == train_unigram(df.repartition(7), vocab_size=32)
+    vocab = unigram_from_histogram(word_histogram(df), vocab_size=32)
+    assert vocab == unigram_from_histogram(word_histogram(df.repartition(7)), vocab_size=32)
     out = {
         r["doc_id"]: (r["n_pieces"], r["n_words"])
         for r in unigram_token_counts(df, vocab).collect()
@@ -232,15 +232,3 @@ def test_trainer_fuzz_vs_transcription():
 def test_trainer_fuzz_vs_transcription_randomized():
     """The same property on fresh random draws every run."""
     _trainer_fuzz()
-
-
-def test_vocab_save_load_round_trip(spark, tmp_path):
-    from etl_python_sqlite_spark.operators.unigram import (
-        load_vocab,
-        save_vocab,
-    )
-
-    vocab = unigram_from_histogram(HIST, vocab_size=24)
-    p = str(tmp_path / "vocab")
-    save_vocab(spark, vocab, p)
-    assert load_vocab(spark, p) == vocab

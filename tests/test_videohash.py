@@ -186,24 +186,3 @@ def test_fingerprint_df_cap_bounds_hot_frame(spark):
     got_h = {(r["id_a"], r["id_b"]) for r in capped_h.collect()}
     assert (n, n + 1) in got_h
     assert all(a == n and b == n + 1 for a, b in got_h)
-
-
-def test_winnowing_fingerprint_df_cap(spark):
-    """Same cap on the text sibling: a boilerplate window shared by the
-    whole corpus must not pair everything with everything."""
-    from etl_python_sqlite_spark.operators.dedup import (
-        winnowing_overlap_pairs,
-    )
-
-    boiler = "copyright acme corp all rights reserved forever"
-    rows = [(i, f"{boiler} unique{i} body{i} text{i} tail{i}") for i in range(30)]
-    rows.append((100, "shared real content alpha beta gamma delta epsilon"))
-    rows.append((101, "shared real content alpha beta gamma delta epsilon"))
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    uncapped = winnowing_overlap_pairs(df, min_shared=1)
-    assert uncapped.count() > 400  # C(30,2) boilerplate pairs
-    capped = winnowing_overlap_pairs(
-        df, min_shared=1, max_fingerprint_df=5
-    )
-    got = {(r["id_a"], r["id_b"]) for r in capped.collect()}
-    assert got == {(100, 101)}
