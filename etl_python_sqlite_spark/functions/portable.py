@@ -32,9 +32,6 @@ from pyspark.sql import functions as F
 #: DuckDB SQL twin of ``phash60`` — format with the column/expression text.
 PHASH60_SQL = "CAST('0x' || substr(md5({c}), 1, 15) AS BIGINT)"
 
-#: second independent 60-bit value from the SAME md5 (hex digits 16-30).
-PHASH60B_SQL = "CAST('0x' || substr(md5({c}), 16, 15) AS BIGINT)"
-
 #: Mersenne prime 2^61−1 — the modulus of the universal salt family.
 MINHASH_MOD_P = (1 << 61) - 1
 

@@ -37,7 +37,9 @@ pass it via ``keepalive=`` so the chain of finalizers unwinds outward-in.
 
 Shared-stage memos. A stage that two or more queries read (a histogram,
 a pair set, a word-array frame) lives in a :class:`StageMemo` for the
-session. Every memo keeps the same contract:
+session, stored as a persisted frame or an eager checkpoint — both
+session-scoped, like the memo key, which carries the applicationId.
+Every memo keeps the same contract:
 
 * the key is :func:`stage_key` — (applicationId, sf_dir,
   ``data_fingerprint`` of the source table, *params), so a dataset
@@ -51,11 +53,10 @@ session. Every memo keeps the same contract:
 * the ``free`` policy, fixed where the memo is defined, says what an
   eviction does. Cache-tier memos pass :func:`unpersist_entry`: an
   unpersist under a live consumer only makes it recompute, and frames
-  that are not cached (a stage-table tier entry) are skipped.
-  Checkpoint- and stage-table-backed entries drop the reference only:
-  their ``tie`` / ``tie_stage_table`` finalizers free the blocks or the
-  table once the last consumer lets go, because freeing them earlier
-  would fail that consumer. Plain-Python entries own nothing;
+  that are not cached are skipped. Checkpoint-backed entries drop the
+  reference only: their ``tie`` finalizer frees the blocks once the
+  last consumer lets go, because freeing them earlier would fail that
+  consumer. Plain-Python entries own nothing;
 * :func:`release_all` (and ``StageMemo.clear``) frees every entry NOW —
   the explicit release path for tests and session teardown.
 """
@@ -70,18 +71,6 @@ from collections.abc import Callable, Iterable
 from pyspark.sql import DataFrame, SparkSession
 
 _RELEASE_ATTR = "_spark_graft_release"
-_TABLE_RELEASE_ATTR = "_spark_graft_table_release"
-#: the stage-table name a ``tie_stage_table`` handle reads — consumers
-#: check it to pick their zero-exchange bucketed plan
-STAGE_TABLE_ATTR = "_spark_graft_stage_table"
-#: Stage tables this process created; the orphan sweep never drops them.
-_LIVE_STAGE_TABLES: set = set()
-#: (applicationId, prefix) pairs whose orphans were already swept
-_SWEPT_STAGE_PREFIXES: set = set()
-#: A stage table is built and consumed within one bench/probe run
-#: (minutes); an ORPHAN survives across rounds. 1 h is far above any
-#: live table's lifetime and far below an orphan's.
-_STAGE_ORPHAN_AGE_MS = 60 * 60 * 1000
 
 
 def _release_frame(f: DataFrame) -> None:
@@ -130,111 +119,6 @@ def tie(
     return result
 
 
-def tie_stage_table(frame: DataFrame, tbl: str) -> DataFrame:
-    """Stamp ``frame`` (a scan of the stage table ``tbl``) with the table
-    name under ``STAGE_TABLE_ATTR`` and DROP the table when the LAST
-    consumer of the frame lets go. LRU eviction of a stage-table entry
-    must only drop the REFERENCE — an immediate DROP TABLE under a
-    still-live consumer frame fails that consumer's next action with
-    FileNotFound (the cache-tier eviction rule, extended to tables).
-    :func:`_release_entry` runs the same finalizer early, on the explicit
-    release path. Uses a DIFFERENT attribute than :func:`tie` so
-    ``release(frame)`` on the handle stays a no-op."""
-    spark = frame.sparkSession
-
-    def _drop(_tbl=tbl) -> None:
-        _LIVE_STAGE_TABLES.discard(_tbl)
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {_tbl}")
-        except Exception:
-            pass  # session already stopped
-
-    fin = weakref.finalize(frame, _drop)
-    fin.atexit = False
-    setattr(frame, STAGE_TABLE_ATTR, tbl)
-    setattr(frame, _TABLE_RELEASE_ATTR, fin)
-    _LIVE_STAGE_TABLES.add(tbl)
-    return frame
-
-
-def bucketed_stage_table(
-    spark: SparkSession,
-    prefix: str,
-    key: tuple,
-    frame: DataFrame,
-    n_buckets: int,
-    cols: tuple,
-    where=None,
-) -> DataFrame:
-    """The at-scale tier of a shared stage: write ``frame`` once as a
-    catalog table bucketed by ``cols[0]`` and sorted by ``cols``, and
-    return its scan (filtered by ``where``) tied by
-    :func:`tie_stage_table`. The bucketed scan satisfies
-    HashPartitioning(cols[0]), so key-joined consumers read it with no
-    exchange. The table name is ``prefix`` + an md5 of the memo ``key``;
-    the first build per (application, prefix) sweeps orphans."""
-    import hashlib
-
-    sweep_stale_stage_tables(spark, prefix)
-    tbl = prefix + hashlib.md5(repr(key).encode()).hexdigest()[:12]
-    (
-        frame.write.mode("overwrite")
-        .bucketBy(n_buckets, cols[0])
-        .sortBy(*cols)
-        .saveAsTable(tbl)
-    )
-    scan = spark.table(tbl)
-    return tie_stage_table(scan if where is None else scan.filter(where), tbl)
-
-
-def sweep_stale_stage_tables(spark: SparkSession, prefix: str) -> None:
-    """Drop orphaned ``{prefix}*`` stage tables left by a crashed or
-    restarted session (their memo keys embed the old applicationId, so
-    no later session will ever name them — without this sweep the
-    warehouse files accumulate forever). Runs once per (application,
-    prefix), at first stage build, and only touches tables this session
-    did NOT create AND whose backing files predate this application's
-    start: a CONCURRENT Spark app sharing the warehouse (bench +
-    probe/pytest co-running from one checkout) has live stage tables
-    whose md5 names embed the other app's id — name-wise
-    indistinguishable from orphans. Guard: drop only tables whose
-    directory mtime BOTH predates this app's start AND is older than an
-    absolute age floor (covers the peer that started before us — stage
-    tables live for minutes, orphans for rounds), so a live peer table
-    is never swept while true orphans still age out (ADVICE r8)."""
-    import time as _time
-
-    app = spark.sparkContext.applicationId
-    if (app, prefix) in _SWEPT_STAGE_PREFIXES:
-        return
-    _SWEPT_STAGE_PREFIXES.add((app, prefix))
-    cutoff_ms = min(
-        spark.sparkContext.startTime,
-        int(_time.time() * 1000) - _STAGE_ORPHAN_AGE_MS,
-    )
-    try:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        for t in spark.catalog.listTables():
-            name = t.name
-            if not name.startswith(prefix) or name in _LIVE_STAGE_TABLES:
-                continue
-            try:
-                p = jvm.org.apache.hadoop.fs.Path(warehouse, name)
-                fs = p.getFileSystem(hconf)
-                if (
-                    fs.exists(p)
-                    and fs.getFileStatus(p).getModificationTime() >= cutoff_ms
-                ):
-                    continue  # plausibly a concurrent app's live table
-            except Exception:
-                continue  # can't date it — leave it rather than break a peer
-            spark.sql(f"DROP TABLE IF EXISTS {name}")
-    except Exception:
-        pass  # catalog unavailable (stopping session) — leave for next run
-
-
 def release(df: DataFrame) -> None:
     """Explicitly run a frame's tied cleanup now (idempotent, optional —
     dropping the frame has the same effect)."""
@@ -268,8 +152,8 @@ def _frames(entry) -> tuple:
 
 def unpersist_entry(entry) -> None:
     """The cache-tier eviction policy: unpersist the entry's cached
-    frames. Checkpoint- and table-backed frames are not cached, so this
-    leaves them to their finalizers."""
+    frames. Checkpoint-backed frames are not cached, so this leaves
+    them to their finalizers."""
     for f in _frames(entry):
         if getattr(f, "is_cached", False):
             try:
@@ -280,12 +164,9 @@ def unpersist_entry(entry) -> None:
 
 def _release_entry(entry) -> None:
     """Free everything a memo entry holds, now: tied checkpoint blocks
-    and caches, stage tables, cached frames."""
+    and caches, cached frames."""
     for f in _frames(entry):
         release(f)
-        fin = getattr(f, _TABLE_RELEASE_ATTR, None)
-        if fin is not None:
-            fin()
     unpersist_entry(entry)
 
 

@@ -386,7 +386,6 @@ def pagerank(
     dangling: str = "evaporate",
     local_edge_limit: int = PAGERANK_LOCAL_EDGE_LIMIT,
     edges_distinct: bool = False,
-    edges_bucketed: bool = False,
     edges_symmetric: bool = False,
     n_edges: int | None = None,
 ) -> DataFrame:
@@ -553,17 +552,7 @@ def pagerank(
         # by the probe key ONCE — each iteration then shuffles only the
         # rank/contribution rows (the node frame no longer joins at
         # all; see the union-update note in the docstring).
-        # ``edges_bucketed``: the caller's edge frame is a catalog
-        # table bucketed by the src key (the materialized shared stage,
-        # plans/relational._cooccurrence_edges) — its scan ALREADY
-        # satisfies HashPartitioning(u), so both the outdeg aggregation
-        # above and this join are exchange-free on the E side; an
-        # explicit repartition would reintroduce the full-E shuffle the
-        # bucketing exists to eliminate (plan-asserted in
-        # tests/test_bucketed_stage.py).
-        if not edges_bucketed:
-            eo = eo.repartition("u")
-        eo = eo.persist()
+        eo = eo.repartition("u").persist()
 
         def rank_side(df: DataFrame) -> DataFrame:
             return df
@@ -813,9 +802,7 @@ def triangle_counts(
     if own:
         return tie(out, *own)
     # prepared tier: the memo owns the frames — keep them alive for as
-    # long as this result reads them (tie composition rule). The edges
-    # handle (the co-occurrence memo entry eor/deg derive from) must be
-    # kept too: if BOTH memos evict while this result is live, dropping
-    # eor would force the next action to recompute through the parent
-    # stage TABLE, whose drop finalizer may have fired (ADVICE r11).
+    # long as this result reads them (tie composition rule), and the
+    # edges handle (the co-occurrence memo entry eor/deg derive from)
+    # with them.
     return tie(out, keepalive=[eor, deg, edges])

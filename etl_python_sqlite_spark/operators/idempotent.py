@@ -19,8 +19,7 @@ Scale notes:
 * The anti-join shuffles the whole accumulated target on the natural key
   for every batch. At warehouse scale that exchange, not the batch,
   would dominate; the remedy is a target bucketed by the key, whose
-  scan the anti-join consumes with no exchange over it (the layout
-  ``operators/cache.bucketed_stage_table`` builds for query stages).
+  scan the anti-join consumes with no exchange over it.
 * Contiguous id assignment needs a global order: a dimension's new keys
   (small by definition) get theirs on the driver, a per-batch fact append
   (bounded) in a single-task window. That is the reference's

@@ -70,7 +70,6 @@ ZIGZAG = np.array([
     58, 59, 52, 45, 38, 31, 39, 46,
     53, 60, 61, 54, 47, 55, 62, 63,
 ], dtype=np.int64)
-_UNZIGZAG = np.argsort(ZIGZAG)
 
 #: ITU-T T.81 Annex K.1 — luminance quantization (raster order)
 QTABLE_LUM = np.array([

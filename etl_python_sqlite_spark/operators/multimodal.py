@@ -77,28 +77,6 @@ from etl_python_sqlite_spark.operators.jpeg import (  # noqa: F401  re-export
     encode_jpeg,
 )
 
-#: canonical multimodal schema: opaque payload + typed metadata
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("modality", T.StringType(), False),   # image|audio|video
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("duration_ms", T.LongType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
-
 
 class DecodedImage(NamedTuple):
     width: int

@@ -191,6 +191,7 @@ def write_rejects_csv(rejects: DataFrame, out_path: str | Path) -> int:
         # writes the original raw values verbatim (scr/etl_relational.py:97-102)
         .option("ignoreLeadingWhiteSpace", False)
         .option("ignoreTrailingWhiteSpace", False)
+        .option("escape", '"')
         .csv(tmp)
     )
     part = next(Path(tmp).glob("part-*.csv"))
@@ -201,8 +202,14 @@ def write_rejects_csv(rejects: DataFrame, out_path: str | Path) -> int:
 
 
 #: Spark's CSV writer options for a reject line: raw values verbatim
-#: (reference scr/etl_relational.py:97-102), not whitespace-stripped
-CSV_LINE_OPTIONS = {"ignoreLeadingWhiteSpace": "false", "ignoreTrailingWhiteSpace": "false"}
+#: (reference scr/etl_relational.py:97-102), not whitespace-stripped, and
+#: a quote doubled as ``csv.writer`` does (Spark's default escapes it
+#: with a backslash, which ``csv.reader`` does not read back)
+CSV_LINE_OPTIONS = {
+    "ignoreLeadingWhiteSpace": "false",
+    "ignoreTrailingWhiteSpace": "false",
+    "escape": '"',
+}
 
 
 def csv_line(names: list[str]) -> Column:

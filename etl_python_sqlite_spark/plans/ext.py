@@ -16,6 +16,7 @@ ground-truth recall tests on the operators they call).
 from __future__ import annotations
 
 import threading
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -25,7 +26,6 @@ from etl_python_sqlite_spark.operators import dedup as D
 from etl_python_sqlite_spark.operators import similarity as S
 from etl_python_sqlite_spark.operators.cache import (
     StageMemo,
-    bucketed_stage_table,
     release,
     stage_key,
     tie,
@@ -36,22 +36,6 @@ from etl_python_sqlite_spark.sources.parquet import load_table
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "documents")
-
-
-def _spread(df: DataFrame) -> DataFrame:
-    """Repartition up to default parallelism when the scan is
-    under-split — for PYTHON-BOUND Arrow pipelines only (media
-    encode/decode): the testdata is one 0.6 MB parquet file, so a
-    1-split scan serializes the whole Arrow pass behind one core
-    (measured r10: video near-dups 6.0 → 1.4 s, audio 1.7 → 1.1 s
-    interleaved A/B). At real scale the condition never fires. Do NOT
-    reach for this on JVM codegen pipelines — the trigram A/B measured
-    the same enabler LOSING there (stage overhead > parallelism gain;
-    BASELINE.md r10)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
-        return df.repartition(par)
-    return df
 
 
 def _scan_underparallel(spark: SparkSession, sf_dir: str,
@@ -83,9 +67,11 @@ def _docs_spread(spark: SparkSession, sf_dir: str, cols: tuple,
     measured wins at sf0.1: quality_scores 2.3×, langid 1.9×,
     text_stats 1.6× (interleaved A/B ×2, collect-identical). Gate
     closed at warehouse row-group counts, so no extra exchange exists
-    at scale. This is the JVM-expression sibling of ``_spread`` (whose
-    negative trigram A/B was about explode pipelines, where per-row
-    work is cheap and the exchange dominates — measure each)."""
+    at scale. The Python-bound Arrow pipelines (media encode/decode)
+    take the round-robin form: measured r10, video near-dups
+    6.0 → 1.4 s, audio 1.7 → 1.1 s. Do NOT reach for this on explode
+    pipelines, where per-row work is cheap and the exchange dominates
+    (the trigram A/B measured it LOSING there, BASELINE.md r10)."""
     d = _docs(spark, sf_dir).select(*cols)
     if _scan_underparallel(spark, sf_dir, "documents"):
         par = spark.sparkContext.defaultParallelism
@@ -152,22 +138,16 @@ _SAMPLE_JACC = StageMemo()
 
 
 def _sample_jaccard_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def build() -> DataFrame:
-        sample = _docs(spark, sf_dir).filter(F.col("doc_id") < 500)
-        lazy = D.ngram_jaccard_pairs(sample, threshold=0.05, k=3)
-        # eager cut at the scored pair set: the two consumers run as
-        # concurrent bench actions; count rides the handle as the CC
-        # edge bound (an upper bound — the clusters query's ≥ 0.25
-        # filter only shrinks it)
-        ckpt = lazy.localCheckpoint(eager=True)
-        n_pairs = ckpt.count()
-        release(lazy)
-        pairs = tie(ckpt.select("id_a", "id_b", "jaccard"), ckpt)
-        setattr(pairs, _PAIRS_NEDGES_ATTR, n_pairs)
-        return pairs
-
-    return _SAMPLE_JACC.get_or_build(
-        stage_key(spark, sf_dir, "documents"), build
+    # the two consumers run as concurrent bench actions; the stamped
+    # count is an upper bound on the CC edges (the clusters query's
+    # ≥ 0.25 filter only shrinks it)
+    return _pair_stage(
+        _SAMPLE_JACC, spark, sf_dir,
+        lambda: D.ngram_jaccard_pairs(
+            _docs(spark, sf_dir).filter(F.col("doc_id") < 500),
+            threshold=0.05, k=3,
+        ),
+        "jaccard",
     )
 
 
@@ -191,31 +171,6 @@ def ext_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MINHASH = StageMemo()
 
 
-#: Corpus document count above which the shared minhash-pairs stage
-#: materializes as a BUCKETED CATALOG TABLE (bucketBy id_a — the key
-#: the CC clustering and any id-keyed audit probe first) instead of a
-#: session checkpoint (VERDICT r9 #7: the other DATA-sized shared
-#: stage gets the same at-scale tier as the co-occurrence edges). The
-#: gate input is the document count — a metadata-only parquet count —
-#: because the stage's output size is Θ(docs) on a dedup-bearing
-#: corpus and the decision must not itself cost a pipeline run (the
-#: co-occurrence stage could gate on its measured edge count only
-#: because that frame was already persisted+counted for its own
-#: lifecycle; here the verified pairs are deliberately LAZY over the
-#: checkpointed candidate set; the count here comes from parquet
-#: footer metadata — zero Spark jobs). MEASURED crossover (r10,
-#: interleaved A/B, warm): at 5k docs the tiers tie on build+consume
-#: (3.3-3.9 s both, consumers ~0.1 s either way); at 80k docs the
-#: bucketed tier already TIES on build+first-consumer (22-25 s both)
-#: and wins ~10× per LATER consumer (0.5 s table read vs 5-7 s verify
-#: re-run) — and above executor storage it is the only option. The
-#: gate sits at the low end of the measured knee so reuse-heavy
-#: sessions get the table as soon as it can pay for itself; the
-#: driver's sf0.1 bench (5k docs) stays on the cache tier.
-#: Tier equality is pinned in tests/test_bucketed_stage.py.
-MINHASH_BUCKETED_STAGE_MIN_DOCS = 50_000
-MINHASH_STAGE_BUCKETS = 32
-
 #: verified-pair count stamped on every pair-stage memo handle at build
 #: (the _COOCC_NEDGES_ATTR pattern): downstream connected-components
 #: callers pass it as the attested ``n_edges`` so the CC tier gate
@@ -223,6 +178,34 @@ MINHASH_STAGE_BUCKETS = 32
 #: no per-invocation lineage-cut checkpoint either (the union-find
 #: finisher is ONE plan inside the query's own action).
 _PAIRS_NEDGES_ATTR = "_spark_graft_n_pairs"
+
+
+def _pair_stage(
+    memo: StageMemo,
+    spark: SparkSession,
+    sf_dir: str,
+    lazy_pairs: Callable[[], DataFrame],
+    score: str,
+) -> DataFrame:
+    """The one storage tier of a shared pair stage (r12): an eager
+    ``localCheckpoint`` of the verified pairs ``lazy_pairs()`` builds,
+    memoized in ``memo`` per documents fingerprint. Consumers scan one
+    materialized RDD instead of re-running the verify joins per action;
+    the operator's own intermediates (candidate checkpoints, decode
+    persists) are released at once, since the pair checkpoint
+    supersedes them; the measured pair count rides the handle under
+    ``_PAIRS_NEDGES_ATTR``."""
+
+    def build() -> DataFrame:
+        lazy = lazy_pairs()
+        ckpt = lazy.localCheckpoint(eager=True)
+        n_pairs = ckpt.count()  # materialized blocks — bounded job
+        release(lazy)
+        pairs = tie(ckpt.select("id_a", "id_b", score), ckpt)
+        setattr(pairs, _PAIRS_NEDGES_ATTR, n_pairs)
+        return pairs
+
+    return memo.get_or_build(stage_key(spark, sf_dir, "documents"), build)
 
 
 def _cluster_summary(
@@ -265,42 +248,13 @@ def _cluster_summary(
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from etl_python_sqlite_spark.sources.parquet import (
-        table_row_count_from_metadata,
-    )
-
-    key = stage_key(spark, sf_dir, "documents")
-
-    def build() -> DataFrame:
-        lazy = D.minhash_near_dups_portable(
+    return _pair_stage(
+        _MINHASH, spark, sf_dir,
+        lambda: D.minhash_near_dups_portable(
             _docs(spark, sf_dir), threshold_micro=300_000
-        )
-        n_docs = table_row_count_from_metadata(sf_dir, "documents")
-        if n_docs >= MINHASH_BUCKETED_STAGE_MIN_DOCS:
-            pairs = bucketed_stage_table(
-                spark, "minhash_pairs_", key, lazy,
-                MINHASH_STAGE_BUCKETS, ("id_a", "id_b"),
-            )
-            release(lazy)  # the bucketed files are the materialization
-            # parquet-count over the freshly written table — footer
-            # statistics, bounded job at BUILD time only
-            n_pairs = pairs.count()
-        else:
-            # eager lineage cut at the VERIFIED pair set (the
-            # _video_pairs policy, extended here r12): consumers scan
-            # one materialized RDD instead of re-running the verify
-            # join per action, and the measured count rides the handle
-            # for the CC tier gate. The internal candidate checkpoint +
-            # shingle persist are released immediately — the pair
-            # checkpoint supersedes them.
-            ckpt = lazy.localCheckpoint(eager=True)
-            n_pairs = ckpt.count()  # materialized blocks — bounded job
-            release(lazy)
-            pairs = tie(ckpt.select("id_a", "id_b", "jaccard_micro"), ckpt)
-        setattr(pairs, _PAIRS_NEDGES_ATTR, n_pairs)
-        return pairs
-
-    return _MINHASH.get_or_build(key, build)
+        ),
+        "jaccard_micro",
+    )
 
 
 def ext_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -838,7 +792,7 @@ def ext_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_python_sqlite_spark.operators import multimodal as M
 
-    docs = _spread(_docs(spark, sf_dir).select("doc_id", "text"))
+    docs = _docs_spread(spark, sf_dir, ("doc_id", "text"), key=None)
 
     def _encode(batches):
         for pdf in batches:
@@ -927,34 +881,21 @@ def ext_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # satisfied so no second exchange appears) and run the regex
     # projection parallel after it; the exchange carries the text
     # payload once, from the scan task. At warehouse scale inputs
-    # arrive as many row groups, the gate stays closed, and the
-    # text-free pre-exchange shape above is the right one. Interleaved
-    # A/B x2: 1.18-1.60 -> 0.52-0.67 s, collect-identical.
-    par = spark.sparkContext.defaultParallelism
-    raw = _docs(spark, sf_dir)
+    # arrive as many row groups, the gate stays closed, and the two
+    # projections collapse into the text-free pre-exchange shape above.
+    # Interleaved A/B x2: 1.18-1.60 -> 0.52-0.67 s, collect-identical.
+    docs = _docs(spark, sf_dir).select(
+        "doc_id", "n_chars", "text", F.sha2(F.col("text"), 256).alias("_sha")
+    )
     if _scan_underparallel(spark, sf_dir, "documents"):
-        docs = (
-            raw.select(
-                "doc_id", "n_chars", "text",
-                F.sha2(F.col("text"), 256).alias("_sha"),
-            )
-            .repartition(par, "_sha")
-            .select(
-                "doc_id",
-                "n_chars",
-                "_sha",
-                X.langid(F.col("text")).alias("_lang"),
-                F.round(X.quality_score(F.col("text")), 6).alias("_q6"),
-            )
-        )
-    else:
-        docs = raw.select(
-            "doc_id",
-            "n_chars",
-            F.sha2(F.col("text"), 256).alias("_sha"),
-            X.langid(F.col("text")).alias("_lang"),
-            F.round(X.quality_score(F.col("text")), 6).alias("_q6"),
-        )
+        docs = docs.repartition(spark.sparkContext.defaultParallelism, "_sha")
+    docs = docs.select(
+        "doc_id",
+        "n_chars",
+        "_sha",
+        X.langid(F.col("text")).alias("_lang"),
+        F.round(X.quality_score(F.col("text")), 6).alias("_q6"),
+    )
     keeper = F.min("doc_id").over(Window.partitionBy("_sha"))
     h = F.pmod(F.col("doc_id") * 2654435761, F.lit(2**32)) % 100
     split = F.when(h < 80, "train").when(h < 90, "val").otherwise("test")
@@ -3066,37 +3007,9 @@ def _img_payload(doc_id: int) -> bytes:
 
 #: (applicationId, sf_dir, fingerprint) → the tie()'d verified image
 #: pair frame shared by ext_image_near_dups and
-#: ext_image_dedup_clusters: the expensive half (Arrow decode + dHash)
-#: is checkpointed INSIDE dhash_near_dups, so each consumer re-runs only
-#: the cheap JVM banding/verify.
+#: ext_image_dedup_clusters: one Arrow decode + dHash pass, checkpointed
+#: at the verified pair set (``_pair_stage``), serves both.
 _IMGPAIRS = StageMemo()
-
-#: Media count above which the shared image-pairs stage materializes as
-#: a BUCKETED CATALOG TABLE (bucketBy id_a — the CC clustering's first
-#: key) instead of a session checkpoint, closing the last data-sized
-#: shared stage living only as a checkpoint (VERDICT r10 #4; the
-#: minhash tier at plans/ext.py MINHASH_BUCKETED_STAGE_MIN_DOCS and the
-#: co-occurrence edge tier are the precedents). The gate input is the
-#: derived media count — documents footer row count × 8/7 (one image
-#: per document + a twin per doc_id % 7 == 0), zero Spark jobs.
-#: MEASURED crossover (r11, interleaved A/B, 2 reps each; BASELINE.md):
-#: at 5.7k media (sf0.1) cache build+c1 ≈1.4-3.7 s warm vs table
-#: ≈1.9-2.7 s, consumers 0.5-0.8 s vs 0.06-0.11 s — build a wash, each
-#: reuse ~5× cheaper on the table; at 91k media (16× doc-id-offset
-#: replication; disjoint md5 payloads, natural density) table build
-#: costs ~1.3 s more and each consumer saves ~0.55 s (0.7-0.9 s
-#: banding+verify re-run vs 0.2 s table scan), so a build+2-consumer
-#: lifecycle TIES (4.3 vs 4.6 s, inside single-shot noise) and every
-#: later consumer wins ~3.5×. The image consumers are far cheaper than
-#: minhash's (the checkpointed hash frame makes the re-run banding-only)
-#: which pushes this knee HIGHER than minhash's 50k: the gate sits at
-#: the measured ~90k wash point; the driver's sf0.1 bench (≈5.7k media,
-#: exactly 2 consumers) stays on the cache tier. Both tiers returned
-#: identical pair sets at both scales (n=715 / n=11,440).
-#: Tier equality is pinned in tests/test_bucketed_stage.py.
-IMAGE_BUCKETED_STAGE_MIN_MEDIA = 90_000
-IMAGE_STAGE_BUCKETS = 32
-
 
 def _image_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The synthetic image corpus of the E12 contract queries: one
@@ -3107,7 +3020,7 @@ def _image_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_python_sqlite_spark.operators import multimodal as M
 
-    docs = _spread(_docs(spark, sf_dir).select("doc_id"))
+    docs = _docs_spread(spark, sf_dir, ("doc_id",), key=None)
     encoders = [M.encode_png, M.encode_bmp, M.encode_ppm]
 
     def _gen(batches):
@@ -3146,45 +3059,14 @@ def _image_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         dhash_near_dups,
         image_dhash,
     )
-    from etl_python_sqlite_spark.sources.parquet import (
-        table_row_count_from_metadata,
+
+    return _pair_stage(
+        _IMGPAIRS, spark, sf_dir,
+        lambda: dhash_near_dups(
+            image_dhash(_image_media(spark, sf_dir)), max_hamming=6, n_bands=4
+        ),
+        "hamming",
     )
-
-    key = stage_key(spark, sf_dir, "documents")
-
-    def build() -> DataFrame:
-        lazy = dhash_near_dups(
-            image_dhash(_image_media(spark, sf_dir)),
-            max_hamming=6,
-            n_bands=4,
-        )
-        n_docs = table_row_count_from_metadata(sf_dir, "documents")
-        n_media = n_docs * 8 // 7  # one image/doc + a twin per %7==0
-        if n_media >= IMAGE_BUCKETED_STAGE_MIN_MEDIA:
-            pairs = bucketed_stage_table(
-                spark, "image_pairs_", key, lazy,
-                IMAGE_STAGE_BUCKETS, ("id_a", "id_b"),
-            )
-            release(lazy)  # the bucketed files are the materialization
-            # footer-statistics count over the written table — bounded
-            # job at BUILD time only, rides the handle for the CC gate
-            n_pairs = pairs.count()
-        else:
-            # eager lineage cut at the verified pair set (the
-            # _video_pairs policy, extended here r12): both consumers
-            # scan one materialized RDD instead of re-running the
-            # banding/verify joins per action; the decode-half
-            # checkpoint inside dhash_near_dups is released immediately
-            # (the pair checkpoint supersedes it), and the measured
-            # count rides the handle for the CC tier gate.
-            ckpt = lazy.localCheckpoint(eager=True)
-            n_pairs = ckpt.count()  # materialized blocks — bounded job
-            release(lazy)
-            pairs = tie(ckpt.select("id_a", "id_b", "hamming"), ckpt)
-        setattr(pairs, _PAIRS_NEDGES_ATTR, n_pairs)
-        return pairs
-
-    return _IMGPAIRS.get_or_build(key, build)
 
 
 def ext_image_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3519,7 +3401,7 @@ def _audio_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_python_sqlite_spark.operators import multimodal as M
 
-    docs = _spread(_docs(spark, sf_dir).select("doc_id"))
+    docs = _docs_spread(spark, sf_dir, ("doc_id",), key=None)
 
     def _gen(batches):
         for pdf in batches:
@@ -3550,9 +3432,7 @@ def _audio_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: (applicationId, sf_dir, fingerprint) → the tie()'d verified audio
 #: pair frame shared by ext_audio_near_dups and
-#: ext_audio_dedup_clusters — the `_image_pairs` policy (the expensive
-#: Arrow decode+hash half is checkpointed INSIDE dhash_near_dups, so
-#: each consumer re-runs only the cheap JVM banding/verify).
+#: ext_audio_dedup_clusters — the `_image_pairs` policy.
 _AUDPAIRS = StageMemo()
 
 
@@ -3562,24 +3442,15 @@ def _audio_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         audio_near_dups,
     )
 
-    def build() -> DataFrame:
-        lazy = audio_near_dups(
+    return _pair_stage(
+        _AUDPAIRS, spark, sf_dir,
+        lambda: audio_near_dups(
             audio_energy_hash(_audio_media(spark, sf_dir)),
             max_hamming=6,
             n_bands=4,
-        )
-        # eager lineage cut at the verified pair set (the _video_pairs
-        # policy, extended here r12) + measured count for the CC gate;
-        # the decode-half checkpoint inside the banding machinery is
-        # released immediately (the pair checkpoint supersedes it).
-        ckpt = lazy.localCheckpoint(eager=True)
-        n_pairs = ckpt.count()  # materialized blocks — bounded job
-        release(lazy)
-        pairs = tie(ckpt.select("id_a", "id_b", "hamming"), ckpt)
-        setattr(pairs, _PAIRS_NEDGES_ATTR, n_pairs)
-        return pairs
-
-    return _AUDPAIRS.get_or_build(stage_key(spark, sf_dir, "documents"), build)
+        ),
+        "hamming",
+    )
 
 
 def ext_audio_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3630,7 +3501,7 @@ def _video_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from etl_python_sqlite_spark.operators import multimodal as M
 
-    docs = _spread(_docs(spark, sf_dir).select("doc_id"))
+    docs = _docs_spread(spark, sf_dir, ("doc_id",), key=None)
 
     def _gen(batches):
         for pdf in batches:
@@ -3659,10 +3530,8 @@ def _video_media(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: shared by ext_video_near_dups and ext_video_dedup_clusters — the
 #: `_image_pairs` policy with the checkpoint taken at the PAIR set (the
 #: narrowest stage: one Arrow decode pass serves both queries and the
-#: CC rounds scan the materialized RDD). Cache tier only: the pair
-#: frame is O(n_twins) rows; at a corpus where it outgrows a session
-#: checkpoint the image-pairs bucketed tier (IMAGE_BUCKETED_STAGE_*) is
-#: the ready-made upgrade.
+#: CC rounds scan the materialized RDD; the pair frame is O(n_twins)
+#: rows).
 _VIDPAIRS = StageMemo()
 
 
@@ -3672,20 +3541,14 @@ def _video_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_near_dups,
     )
 
-    def build() -> DataFrame:
-        lazy = video_near_dups(
+    return _pair_stage(
+        _VIDPAIRS, spark, sf_dir,
+        lambda: video_near_dups(
             video_frame_hashes(_video_media(spark, sf_dir), every_n=1),
             min_shared=2,
-        )
-        ckpt = lazy.localCheckpoint(eager=True)  # ONE decode, all consumers
-        release(lazy)  # the fingerprint persist — ckpt supersedes it
-        pairs = tie(ckpt.select("id_a", "id_b", "n_shared"), ckpt)
-        # measured count for the CC tier gate (bounded job over the
-        # materialized blocks, build time only — r12)
-        setattr(pairs, _PAIRS_NEDGES_ATTR, ckpt.count())
-        return pairs
-
-    return _VIDPAIRS.get_or_build(stage_key(spark, sf_dir, "documents"), build)
+        ),
+        "n_shared",
+    )
 
 
 def ext_video_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3762,7 +3625,7 @@ def ext_video_noisy_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
         video_near_dups_hamming,
     )
 
-    docs = _spread(_docs(spark, sf_dir).select("doc_id"))
+    docs = _docs_spread(spark, sf_dir, ("doc_id",), key=None)
 
     def _gen(batches):
         for pdf in batches:
@@ -3910,9 +3773,9 @@ def ext_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     under /tmp and rewritten per run (deterministic content; no
     cross-session races). Because the tag embeds the applicationId, a
     DEAD session's dirs are never re-keyed — each run sweeps sibling
-    ``spark_graft_wds_*`` dirs older than the age floor (the orphan
-    stage-table rule: a FRESH foreign dir is plausibly a concurrent
-    session's live scratch and survives). Scale note: the pack is the
+    ``spark_graft_wds_*`` dirs older than the age floor (a FRESH
+    foreign dir is plausibly a concurrent session's live scratch and
+    survives). Scale note: the pack is the
     writer's range-shuffle + streaming tar emit, the read is one task
     per shard — both linear, no collects beyond the writer's bounded
     commit 3-tuples."""

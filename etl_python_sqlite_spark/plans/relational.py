@@ -24,9 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from etl_python_sqlite_spark.operators.cache import (
-    STAGE_TABLE_ATTR,
     StageMemo,
-    bucketed_stage_table,
     stage_key,
     unpersist_entry,
 )
@@ -1999,29 +1997,9 @@ def _flag_cents_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: family (part_cooccurrence_pagerank / part_triangle_stats both derive
 #: from it; pagerank's directed set is exactly the union of the two
 #: orientations of this distinct set, so ONE self-join + distinct feeds
-#: both). Unlike the cents histogram this frame is DATA-sized, so the
-#: at-100 TB policy is different: there it should be a materialized
-#: table partitioned by u (a cached common stage, written once per
-#: lineitem snapshot), not executor memory — the bucketed tier below.
-#: Triangle + pagerank run as separate concurrent bench actions.
+#: both). Triangle + pagerank run as separate concurrent bench actions.
 _COOCC = StageMemo(free=unpersist_entry)
 
-#: Canonical edge count above which the shared co-occurrence stage
-#: materializes as a BUCKETED CATALOG TABLE (bucketBy u, the graph
-#: family's probe key) instead of an executor-memory cache — the
-#: "becomes a materialized table at data scale" path VERDICT r6 #5
-#: asked for as code, not prose. MEASURED crossover (r7, key-offset
-#: lineitem replication, warm pagerank incl. stage build): at 1.2 M
-#: canonical edges the cache tier runs 2.7 s vs the table tier's
-#: 10.9 s (the write + scan overhead swamps a tiny graph); at 19.1 M
-#: edges they cross — 15.6 s cache vs 14.7 s bucketed — and beyond it
-#: the cache stops being an option at all (a 10^11-edge frame cannot
-#: pin executor storage) while the bucketed layout gives every u-keyed
-#: join a zero-exchange edge side (plan-asserted in
-#: tests/test_bucketed_stage.py) and survives session restarts. Same
-#: 20 M knee as TRIANGLE_BROADCAST_MAX_EDGES, measured independently.
-COOCC_BUCKETED_STAGE_MIN_EDGES = 20_000_000
-COOCC_STAGE_BUCKETS = 32
 #: canonical (u < v) row count, measured once at stage build — lets
 #: consumers (pagerank's tier gate) skip a per-invocation count() job
 _COOCC_NEDGES_ATTR = "_spark_graft_coocc_nedges"
@@ -2032,17 +2010,7 @@ def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     and dataset, memoized; the per-order pair blocking is
     O(rows · basket), never corpus-quadratic. Keyed on the lineitem
     file-listing fingerprint like the cents histogram (stale-data
-    guard, VERDICT r6 #3).
-
-    Two storage tiers, gated on the measured edge count
-    (``COOCC_BUCKETED_STAGE_MIN_EDGES``): an executor-memory cache for
-    graphs that fit, and a catalog table bucketed by ``u`` for those
-    that don't — the bucketed scan satisfies HashPartitioning(u), so
-    the graph family's outdeg aggregation and rank joins read it with
-    ZERO exchanges of E (the frame carries the table name under
-    ``STAGE_TABLE_ATTR`` so consumers can skip their own repartition; see
-    ``pagerank(edges_bucketed=True)``)."""
-    key = stage_key(spark, sf_dir, "lineitem")
+    guard, VERDICT r6 #3)."""
 
     def build() -> DataFrame:
         # shared (order, part) distinct stage — memoized with
@@ -2061,53 +2029,12 @@ def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .persist()
         )
-        n_edges = e.count()
-        if n_edges >= COOCC_BUCKETED_STAGE_MIN_EDGES:
-            # materialize the DIRECTED set (both orientations —
-            # pagerank's layout; triangle's canonical u<v set is a
-            # filter over the same bucketed scan, zero extra storage).
-            # Disjoint halves, so the union is distinct by construction.
-            directed = e.union(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            canonical = bucketed_stage_table(
-                spark, "coocc_edges_", key, directed,
-                COOCC_STAGE_BUCKETS, ("u",), where=F.col("u") < F.col("v"),
-            )
-            e.unpersist()  # the bucketed files are the materialization
-            e = canonical
-        # the measured canonical count rides the handle (both tiers) so
-        # consumers' size gates need no count() job of their own
-        setattr(e, _COOCC_NEDGES_ATTR, n_edges)
+        # the measured canonical count rides the handle so consumers'
+        # size gates need no count() job of their own
+        setattr(e, _COOCC_NEDGES_ATTR, e.count())
         return e
 
-    return _COOCC.get_or_build(key, build)
-
-
-def _cooccurrence_edges_directed(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, bool]:
-    """Both orientations of the shared co-occurrence stage, as
-    ``(frame, bucketed)``. Cache tier: the disjoint union of the
-    memoized canonical frame's two orientations (each half reads the
-    cache). Bucketed tier: the stage's own table — ALREADY directed,
-    hash-partitioned on ``u``, so pagerank's outdeg aggregation and
-    per-iteration rank joins consume it with zero exchanges of E
-    (``pagerank(edges_bucketed=True)`` skips its repartition)."""
-    e = _cooccurrence_edges(spark, sf_dir)
-    tbl = getattr(e, STAGE_TABLE_ATTR, None)
-    if tbl is not None:
-        from etl_python_sqlite_spark.operators.cache import tie
-
-        # keepalive: the fresh spark.table frame does not hold the memo
-        # handle, and the handle's tie_stage_table finalizer would DROP
-        # the table once an eviction plus GC releases it — the consumer
-        # must keep the handle alive for its own lifetime
-        return tie(spark.table(tbl), keepalive=[e]), True
-    return (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v"))),
-        False,
-    )
+    return _COOCC.get_or_build(stage_key(spark, sf_dir, "lineitem"), build)
 
 
 #: (applicationId, sf_dir, fingerprint) → persisted DISTINCT
@@ -2488,7 +2415,7 @@ def zorder_orders_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole clustering key is value-hash-checked. File-level skipping
     evidence (per-file min/max shrink on BOTH columns) is pinned in
     tests/test_layout.py."""
-    from etl_python_sqlite_spark.operators.layout import zorder_ranks, zvalue_expr
+    from etl_python_sqlite_spark.operators.layout import zorder_ranks
 
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
@@ -2956,32 +2883,17 @@ def part_cooccurrence_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # undirected co-occurrence frame (shared with part_triangle_stats —
     # one self-join + distinct feeds the whole graph query family);
     # the two halves are disjoint (u<v vs u>v), so the union is itself
-    # distinct and pagerank can skip its own dedup shuffle. Above the
-    # bucketed-stage gate the accessor hands back the stage TABLE
-    # (already directed, bucketed by u) and the flag routes pagerank
-    # around its full-E repartition — zero exchanges of E end to end.
+    # distinct and pagerank can skip its own dedup shuffle. The
+    # CANONICAL frame goes straight through: pagerank(edges_symmetric)
+    # derives both orientations inside the local kernel, halving the
+    # single-task Arrow funnel (r11-opt; the Pregel tiers union them up
+    # front). The memo measured the canonical row count at build — the
+    # tier gate gets it, so no invocation pays a count() job of its own.
     e = _cooccurrence_edges(spark, sf_dir)
-    # the memo measured the canonical row count at build — hand it to
-    # the tier gate so no invocation pays a count() job of its own
-    n_canon = getattr(e, _COOCC_NEDGES_ATTR, None)
-    if getattr(e, STAGE_TABLE_ATTR, None) is not None:
-        # bucketed tier: the stage table is ALREADY directed and
-        # hash-partitioned on u — zero exchanges of E in the Pregel loop
-        directed, bucketed = _cooccurrence_edges_directed(spark, sf_dir)
-        pr = pagerank(
-            directed, "u", "v", iterations=5,
-            edges_distinct=True, edges_bucketed=bucketed,
-            n_edges=None if n_canon is None else 2 * n_canon,
-        )
-    else:
-        # cache tier: hand the CANONICAL frame straight through —
-        # pagerank(edges_symmetric) derives both orientations inside
-        # the local kernel, halving the single-task Arrow funnel
-        # (r11-opt; the Pregel tiers union them up front as before)
-        pr = pagerank(
-            e, "u", "v", iterations=5,
-            edges_distinct=True, edges_symmetric=True, n_edges=n_canon,
-        )
+    pr = pagerank(
+        e, "u", "v", iterations=5, edges_distinct=True,
+        edges_symmetric=True, n_edges=getattr(e, _COOCC_NEDGES_ATTR, None),
+    )
     out = (
         pr.orderBy(F.desc("r"), "node")
         .limit(25)

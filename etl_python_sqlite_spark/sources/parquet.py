@@ -116,27 +116,33 @@ def _load_table_uncached(spark: SparkSession, sf_dir: str, name: str) -> DataFra
         spark.conf.set(_NANOS_CONF, prev)
 
 
+def _parquet_files(sf_dir: str, name: str) -> list[str]:
+    """Sorted paths of ``{sf_dir}/{name}.parquet``: the file itself, or
+    every ``*.parquet`` part file under it when it is a directory."""
+    import os
+
+    path = f"{sf_dir}/{name}.parquet"
+    if not os.path.isdir(path):
+        return [path]
+    return sorted(
+        os.path.join(root, f)
+        for root, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".parquet")
+    )
+
+
 def table_row_count_from_metadata(sf_dir: str, name: str) -> int:
     """Row count of ``{sf_dir}/{name}.parquet`` from parquet FOOTER
     metadata only — zero Spark jobs (a ``df.count()`` is a distributed
-    action with ~1 s of fixed scheduling overhead on this box; scale
-    gates that only need an order-of-magnitude input must not pay it).
-    Handles both a single file and a directory of part files."""
-    import os
-
+    action with ~1 s of fixed scheduling overhead; scale gates that only
+    need an order-of-magnitude input must not pay it). Handles both a
+    single file and a directory of part files."""
     import pyarrow.parquet as pq
 
-    path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        total = 0
-        for root, _, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(root, f)
-                    ).metadata.num_rows
-        return total
-    return pq.ParquetFile(path).metadata.num_rows
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows for f in _parquet_files(sf_dir, name)
+    )
 
 
 def table_num_row_groups_from_metadata(sf_dir: str, name: str) -> int:
@@ -149,21 +155,12 @@ def table_num_row_groups_from_metadata(sf_dir: str, name: str) -> int:
     (guide §2.6 — at warehouse scale inputs arrive as many row groups
     and the gate stays closed; the single-row-group bench files are
     where the scan serializes)."""
-    import os
-
     import pyarrow.parquet as pq
 
-    path = f"{sf_dir}/{name}.parquet"
-    if os.path.isdir(path):
-        total = 0
-        for root, _, files in os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    total += pq.ParquetFile(
-                        os.path.join(root, f)
-                    ).metadata.num_row_groups
-        return total
-    return pq.ParquetFile(path).metadata.num_row_groups
+    return sum(
+        pq.ParquetFile(f).metadata.num_row_groups
+        for f in _parquet_files(sf_dir, name)
+    )
 
 
 def array_dim_from_metadata(sf_dir: str, name: str, col: str) -> int | None:
@@ -175,19 +172,9 @@ def array_dim_from_metadata(sf_dir: str, name: str, col: str) -> int | None:
     ``first(size(col))`` for the homogeneous-dim embedding tables this
     repo reads; a ragged corpus would key off the same first row either
     way."""
-    import os
-
     import pyarrow.parquet as pq
 
-    path = f"{sf_dir}/{name}.parquet"
-    files = []
-    if os.path.isdir(path):
-        for root, _, fs in os.walk(path):
-            files += [os.path.join(root, f) for f in sorted(fs)
-                      if f.endswith(".parquet")]
-    else:
-        files = [path]
-    for f in files:
+    for f in _parquet_files(sf_dir, name):
         pf = pq.ParquetFile(f)
         if pf.metadata.num_rows == 0:
             continue

@@ -4,8 +4,31 @@ media decoding is stubbed."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import types as T
 
-from etl_python_sqlite_spark.operators.multimodal import MEDIA_SCHEMA, decode_image
+from etl_python_sqlite_spark.operators.multimodal import decode_image
+
+#: canonical multimodal schema: opaque payload + typed metadata
+MEDIA_SCHEMA = T.StructType(
+    [
+        T.StructField("media_id", T.LongType(), False),
+        T.StructField("modality", T.StringType(), False),   # image|audio|video
+        T.StructField("content", T.BinaryType(), True),
+        T.StructField("mime", T.StringType(), True),
+        T.StructField(
+            "meta",
+            T.StructType(
+                [
+                    T.StructField("width", T.IntegerType(), True),
+                    T.StructField("height", T.IntegerType(), True),
+                    T.StructField("duration_ms", T.LongType(), True),
+                    T.StructField("sample_rate", T.IntegerType(), True),
+                ]
+            ),
+            True,
+        ),
+    ]
+)
 
 
 @pytest.fixture(scope="module")

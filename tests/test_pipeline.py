@@ -450,13 +450,14 @@ TRICKY = ["a,b", 'say "hi"', "  lead", "trail  ", "", "Querétaro", "ñandú, ü
 
 def _csv_writer_bytes(spark, tmp_path, rows, cols) -> str:
     """``rows`` written by ``DataFrameWriter.csv`` as one file with a header
-    (the sink's former writer)."""
+    (the sink's former writer), with the sink's options."""
     out = tmp_path / f"expected_{len(list(tmp_path.iterdir()))}"
     schema = T.StructType([T.StructField(c, T.StringType()) for c in cols])
     (
         local_frame(spark, rows, schema).coalesce(1).write.option("header", True)
         .option("ignoreLeadingWhiteSpace", False)
         .option("ignoreTrailingWhiteSpace", False)
+        .option("escape", '"')
         .csv(str(out))
     )
     return next(out.glob("part-*")).read_text(encoding="utf-8")
@@ -488,6 +489,27 @@ def test_reject_sink_bytes_match_the_csv_writer(spark, tmp_path):
         assert (out / f"rejected_{name}.csv").read_text(encoding="utf-8") == (
             _csv_writer_bytes(spark, tmp_path, blank, cols)
         )
+
+
+def test_reject_file_round_trips_through_csv_reader(spark, tmp_path):
+    """A rejected value comes back from its reject file through a plain
+    ``csv.reader``, as from the reference's ``csv.writer``: a quote is
+    doubled, and a backslash is an ordinary character."""
+    cfg = PipelineConfig(
+        data_in=str(tmp_path / "in"),
+        data_rejected=str(tmp_path / "rej"),
+        warehouse=str(tmp_path / "wh"),
+    )
+    values = TRICKY + ['q"', '"', 'a\\"b', "\\"]
+    rows = [[v, "10", v] for v in values] + [["ana", v, v] for v in values]
+    _write_csv(Path(cfg.data_in) / "raros.csv", [["nombre", "edad", "ciudad"], *rows])
+    run_batch(spark, cfg, now=NOW)
+    with (Path(cfg.data_rejected) / "rejected_raros.csv").open(newline="", encoding="utf-8") as f:
+        got = list(csv.reader(f))
+    motivos = ["Edad < 25"] * len(values) + ["Edad no convertible a int"] * len(values)
+    assert got == [["nombre", "edad", "ciudad", "motivo"]] + [
+        [*r, m] for r, m in zip(rows, motivos)
+    ]
 
 
 def test_reject_file_split_over_scan_tasks(spark, tmp_path):

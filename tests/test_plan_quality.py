@@ -161,6 +161,32 @@ def test_quality_sample_is_one_aggregation_pass(spark):
     assert "Join" not in plan, plan
 
 
+def test_scan_spread_gate_changes_no_result(spark, monkeypatch):
+    """The scan-spread gate (``_scan_underparallel``) keys on the core
+    count, so it must move only where rows run: forced open and forced
+    closed, each gated query returns the same row multiset. Closed, the
+    quality sample is the one-agg-pass shape (agg exchange + sort)."""
+    from collections import Counter
+
+    from etl_python_sqlite_spark.plans import ext as E
+
+    names = (
+        "ext_text_stats", "ext_langid", "ext_quality_scores",
+        "ext_quality_sample", "ext_curation_funnel", "ext_multimodal_decode",
+    )
+    got = {}
+    for gate in (True, False):
+        monkeypatch.setattr(E, "_scan_underparallel", lambda *a, _g=gate, **k: _g)
+        got[gate] = {
+            n: Counter(map(tuple, getattr(E, n)(spark, SF_SMOKE).collect()))
+            for n in names
+        }
+    plan = _plan(spark, E.ext_quality_sample(spark, SF_SMOKE), "simple")
+    assert plan.count("Exchange") <= 2, plan
+    assert got[True] == got[False]
+    assert all(got[False].values())
+
+
 def test_range_interval_window_single_shuffle(spark):
     from etl_python_sqlite_spark.plans import relational as RR
 

@@ -16,6 +16,13 @@ module, each reached module's top-level statements, and the bodies of
 reached functions. A function
 that only tests call is unreached: delete it, or call it from an entry
 point.
+
+Top-level assignments are checked the same way: a constant of a reached
+module that no live code names is unreached, and so is one that only
+tests read (move it into the test). Dunders (``__all__``) are exempt.
+Last, every name an import binds must be read in the scope of the
+import (the module, or the function a lazy import sits in); a re-export
+says so with ``# noqa: F401``.
 """
 
 from __future__ import annotations
@@ -151,12 +158,16 @@ def _names_used(nodes) -> set[str]:
     return out
 
 
+def _dunder(name: str) -> bool:
+    return name.startswith("__") and name.endswith("__")
+
+
 def _definitions(path: Path):
     """(qualified name, bare name, AST nodes a reach makes live) for each
-    top-level function and class of ``path`` and each method of its
-    classes, and the module's other top-level statements. A class's own
-    nodes are its bases, decorators, non-function statements and dunder
-    methods (Python calls those implicitly)."""
+    top-level function, class and assigned name of ``path`` and each
+    method of its classes, and the module's other top-level statements.
+    A class's own nodes are its bases, decorators, non-function
+    statements and dunder methods (Python calls those implicitly)."""
     module = _module_name(path)
     defs, rest = [], []
     funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
@@ -166,21 +177,31 @@ def _definitions(path: Path):
         elif isinstance(st, ast.ClassDef):
             own = [*st.bases, *st.keywords, *st.decorator_list]
             for m in st.body:
-                if isinstance(m, funcs) and not (
-                    m.name.startswith("__") and m.name.endswith("__")
-                ):
+                if isinstance(m, funcs) and not _dunder(m.name):
                     defs.append((f"{module}.{st.name}.{m.name}", m.name, [m]))
                 else:
                     own.append(m)
             defs.append((f"{module}.{st.name}", st.name, own))
+        elif isinstance(st, (ast.Assign, ast.AnnAssign)):
+            targets = st.targets if isinstance(st, ast.Assign) else [st.target]
+            names = [
+                n.id
+                for t in targets
+                for n in ast.walk(t)
+                if isinstance(n, ast.Name) and not _dunder(n.id)
+            ]
+            defs += [(f"{module}.{n}", n, [st]) for n in names]
+            if not names:
+                rest.append(st)
         else:
             rest.append(st)
     return defs, rest
 
 
-def uncalled_functions() -> set[str]:
+def unreached_definitions() -> set[str]:
     """Qualified names of the definitions in reached package modules that
-    no live code names."""
+    no live code names. An allowed function's body is live: what it
+    needs stays."""
     package = REPO / PACKAGE
     allowed_files = {_module_file(name, (REPO,)) for name in UNREACHED_ALLOWED}
     live, defs = [], []
@@ -192,6 +213,9 @@ def uncalled_functions() -> set[str]:
         else:
             live.append(ast.parse(path.read_text(), filename=str(path)))
     used = _names_used(live)
+    for qual, _, nodes in defs:
+        if qual in UNCALLED_ALLOWED:
+            used |= _names_used(nodes)
     pending = defs
     while True:
         reached = [d for d in pending if d[1] in used]
@@ -200,6 +224,63 @@ def uncalled_functions() -> set[str]:
         pending = [d for d in pending if d[1] not in used]
         for _, _, nodes in reached:
             used |= _names_used(nodes)
+
+
+def _own_nodes(scope):
+    """The nodes of ``scope`` outside the functions nested in it."""
+    todo = list(ast.iter_child_nodes(scope))
+    while todo:
+        node = todo.pop()
+        yield node
+        if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            todo.extend(ast.iter_child_nodes(node))
+
+
+def unread_imports() -> set[str]:
+    """``scope.name`` for each name an import in a package module binds
+    that its scope never reads. A read is a loaded name or an
+    identifier string (``__all__``) anywhere in the scope, nested
+    functions included."""
+    out = set()
+    for path in (REPO / PACKAGE).rglob("*.py"):
+        src = path.read_text()
+        lines = src.splitlines()
+        tree = ast.parse(src, filename=str(path))
+        module = _module_name(path)
+        scopes = [(module, tree)] + [
+            (f"{module}.{f.name}", f)
+            for f in ast.walk(tree)
+            if isinstance(f, (ast.FunctionDef, ast.AsyncFunctionDef))
+        ]
+        for qual, scope in scopes:
+            reads = {
+                x.id
+                for x in ast.walk(scope)
+                if isinstance(x, ast.Name) and isinstance(x.ctx, ast.Load)
+            } | {
+                part
+                for x in ast.walk(scope)
+                if isinstance(x, ast.Constant)
+                and isinstance(x.value, str)
+                and _IDENTIFIER.fullmatch(x.value)
+                for part in x.value.split(".")
+            }
+            for st in _own_nodes(scope):
+                if not isinstance(st, (ast.Import, ast.ImportFrom)):
+                    continue
+                if isinstance(st, ast.ImportFrom) and st.module == "__future__":
+                    continue
+                for a in st.names:
+                    bound = a.asname or (
+                        a.name.split(".")[0] if isinstance(st, ast.Import) else a.name
+                    )
+                    noqa = any(
+                        "noqa: F401" in lines[n - 1] for n in (st.lineno, a.lineno)
+                    )
+                    exempt = bound == "*" or _dunder(bound) or noqa
+                    if not exempt and bound not in reads:
+                        out.add(f"{qual}.{bound}")
+    return out
 
 
 def test_every_package_module_is_reached_from_an_entry_point():
@@ -216,11 +297,36 @@ def test_every_package_module_is_reached_from_an_entry_point():
     )
 
 
+def _package_assignments() -> set[str]:
+    return {
+        qual
+        for path in (REPO / PACKAGE).rglob("*.py")
+        for qual, _, nodes in _definitions(path)[0]
+        if isinstance(nodes[0], (ast.Assign, ast.AnnAssign))
+    }
+
+
 def test_every_package_function_is_reached_from_an_entry_point():
-    unreached = uncalled_functions() - set(UNCALLED_ALLOWED)
+    unreached = unreached_definitions() - _package_assignments() - set(UNCALLED_ALLOWED)
     assert not unreached, (
         "package functions no entry point reaches (delete them or call "
         f"them from an entry point): {sorted(unreached)}"
+    )
+
+
+def test_every_package_constant_is_named_by_live_code():
+    unreached = unreached_definitions() & _package_assignments()
+    assert not unreached, (
+        "module-level names no entry point reads (delete them, or move "
+        f"them into the test that reads them): {sorted(unreached)}"
+    )
+
+
+def test_every_imported_name_is_read():
+    unread = unread_imports()
+    assert not unread, (
+        "imported names their scope never reads (delete the import, or "
+        f"mark a re-export '# noqa: F401'): {sorted(unread)}"
     )
 
 
@@ -235,7 +341,7 @@ def test_allowed_exceptions_are_still_needed():
         for path in (REPO / PACKAGE).rglob("*.py")
         for qual, _, _ in _definitions(path)[0]
     }
-    uncalled = uncalled_functions()
+    uncalled = unreached_definitions()
     for name, reason in UNCALLED_ALLOWED.items():
         assert name in defined, f"{name} is gone; drop it ({reason})"
         assert name in uncalled, (

@@ -230,8 +230,8 @@ def test_quoted_fields_match_dictreader(spark, tmp_path):
     """A doubled quote inside a quoted field is one quote, as
     ``csv.DictReader`` reads it: the loaded fact rows and the reject
     motivos equal a DictReader replay of the reference's cascade, next
-    to an empty field, a short row and a long row. (The reject file is
-    Spark's CSV writer output, which escapes a quote with a backslash.)"""
+    to an empty field, a short row and a long row. The reject file reads
+    back through a plain ``csv.DictReader``."""
     cfg = PipelineConfig(
         data_in=str(tmp_path / "in"),
         data_rejected=str(tmp_path / "rejected"),
@@ -255,7 +255,7 @@ def test_quoted_fields_match_dictreader(spark, tmp_path):
         sum(m is not None for _, m in want),
     )
     with (Path(cfg.data_rejected) / "rejected_comillas.csv").open(newline="") as f:
-        rejects = csv.DictReader(f, escapechar="\\", doublequote=False)
+        rejects = csv.DictReader(f)
         got = [(r["nombre"], r["motivo"]) for r in rejects]
     assert got == [(n, m) for n, m in want if m is not None]
     fact = spark.read.parquet(cfg.fact_path)

@@ -1,6 +1,6 @@
 """Unit tests for ``operators.cache.StageMemo``, the one get-or-build
-memo behind every shared stage. Pure Python: plain keys and stand-in
-frames, no Spark session."""
+memo behind every shared stage: plain keys and stand-in frames, then
+the shared co-occurrence stage on a Spark session."""
 
 from __future__ import annotations
 
@@ -15,17 +15,16 @@ from etl_python_sqlite_spark.operators.cache import (
     release_all,
     unpersist_entry,
 )
+from tests.conftest import SF_SMOKE
 
 
 class FakeFrame:
-    """Counts what the memo does to a frame: unpersist, tie() release,
-    stage-table release."""
+    """Counts what the memo does to a frame: unpersist, tie() release."""
 
     def __init__(self, cached: bool = True) -> None:
         self.is_cached = cached
         self.unpersists = 0
         self.releases = 0
-        self.table_drops = 0
 
     def unpersist(self) -> "FakeFrame":
         self.unpersists += 1
@@ -36,15 +35,8 @@ class FakeFrame:
         self._spark_graft_release = self._release
         return self
 
-    def tie_table(self) -> "FakeFrame":
-        self._spark_graft_table_release = self._drop
-        return self
-
     def _release(self) -> None:
         self.releases += 1
-
-    def _drop(self) -> None:
-        self.table_drops += 1
 
 
 def test_double_miss_builds_once():
@@ -111,28 +103,61 @@ def test_eviction_frees_only_under_the_unpersist_policy():
 
 def test_unpersist_policy_leaves_uncached_frames_to_their_finalizers():
     memo = StageMemo(max_entries=1, free=unpersist_entry)
-    table_frame = FakeFrame(cached=False).tie_table()
-    memo.get_or_build("k1", lambda: table_frame)
+    ckpt_frame = FakeFrame(cached=False).tie()
+    memo.get_or_build("k1", lambda: ckpt_frame)
     memo.get_or_build("k2", FakeFrame)
-    assert (table_frame.unpersists, table_frame.table_drops) == (0, 0)
+    assert (ckpt_frame.unpersists, ckpt_frame.releases) == (0, 0)
 
 
 def test_release_all_empties_every_memo_and_frees_each_entry_once():
-    cached, tied, table = FakeFrame(), FakeFrame(cached=False).tie(), (
-        FakeFrame(cached=False).tie_table()
-    )
+    cached, tied = FakeFrame(), FakeFrame(cached=False).tie()
     pair = FakeFrame()
     m1 = StageMemo(max_entries=3, free=unpersist_entry)
     m2 = StageMemo(max_entries=3)
     m1.get_or_build("cached", lambda: cached)
     m1.get_or_build("tuple", lambda: ([1.0, 2.0], pair))
     m2.get_or_build("tied", lambda: tied)
-    m2.get_or_build("table", lambda: table)
     m2.get_or_build("plain", lambda: [("word", 3)])
     release_all()
     assert len(m1) == 0 and len(m2) == 0
     assert cached.unpersists == 1 and pair.unpersists == 1
     assert tied.releases == 1 and tied.unpersists == 0
-    assert table.table_drops == 1 and table.unpersists == 0
     release_all()  # nothing left: no second free
-    assert (cached.unpersists, tied.releases, table.table_drops) == (1, 1, 1)
+    assert (cached.unpersists, tied.releases) == (1, 1)
+
+
+def test_cache_tier_carries_measured_edge_count(spark):
+    """The CACHE tier (default gate) also stamps the measured canonical
+    count on the memo handle — pagerank's tier gate reads it on either
+    tier."""
+    from etl_python_sqlite_spark.plans import relational as R
+
+    release_all()
+    try:
+        e = R._cooccurrence_edges(spark, SF_SMOKE)
+        assert getattr(e, R._COOCC_NEDGES_ATTR) == e.count()
+    finally:
+        release_all()
+
+
+def test_concurrent_memo_miss_builds_once(spark):
+    """Two simultaneous misses (the bench's concurrent graph queries)
+    must resolve to ONE shared stage — the lock serializes the build and
+    the loser reads the memo instead of double-building and leaking."""
+    from etl_python_sqlite_spark.plans import relational as R
+
+    release_all()
+    got = []
+
+    def grab():
+        got.append(R._cooccurrence_edges(spark, SF_SMOKE))
+
+    try:
+        threads = [threading.Thread(target=grab) for _ in range(2)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert len(got) == 2 and got[0] is got[1]
+    finally:
+        release_all()
