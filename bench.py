@@ -13,8 +13,12 @@ computation, no driver-side collect tax):
    otherwise lands on whichever query happens to run first over a given
    operator shape — i.e. per-query numbers would measure dict ORDER
    (the round-3 reorder shifted heavy EXT queries to the front and
-   inflated their cold numbers 4-7×), and at production scale compile
-   amortizes to zero anyway;
+   inflated their cold numbers 4-7×). The timed passes then compile
+   nothing only while Spark's generated-class cache holds every query's
+   classes: at Spark's default of 100 entries each timed pass recompiled
+   ~3,000 classes, so the session is built by ``session.get_spark``,
+   which sizes the cache to the measured working set
+   (``session.CODEGEN_CACHE_ENTRIES``);
 1. sequential — warm per-query latency (reported in "queries");
 2. concurrent (8 submitter threads, FAIR scheduler) — the batch-
    throughput wall for all queries together, reported as "value". With
@@ -43,22 +47,19 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-    from pyspark.sql import SparkSession
+    from etl_python_sqlite_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.appName("bench")
-        .master(f"local[{cpus}]")
-        # the PySpark default driver heap is 1g — far under-provisioned
-        # for 32 concurrent task threads' aggregation hash maps (measured
-        # OOM on a 16× corpus probe); size it to the machine
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_MEM", "24g"))
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.scheduler.mode", "FAIR")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+    spark = get_spark(
+        app_name="bench",
+        master=f"local[{cpus}]",
+        shuffle_partitions=int(cpus),
+        extra_conf={
+            # the PySpark default driver heap is 1g — far under-provisioned
+            # for 32 concurrent task threads' aggregation hash maps
+            # (measured OOM on a 16× corpus probe); size it to the machine
+            "spark.driver.memory": os.environ.get("SPARK_GRAFT_MEM", "24g"),
+            "spark.scheduler.mode": "FAIR",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
 

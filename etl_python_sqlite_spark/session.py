@@ -11,6 +11,9 @@ the same code is correct and fast on a multi-executor cluster:
 * Session timezone pinned to UTC — the reference stores ISO-8601 UTC
   timestamps (reference scr/etl_incremental_audit.py:213), and a pinned
   zone keeps parquet timestamp semantics identical across JVMs.
+* The generated-class cache holds the engine's whole working set
+  (``CODEGEN_CACHE_ENTRIES``), so a query that has run once compiles
+  nothing when it runs again.
 """
 
 from __future__ import annotations
@@ -25,6 +28,22 @@ from pyspark.sql.pandas.types import to_arrow_schema
 #: local cores of a session this module builds, and its default shuffle
 #: partition count
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+#: entries of Spark's JVM-wide cache of janino-compiled classes. Spark's
+#: default is 100, but one pass of all 177 queries generates 2,280
+#: distinct classes at sf0.001 and 1,982 at sf0.01 (the 10 perfbench
+#: queries alone ~170), so at 100 every warm pass evicts what the next one
+#: needs and compiles it again. 4096 is ~1.8x the larger count. The conf
+#: is static: it is read once per JVM, when ``CodeGenerator`` first
+#: initializes, so only the session that starts the JVM sets it. The
+#: cache key is the generated source text: a plan whose code differs on
+#: each call (a driver-computed primitive literal that codegen inlines)
+#: misses at any size. So does a whole-stage class named after its stage
+#: id: AQE numbers stages in the order it plans them, which follows which
+#: shuffle finishes first, so ``get_spark`` also turns
+#: ``spark.sql.codegen.useIdInClassName`` off (the id still shows as
+#: ``*(N)`` in ``explain``).
+CODEGEN_CACHE_ENTRIES = 4096
 
 
 def get_spark(
@@ -53,6 +72,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
     for k, v in (extra_conf or {}).items():

@@ -81,7 +81,8 @@ def scan_csv(reader, names: Sequence[str], paths, *extra: Column) -> DataFrame:
     A doubled quote inside a quoted field reads as one quote. An empty
     field reads as '', and only a row with too few fields has
     nulls (in every column it leaves empty, a superset of the ones it
-    lacks). Spark flags such rows only when the scan parses every column,
+    lacks); a row with too many fields reads its empty fields as ''.
+    Spark flags such rows only when the scan parses every column,
     so keep all columns in the plan: a projection that prunes some of
     them reads a short row's missing fields as ''.
     """
@@ -96,9 +97,13 @@ def scan_csv(reader, names: Sequence[str], paths, *extra: Column) -> DataFrame:
         .option("columnNameOfCorruptRecord", _CORRUPT)
         .csv(paths)
     )
-    whole = F.col(_CORRUPT).isNull()
+    # Spark flags a row whose field count differs from the header's; only
+    # a short one keeps nulls. A row is one line (no multiLine), so its
+    # field count is one more than its commas outside quoted fields.
+    unquoted = F.regexp_replace(F.col(_CORRUPT), '"[^"]*"', "")
+    short = F.col(_CORRUPT).isNotNull() & (F.size(F.split(unquoted, ",")) < len(names))
     values = [
-        F.when(whole, F.coalesce(header_col(c), F.lit(""))).otherwise(header_col(c)).alias(c)
+        F.when(short, header_col(c)).otherwise(F.coalesce(header_col(c), F.lit(""))).alias(c)
         for c in names
     ]
     return raw.select(*values, *extra)

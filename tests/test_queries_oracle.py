@@ -11,7 +11,7 @@ import os
 import pytest
 
 import __spark_entry__ as entrymod
-from tests.conftest import SF_SMOKE, compare_frames, duck_con
+from tests.conftest import SF_CORRECT, SF_SMOKE, compare_frames, duck_con
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_SF", SF_SMOKE)
 
@@ -48,5 +48,29 @@ def test_query_matches_oracle(spark, qname):
     try:
         rel = con.sql(ORACLES[qname])
         compare_frames(sdf, rel, qname)
+    finally:
+        con.close()
+
+
+#: the queries behind the scan-spread gate (``plans.ext._scan_underparallel``)
+SPREAD_GATED = (
+    "ext_text_stats", "ext_langid", "ext_quality_scores",
+    "ext_quality_sample", "ext_curation_funnel", "ext_multimodal_decode",
+)
+
+
+@pytest.mark.parametrize("gate", (True, False), ids=("spread", "scan"))
+def test_scan_spread_gate_matches_oracle(spark, monkeypatch, gate):
+    """The gate keys on the core count, so each of its queries must match
+    its oracle at the gate scale with the gate forced open and closed."""
+    from etl_python_sqlite_spark.operators.cache import release_all
+    from etl_python_sqlite_spark.plans import ext as E
+
+    monkeypatch.setattr(E, "_scan_underparallel", lambda *a, **k: gate)
+    release_all()  # no shared stage built under the other setting
+    con = duck_con(SF_CORRECT)
+    try:
+        for qname in SPREAD_GATED:
+            compare_frames(QUERIES[qname](spark, SF_CORRECT), con.sql(ORACLES[qname]), qname)
     finally:
         con.close()

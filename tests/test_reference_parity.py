@@ -184,6 +184,29 @@ def _reference_motivo(row: dict) -> str | None:
     return "Edad < 25" if edad < 25 else None
 
 
+def _assert_batch_matches_replay(spark, cfg, stem: str, replay: list[dict]) -> None:
+    """``run_batch`` over ``cfg.data_in``'s one file ``<stem>.csv`` counts,
+    rejects and loads what the reference's cascade does with ``replay``,
+    that file's ``csv.DictReader`` rows."""
+    result = run_batch(spark, cfg, now=NOW).files[0]
+    want = [(r["nombre"], _reference_motivo(r)) for r in replay]
+    assert (result.valid_count, result.rejected_count) == (
+        sum(m is None for _, m in want),
+        sum(m is not None for _, m in want),
+    )
+    with (Path(cfg.data_rejected) / f"rejected_{stem}.csv").open(newline="") as f:
+        got = [(r["nombre"], r["motivo"]) for r in csv.DictReader(f)]
+    assert got == [(n, m) for n, m in want if m is not None]
+    fact = spark.read.parquet(cfg.fact_path)
+    dim = spark.read.parquet(cfg.dim_path)
+    loaded = fact.join(dim, "ciudad_id").select(fact.nombre, "edad", dim.nombre)
+    assert sorted(tuple(r) for r in loaded.collect()) == sorted(
+        (r["nombre"].strip().capitalize(), int(r["edad"]), r["ciudad"].strip().title())
+        for r in replay
+        if _reference_motivo(r) is None
+    )
+
+
 def test_empty_fields_match_dictreader(spark, tmp_path):
     """An unquoted empty field is '' (DictReader), not None: ``ana,,rosario``
     fails the int cast, a trailing ``x,26,`` loads with an empty city, and
@@ -207,23 +230,7 @@ def test_empty_fields_match_dictreader(spark, tmp_path):
     scanned = read_csv_files(spark, [path], ("nombre", "edad", "ciudad")).drop("source_file")
     assert [r.asDict() for r in scanned.collect()] == replay
 
-    result = run_batch(spark, cfg, now=NOW).files[0]
-    want = [(r["nombre"], _reference_motivo(r)) for r in replay]
-    assert (result.valid_count, result.rejected_count) == (
-        sum(m is None for _, m in want),
-        sum(m is not None for _, m in want),
-    )
-    with (Path(cfg.data_rejected) / "rejected_vacios.csv").open(newline="") as f:
-        got = [(r["nombre"], r["motivo"]) for r in csv.DictReader(f)]
-    assert got == [(n, m) for n, m in want if m is not None]
-    fact = spark.read.parquet(cfg.fact_path)
-    dim = spark.read.parquet(cfg.dim_path)
-    loaded = fact.join(dim, "ciudad_id").select(fact.nombre, "edad", dim.nombre)
-    assert sorted(tuple(r) for r in loaded.collect()) == sorted(
-        (r["nombre"].strip().capitalize(), int(r["edad"]), r["ciudad"].strip().title())
-        for r in replay
-        if _reference_motivo(r) is None
-    )
+    _assert_batch_matches_replay(spark, cfg, "vacios", replay)
 
 
 def test_quoted_fields_match_dictreader(spark, tmp_path):
@@ -248,24 +255,37 @@ def test_quoted_fields_match_dictreader(spark, tmp_path):
     with path.open(newline="", encoding="utf-8") as f:
         replay = list(csv.DictReader(f))
 
-    result = run_batch(spark, cfg, now=NOW).files[0]
-    want = [(r["nombre"], _reference_motivo(r)) for r in replay]
-    assert (result.valid_count, result.rejected_count) == (
-        sum(m is None for _, m in want),
-        sum(m is not None for _, m in want),
+    _assert_batch_matches_replay(spark, cfg, "comillas", replay)
+
+
+def test_long_row_empty_fields_match_dictreader(spark, tmp_path):
+    """A row with more fields than its header reads its empty fields as
+    '' (DictReader): ``Ana,,Lima,extra`` fails the int cast and
+    ``Luis,30,,x`` loads with an empty city, as the reference does; only
+    the short row ``pedro,30`` has a None value."""
+    from etl_python_sqlite_spark.sources.csv import read_csv_files
+
+    cfg = PipelineConfig(
+        data_in=str(tmp_path / "in"),
+        data_rejected=str(tmp_path / "rejected"),
+        warehouse=str(tmp_path / "wh"),
     )
-    with (Path(cfg.data_rejected) / "rejected_comillas.csv").open(newline="") as f:
-        rejects = csv.DictReader(f)
-        got = [(r["nombre"], r["motivo"]) for r in rejects]
-    assert got == [(n, m) for n, m in want if m is not None]
-    fact = spark.read.parquet(cfg.fact_path)
-    dim = spark.read.parquet(cfg.dim_path)
-    loaded = fact.join(dim, "ciudad_id").select(fact.nombre, "edad", dim.nombre)
-    assert sorted(tuple(r) for r in loaded.collect()) == sorted(
-        (r["nombre"].strip().capitalize(), int(r["edad"]), r["ciudad"].strip().title())
-        for r in replay
-        if _reference_motivo(r) is None
+    path = Path(cfg.data_in) / "largas.csv"
+    path.parent.mkdir(parents=True)
+    path.write_text(
+        'nombre,edad,ciudad\nAna,,Lima,extra\nLuis,30,,x\n"a,b",,"c,d",\n'
+        'marta,"",lima,"e,f"\n"q""",41,,,\n,,,,\npedro,30\nluz,40,lima\n',
+        encoding="utf-8",
     )
+    with path.open(newline="", encoding="utf-8") as f:
+        replay = list(csv.DictReader(f))
+
+    scanned = read_csv_files(spark, [path], ("nombre", "edad", "ciudad")).drop("source_file")
+    assert [r.asDict() for r in scanned.collect()] == [
+        {k: v for k, v in r.items() if k is not None} for r in replay
+    ]
+
+    _assert_batch_matches_replay(spark, cfg, "largas", replay)
 
 
 def test_short_row_nulls_need_every_column(spark, tmp_path):
