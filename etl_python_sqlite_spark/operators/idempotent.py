@@ -49,9 +49,24 @@ def assign_ids(
 ) -> DataFrame:
     """Attach dense surrogate ids ``start, start+1, …`` to ``df`` in
     ``order_by`` order, via a global-order window (single task — use for
-    dims / bounded batches; this is AUTOINCREMENT parity)."""
+    dims / bounded batches; this is AUTOINCREMENT parity).
+
+    ``start`` enters the plan as data, a broadcast one-row frame, not as
+    a literal: codegen inlines a literal into the generated code, so each
+    new start (every batch into a grown warehouse) would compile new
+    classes."""
     w = Window.orderBy(*(order_by or df.columns))
-    return df.withColumn(id_col, (F.row_number().over(w) + start - 1).cast("long"))
+    offset = local_frame(
+        df.sparkSession,
+        [(start - 1,)],
+        T.StructType([T.StructField("_id_offset", T.LongType(), False)]),
+    )
+    return (
+        df.withColumn(id_col, F.row_number().over(w))
+        .crossJoin(F.broadcast(offset))
+        .withColumn(id_col, (F.col(id_col) + F.col("_id_offset")).cast("long"))
+        .drop("_id_offset")
+    )
 
 
 @dataclass

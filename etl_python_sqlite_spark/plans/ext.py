@@ -171,15 +171,6 @@ def ext_ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 _MINHASH = StageMemo()
 
 
-#: verified-pair count stamped on every pair-stage memo handle at build
-#: (the _COOCC_NEDGES_ATTR pattern): downstream connected-components
-#: callers pass it as the attested ``n_edges`` so the CC tier gate
-#: needs no count job of its own — and, when it fits the local tier,
-#: no per-invocation lineage-cut checkpoint either (the union-find
-#: finisher is ONE plan inside the query's own action).
-_PAIRS_NEDGES_ATTR = "_spark_graft_n_pairs"
-
-
 def _pair_stage(
     memo: StageMemo,
     spark: SparkSession,
@@ -193,17 +184,13 @@ def _pair_stage(
     materialized RDD instead of re-running the verify joins per action;
     the operator's own intermediates (candidate checkpoints, decode
     persists) are released at once, since the pair checkpoint
-    supersedes them; the measured pair count rides the handle under
-    ``_PAIRS_NEDGES_ATTR``."""
+    supersedes them."""
 
     def build() -> DataFrame:
         lazy = lazy_pairs()
         ckpt = lazy.localCheckpoint(eager=True)
-        n_pairs = ckpt.count()  # materialized blocks — bounded job
         release(lazy)
-        pairs = tie(ckpt.select("id_a", "id_b", score), ckpt)
-        setattr(pairs, _PAIRS_NEDGES_ATTR, n_pairs)
-        return pairs
+        return tie(ckpt.select("id_a", "id_b", score), ckpt)
 
     return memo.get_or_build(stage_key(spark, sf_dir, "documents"), build)
 
@@ -212,29 +199,13 @@ def _cluster_summary(
     node_ids: DataFrame, pairs: DataFrame, id_col: str
 ) -> DataFrame:
     """pairs → connected components → per-cluster summary, the shared
-    shape of every ``*_dedup_clusters`` query (r12 refactor).
+    shape of every ``*_dedup_clusters`` query (r12 refactor). The
+    union-find runs inside the query's own action over the memo's
+    materialized pair stage."""
+    from etl_python_sqlite_spark.operators.graph import dedup_cluster_assignment
 
-    When the pair memo stamped a build-time count that fits CC's local
-    tier, the union-find finisher runs inside the query's own action
-    over the memo's materialized pair stage — no per-invocation
-    lineage-cut checkpoint, no tier-gate count job (3 driver actions →
-    1). Above the tier (or on an unstamped handle) the eager checkpoint
-    stays: CC's iterative rounds are many actions and each would re-run
-    the pair scan otherwise."""
-    from etl_python_sqlite_spark.operators.graph import (
-        CC_LOCAL_EDGE_LIMIT,
-        dedup_cluster_assignment,
-    )
-
-    n_pairs = getattr(pairs, _PAIRS_NEDGES_ATTR, None)
-    local = n_pairs is not None and n_pairs <= CC_LOCAL_EDGE_LIMIT
-    edges = (
-        pairs.select("id_a", "id_b")
-        if local
-        else pairs.select("id_a", "id_b").localCheckpoint(eager=True)
-    )
     assign = dedup_cluster_assignment(
-        node_ids, edges, id_col=id_col, n_edges=n_pairs if local else None
+        node_ids, pairs.select("id_a", "id_b"), id_col=id_col
     )
     out = (
         assign.filter(F.col("cluster_size") > 1)
@@ -242,9 +213,7 @@ def _cluster_summary(
         .agg(F.count("*").alias("n_members"))
         .orderBy("cluster_id")
     )
-    if local:
-        return tie(out, keepalive=[assign, pairs])
-    return tie(out, edges, keepalive=[assign, pairs])  # edges: ckpt blocks
+    return tie(out, keepalive=[assign, pairs])
 
 
 def _minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -957,9 +926,8 @@ def ext_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle: DuckDB replays the same edges and closes them with a
     recursive CTE (min reachable id == component minimum). The Spark
-    side uses alternating large-star/small-star (operators/graph.py) —
-    the O(log n)-round formulation that survives chain-shaped clusters
-    at corpus scale where per-hop propagation cannot.
+    side closes them with one union-find task (operators/graph.py),
+    exact on any graph shape, chain-shaped clusters included.
     """
     from etl_python_sqlite_spark.operators.graph import dedup_cluster_assignment
 
@@ -968,12 +936,7 @@ def ext_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # threshold — the identical double compare the operator ran inline
     stage = _sample_jaccard_stage(spark, sf_dir)
     pairs = stage.filter(F.col("jaccard") >= 0.25)
-    # the sample bounds the pair graph STATICALLY: ≤ C(500,2) = 124,750
-    # edges, far under the CC local tier — the attested n_edges drops
-    # the tier gate's count job (one whole driver action per invocation)
-    assign = dedup_cluster_assignment(
-        sample, pairs.select("id_a", "id_b"), n_edges=124_750
-    )
+    assign = dedup_cluster_assignment(sample, pairs.select("id_a", "id_b"))
     # keepalive the MEMO HANDLE itself, not just the derived filter
     # (cache.py composition rule)
     return tie(assign, keepalive=[pairs, stage])
@@ -1176,7 +1139,7 @@ def ext_minhash_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge set and closes it with a recursive CTE — the whole
     LSH→clustering path is value-hash-checked. This is the production
     shape — candidate pairs from LSH, never a quadratic scan, clusters
-    closed in O(log n) star rounds."""
+    closed by one union-find task."""
     docs = _docs(spark, sf_dir)
     pairs = _minhash_pairs(spark, sf_dir)  # shared stage (r8)
     return _cluster_summary(docs, pairs, id_col="doc_id")
@@ -3799,31 +3762,7 @@ def ext_webdataset_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_webdataset_shards(
         docs, out, key_col="doc_id", members={"txt": "text"}, num_shards=4
     )
-    # r12-opt (guide §2.6, VERDICT r11 next #9): member-range splits
-    # (sample-boundary-aligned, driver header sweep + executor
-    # seek+read) can lift read parallelism beyond one-task-per-shard;
-    # every payload byte still comes off the tar, so the attestation is
-    # unchanged. MEASURED at sf0.1 (1.3 MB shards, read-only noop A/B
-    # ×4 warm: splits=1 1.06-1.44 s vs splits=8 1.32-1.55 s) the split
-    # path LOSES — per-task fixed cost + the chunk exchange outweigh
-    # parallel payload reads on tiny shards — so splitting is gated on
-    # shard size: engage only when every chunk still reads ≥32 MiB
-    # (i.e. shards of hundreds of MB, the real WebDataset operating
-    # point), capped at the core count. At sf0.1 the gate keeps the
-    # streaming one-task-per-shard form (no header sweep, no regression).
-    import os as _os
-
-    par = spark.sparkContext.defaultParallelism
-    shard_bytes = max(
-        (_os.path.getsize(_os.path.join(out, f))
-         for f in _os.listdir(out) if f.endswith(".tar")),
-        default=0,
-    )
-    _MIN_CHUNK = 32 * 1024 * 1024
-    back = read_webdataset(
-        spark, out, members=["txt"],
-        splits_per_shard=max(1, min(par // 4, shard_bytes // _MIN_CHUNK)),
-    )
+    back = read_webdataset(spark, out, members=["txt"])
     return back.select(
         F.col("key").cast("long").alias("doc_id"),
         F.md5(F.col("txt")).alias("text_md5"),

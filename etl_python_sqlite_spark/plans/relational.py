@@ -1995,14 +1995,9 @@ def _flag_cents_cum(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: (applicationId, sf_dir, fingerprint) → persisted DISTINCT (u < v) part
 #: co-occurrence edge frame — the shared first stage of the graph query
 #: family (part_cooccurrence_pagerank / part_triangle_stats both derive
-#: from it; pagerank's directed set is exactly the union of the two
-#: orientations of this distinct set, so ONE self-join + distinct feeds
-#: both). Triangle + pagerank run as separate concurrent bench actions.
+#: from it: ONE self-join + distinct feeds both). Triangle + pagerank
+#: run as separate concurrent bench actions.
 _COOCC = StageMemo(free=unpersist_entry)
-
-#: canonical (u < v) row count, measured once at stage build — lets
-#: consumers (pagerank's tier gate) skip a per-invocation count() job
-_COOCC_NEDGES_ATTR = "_spark_graft_coocc_nedges"
 
 
 def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2029,9 +2024,7 @@ def _cooccurrence_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .persist()
         )
-        # the measured canonical count rides the handle so consumers'
-        # size gates need no count() job of their own
-        setattr(e, _COOCC_NEDGES_ATTR, e.count())
+        e.count()  # multi-consumer: materialize before reuse
         return e
 
     return _COOCC.get_or_build(stage_key(spark, sf_dir, "lineitem"), build)
@@ -2055,8 +2048,8 @@ def _ordpart_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ORDPART.get_or_build(stage_key(spark, sf_dir, "lineitem"), build)
 
 
-#: (applicationId, sf_dir, fingerprint) → (eor, deg, n_edges, coocc
-#: handle): the degree-ORIENTED edge stage (operators/graph
+#: (applicationId, sf_dir, fingerprint) → (eor, deg, coocc handle): the
+#: degree-ORIENTED edge stage (operators/graph
 #: .orient_edges over the memoized co-occurrence frame), persisted +
 #: eagerly counted once per session. r11-opt: part_triangle_stats was
 #: rebuilding this orientation (degree agg + two joins + repartition +
@@ -2069,16 +2062,16 @@ _TRI_STAGE = StageMemo(free=lambda entry: unpersist_entry(entry[:2]))
 
 def _triangle_oriented_stage(
     spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame, int, DataFrame]:
+) -> tuple[DataFrame, DataFrame, DataFrame]:
     from etl_python_sqlite_spark.operators.graph import orient_edges
 
-    def build() -> tuple[DataFrame, DataFrame, int, DataFrame]:
+    def build() -> tuple[DataFrame, DataFrame, DataFrame]:
         e = _cooccurrence_edges(spark, sf_dir)
         eor, deg = orient_edges(e)
         deg = deg.persist()
         eor = eor.persist()
-        n_edges = eor.count()  # materializer doubles as the tier gate
-        return eor, deg, n_edges, e
+        eor.count()  # multi-consumer: materialize before reuse
+        return eor, deg, e
 
     return _TRI_STAGE.get_or_build(
         stage_key(spark, sf_dir, "lineitem"), build
@@ -2866,41 +2859,27 @@ def regression_price_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def part_cooccurrence_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Integer-exact PageRank (operators/graph.pagerank — tiered: this
-    SF-scale co-occurrence graph fits one partition, so the measured
-    edge count routes it to the single-task numpy tier; bigger graphs
-    get the Pregel loop with broadcast- or shuffle-joined ranks, all
-    three bit-identical) over the part co-occurrence graph: directed edges between
-    every pair of parts sharing an order, both orientations — the same
-    per-order blocking as ``part_basket_pairs``, so edge generation is
-    O(rows · basket), never corpus-quadratic. Top 25 most central
-    parts after 5 iterations; every rank unit replayed bit-for-bit by
-    the unrolled-CTE DuckDB twin."""
+    """Integer-exact PageRank (operators/graph.pagerank — one numpy
+    task over the canonical edge list) over the part co-occurrence
+    graph: undirected edges between every pair of parts sharing an
+    order — the same per-order blocking as ``part_basket_pairs``, so
+    edge generation is O(rows · basket), never corpus-quadratic. Top 25
+    most central parts after 5 iterations; every rank unit replayed
+    bit-for-bit by the unrolled-CTE DuckDB twin."""
     from etl_python_sqlite_spark.operators.cache import tie
     from etl_python_sqlite_spark.operators.graph import pagerank
 
-    # directed edge set = both orientations of the memoized DISTINCT
-    # undirected co-occurrence frame (shared with part_triangle_stats —
-    # one self-join + distinct feeds the whole graph query family);
-    # the two halves are disjoint (u<v vs u>v), so the union is itself
-    # distinct and pagerank can skip its own dedup shuffle. The
-    # CANONICAL frame goes straight through: pagerank(edges_symmetric)
-    # derives both orientations inside the local kernel, halving the
-    # single-task Arrow funnel (r11-opt; the Pregel tiers union them up
-    # front). The memo measured the canonical row count at build — the
-    # tier gate gets it, so no invocation pays a count() job of its own.
-    e = _cooccurrence_edges(spark, sf_dir)
-    pr = pagerank(
-        e, "u", "v", iterations=5, edges_distinct=True,
-        edges_symmetric=True, n_edges=getattr(e, _COOCC_NEDGES_ATTR, None),
-    )
+    # the memoized DISTINCT canonical (u < v) co-occurrence frame
+    # (shared with part_triangle_stats) goes straight through: the
+    # kernel derives both orientations itself
+    pr = pagerank(_cooccurrence_edges(spark, sf_dir), "u", "v", iterations=5)
     out = (
         pr.orderBy(F.desc("r"), "node")
         .limit(25)
         .select(F.col("node").alias("part"), F.col("r").alias("pr_units"))
     )
-    # pr's own tie must stay alive as long as this result (its plan
-    # reads the checkpointed rank RDD) — composition rule in cache.py
+    # pr's tie holds the memoized edge frame its plan reads — keep it
+    # alive as long as this result (composition rule in cache.py)
     return tie(out, keepalive=[pr])
 
 
@@ -2920,8 +2899,8 @@ def part_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # canonical (u < v) distinct edge set, and the degree-oriented
     # frame on top of it is memoized too (_triangle_oriented_stage) —
     # each invocation runs only the closure + count stages
-    eor, deg, n_edges, handle = _triangle_oriented_stage(spark, sf_dir)
-    tc = triangle_counts(handle, "u", "v", prepared=(eor, deg, n_edges))
+    eor, deg, handle = _triangle_oriented_stage(spark, sf_dir)
+    tc = triangle_counts(handle, "u", "v", prepared=(eor, deg))
     out = (
         tc.select(
             F.col("node").alias("part"),

@@ -68,7 +68,6 @@ def read_webdataset(
     spark: SparkSession,
     path: str | Path,
     members: list[str] | None = None,
-    splits_per_shard: int = 1,
 ) -> DataFrame:
     """(key string, shard string, <one binary column per extension>)
     from every ``*.tar`` under ``path``.
@@ -82,18 +81,12 @@ def read_webdataset(
     modalities). Keys follow the spec: everything before the FIRST
     period of the member name.
 
-    ``splits_per_shard`` > 1 (r12-opt, VERDICT r11 next #9): read-back
-    parallelism beyond one-task-per-shard. The driver sweeps each
-    shard's tar HEADERS once (seek-based, no payload reads — the same
-    cost class as member discovery), groups members into samples, cuts
-    the sample list into ``splits_per_shard`` contiguous chunks at
-    SAMPLE boundaries (the spec's contiguity rule is preserved because
-    a sample never straddles chunks), and each executor task then
-    seeks straight to its chunk's member payload offsets. Every payload
-    byte still comes off the tar file — only the header parse moves to
-    the driver. Use when shards are few relative to cores; at a shard
-    count ≥ the cluster's parallelism the default one-task-per-shard
-    streaming form avoids the header sweep entirely.
+    One task per shard streams the tar's members in order (no header
+    sweep, no payload seeks). A member-range split reader, which swept
+    the headers on the driver and gave each task a sample range, lost
+    to this form at every size timed on a 4-core box (sf0.1's four
+    1.3 MB shards, split 4 and 8 ways; see ``CHANGES.md``); it comes
+    back from git history only with a measured win.
     """
     tars = sorted(str(p) for p in Path(path).glob("*.tar"))
     if not tars:
@@ -105,10 +98,6 @@ def read_webdataset(
     schema = "key string, shard string, " + ", ".join(
         f"{_sanitize(e)} binary" for e in exts
     )
-    if splits_per_shard > 1:
-        return _read_webdataset_split(
-            spark, tars, exts, cols, schema, splits_per_shard
-        )
 
     def _read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import os
@@ -145,72 +134,3 @@ def read_webdataset(
         [(t,) for t in tars], "tar_path string"
     ).repartition(len(tars))  # one task per shard — the loader unit
     return paths.mapInPandas(_read, schema=schema)
-
-
-def _read_webdataset_split(
-    spark: SparkSession,
-    tars: list[str],
-    exts: list[str],
-    cols: list[str],
-    schema: str,
-    splits_per_shard: int,
-) -> DataFrame:
-    """Member-range split read: one chunk row per (shard, sample range),
-    payload reads by seek+read at the header-sweep offsets."""
-    import json
-    import os
-
-    chunk_rows: list[tuple[str, str]] = []
-    for tp in tars:
-        # header sweep: (key, ext, payload offset, size) per member,
-        # grouped into samples in member order (the contiguity rule)
-        samples: list[list[tuple[str, str, int, int]]] = []
-        cur_key = None
-        with tarfile.open(tp, "r") as tf:
-            for m in tf:
-                if not m.isfile():
-                    continue
-                key, _, ext = m.name.partition(".")
-                if key != cur_key:
-                    samples.append([])
-                    cur_key = key
-                samples[-1].append((key, ext, m.offset_data, m.size))
-        if not samples:
-            continue
-        n_chunks = min(splits_per_shard, len(samples))
-        per = -(-len(samples) // n_chunks)  # ceil division
-        for i in range(0, len(samples), per):
-            flat = [mm for s in samples[i : i + per] for mm in s]
-            chunk_rows.append((tp, json.dumps(flat)))
-
-    def _read_chunks(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for tp, spec in zip(pdf["tar_path"], pdf["members_json"]):
-                shard = os.path.basename(tp)
-                rows: list[tuple] = []
-                cur_key = None
-                cur: dict = {}
-                with open(tp, "rb") as fh:
-                    for key, ext, off, size in json.loads(spec):
-                        if key != cur_key:
-                            if cur_key is not None:
-                                rows.append(
-                                    (cur_key, shard)
-                                    + tuple(cur.get(e) for e in exts)
-                                )
-                            cur_key, cur = key, {}
-                        if ext in exts:
-                            fh.seek(off)
-                            cur[ext] = fh.read(size)
-                    if cur_key is not None:
-                        rows.append(
-                            (cur_key, shard) + tuple(cur.get(e) for e in exts)
-                        )
-                yield pd.DataFrame(rows, columns=cols)
-
-    chunks = spark.createDataFrame(
-        # a shard set with zero samples still needs a valid (empty)
-        # frame: the placeholder chunk has no members and yields 0 rows
-        chunk_rows or [("", "[]")], "tar_path string, members_json string"
-    ).repartition(max(len(chunk_rows), 1))
-    return chunks.mapInPandas(_read_chunks, schema=schema)

@@ -109,6 +109,34 @@ def test_warm_etl_cycle_compiles_nothing(spark, tmp_path):
     assert cycle(2) == 0
 
 
+def test_new_rows_into_a_grown_warehouse_compile_nothing(spark, tmp_path):
+    """Each batch of new rows numbers its ids from the warehouse's max id
+    + 1, a new start every time; once one batch has loaded into a
+    non-empty warehouse, the next such batch compiles nothing."""
+    cfg = PipelineConfig(
+        data_in=str(tmp_path / "in"),
+        data_rejected=str(tmp_path / "rej"),
+        warehouse=str(tmp_path / "wh"),
+    )
+
+    def batch(i: int) -> int:
+        for old in (tmp_path / "in").glob("*.csv"):
+            old.unlink()
+        _write_csv(tmp_path / "in" / f"lote{i}.csv", [
+            ["nombre", "edad", "ciudad"],
+            *([f"persona {chr(97 + i)}{chr(97 + j)}", str(30 + j), "san luis"]
+              for j in range(3)),
+        ])
+        before = compiles(spark)
+        files = run_batch(spark, cfg, now=NOW).files
+        assert [f.inserted_new for f in files] == [3]
+        return compiles(spark) - before
+
+    batch(0)
+    batch(1)
+    assert batch(2) == 0
+
+
 @pytest.mark.slow
 def test_every_query_generates_the_same_code_twice(spark):
     """Every ``queries()`` entry, run twice: the second pass compiles

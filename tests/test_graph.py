@@ -1,9 +1,9 @@
-"""Connected-components / dedup-clustering contracts.
+"""Graph operator contracts: connected components, PageRank, triangles.
 
-The star-algorithm implementation must match a trusted driver-side
-union-find on planted graphs whose shapes are chosen to break weaker
-schemes: long chains (defeat per-hop label propagation inside the
-round budget), stars, and merged multi-cluster graphs.
+Each operator must match a trusted CPython reference on planted graphs
+whose shapes are chosen to break weaker schemes: long chains (defeat
+per-hop label propagation), stars, merged multi-cluster graphs, and
+random graphs.
 """
 
 from __future__ import annotations
@@ -41,41 +41,15 @@ def _union_find(edge_list):
 
 def _check(spark, edge_list):
     edges = spark.createDataFrame(edge_list, ["id_a", "id_b"])
-    expected = _union_find(edge_list)
-    # single-task union-find path (default for small edge sets)
     got = {
         r["id"]: r["component"]
         for r in connected_components(edges).collect()
     }
-    assert got == expected
-    # distributed star-rounds path (force it: no local finishing)
-    got_dist = {
-        r["id"]: r["component"]
-        for r in connected_components(edges, local_edge_limit=0).collect()
-    }
-    assert got_dist == expected
-    # attested-count fast path (r12: no tier-gate job, no persist) —
-    # same result whether the hint is exact or a loose upper bound
-    got_hint = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            edges, n_edges=len(edge_list)
-        ).collect()
-    }
-    assert got_hint == expected
-    # an over-large REAL edge set under a small attested bound must
-    # stay correct (the hint is a size promise, never a semantics one)
-    got_loose = {
-        r["id"]: r["component"]
-        for r in connected_components(
-            edges, n_edges=1, local_edge_limit=1
-        ).collect()
-    }
-    assert got_loose == expected
+    assert got == _union_find(edge_list)
 
 
 def test_chain_collapses_to_min(spark):
-    # 0-1-2-...-19 : one component rooted at 0; O(log n) star rounds
+    # 0-1-2-...-19 : one component rooted at 0
     _check(spark, [(i, i + 1) for i in range(19)])
 
 
@@ -129,10 +103,10 @@ def _pagerank_reference(
     total_mass=10**12,
     damp_num=85,
     damp_den=100,
-    dangling="evaporate",
 ):
-    """Hand-rolled exact-integer PageRank — the module's documented
-    quantized estimator, replayed in pure CPython (no NetworkX)."""
+    """Hand-rolled exact-integer PageRank over DIRECTED edges — the
+    module's documented quantized estimator, replayed in pure CPython (no
+    NetworkX)."""
     edges = sorted({(u, v) for u, v in edge_list if u != v})
     nodes = sorted({x for e in edges for x in e})
     n = len(nodes)
@@ -146,103 +120,49 @@ def _pagerank_reference(
         acc = {v: 0 for v in nodes}
         for u, v in edges:
             acc[v] += (damp_num * r[u]) // (damp_den * outdeg[u])
-        extra = 0
-        if dangling == "redistribute":
-            dmass = sum(r[v] for v in nodes if v not in outdeg)
-            extra = (damp_num * dmass) // (damp_den * n)
-        r = {v: base + extra + acc[v] for v in nodes}
+        r = {v: base + acc[v] for v in nodes}
     return r
 
 
-_DIRECTED_EDGES = [
-    # 4 is dangling (no out-edges); 0 is a hub
-    (0, 1), (0, 2), (1, 2), (2, 0), (3, 0), (1, 4), (3, 4),
+def _both_orientations(canon):
+    return canon + [(v, u) for u, v in canon]
+
+
+_CANONICAL_EDGES = [
+    # 0 is a hub; 4 hangs off the 1-3 side
+    (0, 1), (0, 2), (0, 3), (1, 2), (1, 4), (3, 4),
 ]
 
 
 def test_pagerank_matches_integer_reference(spark):
-    # default limits route this 7-edge graph through the LOCAL tier
-    edges = spark.createDataFrame(_DIRECTED_EDGES, ["src", "dst"])
+    edges = spark.createDataFrame(_CANONICAL_EDGES, ["src", "dst"])
     got = {r["node"]: r["r"] for r in pagerank(edges).collect()}
-    assert got == _pagerank_reference(_DIRECTED_EDGES)
+    assert got == _pagerank_reference(_both_orientations(_CANONICAL_EDGES))
 
 
-def test_pagerank_all_tiers_identical_ranks(spark):
-    """The three execution tiers — single-task local, broadcast-rank
-    Pregel, shuffle-join Pregel — are strategy only: ranks must be
-    bit-identical across all of them and equal the CPython reference
-    (r4 VERDICT #1: the strategy gate must be semantics-free)."""
-    edges = spark.createDataFrame(_DIRECTED_EDGES, ["src", "dst"])
-    want = _pagerank_reference(_DIRECTED_EDGES)
-    local = {r["node"]: r["r"] for r in pagerank(edges).collect()}
-    bcast = {
-        r["node"]: r["r"]
-        for r in pagerank(edges, local_edge_limit=0).collect()
-    }
-    shuf = {
-        r["node"]: r["r"]
-        for r in pagerank(
-            edges, local_edge_limit=0, broadcast_max_nodes=0
-        ).collect()
-    }
-    assert local == bcast == shuf == want
-
-
-def test_pagerank_tiers_on_random_graph(spark):
+def test_pagerank_random_canonical_graph_matches_reference(spark):
+    """A random canonical (u < v) graph: the kernel derives both
+    orientations itself, and its ranks equal the reference fed the
+    directed union."""
     import random
 
-    rng = random.Random(7)
-    redges = sorted(
-        {(rng.randrange(60), rng.randrange(60)) for _ in range(300)}
+    rng = random.Random(13)
+    canon = sorted(
+        {
+            (min(a, b), max(a, b))
+            for a, b in ((rng.randrange(50), rng.randrange(50)) for _ in range(250))
+            if a != b
+        }
     )
-    redges = [(u, v) for u, v in redges if u != v]
-    df = spark.createDataFrame(redges, ["src", "dst"])
-    want = _pagerank_reference(redges)
-    local = {r["node"]: r["r"] for r in pagerank(df).collect()}
-    dist = {
-        r["node"]: r["r"] for r in pagerank(df, local_edge_limit=0).collect()
-    }
-    assert local == dist == want
+    cdf = spark.createDataFrame(canon, ["u", "v"])
+    got = {r["node"]: r["r"] for r in pagerank(cdf, "u", "v").collect()}
+    assert got == _pagerank_reference(_both_orientations(canon))
 
 
-def test_pagerank_dangling_redistribution(spark):
-    """Directed graph with a dangling sink: 'redistribute' must match
-    the hand-rolled reference and differ from evaporation (the sink
-    holds mass, so the share is non-zero)."""
-    edges = spark.createDataFrame(_DIRECTED_EDGES, ["src", "dst"])
-    got = {
-        r["node"]: r["r"]
-        for r in pagerank(edges, dangling="redistribute").collect()
-    }
-    want = _pagerank_reference(_DIRECTED_EDGES, dangling="redistribute")
-    assert got == want
-    evap = _pagerank_reference(_DIRECTED_EDGES, dangling="evaporate")
-    assert want != evap
-    # redistribute on ALL tiers (gate × dangling interplay)
-    got_bcast = {
-        r["node"]: r["r"]
-        for r in pagerank(
-            edges, dangling="redistribute", local_edge_limit=0
-        ).collect()
-    }
-    got_shuf = {
-        r["node"]: r["r"]
-        for r in pagerank(
-            edges, dangling="redistribute", local_edge_limit=0,
-            broadcast_max_nodes=0,
-        ).collect()
-    }
-    assert got_bcast == want and got_shuf == want
-
-
-def test_pagerank_rejects_unknown_dangling_mode(spark):
-    edges = spark.createDataFrame(_DIRECTED_EDGES, ["src", "dst"])
-    try:
-        pagerank(edges, dangling="bogus")
-    except ValueError:
-        pass
-    else:
-        raise AssertionError("expected ValueError")
+def test_pagerank_rejects_int64_overflow(spark):
+    edges = spark.createDataFrame(_CANONICAL_EDGES, ["src", "dst"])
+    with pytest.raises(ValueError, match="overflows int64"):
+        pagerank(edges, total_mass=2**62)
 
 
 def test_ext_dedup_clusters_partitions_sample(spark):
@@ -311,102 +231,3 @@ def test_triangle_counts_random_graph(spark):
         for r in triangle_counts(df).collect()
     }
     assert got == _brute_triangles(edges)
-
-
-def test_triangle_closure_tiers_identical(spark):
-    """The broadcast and shuffle closure strategies must produce the
-    SAME per-node triangle counts — the strategy gate is a physical
-    choice, never a semantic one (the pagerank tier-equality rule)."""
-    from etl_python_sqlite_spark.operators.graph import triangle_counts
-
-    edges = [
-        (1, 2), (2, 3), (1, 3),            # triangle
-        (3, 4), (4, 5), (3, 5),            # triangle sharing node 3
-        (5, 6), (6, 7),                    # path, no triangle
-        (1, 4),                            # closes (1,3,4)
-        (8, 9),                            # isolated edge
-    ]
-    df = spark.createDataFrame(edges, "src long, dst long")
-
-    def canon(out):
-        return sorted(
-            (r["node"], r["tri_cnt"], r["degree"]) for r in out.collect()
-        )
-
-    bcast = canon(triangle_counts(df))  # default gate -> broadcast
-    shuf = canon(triangle_counts(df, broadcast_max_edges=0))  # forced shuffle
-    assert bcast == shuf
-    # ground truth: triangles {1,2,3}, {3,4,5}, {1,3,4}
-    by_node = {n: t for n, t, _ in bcast}
-    assert by_node == {1: 2, 2: 1, 3: 3, 4: 2, 5: 1}
-
-
-@pytest.mark.slow  # >8 s e2e/fuzz (default tier deselects)
-def test_pagerank_symmetric_canonical_matches_directed_union(spark):
-    """r11-opt: pagerank(edges_symmetric=True) over a canonical (u < v)
-    frame must be bit-identical to feeding the directed union, on both
-    the local-numpy tier and the Pregel tiers."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    rng = random.Random(13)
-    canon = sorted(
-        {
-            (min(a, b), max(a, b))
-            for a, b in ((rng.randrange(50), rng.randrange(50)) for _ in range(250))
-            if a != b
-        }
-    )
-    cdf = spark.createDataFrame(canon, ["u", "v"])
-    directed = cdf.union(cdf.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    want = {
-        r["node"]: r["r"]
-        for r in pagerank(directed, "u", "v", edges_distinct=True).collect()
-    }
-    got_local = {
-        r["node"]: r["r"]
-        for r in pagerank(
-            cdf, "u", "v", edges_distinct=True, edges_symmetric=True
-        ).collect()
-    }
-    got_pregel = {
-        r["node"]: r["r"]
-        for r in pagerank(
-            cdf, "u", "v", edges_distinct=True, edges_symmetric=True,
-            local_edge_limit=0,
-        ).collect()
-    }
-    assert got_local == want
-    assert got_pregel == want
-
-
-def test_pagerank_caller_supplied_edge_count(spark):
-    """r12-opt: a caller that already measured its distinct edge frame
-    (the memoized co-occurrence stage) hands ``n_edges`` to the tier
-    gate and skips the per-invocation count() job — ranks must be
-    bit-identical to the recounting form on every tier, and the hint
-    must be IGNORED (recounted) without ``edges_distinct``, where the
-    operator's own filter+distinct changes the count."""
-    edges = spark.createDataFrame(_DIRECTED_EDGES, ["src", "dst"])
-    n = len(_DIRECTED_EDGES)
-    want = _pagerank_reference(_DIRECTED_EDGES)
-    hinted_local = {
-        r["node"]: r["r"]
-        for r in pagerank(edges, edges_distinct=True, n_edges=n).collect()
-    }
-    hinted_pregel = {
-        r["node"]: r["r"]
-        for r in pagerank(
-            edges, edges_distinct=True, n_edges=n, local_edge_limit=0
-        ).collect()
-    }
-    assert hinted_local == want
-    assert hinted_pregel == want
-    # a wildly wrong hint without edges_distinct must not leak into the
-    # tier gate (0 would force the local tier even above the limit; the
-    # recount keeps the documented tier choice AND the exact ranks)
-    ignored = {
-        r["node"]: r["r"] for r in pagerank(edges, n_edges=0).collect()
-    }
-    assert ignored == want

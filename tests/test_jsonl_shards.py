@@ -219,48 +219,3 @@ def test_wds_scratch_sweep_age_floor(tmp_path, monkeypatch):
         for d in (old_dir, fresh_dir, keep_dir):
             import shutil
             shutil.rmtree(d, ignore_errors=True)
-
-
-def test_webdataset_split_read_matches_streaming_read(spark, tmp_path):
-    """The r12 member-range split reader (splits_per_shard > 1) must
-    return exactly the streaming one-task-per-shard reader's rows —
-    same keys, same member bytes, same NULLs — with MORE read tasks,
-    and sample contiguity preserved (chunks cut at sample boundaries)."""
-    from etl_python_sqlite_spark.operators.shards import (
-        write_webdataset_shards,
-    )
-    from etl_python_sqlite_spark.sources.webdataset import read_webdataset
-
-    rows = [
-        (i, f"payload {i}".encode() * (1 + i % 7),
-         None if i % 4 == 1 else f'{{"k":{i}}}')
-        for i in range(53)
-    ]
-    df = spark.createDataFrame(
-        rows, "sample_id long, payload binary, meta string"
-    )
-    out = str(tmp_path / "wds_split")
-    write_webdataset_shards(
-        df, out, key_col="sample_id",
-        members={"bin": "payload", "json": "meta"}, num_shards=3,
-    )
-
-    def canon(frame):
-        return sorted(
-            (r["key"], bytes(r["bin"]),
-             None if r["json"] is None else bytes(r["json"]))
-            for r in frame.collect()
-        )
-
-    streaming = read_webdataset(spark, out, members=["bin", "json"])
-    split = read_webdataset(
-        spark, out, members=["bin", "json"], splits_per_shard=4
-    )
-    assert canon(split) == canon(streaming)
-    # more read tasks than shards (3 shards -> up to 12 chunks)
-    assert split.rdd.getNumPartitions() > 3
-    # splits larger than the sample count degrade gracefully
-    tiny = read_webdataset(
-        spark, out, members=["bin", "json"], splits_per_shard=1000
-    )
-    assert canon(tiny) == canon(streaming)

@@ -126,20 +126,6 @@ def test_release_all_empties_every_memo_and_frees_each_entry_once():
     assert (cached.unpersists, tied.releases) == (1, 1)
 
 
-def test_cache_tier_carries_measured_edge_count(spark):
-    """The CACHE tier (default gate) also stamps the measured canonical
-    count on the memo handle — pagerank's tier gate reads it on either
-    tier."""
-    from etl_python_sqlite_spark.plans import relational as R
-
-    release_all()
-    try:
-        e = R._cooccurrence_edges(spark, SF_SMOKE)
-        assert getattr(e, R._COOCC_NEDGES_ATTR) == e.count()
-    finally:
-        release_all()
-
-
 def test_concurrent_memo_miss_builds_once(spark):
     """Two simultaneous misses (the bench's concurrent graph queries)
     must resolve to ONE shared stage — the lock serializes the build and
