@@ -51,22 +51,14 @@ def assign_ids(
     ``order_by`` order, via a global-order window (single task — use for
     dims / bounded batches; this is AUTOINCREMENT parity).
 
-    ``start`` enters the plan as data, a broadcast one-row frame, not as
-    a literal: codegen inlines a literal into the generated code, so each
-    new start (every batch into a grown warehouse) would compile new
-    classes."""
+    ``start`` enters the plan as a DECIMAL literal: codegen inlines a
+    long literal into the generated source, so each new start (every
+    batch into a grown warehouse) would compile new classes, but it
+    passes a decimal one in as a reference object, leaving the source,
+    and so the compiled class, the same for every start."""
     w = Window.orderBy(*(order_by or df.columns))
-    offset = local_frame(
-        df.sparkSession,
-        [(start - 1,)],
-        T.StructType([T.StructField("_id_offset", T.LongType(), False)]),
-    )
-    return (
-        df.withColumn(id_col, F.row_number().over(w))
-        .crossJoin(F.broadcast(offset))
-        .withColumn(id_col, (F.col(id_col) + F.col("_id_offset")).cast("long"))
-        .drop("_id_offset")
-    )
+    offset = F.lit(start - 1).cast("decimal(19,0)")
+    return df.withColumn(id_col, (F.row_number().over(w) + offset).cast("long"))
 
 
 @dataclass

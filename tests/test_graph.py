@@ -10,8 +10,6 @@ from __future__ import annotations
 
 import pytest
 
-from pyspark.sql import functions as F
-
 from etl_python_sqlite_spark.operators.graph import (
     connected_components,
     dedup_cluster_assignment,
